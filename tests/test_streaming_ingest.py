@@ -131,21 +131,39 @@ def test_grib2_stream_equals_batch(spark, tmp_path):
     assert len(got) == 2 * 2 * 12
 
 
-@pytest.mark.parametrize("sep", [".", "/"])
-def test_zarr_chunk_tail_equals_dist_read(spark, tmp_path, sep):
+@pytest.mark.parametrize(
+    "sep,packed", [(".", False), ("/", False), (".", True)],
+    ids=[".", "/", "packed"],
+)
+def test_zarr_chunk_tail_equals_dist_read(spark, tmp_path, sep, packed):
     store = str(tmp_path / "live")
     rng = np.random.default_rng(11)
     nt, ny, nx = 2, 6, 8
     vals = np.round(rng.standard_normal((nt, ny, nx)) * 8) / 8
     yy, xx = np.meshgrid(np.arange(ny), np.arange(nx), indexing="ij")
+    variables = {
+        "T2": {"dims": ["t", "y", "x"], "data": vals},
+        "XLAT": {"dims": ["y", "x"], "data": 50.0 + yy * 0.25},
+        "XLONG": {"dims": ["y", "x"], "data": -3.0 + xx * 0.125},
+    }
+    if packed:
+        # CF-packed int16 value and coordinate: the tail must apply
+        # the same mask-and-scale as the batch scan
+        raw = np.arange(nt * ny * nx, dtype="int16").reshape(nt, ny, nx)
+        raw[0, 0, 0] = -999
+        variables["T2"] = {
+            "dims": ["t", "y", "x"], "data": raw,
+            "attrs": {"scale_factor": 0.5, "add_offset": 100.0,
+                      "_FillValue": -999},
+        }
+        variables["XLAT"] = {
+            "dims": ["y", "x"], "data": (yy * 4).astype("int16"),
+            "attrs": {"scale_factor": 0.0625, "add_offset": 50.0},
+        }
     write_zarr(
         store,
         {"t": nt, "y": ny, "x": nx},
-        {
-            "T2": {"dims": ["t", "y", "x"], "data": vals},
-            "XLAT": {"dims": ["y", "x"], "data": 50.0 + yy * 0.25},
-            "XLONG": {"dims": ["y", "x"], "data": -3.0 + xx * 0.125},
-        },
+        variables,
         chunks={"T2": (1, 4, 3), "XLAT": (4, 3), "XLONG": (4, 3)},
         dimension_separator=sep,
     )
@@ -155,6 +173,20 @@ def test_zarr_chunk_tail_equals_dist_read(spark, tmp_path, sep):
     )
     dist = read_zarr_dist(spark, store, "T2", "XLAT", "XLONG").toPandas()
     cols = ("chunk_key", "t_idx", "y_idx", "x_idx")
+    if packed:
+        # the masked cell is NULL on both sides; NaN never compares
+        # equal, so give it a sentinel no packed value can take
+        got, dist = got.fillna(-1.0), dist.fillna(-1.0)
+        cells = _keyed(got, ("t_idx", "y_idx", "x_idx"))
+        assert cells[(0, 0, 0)] == -1.0
+        assert cells[(1, 5, 7)] == raw[1, 5, 7] * 0.5 + 100.0
+        coord = lambda df: sorted(  # noqa: E731
+            zip(df["y_idx"], df["x_idx"], df["lat"], df["lon"])
+        )
+        assert coord(got) == coord(dist)
+        assert {(y, la) for y, _x, la, _lo in coord(got)} == {
+            (y, 50.0 + y * 0.25) for y in range(ny)
+        }
     assert _keyed(got, cols) == _keyed(dist, cols)
     assert len(got) == nt * ny * nx
 

@@ -87,6 +87,24 @@ def test_golden_v2_keys_dot_separator(tmp_path):
     np.testing.assert_array_equal(arr, [[1, 2], [3, 4]])
 
 
+def test_unrecognised_float_fill_is_named_error(tmp_path):
+    """A float fill string the reader does not decode (here a
+    hex-encoded NaN bit pattern) is a ZarrError, not a KeyError."""
+    _mkarray(tmp_path / "v",
+             _meta((2,), (2,), dtype="float32", fill="0x7fc00000"),
+             {"c/0": struct.pack("<2f", 1.0, 2.0)})
+    with pytest.raises(ZarrError, match="fill_value"):
+        read_zarr3_array(str(tmp_path / "v"))
+
+
+def test_unknown_chunk_key_encoding_is_named_error(tmp_path):
+    cke = {"name": "mystery", "configuration": {"separator": "."}}
+    _mkarray(tmp_path / "v", _meta((2, 2), (2, 2), cke=cke),
+             {"0.0": struct.pack("<4i", 1, 2, 3, 4)})
+    with pytest.raises(ZarrError, match="chunk key encoding"):
+        read_zarr3_array(str(tmp_path / "v"))
+
+
 def test_golden_big_endian_bytes_codec(tmp_path):
     blob = struct.pack(">4d", 1.5, 2.5, 3.5, 4.5)
     codecs = [{"name": "bytes", "configuration": {"endian": "big"}}]

@@ -665,25 +665,6 @@ def lcc2sp_forward_numpy(lon, lat, lat1d, lat2d, lat0d, lon0d,
     return rho * np.sin(n * dl), rho0 - rho * np.cos(n * dl)
 
 
-def lcc2sp_inverse_numpy(x, y, lat1d, lat2d, lat0d, lon0d,
-                         a=WGS_A, e2=E2_WGS):
-    """Numpy twin of :func:`lcc2sp_to_lonlat` (no false offsets)."""
-    n, aF, rho0, e = lcc2sp_constants(lat1d, lat2d, lat0d, a, e2)
-    sgn = 1.0 if n >= 0 else -1.0
-    xs = np.asarray(x, "float64") * sgn
-    ys = (rho0 - np.asarray(y, "float64")) * sgn
-    rho = sgn * np.sqrt(xs * xs + ys * ys)
-    theta = np.arctan2(xs, ys)
-    t = (sgn * rho / (sgn * aF)) ** (1.0 / n)
-    phi = np.pi / 2 - 2 * np.arctan(t)
-    for _ in range(6):
-        s = np.sin(phi)
-        phi = np.pi / 2 - 2 * np.arctan(
-            t * ((1 - e * s) / (1 + e * s)) ** (e / 2)
-        )
-    return lon0d + np.degrees(theta / n), np.degrees(phi)
-
-
 # ---------------------------------------------------------------------------
 # Transverse Mercator / UTM — the other reprojection target a WRF user
 # reaches for after the model's own LCC.  Kruger n-series (Karney 2011,
@@ -1445,26 +1426,6 @@ def from_crs(df, crs: str | int, x="x", y="y",
         f"EPSG:{code} is not implemented: supported are 4326, 3857, "
         "27700, 32601-32660 / 32701-32760, 3035, 5070, 6933"
     )
-
-
-def tm_inverse_numpy(E, N, lon0d, k0=0.9996, a=WGS_A, f=WGS_F):
-    """Numpy twin of :func:`tm_to_lonlat` (no false offsets)."""
-    k = tm_constants(a, f)
-    kA = k0 * k["A"]
-    xi = np.asarray(N, "float64") / kA
-    eta = np.asarray(E, "float64") / kA
-    xip, etap = xi.copy(), eta.copy()
-    for j, bj in ((1, k["beta"][0]), (2, k["beta"][1]),
-                  (3, k["beta"][2])):
-        xip -= bj * np.sin(2 * j * xi) * np.cosh(2 * j * eta)
-        etap -= bj * np.cos(2 * j * xi) * np.sinh(2 * j * eta)
-    chi = np.arcsin(np.sin(xip) / np.cosh(etap))
-    phi = chi.copy()
-    for j, dj in ((1, k["delta"][0]), (2, k["delta"][1]),
-                  (3, k["delta"][2])):
-        phi += dj * np.sin(2 * j * chi)
-    lon = lon0d + np.degrees(np.arctan2(np.sinh(etap), np.cos(xip)))
-    return lon, np.degrees(phi)
 
 
 # ---------------------------------------------------------------------------

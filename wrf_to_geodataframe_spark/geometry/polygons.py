@@ -58,23 +58,6 @@ def shoelace_area(poly: np.ndarray) -> float:
     )
 
 
-def polygon_centroid(poly: np.ndarray) -> tuple[float, float]:
-    """Area centroid of a ccw polygon (A7 analog)."""
-    if len(poly) < 3:
-        if len(poly) == 0:
-            return (float("nan"), float("nan"))
-        return (float(poly[:, 0].mean()), float(poly[:, 1].mean()))
-    x, y = poly[:, 0], poly[:, 1]
-    xr, yr = np.roll(x, -1), np.roll(y, -1)
-    cross = x * yr - xr * y
-    a = cross.sum() / 2.0
-    if a == 0.0:
-        return (float(x.mean()), float(y.mean()))
-    cx = float(((x + xr) * cross).sum() / (6.0 * a))
-    cy = float(((y + yr) * cross).sum() / (6.0 * a))
-    return (cx, cy)
-
-
 def point_in_convex_polygon(px: float, py: float, poly: np.ndarray) -> bool:
     """G10 containment for a ccw convex polygon (boundary counts in)."""
     n = len(poly)

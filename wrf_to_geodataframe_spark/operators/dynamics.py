@@ -425,9 +425,3 @@ __all__ = [
 ]
 
 
-def _cite() -> None:
-    """Parity notes: the reference (C-H-Simpson/wrf_to_geodataframe)
-    converts WRF scalar fields to GeoDataFrames (wrf_voronoi.py) and
-    leaves dynamics to wrf-python; these operators cover the getvar
-    names `avo` (uniform-grid form without map factors — stated),
-    `updraft_helicity`, `helicity`."""

@@ -177,11 +177,6 @@ def _parse_ifds_inner(buf, max_ifds: int) -> tuple[list[dict], str, bool]:
     return out, e, big
 
 
-def _parse_first_ifd(buf) -> tuple[dict, str, bool]:
-    ifds, e, big = _parse_ifds(buf, max_ifds=1)
-    return ifds[0], e, big
-
-
 def _dtype_of(tags, e: str) -> np.dtype:
     spp = tags.get(_T_SPP, [1])[0]
     bits = tags.get(_T_BITS, [8] * spp)
@@ -646,30 +641,34 @@ def _affine_cols(transform):
     return lon, lat
 
 
-def read_geotiff_grid(spark, path: str, band: int = 0):
-    """Driver-side S1 ingest: one GeoTIFF -> long DataFrame
-    (y_idx, x_idx, lon, lat, value) for ``band``."""
+def _geotiff_frame(info: dict, arr: np.ndarray, band: int):
+    """One decoded raster's ``band`` -> (y_idx, x_idx, lon, lat, value)
+    frame; ``nodata`` cells become NaN."""
     import pandas as pd
 
-    info, arr = read_geotiff(path)
     h, w = info["height"], info["width"]
     yy, xx = np.meshgrid(np.arange(h), np.arange(w), indexing="ij")
     lon_f, lat_f = _affine_cols(info["transform"])
     vals = arr[:, :, band].astype("float64")
     if info["nodata"] is not None:
         vals = np.where(vals == info["nodata"], np.nan, vals)
-    pdf = pd.DataFrame(
+    gx = xx.ravel().astype("float64")
+    gy = yy.ravel().astype("float64")
+    return pd.DataFrame(
         {
-            "y_idx": yy.ravel().astype("int64"),
-            "x_idx": xx.ravel().astype("int64"),
-            "lon": lon_f(xx.ravel().astype("float64"),
-                         yy.ravel().astype("float64")),
-            "lat": lat_f(xx.ravel().astype("float64"),
-                         yy.ravel().astype("float64")),
+            "y_idx": gy.astype("int64"),
+            "x_idx": gx.astype("int64"),
+            "lon": lon_f(gx, gy),
+            "lat": lat_f(gx, gy),
             "value": vals.ravel(),
         }
     )
-    return spark.createDataFrame(pdf)
+
+
+def read_geotiff_grid(spark, path: str, band: int = 0):
+    """Driver-side S1 ingest: one GeoTIFF -> long DataFrame
+    (y_idx, x_idx, lon, lat, value) for ``band``."""
+    return spark.createDataFrame(_geotiff_frame(*read_geotiff(path), band))
 
 
 def read_geotiff_dist(spark, path: str, band: int = 0, level: int = 0):
@@ -764,12 +763,11 @@ def read_geotiff_dist(spark, path: str, band: int = 0, level: int = 0):
     return mdf.mapInPandas(_scan, schema)
 
 
-def read_geotiff_dir(spark, path: str, band: int = 0):
-    """Distributed S1 over a directory of GeoTIFFs (one raster per
-    scene/date — the satellite-archive shape): ``binaryFile`` scan +
-    executor-side decode.  Emits (file, y_idx, x_idx, lon, lat,
-    value)."""
-    import pandas as pd
+def _decode_geotiff_files(files, band: int = 0):
+    """The per-file decode behind ``read_geotiff_dir`` AND its stream
+    mirror: a (path, content) ``binaryFile`` frame becomes
+    (file, y_idx, x_idx, lon, lat, value) for ``band``, decoded
+    executor-side."""
     from pyspark.sql.types import (
         DoubleType,
         LongType,
@@ -779,40 +777,26 @@ def read_geotiff_dir(spark, path: str, band: int = 0):
     )
 
     schema = StructType(
-        [
-            StructField("file", StringType()),
-            StructField("y_idx", LongType()),
-            StructField("x_idx", LongType()),
-            StructField("lon", DoubleType()),
-            StructField("lat", DoubleType()),
-            StructField("value", DoubleType()),
-        ]
+        [StructField("file", StringType())]
+        + [StructField(c, LongType()) for c in ("y_idx", "x_idx")]
+        + [StructField(c, DoubleType()) for c in ("lon", "lat", "value")]
     )
-    files = spark.read.format("binaryFile").load(path)
 
     def _batches(it):
         for pdf in it:
             for fname, buf in zip(pdf["path"], pdf["content"]):
-                info, arr = read_geotiff(bytes(buf))
-                h, w = info["height"], info["width"]
-                yy, xx = np.meshgrid(
-                    np.arange(h), np.arange(w), indexing="ij"
-                )
-                lon_f, lat_f = _affine_cols(info["transform"])
-                vals = arr[:, :, band].astype("float64")
-                if info["nodata"] is not None:
-                    vals = np.where(vals == info["nodata"], np.nan, vals)
-                gx = xx.ravel().astype("float64")
-                gy = yy.ravel().astype("float64")
-                yield pd.DataFrame(
-                    {
-                        "file": np.repeat(fname, h * w),
-                        "y_idx": gy.astype("int64"),
-                        "x_idx": gx.astype("int64"),
-                        "lon": lon_f(gx, gy),
-                        "lat": lat_f(gx, gy),
-                        "value": vals.ravel(),
-                    }
-                )
+                frame = _geotiff_frame(*read_geotiff(bytes(buf)), band)
+                frame.insert(0, "file", fname)
+                yield frame
 
     return files.select("path", "content").mapInPandas(_batches, schema)
+
+
+def read_geotiff_dir(spark, path: str, band: int = 0):
+    """Distributed S1 over a directory of GeoTIFFs (one raster per
+    scene/date — the satellite-archive shape): ``binaryFile`` scan ->
+    ``_decode_geotiff_files``.  Emits (file, y_idx, x_idx, lon, lat,
+    value)."""
+    return _decode_geotiff_files(
+        spark.read.format("binaryFile").load(path), band
+    )

@@ -1204,14 +1204,11 @@ def read_grib2_msgs(spark, path: str):
     return mdf.mapInPandas(_scan, schema)
 
 
-def read_grib2_dir(spark, path: str):
-    """Distributed S1 over a directory/glob of GRIB2 files — the
-    met-archive shape (one file per cycle/member, many messages per
-    file).  ``binaryFile`` scan (GRIB2 is not block-splittable; the
-    file is the parallelism unit, as with NetCDF archives) +
-    ``mapInPandas`` executor-side parse.  Emits
-    (file, msg_idx, y_idx, x_idx, lat, lon, value)."""
-    import pandas as pd
+def _decode_grib2_files(files):
+    """The per-file decode behind ``read_grib2_dir`` AND its stream
+    mirror: a (path, content) ``binaryFile`` frame becomes
+    (file, msg_idx, y_idx, x_idx, lat, lon, value), one frame per
+    message, parsed executor-side."""
     from pyspark.sql.types import (
         DoubleType,
         LongType,
@@ -1221,17 +1218,10 @@ def read_grib2_dir(spark, path: str):
     )
 
     schema = StructType(
-        [
-            StructField("file", StringType()),
-            StructField("msg_idx", LongType()),
-            StructField("y_idx", LongType()),
-            StructField("x_idx", LongType()),
-            StructField("lat", DoubleType()),
-            StructField("lon", DoubleType()),
-            StructField("value", DoubleType()),
-        ]
+        [StructField("file", StringType())]
+        + [StructField(c, LongType()) for c in ("msg_idx", "y_idx", "x_idx")]
+        + [StructField(c, DoubleType()) for c in ("lat", "lon", "value")]
     )
-    files = spark.read.format("binaryFile").load(path)
 
     def _batches(it):
         for pdf in it:
@@ -1240,3 +1230,13 @@ def read_grib2_dir(spark, path: str):
                 yield from _unnest_messages(msgs, fname)
 
     return files.select("path", "content").mapInPandas(_batches, schema)
+
+
+def read_grib2_dir(spark, path: str):
+    """Distributed S1 over a directory/glob of GRIB2 files — the
+    met-archive shape (one file per cycle/member, many messages per
+    file).  ``binaryFile`` scan (GRIB2 is not block-splittable; the
+    file is the parallelism unit, as with NetCDF archives) ->
+    ``_decode_grib2_files``.  Emits
+    (file, msg_idx, y_idx, x_idx, lat, lon, value)."""
+    return _decode_grib2_files(spark.read.format("binaryFile").load(path))

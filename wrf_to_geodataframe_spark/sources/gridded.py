@@ -8,12 +8,20 @@ always preferring the DISTRIBUTED scan:
 
 | target                                   | route                    |
 |------------------------------------------|--------------------------|
-| dir with ``zarr.json``                    | zarr v3 shard-parallel   |
-| dir with ``.zgroup``/``.zarray``/``.zmetadata`` | zarr v2 chunk-parallel |
+| dir with ``zarr.json``                    | zarr v3 shard-parallel (``read_zarr3_dist``) |
+| dir with ``.zgroup``/``.zarray``/``.zmetadata`` | zarr v2 chunk-parallel (``read_zarr_dist``) |
 | other dir                                 | NetCDF/GRIB2/GeoTIFF archive scan by sniffing the first file |
 | ``GRIB`` magic                            | GRIB2 message unnest     |
 | ``II*``/``MM*`` TIFF magic                | GeoTIFF tile-parallel    |
-| ``CDF``/HDF5 magic                        | NetCDF chunk-/record-parallel (driver read for small files) |
+| ``CDF`` magic                             | NetCDF classic driver read |
+| HDF5 magic                                | NetCDF-4 chunk-parallel (``read_netcdf_chunks``) |
+
+The three chunk-parallel routes are one kernel
+(``sources/chunkscan.py``) with a per-format chunk decode, so
+``time_index`` prunes the chunk manifest the same way on each, and an
+out-of-range ``time_index`` raises the same named ``ValueError``.  The
+archive routes split into the ``binaryFile`` source and a per-file
+decoder that the streaming mirrors (``streaming/ingest.py``) reuse.
 
 Column contract: every route emits the explicit-key long shape with
 ``y_idx``/``x_idx``, coordinates and ``value`` (plus the route's
@@ -77,7 +85,6 @@ def read_grid_any(spark, path: str, **kw):
     if fmt == "zarr3":
         from wrf_to_geodataframe_spark.sources.zarr3 import read_zarr3_dist
 
-        kw.pop("time_index", None)
         return read_zarr3_dist(
             spark, path, names["var"], names["lat_var"], names["lon_var"],
             **kw,

@@ -494,6 +494,9 @@ def _unnest_grid(ds: dict, var: str, lat_var: str, lon_var: str,
     if v.ndim == 2:
         slices = [(0, v)]
     elif time_index is not None:
+        from wrf_to_geodataframe_spark.sources.chunkscan import check_grid
+
+        check_grid(var, v.shape, time_index)
         slices = [(time_index, v[time_index])]
     else:
         slices = list(enumerate(v))
@@ -522,6 +525,55 @@ def _unnest_grid(ds: dict, var: str, lat_var: str, lon_var: str,
         yield frame
 
 
+def _grid_fields(value_cols, time_col: int | None = None):
+    """(file, t_idx, y_idx, x_idx, lat, lon, *value_cols) schema, with
+    a ``time`` timestamp inserted at field ``time_col`` when given."""
+    from pyspark.sql.types import (
+        DoubleType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+        TimestampType,
+    )
+
+    fields = (
+        [StructField("file", StringType())]
+        + [StructField(c, LongType()) for c in ("t_idx", "y_idx", "x_idx")]
+        + [StructField(c, DoubleType()) for c in ("lat", "lon", *value_cols)]
+    )
+    if time_col is not None:
+        fields.insert(time_col, StructField("time", TimestampType()))
+    return StructType(fields)
+
+
+def _decode_netcdf_files(files, var: str, lat_var: str, lon_var: str,
+                         time_index: int | None = None,
+                         time_var: str | None = None):
+    """The per-file decode behind ``read_netcdf_dir`` AND its stream
+    mirror: a (path, content) ``binaryFile`` frame — batch or
+    streaming — becomes the long table (file, t_idx, [time,] y_idx,
+    x_idx, lat, lon, value), each executor task running the pure-numpy
+    classic/HDF5 parser (``read_netcdf_any_bytes``) on its files."""
+
+    def _batches(it):
+        from wrf_to_geodataframe_spark.sources.hdf5 import (
+            read_netcdf_any_bytes,
+        )
+
+        for pdf in it:
+            for fname, buf in zip(pdf["path"], pdf["content"]):
+                ds = read_netcdf_any_bytes(bytes(buf), name=fname)
+                for frame in _unnest_grid(
+                    ds, var, lat_var, lon_var, time_index, time_var
+                ):
+                    frame.insert(0, "file", fname)
+                    yield frame
+
+    schema = _grid_fields(["value"], 2 if time_var is not None else None)
+    return files.select("path", "content").mapInPandas(_batches, schema)
+
+
 def read_netcdf_dir(
     spark,
     path: str,
@@ -539,95 +591,46 @@ def read_netcdf_dir(
 
     ``binaryFile`` scan (one split per file — NetCDF is not
     block-splittable, matching how such archives shard in practice) ->
-    ``mapInPandas`` Arrow batches, each executor task running the same
-    pure-numpy classic/HDF5 parser (``read_netcdf_any_bytes``) on its
-    files.  Emits the long table
+    ``_decode_netcdf_files``.  Emits the long table
     (file string, t_idx, y_idx, x_idx, lat, lon, value) — the engine's
     explicit-keys data model (SURVEY.md §1.1/§1.3) with the source
     file kept as a column so per-shard provenance survives the unnest.
     Nothing data-sized ever touches the driver."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
+    return _decode_netcdf_files(
+        spark.read.format("binaryFile").load(path),
+        var, lat_var, lon_var, time_index, time_var,
     )
 
-    fields = [
-        StructField("file", StringType()),
-        StructField("t_idx", LongType()),
-        StructField("y_idx", LongType()),
-        StructField("x_idx", LongType()),
-        StructField("lat", DoubleType()),
-        StructField("lon", DoubleType()),
-        StructField("value", DoubleType()),
-    ]
-    if time_var is not None:
-        fields.insert(2, StructField("time", TimestampType()))
-    schema = StructType(fields)
-    files = spark.read.format("binaryFile").load(path)
 
-    def _batches(it):
-        from wrf_to_geodataframe_spark.sources.hdf5 import (
-            read_netcdf_any_bytes,
+def _shard_time(ds: dict, fname: str, time_var: str):
+    """The ONE decoded timestamp of a one-timestep shard's
+    ``time_var`` (WRF ``Times`` chars or a CF numeric coordinate);
+    a named error on any other step count."""
+    import pandas as pd
+
+    if time_var not in ds["variables"]:
+        raise ValueError(f"{fname}: no time variable {time_var!r}")
+    tv = ds["variables"][time_var]
+    tns = decode_cf_time_values(np.asarray(tv["data"]), tv.get("attrs", {}))
+    if tns.shape[0] != 1:
+        raise ValueError(
+            f"{fname}: {tns.shape[0]} timesteps in {time_var!r}; "
+            "stream_netcdf_dir_many(time_var=...) requires "
+            "one-timestep-per-shard archives"
         )
-
-        for pdf in it:
-            for fname, buf in zip(pdf["path"], pdf["content"]):
-                ds = read_netcdf_any_bytes(bytes(buf), name=fname)
-                for frame in _unnest_grid(
-                    ds, var, lat_var, lon_var, time_index, time_var
-                ):
-                    frame.insert(0, "file", fname)
-                    yield frame
-
-    return files.select("path", "content").mapInPandas(_batches, schema)
+    return pd.Timestamp(tns[0])
 
 
-def read_netcdf_dir_many(
-    spark,
-    path: str,
-    variables: list[str],
-    lat_var: str,
-    lon_var: str,
-):
-    """``read_netcdf_dir`` for SEVERAL same-grid variables in ONE
-    archive scan: each shard's bytes are fetched and parsed once, and
-    every requested variable becomes its own column —
-    (file, t_idx, y_idx, x_idx, lat, lon, <var1.lower()>, ...).
-
-    The variables must share the first variable's grid shape (same
-    dims per time slice) — a mismatch raises a NAMED error inside the
-    task rather than mis-aligning raveled cells.  This is the reader
-    multi-variable derivations (wrf_getvar's T/P/PB/QVAPOR joins)
-    should use: N columns for one scan instead of N scans."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
+def _decode_netcdf_files_many(files, variables: list[str], lat_var: str,
+                              lon_var: str, time_var: str | None = None):
+    """The per-file decode behind ``read_netcdf_dir_many`` AND its
+    stream mirror: each shard is parsed ONCE and every requested
+    variable becomes its own column.  ``time_var`` (stream mirror
+    only) stamps every row with the shard's single decoded timestamp
+    as a ``time`` column after ``lon``."""
     variables = list(variables)
     if not variables:
         raise ValueError("read_netcdf_dir_many needs at least one variable")
-    schema = StructType(
-        [
-            StructField("file", StringType()),
-            StructField("t_idx", LongType()),
-            StructField("y_idx", LongType()),
-            StructField("x_idx", LongType()),
-            StructField("lat", DoubleType()),
-            StructField("lon", DoubleType()),
-        ]
-        + [StructField(v.lower(), DoubleType()) for v in variables]
-    )
-    files = spark.read.format("binaryFile").load(path)
 
     def _batches(it):
         from wrf_to_geodataframe_spark.sources.hdf5 import (
@@ -660,9 +663,37 @@ def read_netcdf_dir_many(
                         f[var.lower()] = e["value"].to_numpy()
                 for f in frames:
                     f.insert(0, "file", fname)
+                    if time_var is not None:
+                        f.insert(6, "time", _shard_time(ds, fname, time_var))
                     yield f
 
+    schema = _grid_fields(
+        [v.lower() for v in variables], 6 if time_var is not None else None
+    )
     return files.select("path", "content").mapInPandas(_batches, schema)
+
+
+def read_netcdf_dir_many(
+    spark,
+    path: str,
+    variables: list[str],
+    lat_var: str,
+    lon_var: str,
+):
+    """``read_netcdf_dir`` for SEVERAL same-grid variables in ONE
+    archive scan: each shard's bytes are fetched and parsed once, and
+    every requested variable becomes its own column —
+    (file, t_idx, y_idx, x_idx, lat, lon, <var1.lower()>, ...).
+
+    The variables must share the first variable's grid shape (same
+    dims per time slice) — a mismatch raises a NAMED error inside the
+    task rather than mis-aligning raveled cells.  This is the reader
+    multi-variable derivations (wrf_getvar's T/P/PB/QVAPOR joins)
+    should use: N columns for one scan instead of N scans."""
+    return _decode_netcdf_files_many(
+        spark.read.format("binaryFile").load(path),
+        variables, lat_var, lon_var,
+    )
 
 
 def write_netcdf_dir(
@@ -757,145 +788,58 @@ def read_netcdf_chunks(
     filter pipeline (deflate/shuffle/szip) itself.  Unwritten chunks
     yield the reader's fill (0.0).  Emits the same
     (t_idx, y_idx, x_idx, lat, lon, value) long table as the other
-    single-file source.  Requires a path every executor can open
-    (local mode, NFS/Lustre — the HPC archive shape)."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
+    single-file source, through the zarr scans' kernel
+    (``sources/chunkscan.py``).  Requires a path every executor can
+    open (local mode, NFS/Lustre — the HPC archive shape)."""
+    from wrf_to_geodataframe_spark.sources.chunkscan import (
+        grid_coords,
+        scan_chunks,
     )
-
     from wrf_to_geodataframe_spark.sources.hdf5 import (
         decode_chunk_pipeline,
         hdf5_chunk_manifest,
     )
 
     man = hdf5_chunk_manifest(path, var, aux_vars=(lat_var, lon_var))
-    shape, chunk = man["shape"], man["chunks"]
-    if len(shape) == 3:
-        tdim = True
-    elif len(shape) == 2:
-        tdim = False
-    else:
-        raise ValueError(f"{var}: expected (t,y,x) or (y,x), got {shape}")
-    lat = np.asarray(
-        cf_mask_and_scale(man["aux"][lat_var], man["aux_attrs"][lat_var]),
-        dtype="float64",
-    )
-    lon = np.asarray(
-        cf_mask_and_scale(man["aux"][lon_var], man["aux_attrs"][lon_var]),
-        dtype="float64",
-    )
-    if lat.ndim == 1 and lon.ndim == 1:
-        lon, lat = np.meshgrid(lon, lat)
-    coords = spark.sparkContext.broadcast((lat, lon))
-    bman = spark.sparkContext.broadcast(
-        {
-            "chunks": chunk,
-            "dtype": man["dtype"],
-            "filters": man["filters"],
-            "shape": shape,
-            "fill": man["fill"],
-            "attrs": man["attrs"],
-        }
-    )
-
+    chunks = man["chunks"]
+    meta = {
+        "shape": man["shape"],
+        "chunks": chunks,
+        "dtype": np.dtype(man["dtype"]),
+        "filters": man["filters"],
+        "fill": man["fill"],
+        "attrs": man["attrs"],
+    }
     stored = {
-        tuple(o // c for o, c in zip(offs, chunk)): (addr, nbytes, mask)
+        tuple(o // c for o, c in zip(offs, chunks)): (addr, nbytes, mask)
         for offs, addr, nbytes, mask in man["entries"]
     }
-    grid = tuple(-(-s // c) for s, c in zip(shape, chunk))
-    rows = []
-    for idx in np.ndindex(*grid):
-        if tdim and time_index is not None:
-            t0 = idx[0] * chunk[0]
-            if not (t0 <= time_index < t0 + chunk[0]):
-                continue
-        addr, nbytes, mask = stored.get(idx, (-1, 0, 0))
-        origin = tuple(int(i * c) for i, c in zip(idx, chunk))
-        rows.append(
-            (addr, nbytes, mask)
-            + ((origin if tdim else (0,) + origin))
-        )
-    mdf = spark.createDataFrame(
-        rows, "addr long, nbytes long, fmask long, t0 long, y0 long, x0 long"
-    ).repartition(
-        max(1, min(len(rows), spark.sparkContext.defaultParallelism * 2)),
-        "addr",
-    )
 
-    schema = StructType(
-        [
-            StructField("t_idx", LongType()),
-            StructField("y_idx", LongType()),
-            StructField("x_idx", LongType()),
-            StructField("lat", DoubleType()),
-            StructField("lon", DoubleType()),
-            StructField("value", DoubleType()),
-        ]
-    )
-
-    def _scan(it):
-        m = bman.value
-        lat_g, lon_g = coords.value
-        csh = m["chunks"]
-        dt = np.dtype(m["dtype"])
-        nchunk = int(np.prod(csh))
-        shp = m["shape"]
+    def _decode(m, rows):
+        dt = m["dtype"]
+        nchunk = int(np.prod(m["chunks"]))
         with open(path, "rb") as fh:
-            for pdf in it:
-                for row in pdf.itertuples(index=False):
-                    if row.addr >= 0:
-                        fh.seek(int(row.addr))
-                        raw = decode_chunk_pipeline(
-                            fh.read(int(row.nbytes)), m["filters"],
-                            dt.itemsize, nchunk, int(row.fmask),
-                        )
-                        carr = np.frombuffer(raw, dt, count=nchunk)
-                        carr = carr.reshape(csh).astype(
-                            dt.newbyteorder("="), copy=False
-                        )
-                    else:
-                        carr = np.full(csh, m["fill"], dt.newbyteorder("="))
-                    carr = cf_mask_and_scale(carr, m["attrs"])
-                    t0, y0, x0 = int(row.t0), int(row.y0), int(row.x0)
-                    if tdim:
-                        nt = min(csh[0], shp[0] - t0)
-                        ny = min(csh[1], shp[1] - y0)
-                        nx = min(csh[2], shp[2] - x0)
-                        block = carr[:nt, :ny, :nx]
-                        tsel = range(nt)
-                        if time_index is not None:
-                            rel = time_index - t0
-                            block = block[rel:rel + 1]
-                            tsel = [rel]
-                    else:
-                        ny = min(csh[0], shp[0] - y0)
-                        nx = min(csh[1], shp[1] - x0)
-                        block = carr[None, :ny, :nx]
-                        tsel = [0]
-                    yy, xx = np.meshgrid(
-                        np.arange(ny), np.arange(nx), indexing="ij"
-                    )
-                    lat_c = lat_g[y0:y0 + ny, x0:x0 + nx].ravel()
-                    lon_c = lon_g[y0:y0 + ny, x0:x0 + nx].ravel()
-                    for rel_t, sl in zip(tsel, block):
-                        yield pd.DataFrame(
-                            {
-                                "t_idx": np.full(
-                                    ny * nx, t0 + rel_t, "int64"
-                                ),
-                                "y_idx": (yy.ravel() + y0).astype("int64"),
-                                "x_idx": (xx.ravel() + x0).astype("int64"),
-                                "lat": lat_c,
-                                "lon": lon_c,
-                                "value": sl.ravel().astype("float64"),
-                            }
-                        )
+            for row in rows:
+                if row.addr < 0:
+                    yield row, None
+                    continue
+                fh.seek(int(row.addr))
+                raw = decode_chunk_pipeline(
+                    fh.read(int(row.nbytes)), m["filters"],
+                    dt.itemsize, nchunk, int(row.fmask),
+                )
+                carr = np.frombuffer(raw, dt, count=nchunk)
+                yield row, carr.reshape(m["chunks"]).astype(
+                    dt.newbyteorder("="), copy=False
+                )
 
-    return mdf.mapInPandas(_scan, schema)
+    return scan_chunks(
+        spark, var, meta,
+        grid_coords(man["aux"][lat_var], man["aux_attrs"][lat_var],
+                    man["aux"][lon_var], man["aux_attrs"][lon_var]),
+        time_index, "addr long, nbytes long, fmask long",
+        lambda idx: stored.get(idx, (-1, 0, 0)), _decode, keyed=False,
+    )
 
 
 def _read_header_from_file(path: str) -> dict:

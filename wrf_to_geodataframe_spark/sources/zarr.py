@@ -381,7 +381,13 @@ def _chunk_grid(shape, chunks):
     return tuple(-(-s // c) for s, c in zip(shape, chunks)) or (1,)
 
 
-def _chunk_key(idx: tuple, sep: str) -> str:
+def _chunk_key(idx: tuple, sep: str, encoding: str = "v2") -> str:
+    """Chunk object key: the v2 encoding (``0.1.2``; zarr v3's ``v2``
+    chunk_key_encoding too) or zarr v3's ``default`` (``c/0/1/2``)."""
+    if encoding == "default":
+        return sep.join(["c", *(str(i) for i in idx)]) if idx else "c"
+    if encoding != "v2":
+        raise ZarrError(f"chunk key encoding {encoding!r}")
     return sep.join(str(i) for i in idx) if idx else "0"
 
 
@@ -651,132 +657,38 @@ def read_zarr_dist(
     data) plus the small coordinate arrays (broadcast once); the chunk
     manifest is pure arithmetic over the chunk grid (no listing), and
     each executor task opens exactly its own chunk objects.  Missing
-    chunks yield ``fill_value`` cells, per spec.
+    chunks yield ``fill_value`` cells, per spec; CF packing attributes
+    in ``.zattrs`` are decoded executor-side, as xarray does.
 
     Emits (chunk_key, t_idx, y_idx, x_idx, lat, lon, value).  Requires
     a path every executor can open (local mode, NFS/Lustre — or an
     object-store mount; chunk objects are independent, so there is no
-    cross-task coordination of any kind)."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
+    cross-task coordination of any kind).  The scan itself is the
+    shared kernel in ``sources/chunkscan.py``."""
+    from wrf_to_geodataframe_spark.sources.chunkscan import (
+        grid_coords,
+        scan_chunks,
     )
 
     adir = os.path.join(path, var)
     meta = _load_array_meta(adir)
-    shape, chunks, sep = meta["shape"], meta["chunks"], meta["sep"]
-    if len(shape) == 2:
-        tdim = False
-    elif len(shape) == 3:
-        tdim = True
-    else:
-        raise ZarrError(f"{var}: expected (t,y,x) or (y,x), got {shape}")
-
-    from wrf_to_geodataframe_spark.sources.netcdf import cf_mask_and_scale
-
     lm, lat = read_zarr_array(os.path.join(path, lat_var))
     om, lon = read_zarr_array(os.path.join(path, lon_var))
-    lat = np.asarray(cf_mask_and_scale(lat, lm.get("attrs") or {}))
-    lon = np.asarray(cf_mask_and_scale(lon, om.get("attrs") or {}))
-    if lat.ndim == 1 and lon.ndim == 1:
-        lon, lat = np.meshgrid(lon, lat)
-    lat = lat.astype("float64")
-    lon = lon.astype("float64")
-    coords = spark.sparkContext.broadcast((lat, lon))
-    # attrs ride along for executor-side CF mask-and-scale (xarray
-    # applies its packed-variable decode to zarr stores too)
-    bmeta = spark.sparkContext.broadcast(dict(meta))
 
-    grid = _chunk_grid(shape, chunks)
-    keys = []
-    for idx in np.ndindex(*grid):
-        if tdim and time_index is not None:
-            t0 = idx[0] * chunks[0]
-            if not (t0 <= time_index < t0 + chunks[0]):
+    def _decode(m, rows):
+        for row in rows:
+            cpath = os.path.join(adir, row.key)
+            if not os.path.exists(cpath):
+                yield row, None
                 continue
-        keys.append((_chunk_key(idx, sep),) + tuple(
-            int(i * c) for i, c in zip(idx, chunks)
-        ))
-    cols = (
-        "key string, t0 long, y0 long, x0 long"
-        if tdim
-        else "key string, y0 long, x0 long"
-    )
-    manifest = spark.createDataFrame(keys, cols).repartition(
-        min(len(keys), spark.sparkContext.defaultParallelism * 2), "key"
-    )
+            with open(cpath, "rb") as f:
+                yield row, _decode_chunk(f.read(), m)
 
-    schema = StructType(
-        [
-            StructField("chunk_key", StringType()),
-            StructField("t_idx", LongType()),
-            StructField("y_idx", LongType()),
-            StructField("x_idx", LongType()),
-            StructField("lat", DoubleType()),
-            StructField("lon", DoubleType()),
-            StructField("value", DoubleType()),
-        ]
+    return scan_chunks(
+        spark, var, meta, grid_coords(lat, lm["attrs"], lon, om["attrs"]),
+        time_index, "key string",
+        lambda idx: (_chunk_key(idx, meta["sep"]),), _decode, keyed=True,
     )
-
-    def _scan(it):
-        m = bmeta.value
-        lat_g, lon_g = coords.value
-        csh = m["chunks"]
-        for pdf in it:
-            for row in pdf.itertuples(index=False):
-                key = row.key
-                t0 = int(getattr(row, "t0", 0)) if tdim else 0
-                y0 = int(row.y0)
-                x0 = int(row.x0)
-                cpath = os.path.join(adir, key)
-                if os.path.exists(cpath):
-                    with open(cpath, "rb") as f:
-                        carr = _decode_chunk(f.read(), m)
-                else:
-                    carr = np.full(
-                        csh, m["fill"], dtype=m["dtype"].newbyteorder("=")
-                    )
-                carr = np.asarray(
-                    cf_mask_and_scale(carr, m.get("attrs") or {})
-                )
-                if tdim:
-                    ny = min(csh[1], shape[1] - y0)
-                    nx = min(csh[2], shape[2] - x0)
-                    nt = min(csh[0], shape[0] - t0)
-                    block = carr[:nt, :ny, :nx]
-                    tsel = range(nt)
-                    if time_index is not None:
-                        tsel = [time_index - t0]
-                        block = block[tsel[0]:tsel[0] + 1]
-                        tsel = [time_index - t0]
-                else:
-                    ny = min(csh[0], shape[0] - y0)
-                    nx = min(csh[1], shape[1] - x0)
-                    block = carr[None, :ny, :nx]
-                    tsel = [0]
-                yy, xx = np.meshgrid(
-                    np.arange(ny), np.arange(nx), indexing="ij"
-                )
-                lat_c = lat_g[y0:y0 + ny, x0:x0 + nx].ravel()
-                lon_c = lon_g[y0:y0 + ny, x0:x0 + nx].ravel()
-                for ti, sl in zip(tsel, block):
-                    yield pd.DataFrame(
-                        {
-                            "chunk_key": np.repeat(key, ny * nx),
-                            "t_idx": np.full(ny * nx, t0 + ti, "int64"),
-                            "y_idx": (yy.ravel() + y0).astype("int64"),
-                            "x_idx": (xx.ravel() + x0).astype("int64"),
-                            "lat": lat_c,
-                            "lon": lon_c,
-                            "value": sl.ravel().astype("float64"),
-                        }
-                    )
-
-    return manifest.mapInPandas(_scan, schema)
 
 
 def write_zarr_dist(

@@ -42,6 +42,8 @@ import numpy as np
 from wrf_to_geodataframe_spark.sources.zarr import (
     ZarrError,
     _blosc_decompress,
+    _chunk_key,
+    _parse_fill,
 )
 
 __all__ = [
@@ -86,22 +88,6 @@ def crc32c(data: bytes, crc: int = 0) -> int:
     for b in data:
         c = tbl[(c ^ b) & 0xFF] ^ (c >> 8)
     return c ^ 0xFFFFFFFF
-
-
-def _parse_fill(fill, dt: np.dtype):
-    if isinstance(fill, str):
-        if dt.kind == "f":
-            return dt.type(
-                {"NaN": np.nan, "Infinity": np.inf, "-Infinity": -np.inf}[
-                    fill
-                ]
-            )
-        raise ZarrError(f"bad fill_value {fill!r} for {dt}")
-    if isinstance(fill, bool):
-        return dt.type(fill)
-    if fill is None:
-        return np.zeros((), dt)[()]
-    return dt.type(fill)
 
 
 def _json_fill(fill, dt: np.dtype):
@@ -158,14 +144,6 @@ def _array_meta(adir: str) -> dict:
         "dimension_names": meta.get("dimension_names"),
         "attrs": meta.get("attributes", {}),
     }
-
-
-def _chunk_key(idx: tuple, key_name: str, sep: str) -> str:
-    if key_name == "default":
-        return sep.join(["c", *(str(i) for i in idx)]) if idx else "c"
-    if key_name == "v2":
-        return sep.join(str(i) for i in idx) if idx else "0"
-    raise ZarrError(f"chunk key encoding {key_name!r}")
 
 
 # -- codec pipeline ------------------------------------------------------
@@ -367,7 +345,7 @@ def read_zarr3_array(adir: str) -> tuple[dict, np.ndarray]:
     grid = tuple(-(-s // c) for s, c in zip(shape, chunks)) or (1,)
     for idx in np.ndindex(*grid):
         key = _chunk_key(
-            idx if shape else (), meta["key_name"], meta["key_sep"]
+            idx if shape else (), meta["key_sep"], meta["key_name"]
         )
         cpath = os.path.join(adir, key.replace("/", os.sep))
         if not os.path.exists(cpath):
@@ -562,7 +540,7 @@ def _write_array(adir, arr, vdims, cshape, sshape, compressor,
             blob = _encode_shard(part, cshape, emeta)
         else:
             blob = _encode_chunk(part, emeta)
-        key = _chunk_key(idx if arr.shape else (), "default", separator)
+        key = _chunk_key(idx if arr.shape else (), separator, "default")
         cpath = os.path.join(adir, key.replace("/", os.sep))
         os.makedirs(os.path.dirname(cpath), exist_ok=True)
         with open(cpath, "wb") as f:
@@ -706,126 +684,43 @@ def read_zarr3_dist(
     var: str,
     lat_var: str,
     lon_var: str,
+    time_index: int | None = None,
 ):
     """Shard-parallel distributed scan of a zarr v3 store: one task
     per storage object (a SHARD when sharding_indexed is in play — the
     task decodes the object's index and its inner chunks locally,
     byte-range style; a plain chunk otherwise).  Manifest by
-    arithmetic from ``zarr.json``; coords broadcast once.  Emits the
-    same (chunk_key, t_idx, y_idx, x_idx, lat, lon, value) table as
-    the v2 scan."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
+    arithmetic from ``zarr.json`` (pruned to the objects holding
+    ``time_index``); coords broadcast once.  Emits the same
+    (chunk_key, t_idx, y_idx, x_idx, lat, lon, value) table as the v2
+    scan, through the same kernel (``sources/chunkscan.py``)."""
+    from wrf_to_geodataframe_spark.sources.chunkscan import (
+        grid_coords,
+        scan_chunks,
     )
 
     adir = os.path.join(path, var)
     meta = _array_meta(adir)
-    shape, chunks = meta["shape"], meta["chunks"]
-    if len(shape) == 2:
-        tdim = False
-    elif len(shape) == 3:
-        tdim = True
-    else:
-        raise ZarrError(f"{var}: expected (t,y,x) or (y,x), got {shape}")
-    from wrf_to_geodataframe_spark.sources.netcdf import cf_mask_and_scale
-
     lm, lat = read_zarr3_array(os.path.join(path, lat_var))
     om, lon = read_zarr3_array(os.path.join(path, lon_var))
-    lat = np.asarray(cf_mask_and_scale(lat, lm.get("attrs") or {}))
-    lon = np.asarray(cf_mask_and_scale(lon, om.get("attrs") or {}))
-    if lat.ndim == 1 and lon.ndim == 1:
-        lon, lat = np.meshgrid(lon, lat)
-    coords = spark.sparkContext.broadcast(
-        (lat.astype("float64"), lon.astype("float64"))
-    )
-    # attrs ride along for executor-side CF mask-and-scale (xarray
-    # applies its packed-variable decode to zarr stores too)
-    bmeta = spark.sparkContext.broadcast(dict(meta))
-    grid = tuple(-(-s // c) for s, c in zip(shape, chunks))
-    keys = [
-        (_chunk_key(idx, meta["key_name"], meta["key_sep"]),)
-        + tuple(int(i * c) for i, c in zip(idx, chunks))
-        for idx in np.ndindex(*grid)
-    ]
-    cols = (
-        "key string, t0 long, y0 long, x0 long"
-        if tdim
-        else "key string, y0 long, x0 long"
-    )
-    manifest = spark.createDataFrame(keys, cols).repartition(
-        max(1, min(len(keys),
-                   spark.sparkContext.defaultParallelism * 2)), "key"
-    )
-    schema = StructType(
-        [
-            StructField("chunk_key", StringType()),
-            StructField("t_idx", LongType()),
-            StructField("y_idx", LongType()),
-            StructField("x_idx", LongType()),
-            StructField("lat", DoubleType()),
-            StructField("lon", DoubleType()),
-            StructField("value", DoubleType()),
-        ]
-    )
 
-    def _scan(it):
-        m = bmeta.value
+    def _decode(m, rows):
         shard = _shard_layout(m)
-        lat_g, lon_g = coords.value
-        csh = m["chunks"]
-        for pdf in it:
-            for row in pdf.itertuples(index=False):
-                key = row.key
-                t0 = int(getattr(row, "t0", 0)) if tdim else 0
-                y0, x0 = int(row.y0), int(row.x0)
-                cpath = os.path.join(adir, key.replace("/", os.sep))
-                if os.path.exists(cpath):
-                    with open(cpath, "rb") as f:
-                        blob = f.read()
-                    if shard is not None:
-                        carr = _read_shard(blob, m, shard, csh)
-                    else:
-                        carr = _decode_chunk(blob, m, csh)
-                else:
-                    carr = np.full(
-                        csh, m["fill"],
-                        dtype=m["dtype"].newbyteorder("="),
-                    )
-                carr = np.asarray(
-                    cf_mask_and_scale(carr, m.get("attrs") or {})
-                )
-                if tdim:
-                    nt = min(csh[0], shape[0] - t0)
-                    ny = min(csh[1], shape[1] - y0)
-                    nx = min(csh[2], shape[2] - x0)
-                    block = carr[:nt, :ny, :nx]
-                    tsel = range(nt)
-                else:
-                    ny = min(csh[0], shape[0] - y0)
-                    nx = min(csh[1], shape[1] - x0)
-                    block = carr[None, :ny, :nx]
-                    tsel = [0]
-                yy, xx = np.meshgrid(
-                    np.arange(ny), np.arange(nx), indexing="ij"
-                )
-                lat_c = lat_g[y0:y0 + ny, x0:x0 + nx].ravel()
-                lon_c = lon_g[y0:y0 + ny, x0:x0 + nx].ravel()
-                for ti, sl in zip(tsel, block):
-                    yield pd.DataFrame(
-                        {
-                            "chunk_key": np.repeat(key, ny * nx),
-                            "t_idx": np.full(ny * nx, t0 + ti, "int64"),
-                            "y_idx": (yy.ravel() + y0).astype("int64"),
-                            "x_idx": (xx.ravel() + x0).astype("int64"),
-                            "lat": lat_c,
-                            "lon": lon_c,
-                            "value": sl.ravel().astype("float64"),
-                        }
-                    )
+        for row in rows:
+            cpath = os.path.join(adir, row.key.replace("/", os.sep))
+            if not os.path.exists(cpath):
+                yield row, None
+                continue
+            with open(cpath, "rb") as f:
+                blob = f.read()
+            if shard is not None:
+                yield row, _read_shard(blob, m, shard, m["chunks"])
+            else:
+                yield row, _decode_chunk(blob, m, m["chunks"])
 
-    return manifest.mapInPandas(_scan, schema)
+    return scan_chunks(
+        spark, var, meta, grid_coords(lat, lm["attrs"], lon, om["attrs"]),
+        time_index, "key string",
+        lambda idx: (_chunk_key(idx, meta["key_sep"], meta["key_name"]),),
+        _decode, keyed=True,
+    )

@@ -4,13 +4,17 @@ output (SURVEY.md §2 S1 x §2.8 streaming).
 The reference ingests a finished archive (``xr.open_dataset``,
 wrf_voronoi.py:115); at production scale the archive is never
 finished — a running model (or a dissemination feed) drops one more
-NetCDF shard / GRIB2 cycle / zarr chunk every few minutes.  These
-sources declare the SAME executor-side pure-numpy decode as the batch
-sources (sources/netcdf.py, sources/grib2.py, sources/zarr.py) over a
-``binaryFile`` FILE STREAM, so every downstream operator (resample,
-spatial join, regrid) composes unchanged on the unbounded table and
-the engine's stream==batch discipline (streaming/resample.py et al.)
-extends to the ingest edge itself.
+NetCDF shard / GRIB2 cycle / zarr chunk every few minutes.  Each
+source here is its batch reader with the ``binaryFile`` BATCH scan
+swapped for a ``binaryFile`` FILE STREAM: the archive mirrors pass
+the stream to the batch module's own per-file decoder
+(``_decode_netcdf_files`` / ``_decode_netcdf_files_many`` /
+``_decode_grib2_files`` / ``_decode_geotiff_files``), and the live
+zarr tail runs the chunk kernel the batch chunk scans run
+(``sources/chunkscan.chunk_frames``).  Stream == batch therefore
+holds by construction — there is no second decode loop to drift —
+and every downstream operator (resample, spatial join, regrid)
+composes unchanged on the unbounded table.
 
 Scale shape: file-stream sources discover new files per micro-batch
 (bounded by ``max_files_per_trigger``) and parse them in executor
@@ -60,19 +64,6 @@ def _binary_stream(
     return r.load(path)
 
 
-_GRID_SCHEMA = StructType(
-    [
-        StructField("file", StringType()),
-        StructField("t_idx", LongType()),
-        StructField("y_idx", LongType()),
-        StructField("x_idx", LongType()),
-        StructField("lat", DoubleType()),
-        StructField("lon", DoubleType()),
-        StructField("value", DoubleType()),
-    ]
-)
-
-
 def stream_netcdf_dir(
     spark: SparkSession,
     path: str,
@@ -85,25 +76,11 @@ def stream_netcdf_dir(
     """Unbounded mirror of ``read_netcdf_dir``: each arriving
     ``.nc``/``.h5`` shard becomes long rows (file, t_idx, y_idx,
     x_idx, lat, lon, value) in the micro-batch that discovers it."""
-    files = _binary_stream(spark, path, max_files_per_trigger)
+    from wrf_to_geodataframe_spark.sources.netcdf import _decode_netcdf_files
 
-    def _batches(it):
-        from wrf_to_geodataframe_spark.sources.hdf5 import (
-            read_netcdf_any_bytes,
-        )
-        from wrf_to_geodataframe_spark.sources.netcdf import _unnest_grid
-
-        for pdf in it:
-            for fname, buf in zip(pdf["path"], pdf["content"]):
-                ds = read_netcdf_any_bytes(bytes(buf), name=fname)
-                for frame in _unnest_grid(
-                    ds, var, lat_var, lon_var, time_index
-                ):
-                    frame.insert(0, "file", fname)
-                    yield frame
-
-    return files.select("path", "content").mapInPandas(
-        _batches, _GRID_SCHEMA
+    return _decode_netcdf_files(
+        _binary_stream(spark, path, max_files_per_trigger),
+        var, lat_var, lon_var, time_index,
     )
 
 
@@ -132,96 +109,14 @@ def stream_netcdf_dir_many(
     ``wrf_times(single_step=True)``; the column is a real EVENT TIME,
     so ``withWatermark`` / ``stream_resample_daily`` compose on it
     directly."""
-    from pyspark.sql.types import DoubleType as _D
-    from pyspark.sql.types import TimestampType as _TS
-
-    variables = list(variables)
-    schema = StructType(
-        [
-            StructField("file", StringType()),
-            StructField("t_idx", LongType()),
-            StructField("y_idx", LongType()),
-            StructField("x_idx", LongType()),
-            StructField("lat", DoubleType()),
-            StructField("lon", DoubleType()),
-        ]
-        + ([StructField("time", _TS())] if time_var is not None else [])
-        + [StructField(v.lower(), _D()) for v in variables]
+    from wrf_to_geodataframe_spark.sources.netcdf import (
+        _decode_netcdf_files_many,
     )
-    files = _binary_stream(spark, path, max_files_per_trigger)
 
-    def _shard_time(ds, fname):
-        import numpy as _np
-        import pandas as _pd
-
-        from wrf_to_geodataframe_spark.sources.netcdf import (
-            decode_cf_time_values,
-        )
-
-        if time_var not in ds["variables"]:
-            raise ValueError(f"{fname}: no time variable {time_var!r}")
-        tv = ds["variables"][time_var]
-        tns = decode_cf_time_values(
-            _np.asarray(tv["data"]), tv.get("attrs", {})
-        )
-        if tns.shape[0] != 1:
-            raise ValueError(
-                f"{fname}: {tns.shape[0]} timesteps in {time_var!r}; "
-                "stream_netcdf_dir_many(time_var=...) requires "
-                "one-timestep-per-shard archives"
-            )
-        return _pd.Timestamp(tns[0])
-
-    def _batches(it):
-        from wrf_to_geodataframe_spark.sources.hdf5 import (
-            read_netcdf_any_bytes,
-        )
-        from wrf_to_geodataframe_spark.sources.netcdf import _unnest_grid
-
-        for pdf in it:
-            for fname, buf in zip(pdf["path"], pdf["content"]):
-                ds = read_netcdf_any_bytes(bytes(buf), name=fname)
-                frames = [
-                    f.rename(columns={"value": variables[0].lower()})
-                    for f in _unnest_grid(
-                        ds, variables[0], lat_var, lon_var, None
-                    )
-                ]
-                for var in variables[1:]:
-                    extra = list(
-                        _unnest_grid(ds, var, lat_var, lon_var, None)
-                    )
-                    if len(extra) != len(frames) or any(
-                        len(e) != len(f) for e, f in zip(extra, frames)
-                    ):
-                        raise ValueError(
-                            f"{var} does not share {variables[0]}'s "
-                            f"grid in {fname}"
-                        )
-                    for e, f in zip(extra, frames):
-                        f[var.lower()] = e["value"].to_numpy()
-                for f in frames:
-                    f.insert(0, "file", fname)
-                    if time_var is not None:
-                        # after (file, t_idx, y_idx, x_idx, lat, lon),
-                        # matching the schema's column order
-                        f.insert(6, "time", _shard_time(ds, fname))
-                    yield f
-
-    return files.select("path", "content").mapInPandas(_batches, schema)
-
-
-_GRIB_SCHEMA = StructType(
-    [
-        StructField("file", StringType()),
-        StructField("msg_idx", LongType()),
-        StructField("y_idx", LongType()),
-        StructField("x_idx", LongType()),
-        StructField("lat", DoubleType()),
-        StructField("lon", DoubleType()),
-        StructField("value", DoubleType()),
-    ]
-)
+    return _decode_netcdf_files_many(
+        _binary_stream(spark, path, max_files_per_trigger),
+        variables, lat_var, lon_var, time_var,
+    )
 
 
 def stream_grib2_dir(
@@ -231,21 +126,10 @@ def stream_grib2_dir(
 ) -> DataFrame:
     """Unbounded mirror of ``read_grib2_dir`` — the dissemination-feed
     shape (one GRIB2 file per model cycle, several messages each)."""
-    files = _binary_stream(spark, path, max_files_per_trigger)
+    from wrf_to_geodataframe_spark.sources.grib2 import _decode_grib2_files
 
-    def _batches(it):
-        from wrf_to_geodataframe_spark.sources.grib2 import (
-            _unnest_messages,
-            read_grib2_bytes,
-        )
-
-        for pdf in it:
-            for fname, buf in zip(pdf["path"], pdf["content"]):
-                msgs = read_grib2_bytes(bytes(buf), name=fname)
-                yield from _unnest_messages(msgs, fname)
-
-    return files.select("path", "content").mapInPandas(
-        _batches, _GRIB_SCHEMA
+    return _decode_grib2_files(
+        _binary_stream(spark, path, max_files_per_trigger)
     )
 
 
@@ -258,67 +142,13 @@ def stream_geotiff_dir(
     """Unbounded mirror of ``read_geotiff_dir`` — the satellite-scene
     landing-zone shape (one raster per scene/date arriving over
     time)."""
-    files = _binary_stream(spark, path, max_files_per_trigger)
-
-    def _batches(it):
-        import numpy as np
-        import pandas as pd
-
-        from wrf_to_geodataframe_spark.sources.geotiff import (
-            _affine_cols,
-            read_geotiff,
-        )
-
-        for pdf in it:
-            for fname, buf in zip(pdf["path"], pdf["content"]):
-                info, arr = read_geotiff(bytes(buf))
-                h, w = info["height"], info["width"]
-                yy, xx = np.meshgrid(
-                    np.arange(h), np.arange(w), indexing="ij"
-                )
-                lon_f, lat_f = _affine_cols(info["transform"])
-                vals = arr[:, :, band].astype("float64")
-                if info["nodata"] is not None:
-                    vals = np.where(
-                        vals == info["nodata"], np.nan, vals
-                    )
-                gx = xx.ravel().astype("float64")
-                gy = yy.ravel().astype("float64")
-                yield pd.DataFrame(
-                    {
-                        "file": np.repeat(fname, h * w),
-                        "y_idx": gy.astype("int64"),
-                        "x_idx": gx.astype("int64"),
-                        "lon": lon_f(gx, gy),
-                        "lat": lat_f(gx, gy),
-                        "value": vals.ravel(),
-                    }
-                )
-
-    schema = StructType(
-        [
-            StructField("file", StringType()),
-            StructField("y_idx", LongType()),
-            StructField("x_idx", LongType()),
-            StructField("lon", DoubleType()),
-            StructField("lat", DoubleType()),
-            StructField("value", DoubleType()),
-        ]
+    from wrf_to_geodataframe_spark.sources.geotiff import (
+        _decode_geotiff_files,
     )
-    return files.select("path", "content").mapInPandas(_batches, schema)
 
-
-_ZARR_SCHEMA = StructType(
-    [
-        StructField("chunk_key", StringType()),
-        StructField("t_idx", LongType()),
-        StructField("y_idx", LongType()),
-        StructField("x_idx", LongType()),
-        StructField("lat", DoubleType()),
-        StructField("lon", DoubleType()),
-        StructField("value", DoubleType()),
-    ]
-)
+    return _decode_geotiff_files(
+        _binary_stream(spark, path, max_files_per_trigger), band
+    )
 
 
 def stream_zarr_chunks(
@@ -331,14 +161,19 @@ def stream_zarr_chunks(
 ) -> DataFrame:
     """Tail a LIVE zarr store: a running simulation appends chunk
     objects under ``<store>/<var>/``; each arriving chunk becomes its
-    cells' rows.  Metadata (``.zarray``) and the coordinate arrays are
-    read once at stream definition and broadcast — only chunk objects
-    flow through the stream.  Emits the same schema as
-    ``read_zarr_dist``."""
-    import os
-
-    import numpy as np
-
+    cells' rows.  Metadata (``.zarray``/``.zattrs``) and the
+    coordinate arrays are read once at stream definition and
+    broadcast — only chunk objects flow through the stream.  Each
+    chunk goes through the batch scan's kernel
+    (``sources/chunkscan.chunk_frames``: CF mask-and-scale, edge
+    clipping), so the tail emits exactly ``read_zarr_dist``'s rows."""
+    from wrf_to_geodataframe_spark.sources.chunkscan import (
+        check_grid,
+        chunk_frames,
+        chunk_origin,
+        chunk_schema,
+        grid_coords,
+    )
     from wrf_to_geodataframe_spark.sources.zarr import (
         _load_array_meta,
         read_zarr_array,
@@ -346,78 +181,38 @@ def stream_zarr_chunks(
 
     adir = os.path.join(store, var)
     meta = _load_array_meta(adir)
-    shape, chunks, sep = meta["shape"], meta["chunks"], meta["sep"]
-    if len(shape) not in (2, 3):
-        raise ValueError(f"{var}: expected (t,y,x) or (y,x), got {shape}")
-    tdim = len(shape) == 3
-    _m, lat = read_zarr_array(os.path.join(store, lat_var))
-    _m, lon = read_zarr_array(os.path.join(store, lon_var))
-    if lat.ndim == 1 and lon.ndim == 1:
-        lon, lat = np.meshgrid(lon, lat)
-    coords = spark.sparkContext.broadcast(
-        (lat.astype("float64"), lon.astype("float64"))
-    )
-    bmeta = spark.sparkContext.broadcast(
-        {k: v for k, v in meta.items() if k != "attrs"}
+    check_grid(var, meta["shape"])
+    lm, lat = read_zarr_array(os.path.join(store, lat_var))
+    om, lon = read_zarr_array(os.path.join(store, lon_var))
+    state = spark.sparkContext.broadcast(
+        (meta,) + grid_coords(lat, lm["attrs"], lon, om["attrs"])
     )
 
     # dot-metadata files (.zarray/.zattrs) are hidden to Hadoop file
     # listings, so only chunk objects enter the stream
     files = _binary_stream(
-        spark, adir, max_files_per_trigger, recursive=(sep == "/")
+        spark, adir, max_files_per_trigger, recursive=(meta["sep"] == "/")
     )
 
     def _batches(it):
-        import pandas as pd
-
         from wrf_to_geodataframe_spark.sources.zarr import _decode_chunk
 
-        m = bmeta.value
-        lat_g, lon_g = coords.value
-        csh = m["chunks"]
+        m, lat_g, lon_g = state.value
         for pdf in it:
             for fname, buf in zip(pdf["path"], pdf["content"]):
                 # rel is the chunk key in the store's NATIVE separator
                 # (matching read_zarr_dist's chunk_key column)
                 rel = fname.split("/" + var + "/", 1)[-1]
-                idx = tuple(
-                    int(p) for p in rel.replace("/", ".").split(".")
-                )
-                carr = _decode_chunk(bytes(buf), m)
-                if tdim:
-                    t0, y0, x0 = (
-                        idx[0] * csh[0], idx[1] * csh[1], idx[2] * csh[2]
-                    )
-                    nt = min(csh[0], shape[0] - t0)
-                    ny = min(csh[1], shape[1] - y0)
-                    nx = min(csh[2], shape[2] - x0)
-                    block = carr[:nt, :ny, :nx]
-                else:
-                    y0, x0 = idx[0] * csh[0], idx[1] * csh[1]
-                    t0 = 0
-                    ny = min(csh[0], shape[0] - y0)
-                    nx = min(csh[1], shape[1] - x0)
-                    block = carr[None, :ny, :nx]
-                yy, xx = np.meshgrid(
-                    np.arange(ny), np.arange(nx), indexing="ij"
-                )
-                lat_c = lat_g[y0:y0 + ny, x0:x0 + nx].ravel()
-                lon_c = lon_g[y0:y0 + ny, x0:x0 + nx].ravel()
-                for ti, sl in enumerate(block):
-                    yield pd.DataFrame(
-                        {
-                            "chunk_key": np.repeat(rel, ny * nx),
-                            "t_idx": np.full(ny * nx, t0 + ti, "int64"),
-                            "y_idx": (yy.ravel() + y0).astype("int64"),
-                            "x_idx": (xx.ravel() + x0).astype("int64"),
-                            "lat": lat_c,
-                            "lon": lon_c,
-                            "value": sl.ravel().astype("float64"),
-                        }
-                    )
+                idx = [int(p) for p in rel.replace("/", ".").split(".")]
+                for frame in chunk_frames(
+                    m, lat_g, lon_g, _decode_chunk(bytes(buf), m),
+                    chunk_origin(idx, m["chunks"]),
+                ):
+                    frame.insert(0, "chunk_key", rel)
+                    yield frame
 
     return files.select("path", "content").mapInPandas(
-        _batches, _ZARR_SCHEMA
+        _batches, chunk_schema(keyed=True)
     )
 
 
