@@ -82,6 +82,8 @@ def test_byte_string_parse():
     assert _byte_string_as_bytes("1g", d) == 1024**3
     assert _byte_string_as_bytes("512k", d) == 512 * 1024
     assert _byte_string_as_bytes("64b", d) == 64
+    assert _byte_string_as_bytes("2p", d) == 2 * 1024**5
+    assert _byte_string_as_bytes("1PB", d) == 1024**5
     assert _byte_string_as_bytes("not-a-size", d) == d
 
 
@@ -99,3 +101,44 @@ def test_estimate_is_driver_side(spark):
     assert os.path.exists(path)
     after = store.jobsList(None).size()
     assert after == before
+
+
+def _touch_back(path, seconds=10):
+    """Date a file or directory ``seconds`` into the past, so that the
+    next change inside it moves its mtime on any clock granularity."""
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns - seconds * 10**9))
+
+
+def test_estimate_refreshes_on_nested_append(tmp_path):
+    """A part file appended into an EXISTING ``date=.../`` partition
+    (the root's mtime does not move) refreshes the cached estimate."""
+    import wrf_to_geodataframe_spark.session as S
+
+    root = tmp_path / "events.parquet"
+    part = root / "date=2020-01-01"
+    part.mkdir(parents=True)
+    (part / "part-0.parquet").write_bytes(b"x" * 100)
+    for p in (part, root):
+        _touch_back(p)
+    root_mtime = os.stat(root).st_mtime_ns
+    assert S._dataset_bytes(str(root)) == 100
+    (part / "part-1.parquet").write_bytes(b"y" * 50)
+    assert os.stat(root).st_mtime_ns == root_mtime
+    assert S._dataset_bytes(str(root)) == 150
+
+
+def test_scan_bytes_cache_one_entry_per_path(tmp_path):
+    """Growing a dataset replaces its cache entry instead of adding one
+    per stamp, so the cache stays bounded by the number of paths."""
+    import wrf_to_geodataframe_spark.session as S
+
+    root = tmp_path / "grow.parquet"
+    root.mkdir()
+    n_before = len(S._SCAN_BYTES_CACHE)
+    for i in range(3):
+        _touch_back(root)
+        (root / f"part-{i}.parquet").write_bytes(b"z" * 10)
+        assert S._dataset_bytes(str(root)) == 10 * (i + 1)
+    assert len(S._SCAN_BYTES_CACHE) == n_before + 1
+    assert S._SCAN_BYTES_CACHE[str(root)][1] == 30

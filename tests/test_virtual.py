@@ -17,6 +17,7 @@ import pytest
 from wrf_to_geodataframe_spark.sources.hdf5_write import write_netcdf4
 from wrf_to_geodataframe_spark.sources.netcdf import write_netcdf
 from wrf_to_geodataframe_spark.sources.virtual import (
+    _time_offsets,
     build_virtual_manifest,
     read_virtual,
 )
@@ -1060,3 +1061,24 @@ def test_read_virtual_over_s3_issues_pruned_ranged_gets(
     finally:
         sc.setLocalProperty(fsio.S3_ENDPOINT_PROP, None)
         srv.shutdown()
+
+
+def test_time_offsets_cumsum_per_var():
+    """Files take consecutive slices of each var's time axis in
+    ``file_no`` order (input order does not matter), starting at
+    ``base_t``; each var restarts at ``base_t``."""
+    files = ["a.nc", "b.nc", "c.nc"]
+    triples = [("T2", 2, 4), ("Q2", 0, 3), ("T2", 0, 3), ("T2", 1, 2)]
+    assert _time_offsets(triples, files, 10) == [
+        ("Q2", 0, 10), ("T2", 0, 10), ("T2", 1, 13), ("T2", 2, 15),
+    ]
+    assert _time_offsets([], files, 0) == []
+
+
+@pytest.mark.parametrize("bad", [(None, 1, 3), ("T2", 1, None)])
+def test_time_offsets_missing_var_or_nt_names_file(bad):
+    """A chunk row without a var or a time length is a named error
+    naming its file, not a ``TypeError`` from sorting ``None``."""
+    files = ["a.nc", "b.nc"]
+    with pytest.raises(ValueError, match="b.nc"):
+        _time_offsets([("T2", 0, 2), bad], files, 0)

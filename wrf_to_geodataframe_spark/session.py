@@ -164,11 +164,22 @@ def sf_path(sf_dir: str, table: str) -> str:
     return os.path.join(sf_dir, f"{table}.parquet")
 
 
-# (path, root mtime_ns) -> bytes.  Keyed on the dataset root's mtime so
-# a dataset that grows IN PLACE (streaming ingest dirs: new part files
-# touch the directory) invalidates its entry instead of keeping a stale
-# estimate for the life of the process (ADVICE r17).
-_SCAN_BYTES_CACHE: dict[tuple[str, int], int] = {}
+# path -> (tree stamp, bytes), one entry per path.  The stamp is the
+# max st_mtime_ns over the dataset root and every nested directory, so
+# a dataset that grows IN PLACE (streaming ingest dirs, a part file
+# added to an existing ``date=.../`` partition) refreshes its estimate
+# instead of keeping a stale one for the life of the process.
+_SCAN_BYTES_CACHE: dict[str, tuple[int, int]] = {}
+
+
+def _tree_stamp(path: str) -> int:
+    """Max st_mtime_ns over ``path`` and, for a directory, every
+    directory below it (adding or removing a file touches its parent)."""
+    stamp = os.stat(path).st_mtime_ns
+    for root, dirs, _files in os.walk(path):
+        for d in dirs:
+            stamp = max(stamp, os.stat(os.path.join(root, d)).st_mtime_ns)
+    return stamp
 
 
 def _dataset_bytes(path: str) -> int:
@@ -181,11 +192,12 @@ def _dataset_bytes(path: str) -> int:
     never be mistaken for a byte-small one).  Failed stats are NOT
     memoized, so a transient error doesn't pin the unknown state."""
     try:
-        key = (path, os.stat(path).st_mtime_ns)
+        stamp = _tree_stamp(path)
     except OSError:
         return 0
-    if key in _SCAN_BYTES_CACHE:
-        return _SCAN_BYTES_CACHE[key]
+    hit = _SCAN_BYTES_CACHE.get(path)
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
     total = 0
     try:
         if os.path.isdir(path):
@@ -197,23 +209,24 @@ def _dataset_bytes(path: str) -> int:
             total = os.path.getsize(path)
     except OSError:
         return 0
-    _SCAN_BYTES_CACHE[key] = total
+    _SCAN_BYTES_CACHE[path] = (stamp, total)
     return total
 
 
 def _byte_string_as_bytes(raw: str, default: int) -> int:
     """Parse a Spark size conf value the way Spark's byteStringAsBytes
     does for the common forms: bare number = bytes, or a number with a
-    case-insensitive b/k/m/g/t (optionally kb/mb/gb/tb) suffix.  A
+    case-insensitive b/k/m/g/t/p (optionally kb/mb/gb/tb/pb) suffix.  A
     digit-stripping parse would turn '128m' into 128 BYTES and inflate
     the partition estimate ~1e6x (ADVICE r17); unparseable forms fall
     back to ``default``."""
     s = str(raw).strip().lower()
     mult = 1
     for suffix, m in (
-        ("tb", 1024**4), ("gb", 1024**3), ("mb", 1024**2), ("kb", 1024),
-        ("t", 1024**4), ("g", 1024**3), ("m", 1024**2), ("k", 1024),
-        ("b", 1),
+        ("pb", 1024**5), ("tb", 1024**4), ("gb", 1024**3),
+        ("mb", 1024**2), ("kb", 1024),
+        ("p", 1024**5), ("t", 1024**4), ("g", 1024**3), ("m", 1024**2),
+        ("k", 1024), ("b", 1),
     ):
         if s.endswith(suffix):
             s = s[: -len(suffix)].strip()

@@ -621,6 +621,28 @@ def update_virtual_manifest(
     return len(new)
 
 
+def _time_offsets(triples, files, base_t):
+    """``(var, file_no, t_off)`` rows from distinct ``(var, file_no,
+    nt)`` triples: within each var the files, in ``file_no`` order,
+    take consecutive slices of the global time axis starting at
+    ``base_t``.  A triple without a var or a time length raises a
+    ``ValueError`` naming its file (``files[file_no]``)."""
+    for v, fno, nt in triples:
+        if v is None or nt is None:
+            raise ValueError(
+                f"{files[fno]}: indexed chunks have var={v!r}, nt={nt!r}; "
+                "a manifest needs a variable name and a time length "
+                "for every file"
+            )
+    off_rows, acc, cur_var = [], 0, None
+    for v, fno, nt in sorted(triples):
+        if v != cur_var:
+            cur_var, acc = v, 0
+        off_rows.append((v, fno, acc + base_t))
+        acc += nt
+    return off_rows
+
+
 def _index_files(
     spark, files, var, lat_var, lon_var, out_path, base_t, write_mode,
     time_var=None,
@@ -701,20 +723,17 @@ def _index_files(
         # metadata-sized by construction (one row per file per var —
         # the same boundedness class as the times sidecar itself), and
         # this builder is already an eager indexing call, so the
-        # collect does not change the laziness contract.  Same cumsum
-        # semantics: files ordered by file_no within each var.
-        triples = sorted(
-            (r["var"], r["file_no"], r["nt"])
-            for r in chunks.select("var", "file_no", "nt")
-            .distinct()
-            .collect()
+        # collect does not change the laziness contract.
+        off_rows = _time_offsets(
+            [
+                (r["var"], r["file_no"], r["nt"])
+                for r in chunks.select("var", "file_no", "nt")
+                .distinct()
+                .collect()
+            ],
+            files,
+            base_t,
         )
-        off_rows, acc, cur_var = [], 0, None
-        for v, fno, nt in triples:
-            if v != cur_var:
-                cur_var, acc = v, 0
-            off_rows.append((v, fno, acc + base_t))
-            acc += nt
         offsets = spark.createDataFrame(
             sc.parallelize(off_rows, 1),
             "var string, file_no long, t_off long",
