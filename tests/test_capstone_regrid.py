@@ -68,7 +68,7 @@ def test_presink_plan_and_values(spark):
         plan = result._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan
         assert "BatchEvalPython" not in plan
-        assert plan.count("FlatMapGroupsInPandas") == 1  # ONE tile kernel
+        assert plan.count("MapInPandas run_tiles") == 1  # ONE tile kernel
         assert "InMemoryTableScan" in plan  # the cached coordinate plane
         # building `result` itself ran nothing beyond the dispatch stats
         assert store.jobsList(None).size() - before == dispatch_jobs

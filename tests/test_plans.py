@@ -752,6 +752,29 @@ def test_o1_has_no_single_partition_window_over_cells(spark):
         assert ln.count("], [") >= 2, ln
 
 
+def test_g1_tile_stage_one_sorted_stream_per_partition(spark):
+    """g1's tile stage: ONE explicit-count tile shuffle into
+    defaultParallelism partitions (REPARTITION_BY_NUM, so AQE cannot
+    coalesce the small but CPU-heavy stage into one task), a key sort,
+    and one MapInPandas per partition — not a grouped map paying the
+    Arrow<->pandas protocol once per tile."""
+    from wrf_to_geodataframe_spark.suite.tessellation import QUERIES
+
+    plan = re.sub(r"#\d+", "", _plan(QUERIES["g1_voronoi_rect_cells"](spark, SF)))
+    n = spark.sparkContext.defaultParallelism
+    assert "FlatMapGroupsInPandas" not in plan
+    tile_exchanges = re.findall(
+        r"Exchange hashpartitioning\(tile_iL, tile_jL, (\d+)\)", plan
+    )
+    assert tile_exchanges == [str(n)], tile_exchanges
+    lines = [ln.strip(" :+-") for ln in plan.splitlines()]
+    i = next(k for k, ln in enumerate(lines) if ln.startswith("MapInPandas"))
+    assert lines[i + 1].startswith("Sort [tile_iL ASC"), lines[i + 1]
+    assert lines[i + 2].startswith(
+        f"Exchange hashpartitioning(tile_iL, tile_jL, {n})"
+    ), lines[i + 2]
+
+
 def test_global_plan_invariants_all_queries(spark):
     """The piecemeal no-cartesian pins, swept across EVERY queries()
     entry: no plan anywhere may contain a CartesianProduct (banded/

@@ -528,6 +528,51 @@ def test_near_dup_cluster_at_tile_seam_distributed_equals_driver(spark):
     assert drv[200].is_sentinel and drv[201].is_sentinel and drv[202].is_sentinel
 
 
+def test_tiles_straddling_arrow_batches_run_once_whole(spark):
+    """The tile stage streams each partition as Arrow batches; with 7
+    records per batch every tile (up to 81 rows with its halo) spans
+    several batches.  Each tile must still run exactly once and whole:
+    one row per input site, the seam cluster resolved to its lowest key,
+    every real cell certified and equal to the driver's WKT byte for
+    byte."""
+    from wrf_to_geodataframe_spark.geometry.tessellate import (
+        tessellate,
+        tessellate_distributed,
+    )
+
+    pts = _grid_points(10, 8)
+    rows = [(i, float(p[0]), float(p[1])) for i, p in enumerate(pts)]
+    # tile_size=3.0 puts x=3.0 on a tile seam; the grid site there is 43
+    rows += [(200, 3.0, 4.0), (201, 3.0 + 1e-300, 4.0), (202, 3.0, 4.0 + 1e-160)]
+    bbox = (-0.5, -0.5, 9.5, 7.5)
+    df = spark.createDataFrame(
+        rows, "site_id long, x double, y double"
+    ).repartition(8)
+    drv = {r.site_id: r for r in
+           tessellate(df, "x", "y", ["site_id"], bbox=bbox).collect()}
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        out = tessellate_distributed(
+            df, "x", "y", ["site_id"], bbox=bbox, tile_size=3.0, halo=3.0
+        ).collect()
+    finally:
+        spark.conf.set(key, saved)
+    assert len(out) == len(rows)
+    dst = {r.site_id: r for r in out}
+    assert set(dst) == set(drv)
+    # the halo certifies every real cell (sentinels never certify)
+    assert {s for s, r in dst.items() if r.exact} == {
+        s for s, r in drv.items() if not r.is_sentinel
+    }
+    for sid, d in drv.items():
+        assert dst[sid].wkt == d.wkt
+        assert dst[sid].is_sentinel == d.is_sentinel
+    assert dst[43].is_sentinel is False
+    assert dst[200].is_sentinel and dst[201].is_sentinel and dst[202].is_sentinel
+
+
 def test_marginal_halo_certificate_is_conservative_not_wrong(spark):
     """With a halo too small to certify every boundary cell, the
     certificate must go False on SOME cells — but no cell, certified or

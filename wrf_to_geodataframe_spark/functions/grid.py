@@ -32,12 +32,12 @@ def cell_box(
     known analytically so qhull is skipped entirely (the reference's
     "saves a bit of compute time" fast path, SURVEY.md §2 G2).
     """
-    return (
-        df.withColumn(prefix + "x1", F.col(x) - F.lit(half_dx))
-        .withColumn(prefix + "y1", F.col(y) - F.lit(half_dy))
-        .withColumn(prefix + "x2", F.col(x) + F.lit(half_dx))
-        .withColumn(prefix + "y2", F.col(y) + F.lit(half_dy))
-    )
+    return df.withColumns({
+        prefix + "x1": F.col(x) - F.lit(half_dx),
+        prefix + "y1": F.col(y) - F.lit(half_dy),
+        prefix + "x2": F.col(x) + F.lit(half_dx),
+        prefix + "y2": F.col(y) + F.lit(half_dy),
+    })
 
 
 def box_area(x1: Column, y1: Column, x2: Column, y2: Column) -> Column:

@@ -8,11 +8,14 @@ Two physical strategies for the same logical op (SURVEY.md §7 phase 4):
 - ``tessellate_distributed``: tile + halo.  Points are assigned a home
   tile and replicated into every tile whose halo region they touch
   (explode over covered tiles — same bucket decomposition as the
-  spatial joins).  Each tile group runs the identical numpy kernel via
-  ``applyInPandas`` and emits only its home points, each cell carrying
-  an ``exact`` certificate (2R <= d(site, tile edge) + halo).  With a
-  halo of a few grid spacings every cell certifies exact; the flag makes
-  seam errors DETECTABLE instead of silent.
+  spatial joins).  One shuffle spreads the tiles over
+  ``defaultParallelism`` partitions, sorted by tile and key; each
+  partition then streams its tiles through ONE ``mapInPandas`` call,
+  running the identical numpy kernel per tile and emitting only its home
+  points, each cell carrying an ``exact`` certificate (2R <= d(site,
+  tile edge) + halo).  With a halo of a few grid spacings every cell
+  certifies exact; the flag makes seam errors DETECTABLE instead of
+  silent.
 
 Output schema (both): key columns + x, y, wkt, area, n_vertices,
 x1/y1/x2/y2 envelope, is_sentinel (degenerate cells, the reference's
@@ -124,7 +127,8 @@ def tessellate(
             f"use tessellate_distributed"
         )
     # deterministic coincident-site tie-break: lowest key wins, matching
-    # the distributed path's per-tile sort (not collection order)
+    # the distributed path's key sort within each tile (not collection
+    # order)
     pdf = pdf.sort_values(list(key_cols), kind="stable", ignore_index=True)
     if bbox is None:
         xs, ys = pdf[x_col], pdf[y_col]
@@ -271,7 +275,9 @@ def tessellate_distributed(
     bbox_cols: Sequence[str] | None = None,
 ) -> DataFrame:
     """Distributed tessellation: one shuffle (points -> tiles, with halo
-    replication), then embarrassingly-parallel per-tile kernels.
+    replication) into ``defaultParallelism`` partitions, sorted within
+    each by (tile, key); then each partition streams its key-sorted
+    tiles through one Python call that runs the kernel once per tile.
 
     The clip bbox comes either from ``bbox`` (driver-side floats) or
     ``bbox_cols`` (four column names (x1, y1, x2, y2) on ``df``, constant
@@ -280,8 +286,9 @@ def tessellate_distributed(
     on, because tile assignment needs only the coordinates, never the
     extent.
 
-    Scale: memory per task is O(points per tile + halo ring), never the
-    global point count — the axis on which the reference OOMs."""
+    Scale: memory per task is O(Arrow batch + points of the largest
+    tile and its halo ring), never the global point count — the axis on
+    which the reference OOMs."""
     if (bbox is None) == (bbox_cols is None):
         raise ValueError("pass exactly one of bbox / bbox_cols")
     if tile_size <= 0 or halo <= 0:
@@ -324,26 +331,9 @@ def tessellate_distributed(
     keys = list(key_cols)
     schema = _result_schema(keys)
 
-    _np_dtype = {
-        LongType(): np.int64,
-        DoubleType(): np.float64,
-        StringType(): object,
-        BooleanType(): bool,
-    }
-
-    def _empty() -> pd.DataFrame:
-        return pd.DataFrame(
-            {f.name: np.array([], dtype=_np_dtype[f.dataType]) for f in schema}
-        )
-
-    def run_tile(tile_key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        ti, tj = (int(v) for v in tile_key)
-        # sort by key so the kernel's "lowest index wins" duplicate
-        # tie-break is a function of the stable key, not shuffle order
-        local = pdf.sort_values(keys, kind="stable", ignore_index=True)
-        is_home = (local["home_i"] == ti) & (local["home_j"] == tj)
-        if not is_home.any():
-            return _empty()
+    def run_tile(local: pd.DataFrame, is_home: np.ndarray) -> pd.DataFrame:
+        ti = int(local["tile_i"].iloc[0])
+        tj = int(local["tile_j"].iloc[0])
         tile_bbox = (
             lit_bbox
             if lit_bbox is not None
@@ -359,8 +349,61 @@ def tessellate_distributed(
         slack = d_edge + hw
         return _cells_frame(
             local, keys, x_col, y_col, tile_bbox,
-            spacing_hint, exact_slack=slack,
-            site_mask=is_home.reset_index(drop=True).to_numpy(),
+            spacing_hint, exact_slack=slack, site_mask=is_home,
         )
 
-    return tiled.groupBy("tile_i", "tile_j").applyInPandas(run_tile, schema)
+    def run_complete_tiles(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
+        # ``pdf`` is sorted by (tile_i, tile_j, *keys) and holds only
+        # whole tiles: each tile is one contiguous run, and within it
+        # the kernel's "lowest index wins" duplicate tie-break is a
+        # function of the stable key, not shuffle order
+        ti = pdf["tile_i"].to_numpy()
+        tj = pdf["tile_j"].to_numpy()
+        home = (pdf["home_i"].to_numpy() == ti) & (
+            pdf["home_j"].to_numpy() == tj
+        )
+        starts = np.flatnonzero(
+            np.r_[True, (ti[1:] != ti[:-1]) | (tj[1:] != tj[:-1])]
+        )
+        ends = np.r_[starts[1:], len(pdf)]
+        # halo-only tiles (no home site) emit nothing: skipped before
+        # any pandas or kernel work
+        frames = [
+            run_tile(pdf.iloc[s:e], home[s:e])
+            for s, e in zip(starts, ends)
+            if home[s:e].any()
+        ]
+        if frames:
+            yield pd.concat(frames, ignore_index=True)
+
+    def run_tiles(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # the last tile of a batch may continue in the next one: carry
+        # it over so every tile runs exactly once, whole
+        carry = None
+        for pdf in batches:
+            if carry is not None:
+                pdf = pd.concat([carry, pdf], ignore_index=True)
+            if len(pdf) == 0:
+                continue
+            ti = pdf["tile_i"].to_numpy()
+            tj = pdf["tile_j"].to_numpy()
+            # sorted input: the batch's last tile is its tail
+            in_last = (ti == ti[-1]) & (tj == tj[-1])
+            last = len(pdf) - int(np.count_nonzero(in_last))
+            carry = pdf.iloc[last:]
+            if last:
+                yield from run_complete_tiles(pdf.iloc[:last])
+        if carry is not None:
+            yield from run_complete_tiles(carry)
+
+    # one shuffle into defaultParallelism partitions (an explicit count,
+    # so AQE's byte-based coalescing cannot fold this small but
+    # CPU-heavy stage into one task), key-sorted within each partition,
+    # then ONE Python call per partition streams its tiles — not one
+    # grouped-map call, with its per-group Arrow<->pandas cost, per tile
+    n = tiled.sparkSession.sparkContext.defaultParallelism
+    return (
+        tiled.repartition(n, "tile_i", "tile_j")
+        .sortWithinPartitions("tile_i", "tile_j", *keys)
+        .mapInPandas(run_tiles, schema)
+    )

@@ -72,20 +72,16 @@ def conservative_regrid_rect(
                 )
             ),
         )
-        .withColumn(
-            "ix1", F.greatest(F.col("x1"), F.lit(ox) + F.lit(dw) * F.col("i"))
-        )
-        .withColumn(
-            "iy1", F.greatest(F.col("y1"), F.lit(oy) + F.lit(dh) * F.col("j"))
-        )
-        .withColumn(
-            "ix2",
-            F.least(F.col("x2"), F.lit(ox) + F.lit(dw) * (F.col("i") + 1)),
-        )
-        .withColumn(
-            "iy2",
-            F.least(F.col("y2"), F.lit(oy) + F.lit(dh) * (F.col("j") + 1)),
-        )
+        .withColumns({
+            "ix1": F.greatest(F.col("x1"), F.lit(ox) + F.lit(dw) * F.col("i")),
+            "iy1": F.greatest(F.col("y1"), F.lit(oy) + F.lit(dh) * F.col("j")),
+            "ix2": F.least(
+                F.col("x2"), F.lit(ox) + F.lit(dw) * (F.col("i") + 1)
+            ),
+            "iy2": F.least(
+                F.col("y2"), F.lit(oy) + F.lit(dh) * (F.col("j") + 1)
+            ),
+        })
         .filter((F.col("ix2") > F.col("ix1")) & (F.col("iy2") > F.col("iy1")))
     )
     area_src = area_fn(F.col("x1"), F.col("y1"), F.col("x2"), F.col("y2"))

@@ -130,6 +130,16 @@ def get_spark(
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        # No per-call origin capture.  With the default (true) every
+        # Column-API call (F.col, F.lit, operators) also looks up the
+        # active session, reads a conf, captures the Python stack and
+        # sets and clears PySparkCurrentOrigin over py4j:
+        # F.col("x") + F.lit(1) costs 27 round trips instead of 7, and
+        # plan construction is mostly such calls.  Trade-off: analysis
+        # errors lose the Python call-site fragment; the SQL context
+        # and the message (e.g. the unresolved column's name) stay.
+        # PySpark caches the flag per process on first use.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # local-mode driver == the only executor: size the heap to the
         # machine, not to a driver-only footprint.  8g measured 2-5x

@@ -33,12 +33,12 @@ def with_grid_columns(df: DataFrame, key: str = "user_id") -> DataFrame:
     integer keys replace the reference's positional alignment
     (SURVEY.md §1.3 / J5).
     """
-    return (
-        df.withColumn("x_idx", F.col(key) % GRID_W)
-        .withColumn("y_idx", F.floor(F.col(key) / GRID_W))
-        .withColumn("x", (F.col(key) % GRID_W).cast("double"))
-        .withColumn("y", F.floor(F.col(key) / GRID_W).cast("double"))
-    )
+    return df.withColumns({
+        "x_idx": F.col(key) % GRID_W,
+        "y_idx": F.floor(F.col(key) / GRID_W),
+        "x": (F.col(key) % GRID_W).cast("double"),
+        "y": F.floor(F.col(key) / GRID_W).cast("double"),
+    })
 
 
 def grid_cells(spark: SparkSession, sf_dir: str) -> DataFrame:

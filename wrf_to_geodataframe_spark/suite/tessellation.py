@@ -2,7 +2,7 @@
 driver contract.
 
 These oracles do NOT mirror the Spark expressions (they cannot — the
-kernel is numpy inside applyInPandas).  They state the independently
+kernel is numpy inside mapInPandas).  They state the independently
 known ANALYTIC answer: the Voronoi diagram of a complete rectilinear
 grid clipped to its half-spacing margin is exactly the unit boxes
 (delphine/regrid.py:182-203's fast path), and its cell areas sum to the
@@ -59,7 +59,7 @@ def _complete_grid_points(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def g1_voronoi_rect_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed Voronoi tessellation (G1, tile+halo applyInPandas) of
+    """Distributed Voronoi tessellation (G1, tile+halo mapInPandas) of
     the rectilinear user grid.  The oracle is the ANALYTIC diagram (G2
     unit boxes) — the kernel must reproduce it bit-for-bit (integer-
     lattice bisectors are dyadic, so every vertex is FP-exact)."""
