@@ -1652,3 +1652,115 @@ def test_wrf_ll_to_xy_is_lazy(spark):
     wrf_ll_to_xy(attrs, df, "lon", "lat")
     after = len(tracker.getJobIdsForGroup(None) or [])
     assert after == before
+
+
+# -- every public column transform, one table -------------------------------
+
+from wrf_to_geodataframe_spark.functions import crs as _C  # noqa: E402
+
+_WRF_ATTRS = {
+    "MAP_PROJ": 1, "TRUELAT1": 30.0, "TRUELAT2": 60.0,
+    "MOAD_CEN_LAT": 40.0, "STAND_LON": -100.0,
+    "CEN_LON": -97.0, "CEN_LAT": 41.5, "DX": 4000.0, "DY": 4000.0,
+    "WEST-EAST_GRID_DIMENSION": 31, "SOUTH-NORTH_GRID_DIMENSION": 41,
+}
+_WRF_FWD, _WRF_INV = _C.wrf_projection(_WRF_ATTRS)
+_LL, _XY, _IJ = ("lon", "lat"), ("x", "y"), ("i", "j")
+
+
+def _col_fn(fn):
+    """A Column-returning function as a frame transform."""
+    return lambda d, *c: d.withColumn("out", fn(*c))
+
+
+# name -> (transform(df, *columns), the input column names it reads)
+_TRANSFORMS = {
+    "lonlat_to_osgb": (_C.lonlat_to_osgb, _LL),
+    "to_crs_27700": (lambda d, a, b: _C.to_crs(d, "EPSG:27700", a, b), _LL),
+    "from_crs_32630": (lambda d, a, b: _C.from_crs(d, "EPSG:32630", a, b),
+                       _XY),
+    "lonlat_to_lcc": (lambda d, a, b: _C.lonlat_to_lcc(
+        d, a, b, 30.0, 60.0, 40.0, -2.0), _LL),
+    "lcc_to_lonlat": (lambda d, a, b: _C.lcc_to_lonlat(
+        d, a, b, 30.0, 60.0, 40.0, -2.0), _XY),
+    "lonlat_to_lcc2sp": (lambda d, a, b: _C.lonlat_to_lcc2sp(
+        d, a, b, 33.0, 45.0, 23.0, -96.0), _LL),
+    "lcc2sp_to_lonlat": (lambda d, a, b: _C.lcc2sp_to_lonlat(
+        d, a, b, 33.0, 45.0, 23.0, -96.0), _XY),
+    "lonlat_to_tm": (lambda d, a, b: _C.lonlat_to_tm(d, a, b, -3.0), _LL),
+    "tm_to_lonlat": (lambda d, a, b: _C.tm_to_lonlat(d, a, b, -3.0), _XY),
+    "lonlat_to_utm": (lambda d, a, b: _C.lonlat_to_utm(d, a, b, 30), _LL),
+    "utm_to_lonlat": (lambda d, a, b: _C.utm_to_lonlat(d, a, b, 30), _XY),
+    "lonlat_to_stere": (lambda d, a, b: _C.lonlat_to_stere(
+        d, a, b, 60.0, -2.0), _LL),
+    "stere_to_lonlat": (lambda d, a, b: _C.stere_to_lonlat(
+        d, a, b, 60.0, -2.0), _XY),
+    "lonlat_to_mercator": (lambda d, a, b: _C.lonlat_to_mercator(
+        d, a, b, 30.0, -2.0), _LL),
+    "mercator_to_lonlat": (lambda d, a, b: _C.mercator_to_lonlat(
+        d, a, b, 30.0, -2.0), _XY),
+    "rotated_to_lonlat": (lambda d, a, b: _C.rotated_to_lonlat(
+        d, a, b, -37.5, 177.5), _LL),
+    "lonlat_to_rotated": (lambda d, a, b: _C.lonlat_to_rotated(
+        d, a, b, -37.5, 177.5), _LL),
+    "lonlat_to_laea": (lambda d, a, b: _C.lonlat_to_laea(
+        d, a, b, 52.0, 10.0), _LL),
+    "laea_to_lonlat": (lambda d, a, b: _C.laea_to_lonlat(
+        d, a, b, 52.0, 10.0), _XY),
+    "lonlat_to_albers": (lambda d, a, b: _C.lonlat_to_albers(
+        d, a, b, 29.5, 45.5, 23.0, -96.0), _LL),
+    "albers_to_lonlat": (lambda d, a, b: _C.albers_to_lonlat(
+        d, a, b, 29.5, 45.5, 23.0, -96.0), _XY),
+    "lonlat_to_cea": (lambda d, a, b: _C.lonlat_to_cea(d, a, b, 30.0), _LL),
+    "cea_to_lonlat": (lambda d, a, b: _C.cea_to_lonlat(d, a, b, 30.0), _XY),
+    "wrf_projection_fwd": (_WRF_FWD, _LL),
+    "wrf_projection_inv": (_WRF_INV, _XY),
+    "wrf_ll_to_xy": (lambda d, a, b: _C.wrf_ll_to_xy(_WRF_ATTRS, d, a, b),
+                     _LL),
+    "wrf_xy_to_ll": (lambda d, a, b: _C.wrf_xy_to_ll(_WRF_ATTRS, d, a, b),
+                     _IJ),
+    "lonlat_to_webmercator_x": (_col_fn(_C.lonlat_to_webmercator_x),
+                                ("lon",)),
+    "lonlat_to_webmercator_y": (_col_fn(_C.lonlat_to_webmercator_y),
+                                ("lat",)),
+    "webmercator_to_lon": (_col_fn(_C.webmercator_to_lon), ("x",)),
+    "webmercator_to_lat": (_col_fn(_C.webmercator_to_lat), ("y",)),
+    "haversine_m": (_col_fn(_C.haversine_m), ("lat", "lon", "i", "j")),
+    "bearing_deg": (_col_fn(_C.bearing_deg), ("lat", "lon", "i", "j")),
+    "destination_point": (_col_fn(_C.destination_point),
+                          ("lat", "lon", "i", "j")),
+    "ellipsoid_box_area_m2": (_col_fn(_C.ellipsoid_box_area_m2),
+                              ("lon", "lat", "i", "j")),
+}
+
+
+def _transform_input(spark):
+    rows = [
+        (k, -4.0 + k, 50.0 + 1.2 * k, -1.5e5 + 6e4 * k, 1.2e5 - 5e4 * k,
+         3.0 * k, 2.0 + 7.0 * k)
+        for k in range(6)
+    ]
+    return spark.createDataFrame(
+        rows, "_id long, lon double, lat double, x double, y double, "
+        "i double, j double",
+    )
+
+
+@pytest.mark.parametrize("name", sorted(_TRANSFORMS))
+def test_column_name_arguments_match_columns(spark, name):
+    """Passing column NAMES gives the same rows as passing F.col(...)
+    (a name must never become a string literal in the arithmetic)."""
+    fn, names = _TRANSFORMS[name]
+    df = _transform_input(spark)
+    by_name = fn(df, *names).orderBy("_id").collect()
+    by_col = fn(df, *map(F.col, names)).orderBy("_id").collect()
+    assert repr(by_name) == repr(by_col)
+
+
+@pytest.mark.parametrize("name", sorted(_TRANSFORMS))
+def test_transforms_keep_caller_underscore_columns(spark, name):
+    """A transform drops only the temporaries it made: the caller's
+    ``_id`` column survives."""
+    fn, names = _TRANSFORMS[name]
+    out = fn(_transform_input(spark), *map(F.col, names))
+    assert "_id" in out.columns

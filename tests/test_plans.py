@@ -125,6 +125,29 @@ def test_asof_is_one_window_no_inequality_join(spark):
     assert plan.count("Window") == 1
 
 
+# queries() entries whose construction runs Spark jobs by design; both
+# the laziness test and the global plan sweep skip exactly these
+EAGER_BUILDERS = frozenset({
+    "g1_auto_dispatch", "dedup_cluster_cc",
+    "pipeline_split_neardup_safe",
+    "bpe_train", "bpe_encode", "pipeline_curate_v3",
+    "s1_virtual_dataset", "s1_virtual_mosaic",
+    "s1_virtual_time", "s4_geoparquet_ingest",
+    "pca_project_variance",
+    # GeoParquet sink runs at construction (the s4 pattern: sink is
+    # the artifact, the read is lazy)
+    "capstone_wrf_voronoi",
+    # dispatch stats + NetCDF sink at construction (the voronoi
+    # capstone's pattern)
+    "capstone_wrf_regrid",
+    # dispatch stats + driver-side GPKG sink
+    "capstone_haduk_voronoi",
+    # per-round localCheckpoint barriers (the dangling share is a
+    # global reduce each iteration)
+    "graph_pagerank_dangling",
+})
+
+
 def test_query_construction_is_lazy(spark):
     """VERDICT r3 #8: building any queries() entry must not trigger a
     Spark job — thresholds/extents are 1-row aggs crossJoined into the
@@ -143,23 +166,7 @@ def test_query_construction_is_lazy(spark):
     store = spark.sparkContext._jsc.sc().statusStore()
     before = store.jobsList(None).size()
     for name, fn in all_queries().items():
-        if name in ("g1_auto_dispatch", "dedup_cluster_cc",
-                    "pipeline_split_neardup_safe",
-                    "bpe_train", "bpe_encode", "pipeline_curate_v3",
-                    "s1_virtual_dataset", "s1_virtual_mosaic",
-                    "s1_virtual_time", "s4_geoparquet_ingest",
-                    "pca_project_variance",
-                    # GeoParquet sink runs at construction (the s4
-                    # pattern: sink is the artifact, the read is lazy)
-                    "capstone_wrf_voronoi",
-                    # dispatch stats + NetCDF sink at construction
-                    # (the voronoi capstone's pattern)
-                    "capstone_wrf_regrid",
-                    # dispatch stats + driver-side GPKG sink
-                    "capstone_haduk_voronoi",
-                    # per-round localCheckpoint barriers (the dangling
-                    # share is a global reduce each iteration)
-                    "graph_pagerank_dangling"):
+        if name in EAGER_BUILDERS:
             continue
         fn(spark, SF)
     after = store.jobsList(None).size()
@@ -786,18 +793,9 @@ def test_global_plan_invariants_all_queries(spark):
     runs real jobs."""
     from wrf_to_geodataframe_spark.suite import all_queries
 
-    eager = {
-        "g1_auto_dispatch", "dedup_cluster_cc",
-        "pipeline_split_neardup_safe", "bpe_train",
-        "bpe_encode", "pipeline_curate_v3", "s1_virtual_dataset",
-        "s1_virtual_mosaic", "s1_virtual_time", "s4_geoparquet_ingest",
-        "pca_project_variance", "graph_pagerank_dangling",
-        "capstone_wrf_voronoi", "capstone_wrf_regrid",
-        "capstone_haduk_voronoi",
-    }
     bad = []
     for name, fn in all_queries().items():
-        if name in eager:
+        if name in EAGER_BUILDERS:
             continue
         plan = _plan(fn(spark, SF))
         if "CartesianProduct" in plan:

@@ -1,10 +1,41 @@
 """CRS transforms (SURVEY.md §2 G8, wrf_voronoi.py:188 ``.to_crs``).
 
-pyproj is not in this container, so the engine implements the transforms
-it needs from the published formulas — as BUILT-IN column expressions
-(JVM-side, codegen-friendly), with a vectorized pandas_udf variant for
-parity testing the "external library in executors" path the reference
-uses.
+pyproj is not a dependency, so the engine implements the transforms it
+needs from the published formulas.
+
+ONE FORMULA PER PROJECTION.  Each per-row formula is written once, as a
+private function of a small math namespace ``m`` (``sin`` ... ``atanh``,
+``sqrt``, ``log``, ``exp``, ``radians``, ``degrees``, ``pow``, ``pmod``,
+``greatest``/``least``/``clip``, ``where``, ``lit`` and ``let``), and
+three namespaces evaluate it:
+
+- the COLUMN namespace (``_ColumnMath``) builds Spark built-ins, so the
+  public column transforms (``lonlat_to_*``, ``*_to_lonlat``,
+  ``wrf_projection``, ``ellipsoid_box_area_m2``) stay JVM-side inside
+  whole-stage codegen.  ``m.let({...})`` stages named intermediates
+  (``_phi``, ``_dl``, ``_rho``, ...) through ``withColumns``, so each
+  stage references the previous stage's aliases and the expression tree
+  stays linear in formula length; a transform drops exactly the
+  temporaries it made.  Column-name arguments become Columns once.
+- the NUMPY namespace (``_NUMPY``) evaluates the same formula over
+  float64 arrays: the ``*_forward_numpy`` / ``*_inverse_numpy`` kernels,
+  the forward pandas UDFs, and the GRIB2 grid decoders (``lcc_forward``,
+  ``lcc_inverse``, ``rotated_to_true``, ``true_to_rotated``).  Its
+  ``let`` returns the values unchanged.
+- the SCALAR namespace (``_SCALAR``) is the ``math`` module, for the
+  driver-side scalars: ``wrf_ll_to_xy_scalar``, the authalic q behind
+  the projection constants, and the ``*_float`` area twins.  These use
+  ``math`` rather than numpy because their results become literals in
+  Spark plans and DuckDB oracle SQL, or answers the column transforms
+  must reproduce: ``math`` is what they were always computed with, so
+  those values stay bit-identical.
+
+Literal placement matters for the Column namespace: PySpark builds
+``2.0 * col`` as ``col * 2.0``, so a formula wraps a LEADING constant in
+``m.lit`` (the identity outside Spark) and writes trailing ones bare.
+With one source, the Column-vs-numpy parity tests compare only JVM and
+numpy libm; the independent evidence is the worked examples, the
+Redfearn series and the pyproj cross-checks listed in LEDGER.md.
 
 Spherical Web Mercator (EPSG:4326 -> EPSG:3857), R = 6378137:
     x = R * radians(lon)
@@ -18,32 +49,135 @@ precision leaves ~9 orders of margin).
 from __future__ import annotations
 
 import math
+import operator
+from types import SimpleNamespace
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+
+class _Math(SimpleNamespace):
+    """A math namespace: the per-row formulas call only its members."""
+
+    def let(self, cols: dict) -> list:
+        """Name intermediates; outside Spark the values pass through."""
+        return list(cols.values())
+
+    def clip(self, x, lo: float, hi: float):
+        return self.least(self.greatest(x, self.lit(lo)), self.lit(hi))
+
+
+def _fpmod(a: float, n: float) -> float:
+    """Spark's ``pmod`` on Python floats (result in [0, n))."""
+    r = math.fmod(a, n)
+    return r + n if r < 0.0 else r
+
+
+_NUMPY = _Math(
+    sin=np.sin, cos=np.cos, tan=np.tan, asin=np.arcsin, atan=np.arctan,
+    atan2=np.arctan2, sinh=np.sinh, cosh=np.cosh, atanh=np.arctanh,
+    sqrt=np.sqrt, log=np.log, exp=np.exp, radians=np.radians,
+    degrees=np.degrees, pow=np.power, pmod=np.mod, greatest=np.maximum,
+    least=np.minimum, where=np.where, lit=lambda v: v,
+    arg=lambda v: np.asarray(v, "float64"),
+)
+
+_SCALAR = _Math(
+    sin=math.sin, cos=math.cos, tan=math.tan, asin=math.asin,
+    atan=math.atan, atan2=math.atan2, sinh=math.sinh, cosh=math.cosh,
+    atanh=math.atanh, sqrt=math.sqrt, log=math.log, exp=math.exp,
+    radians=math.radians, degrees=math.degrees, pow=operator.pow,
+    pmod=_fpmod, greatest=max, least=min,
+    where=lambda c, a, b: a if c else b, lit=lambda v: v, arg=float,
+)
+
+
+class _ColumnMath(_Math):
+    """The Column namespace over ``df``: ``let`` appends its columns and
+    returns references to them; ``out`` appends the results and drops
+    the temporaries this namespace made (never the caller's columns)."""
+
+    def __init__(self, df=None):
+        super().__init__(
+            sin=F.sin, cos=F.cos, tan=F.tan, asin=F.asin, atan=F.atan,
+            atan2=F.atan2, sinh=F.sinh, cosh=F.cosh, atanh=F.atanh,
+            sqrt=F.sqrt, log=F.log, exp=F.exp, radians=F.radians,
+            degrees=F.degrees, pow=F.pow, pmod=F.pmod, greatest=F.greatest,
+            least=F.least, where=lambda c, a, b: F.when(c, a).otherwise(b),
+            lit=F.lit, df=df, made=[],
+        )
+
+    @staticmethod
+    def arg(v):
+        return F.col(v) if isinstance(v, str) else v
+
+    def let(self, cols: dict) -> list:
+        self.df = self.df.withColumns(cols)
+        self.made += [c for c in cols if c not in self.made]
+        return [F.col(c) for c in cols]
+
+    def out(self, cols: dict):
+        d = self.df.withColumns(cols)
+        return d.drop(*self.made) if self.made else d
+
+
+# stage-free Column formulas (no ``let``) share one namespace
+_COLUMNS = _ColumnMath()
+
+
+def _columns(df, formula, a, b, outs: dict, *params):
+    """Append ``formula``'s results for the column (or column-name)
+    inputs ``a``/``b``: ``outs`` maps each result key to its output
+    column name."""
+    m = _ColumnMath(df)
+    res = formula(m, m.arg(a), m.arg(b), *params)
+    return m.out({outs[k]: v for k, v in res.items()})
+
+
+def _arrays(formula, a, b, *params) -> dict:
+    """``formula`` evaluated with numpy over float64 arrays."""
+    return formula(_NUMPY, _NUMPY.arg(a), _NUMPY.arg(b), *params)
+
+
+def _dl_wrapped(m, lon, lon0d: float):
+    """lon - lon0 in radians, wrapped by pmod so grids straddling
+    lon0 +- 180 stay continuous."""
+    return m.pmod(
+        m.radians(lon - lon0d) + math.pi, m.lit(2.0 * math.pi)
+    ) - math.pi
+
+
 R_EARTH = 6378137.0
 
 
-def lonlat_to_webmercator_x(lon: Column) -> Column:
-    return F.lit(R_EARTH) * F.radians(lon)
+def _webmercator_x(m, lon):
+    return m.lit(R_EARTH) * m.radians(lon)
 
 
-def lonlat_to_webmercator_y(lat: Column) -> Column:
-    return F.lit(R_EARTH) * F.log(
-        F.tan(F.lit(math.pi) / 4 + F.radians(lat) / 2)
+def _webmercator_y(m, lat):
+    return m.lit(R_EARTH) * m.log(
+        m.tan(m.lit(math.pi) / 4 + m.radians(lat) / 2)
     )
 
 
+def lonlat_to_webmercator_x(lon: Column) -> Column:
+    return _webmercator_x(_COLUMNS, lon)
+
+
+def lonlat_to_webmercator_y(lat: Column) -> Column:
+    return _webmercator_y(_COLUMNS, lat)
+
+
 def webmercator_to_lon(x: Column) -> Column:
-    return F.degrees(x / F.lit(R_EARTH))
+    return F.degrees(_COLUMNS.arg(x) / F.lit(R_EARTH))
 
 
 def webmercator_to_lat(y: Column) -> Column:
     return F.degrees(
-        F.lit(2.0) * F.atan(F.exp(y / F.lit(R_EARTH))) - F.lit(math.pi / 2)
+        F.lit(2.0) * F.atan(F.exp(_COLUMNS.arg(y) / F.lit(R_EARTH)))
+        - F.lit(math.pi / 2)
     )
 
 
@@ -88,169 +222,110 @@ H_RY = -1.1974897923405538e-06  # -0.2470"
 H_RZ = -4.082616008623402e-06  # -0.8421"
 
 
+def _osgb_fwd(m, lon, lat):
+    """WGS84 degrees -> EPSG:27700 grid: geodetic -> cartesian, the
+    Helmert shift, cartesian -> Airy geodetic (7 unrolled fixed-point
+    steps), then the National Grid TM core."""
+    L = m.lit
+    phi, lam = m.let({"_phi": m.radians(lat), "_lam": m.radians(lon)})
+    sp, cp = m.let({"_sp": m.sin(phi), "_cp": m.cos(phi)})
+    [nu1] = m.let(
+        {"_nu1": L(WGS_A) / m.sqrt(L(1.0) - L(E2_WGS) * sp * sp)}
+    )
+    X, Y, Z = m.let({
+        "_X": nu1 * cp * m.cos(lam),
+        "_Y": nu1 * cp * m.sin(lam),
+        "_Z": (L(1.0) - E2_WGS) * nu1 * sp,
+    })
+    Xp, Yp, Zp = m.let({
+        "_XP": L(H_TX) + L(H_S1) * X - L(H_RZ) * Y + L(H_RY) * Z,
+        "_YP": L(H_TY) + L(H_RZ) * X + L(H_S1) * Y - L(H_RX) * Z,
+        "_ZP": L(H_TZ) - L(H_RY) * X + L(H_RX) * Y + L(H_S1) * Z,
+    })
+    p, lam2 = m.let(
+        {"_p": m.sqrt(Xp * Xp + Yp * Yp), "_lam2": m.atan2(Yp, Xp)}
+    )
+    [phi2] = m.let({"_phi2": m.atan2(Zp, p * (L(1.0) - E2_AIRY))})
+    for _ in range(7):
+        [s] = m.let({"_sphi": m.sin(phi2)})
+        [phi2] = m.let({"_phi2": m.atan2(
+            Zp + L(E2_AIRY)
+            * (L(AIRY_A) / m.sqrt(L(1.0) - L(E2_AIRY) * s * s)) * s,
+            p,
+        )})
+    return _osgb_tm(m, phi2, lam2)
+
+
+def _osgb_tm(m, phi, lam):
+    """OSGB36 geodetic radians -> National Grid E/N (OS guide Annex C
+    series)."""
+    L = m.lit
+    s2, c2, t2, dl, dphi, sphi0 = m.let({
+        "_s2": m.sin(phi),
+        "_c2": m.cos(phi),
+        "_t2": m.tan(phi),
+        "_dl": lam - OSGB_LAM0,
+        "_dphi": phi - OSGB_PHI0,
+        "_sphi0": phi + OSGB_PHI0,
+    })
+    af0, bf0 = AIRY_A * OSGB_F0, AIRY_B * OSGB_F0
+    nu, rho_d = m.let({
+        "_nu": L(af0) / m.sqrt(L(1.0) - L(E2_AIRY) * s2 * s2),
+        "_rho_d": L(1.0) - L(E2_AIRY) * s2 * s2,
+    })
+    [rho] = m.let(
+        {"_rho": L(af0) * (L(1.0) - E2_AIRY) / (rho_d * m.sqrt(rho_d))}
+    )
+    eta2, t22, c23, M = m.let({
+        "_eta2": nu / rho - 1.0,
+        "_t22": t2 * t2,
+        "_c23": c2 * c2 * c2,
+        "_M": L(bf0) * (
+            L(MA_C) * dphi
+            - L(MB_C) * m.sin(dphi) * m.cos(sphi0)
+            + L(MC_C) * m.sin(L(2.0) * dphi) * m.cos(L(2.0) * sphi0)
+            - L(MD_C) * m.sin(L(3.0) * dphi) * m.cos(L(3.0) * sphi0)
+        ),
+    })
+    c25, t24, dl2 = m.let(
+        {"_c25": c23 * c2 * c2, "_t24": t22 * t22, "_dl2": dl * dl}
+    )
+    E = (
+        L(OSGB_E0)
+        + nu * c2 * dl
+        + nu / 6.0 * c23 * (nu / rho - t22) * dl2 * dl
+        + nu / 120.0 * c25
+        * (L(5.0) - L(18.0) * t22 + t24 + L(14.0) * eta2
+           - L(58.0) * t22 * eta2)
+        * dl2 * dl2 * dl
+    )
+    N = (
+        M + OSGB_N0
+        + nu / 2.0 * s2 * c2 * dl2
+        + nu / 24.0 * s2 * c23 * (L(5.0) - t22 + L(9.0) * eta2) * dl2 * dl2
+        + nu / 720.0 * s2 * c25 * (L(61.0) - L(58.0) * t22 + t24)
+        * dl2 * dl2 * dl2
+    )
+    return {"x": E, "y": N}
+
+
 def lonlat_to_osgb(df, lon, lat, out_e: str = "easting", out_n: str = "northing"):
     """Append OSGB36 ``easting``/``northing`` columns for WGS84 ``lon``/
     ``lat`` columns — built-in JVM expressions only, staged through named
     intermediate columns (each stage references the previous stage's
     aliases, keeping the expression tree linear in formula length)."""
-    d = df.withColumns({"_phi": F.radians(lat), "_lam": F.radians(lon)})
-    d = d.withColumns({"_sp": F.sin("_phi"), "_cp": F.cos("_phi")})
-    d = d.withColumn(
-        "_nu1", F.lit(WGS_A) / F.sqrt(F.lit(1.0) - F.lit(E2_WGS) * F.col("_sp") * F.col("_sp"))
-    )
-    d = d.withColumns(
-        {
-            "_X": F.col("_nu1") * F.col("_cp") * F.cos("_lam"),
-            "_Y": F.col("_nu1") * F.col("_cp") * F.sin("_lam"),
-            "_Z": (F.lit(1.0) - F.lit(E2_WGS)) * F.col("_nu1") * F.col("_sp"),
-        }
-    )
-    d = d.withColumns(
-        {
-            "_XP": F.lit(H_TX) + F.lit(H_S1) * F.col("_X") - F.lit(H_RZ) * F.col("_Y") + F.lit(H_RY) * F.col("_Z"),
-            "_YP": F.lit(H_TY) + F.lit(H_RZ) * F.col("_X") + F.lit(H_S1) * F.col("_Y") - F.lit(H_RX) * F.col("_Z"),
-            "_ZP": F.lit(H_TZ) - F.lit(H_RY) * F.col("_X") + F.lit(H_RX) * F.col("_Y") + F.lit(H_S1) * F.col("_Z"),
-        }
-    )
-    d = d.withColumns(
-        {
-            "_p": F.sqrt(F.col("_XP") * F.col("_XP") + F.col("_YP") * F.col("_YP")),
-            "_lam2": F.atan2(F.col("_YP"), F.col("_XP")),
-        }
-    )
-    d = d.withColumn(
-        "_phi2", F.atan2(F.col("_ZP"), F.col("_p") * (F.lit(1.0) - F.lit(E2_AIRY)))
-    )
-    for _ in range(7):
-        d = d.withColumn("_sphi", F.sin("_phi2")).withColumn(
-            "_phi2",
-            F.atan2(
-                F.col("_ZP")
-                + F.lit(E2_AIRY)
-                * (F.lit(AIRY_A) / F.sqrt(F.lit(1.0) - F.lit(E2_AIRY) * F.col("_sphi") * F.col("_sphi")))
-                * F.col("_sphi"),
-                F.col("_p"),
-            ),
-        )
-    d = d.withColumns(
-        {
-            "_s2": F.sin("_phi2"),
-            "_c2": F.cos("_phi2"),
-            "_t2": F.tan("_phi2"),
-            "_dl": F.col("_lam2") - F.lit(OSGB_LAM0),
-            "_dphi": F.col("_phi2") - F.lit(OSGB_PHI0),
-            "_sphi0": F.col("_phi2") + F.lit(OSGB_PHI0),
-        }
-    )
-    af0, bf0 = AIRY_A * OSGB_F0, AIRY_B * OSGB_F0
-    d = d.withColumns(
-        {
-            "_nu": F.lit(af0) / F.sqrt(F.lit(1.0) - F.lit(E2_AIRY) * F.col("_s2") * F.col("_s2")),
-            "_rho_d": F.lit(1.0) - F.lit(E2_AIRY) * F.col("_s2") * F.col("_s2"),
-        }
-    )
-    d = d.withColumn(
-        "_rho",
-        F.lit(af0) * (F.lit(1.0) - F.lit(E2_AIRY)) / (F.col("_rho_d") * F.sqrt(F.col("_rho_d"))),
-    )
-    d = d.withColumns(
-        {
-            "_eta2": F.col("_nu") / F.col("_rho") - F.lit(1.0),
-            "_t22": F.col("_t2") * F.col("_t2"),
-            "_c23": F.col("_c2") * F.col("_c2") * F.col("_c2"),
-            "_M": F.lit(bf0)
-            * (
-                F.lit(MA_C) * F.col("_dphi")
-                - F.lit(MB_C) * F.sin("_dphi") * F.cos("_sphi0")
-                + F.lit(MC_C) * F.sin(F.lit(2.0) * F.col("_dphi")) * F.cos(F.lit(2.0) * F.col("_sphi0"))
-                - F.lit(MD_C) * F.sin(F.lit(3.0) * F.col("_dphi")) * F.cos(F.lit(3.0) * F.col("_sphi0"))
-            ),
-        }
-    )
-    d = d.withColumns(
-        {
-            "_c25": F.col("_c23") * F.col("_c2") * F.col("_c2"),
-            "_t24": F.col("_t22") * F.col("_t22"),
-            "_dl2": F.col("_dl") * F.col("_dl"),
-        }
-    )
-    e_expr = (
-        F.lit(OSGB_E0)
-        + F.col("_nu") * F.col("_c2") * F.col("_dl")
-        + F.col("_nu") / F.lit(6.0) * F.col("_c23")
-        * (F.col("_nu") / F.col("_rho") - F.col("_t22"))
-        * F.col("_dl2") * F.col("_dl")
-        + F.col("_nu") / F.lit(120.0) * F.col("_c25")
-        * (
-            F.lit(5.0) - F.lit(18.0) * F.col("_t22") + F.col("_t24")
-            + F.lit(14.0) * F.col("_eta2")
-            - F.lit(58.0) * F.col("_t22") * F.col("_eta2")
-        )
-        * F.col("_dl2") * F.col("_dl2") * F.col("_dl")
-    )
-    n_expr = (
-        F.col("_M") + F.lit(OSGB_N0)
-        + F.col("_nu") / F.lit(2.0) * F.col("_s2") * F.col("_c2") * F.col("_dl2")
-        + F.col("_nu") / F.lit(24.0) * F.col("_s2") * F.col("_c23")
-        * (F.lit(5.0) - F.col("_t22") + F.lit(9.0) * F.col("_eta2"))
-        * F.col("_dl2") * F.col("_dl2")
-        + F.col("_nu") / F.lit(720.0) * F.col("_s2") * F.col("_c25")
-        * (F.lit(61.0) - F.lit(58.0) * F.col("_t22") + F.col("_t24"))
-        * F.col("_dl2") * F.col("_dl2") * F.col("_dl2")
-    )
-    d = d.withColumns({out_e: e_expr, out_n: n_expr})
-    return d.drop(*[c for c in d.columns if c.startswith("_")])
+    return _columns(df, _osgb_fwd, lon, lat, {"x": out_e, "y": out_n})
 
 
 def osgb_pandas_udf():
-    """Arrow-vectorized numpy twin of :func:`lonlat_to_osgb` (the shape a
-    pyproj transform would take in executors); parity-tested against the
-    expression path and the OS guide worked example."""
+    """Arrow-vectorized numpy evaluation of :func:`lonlat_to_osgb`'s
+    formula (the shape a pyproj transform would take in executors)."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("struct<easting: double, northing: double>")
     def _transform(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-        phi = np.radians(lat.to_numpy(np.float64))
-        lam = np.radians(lon.to_numpy(np.float64))
-        sp, cp = np.sin(phi), np.cos(phi)
-        nu1 = WGS_A / np.sqrt(1 - E2_WGS * sp * sp)
-        X, Y, Z = nu1 * cp * np.cos(lam), nu1 * cp * np.sin(lam), (1 - E2_WGS) * nu1 * sp
-        Xp = H_TX + H_S1 * X - H_RZ * Y + H_RY * Z
-        Yp = H_TY + H_RZ * X + H_S1 * Y - H_RX * Z
-        Zp = H_TZ - H_RY * X + H_RX * Y + H_S1 * Z
-        p = np.sqrt(Xp * Xp + Yp * Yp)
-        phi2 = np.arctan2(Zp, p * (1 - E2_AIRY))
-        for _ in range(7):
-            s = np.sin(phi2)
-            phi2 = np.arctan2(
-                Zp + E2_AIRY * (AIRY_A / np.sqrt(1 - E2_AIRY * s * s)) * s, p
-            )
-        lam2 = np.arctan2(Yp, Xp)
-        s2, c2, t2 = np.sin(phi2), np.cos(phi2), np.tan(phi2)
-        af0, bf0 = AIRY_A * OSGB_F0, AIRY_B * OSGB_F0
-        nu = af0 / np.sqrt(1 - E2_AIRY * s2 * s2)
-        rho = af0 * (1 - E2_AIRY) * (1 - E2_AIRY * s2 * s2) ** -1.5
-        eta2 = nu / rho - 1
-        dphi, sphi = phi2 - OSGB_PHI0, phi2 + OSGB_PHI0
-        M = bf0 * (
-            MA_C * dphi
-            - MB_C * np.sin(dphi) * np.cos(sphi)
-            + MC_C * np.sin(2 * dphi) * np.cos(2 * sphi)
-            - MD_C * np.sin(3 * dphi) * np.cos(3 * sphi)
-        )
-        dl = lam2 - OSGB_LAM0
-        t22, t24, c23, c25 = t2 * t2, t2 ** 4, c2 ** 3, c2 ** 5
-        E = (
-            OSGB_E0 + nu * c2 * dl
-            + nu / 6 * c23 * (nu / rho - t22) * dl ** 3
-            + nu / 120 * c25 * (5 - 18 * t22 + t24 + 14 * eta2 - 58 * t22 * eta2) * dl ** 5
-        )
-        N = (
-            M + OSGB_N0 + nu / 2 * s2 * c2 * dl * dl
-            + nu / 24 * s2 * c23 * (5 - t22 + 9 * eta2) * dl ** 4
-            + nu / 720 * s2 * c25 * (61 - 58 * t22 + t24) * dl ** 6
-        )
-        return pd.DataFrame({"easting": E, "northing": N})
+        r = _arrays(_osgb_fwd, lon, lat)
+        return pd.DataFrame({"easting": r["x"], "northing": r["y"]})
 
     return _transform
 
@@ -258,49 +333,21 @@ def osgb_pandas_udf():
 def osgb36_geodetic_to_grid_numpy(phi, lam):
     """TM core alone (OSGB36 geodetic radians -> grid E/N) — exposed for
     the worked-example test, which states OSGB36 coordinates directly."""
-    s2, c2, t2 = np.sin(phi), np.cos(phi), np.tan(phi)
-    af0, bf0 = AIRY_A * OSGB_F0, AIRY_B * OSGB_F0
-    nu = af0 / np.sqrt(1 - E2_AIRY * s2 * s2)
-    rho = af0 * (1 - E2_AIRY) * (1 - E2_AIRY * s2 * s2) ** -1.5
-    eta2 = nu / rho - 1
-    dphi, sphi = phi - OSGB_PHI0, phi + OSGB_PHI0
-    M = bf0 * (
-        MA_C * dphi
-        - MB_C * np.sin(dphi) * np.cos(sphi)
-        + MC_C * np.sin(2 * dphi) * np.cos(2 * sphi)
-        - MD_C * np.sin(3 * dphi) * np.cos(3 * sphi)
-    )
-    dl = lam - OSGB_LAM0
-    t22, t24, c23, c25 = t2 * t2, t2 ** 4, c2 ** 3, c2 ** 5
-    E = (
-        OSGB_E0 + nu * c2 * dl
-        + nu / 6 * c23 * (nu / rho - t22) * dl ** 3
-        + nu / 120 * c25 * (5 - 18 * t22 + t24 + 14 * eta2 - 58 * t22 * eta2) * dl ** 5
-    )
-    N = (
-        M + OSGB_N0 + nu / 2 * s2 * c2 * dl * dl
-        + nu / 24 * s2 * c23 * (5 - t22 + 9 * eta2) * dl ** 4
-        + nu / 720 * s2 * c25 * (61 - 58 * t22 + t24) * dl ** 6
-    )
-    return E, N
+    r = _arrays(_osgb_tm, phi, lam)
+    return r["x"], r["y"]
 
 
 def webmercator_pandas_udf():
     """The pandas_udf (Arrow-vectorized numpy) variant — how a pyproj
-    transform would run in executors; kept for parity testing against
-    the expression path."""
+    transform would run in executors."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("struct<x: double, y: double>")
     def _transform(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-        lam = np.radians(lon.to_numpy(np.float64))
-        phi = np.radians(lat.to_numpy(np.float64))
-        return pd.DataFrame(
-            {
-                "x": R_EARTH * lam,
-                "y": R_EARTH * np.log(np.tan(np.pi / 4 + phi / 2)),
-            }
-        )
+        return pd.DataFrame({
+            "x": _webmercator_x(_NUMPY, _NUMPY.arg(lon)),
+            "y": _webmercator_y(_NUMPY, _NUMPY.arg(lat)),
+        })
 
     return _transform
 
@@ -411,26 +458,75 @@ def osgb_inverse_pandas_udf():
 # ---------------------------------------------------------------------------
 # Lambert conformal conic — WRF's NATIVE projection (the grid every WRF
 # output file is on; the reference reprojects via pyproj's any-EPSG
-# ``to_crs``, wrf_voronoi.py:188).  The spherical forward/inverse math
-# already lives Snyder-pinned in sources/grib2.py (template 3.30 decode);
-# here the SAME formulas (Snyder, Map Projections — A Working Manual,
-# eqs. 15-1..15-5 spherical; 15-7..15-10 / EPSG 9802 ellipsoidal 2SP)
-# become COLUMN transforms: projection constants are precomputed Python
-# floats (identical literals for the Spark plan and any SQL oracle), the
-# per-row math is built-in JVM expressions inside whole-stage codegen.
+# ``to_crs``, wrf_voronoi.py:188).  Snyder, Map Projections — A Working
+# Manual, eqs. 15-1..15-5 spherical; 15-7..15-10 / EPSG 9802 ellipsoidal
+# 2SP.  Projection constants are precomputed Python floats (identical
+# literals for the Spark plan and any SQL oracle); the per-row formula
+# serves the column transforms and the GRIB2 template 3.30 decoder.
 
 WRF_SPHERE_R = 6370000.0  # WRF's spherical earth radius (share_config)
 
 
 def lcc_constants(lat1d: float, lat2d: float, lat0d: float,
                   R: float) -> tuple[float, float, float]:
-    """Spherical LCC constants (cone constant n, F, rho0) — delegates to
-    the Snyder-pinned kernel in sources/grib2.py so the column transform
-    and the GRIB2 grid decoder can never drift apart."""
-    from wrf_to_geodataframe_spark.sources.grib2 import _lcc_constants
-
-    n, F_, rho0 = _lcc_constants(lat1d, lat2d, lat0d, R)
+    """Spherical LCC constants (Snyder eqs. 15-1..15-3): cone constant
+    n, F, and rho0 at the reference latitude, as Python floats (numpy
+    scalar math, as the GRIB2 decoder has always computed them)."""
+    p1, p2, p0 = map(np.radians, (lat1d, lat2d, lat0d))
+    if abs(lat1d - lat2d) < 1e-12:
+        n = np.sin(p1)
+    else:
+        n = (
+            np.log(np.cos(p1) / np.cos(p2))
+            / np.log(np.tan(np.pi / 4 + p2 / 2)
+                     / np.tan(np.pi / 4 + p1 / 2))
+        )
+    F_ = np.cos(p1) * np.tan(np.pi / 4 + p1 / 2) ** n / n
+    rho0 = R * F_ / np.tan(np.pi / 4 + p0 / 2) ** n
     return float(n), float(F_), float(rho0)
+
+
+def _cone_xy(m, rho, n: float, dl, rho0: float, fe: float, fn: float):
+    """Conic plane coordinates: x = rho sin(n dl), y = rho0 - rho cos(n dl)."""
+    return {
+        "x": rho * m.sin(m.lit(n) * dl) + fe,
+        "y": m.lit(rho0 + fn) - rho * m.cos(m.lit(n) * dl),
+    }
+
+
+def _cone_shift(m, x, y, sgn: float, rho0: float, fe: float, fn: float):
+    """Conic plane -> axes about the apex, sign-flipped for a
+    south-viewing cone (n < 0)."""
+    return m.let({
+        "_xs": (x - fe) * sgn,
+        "_ys": (m.lit(rho0 + fn) - y) * sgn,
+    })
+
+
+def _lcc_fwd(m, lon, lat, lat1d, lat2d, lat0d, lon0d, R, fe, fn):
+    n, F_, rho0 = lcc_constants(lat1d, lat2d, lat0d, R)
+    phi, dl = m.let({"_phi": m.radians(lat), "_dl": _dl_wrapped(m, lon, lon0d)})
+    [rho] = m.let({"_rho": m.lit(R * F_) / m.pow(
+        m.tan(m.lit(math.pi / 4) + phi / 2), m.lit(n)
+    )})
+    return _cone_xy(m, rho, n, dl, rho0, fe, fn)
+
+
+def _lcc_inv(m, x, y, lat1d, lat2d, lat0d, lon0d, R, fe, fn):
+    n, F_, rho0 = lcc_constants(lat1d, lat2d, lat0d, R)
+    sgn = 1.0 if n >= 0 else -1.0
+    xs, ys = _cone_shift(m, x, y, sgn, rho0, fe, fn)
+    rho, theta = m.let({
+        "_rho": m.lit(sgn) * m.sqrt(xs * xs + ys * ys),
+        "_theta": m.atan2(xs, ys),
+    })
+    return {
+        "lat": m.degrees(
+            m.lit(2.0) * m.atan(m.pow(m.lit(R * F_) / rho, m.lit(1.0 / n)))
+            - math.pi / 2
+        ),
+        "lon": m.lit(lon0d) + m.degrees(theta / n),
+    }
 
 
 def lonlat_to_lcc(
@@ -451,28 +547,10 @@ def lonlat_to_lcc(
     ``lon``/``lat`` columns (Snyder eqs. 15-1/15-2): rho = R F /
     tan(pi/4 + phi/2)^n, x = rho sin(n dl), y = rho0 - rho cos(n dl),
     with dl wrapped to (-pi, pi] so grids straddling lon0 +- 180 work."""
-    n, F_, rho0 = lcc_constants(lat1d, lat2d, lat0d, R)
-    d = df.withColumns({
-        "_phi": F.radians(lat),
-        "_dl": F.pmod(
-            F.radians(lon - F.lit(lon0d)) + F.lit(math.pi),
-            F.lit(2.0 * math.pi),
-        ) - F.lit(math.pi),
-    })
-    d = d.withColumn(
-        "_rho",
-        F.lit(R * F_)
-        / F.pow(
-            F.tan(F.lit(math.pi / 4) + F.col("_phi") / 2), F.lit(n)
-        ),
+    return _columns(
+        df, _lcc_fwd, lon, lat, {"x": out_x, "y": out_y},
+        lat1d, lat2d, lat0d, lon0d, R, false_easting, false_northing,
     )
-    d = d.withColumns({
-        out_x: F.col("_rho") * F.sin(F.lit(n) * F.col("_dl"))
-        + F.lit(false_easting),
-        out_y: F.lit(rho0 + false_northing)
-        - F.col("_rho") * F.cos(F.lit(n) * F.col("_dl")),
-    })
-    return d.drop("_phi", "_dl", "_rho")
 
 
 def lcc_to_lonlat(
@@ -490,28 +568,24 @@ def lcc_to_lonlat(
     out_lat: str = "lat",
 ):
     """Inverse spherical LCC (Snyder eqs. 15-4/15-5): metre columns ->
-    WGS84 degree columns; mirrors ``lcc_inverse`` in sources/grib2.py."""
-    n, F_, rho0 = lcc_constants(lat1d, lat2d, lat0d, R)
-    sgn = 1.0 if n >= 0 else -1.0
-    d = df.withColumns({
-        "_xs": (x - F.lit(false_easting)) * F.lit(sgn),
-        "_ys": (F.lit(rho0 + false_northing) - y) * F.lit(sgn),
-    })
-    d = d.withColumns({
-        "_rho": F.lit(sgn) * F.sqrt(
-            F.col("_xs") * F.col("_xs") + F.col("_ys") * F.col("_ys")
-        ),
-        "_theta": F.atan2(F.col("_xs"), F.col("_ys")),
-    })
-    d = d.withColumns({
-        out_lat: F.degrees(
-            F.lit(2.0)
-            * F.atan(F.pow(F.lit(R * F_) / F.col("_rho"), F.lit(1.0 / n)))
-            - F.lit(math.pi / 2)
-        ),
-        out_lon: F.lit(lon0d) + F.degrees(F.col("_theta") / F.lit(n)),
-    })
-    return d.drop("_xs", "_ys", "_rho", "_theta")
+    WGS84 degree columns."""
+    return _columns(
+        df, _lcc_inv, x, y, {"lon": out_lon, "lat": out_lat},
+        lat1d, lat2d, lat0d, lon0d, R, false_easting, false_northing,
+    )
+
+
+def lcc_forward(lat, lon, lat1d, lat2d, lat0d, lon0d, R):
+    """(lat, lon) degrees -> (x, y) metres on the spherical LCC (numpy;
+    the GRIB2 template 3.30 decoder)."""
+    r = _arrays(_lcc_fwd, lon, lat, lat1d, lat2d, lat0d, lon0d, R, 0.0, 0.0)
+    return r["x"], r["y"]
+
+
+def lcc_inverse(x, y, lat1d, lat2d, lat0d, lon0d, R):
+    """(x, y) metres -> (lat, lon) degrees on the spherical LCC (numpy)."""
+    r = _arrays(_lcc_inv, x, y, lat1d, lat2d, lat0d, lon0d, R, 0.0, 0.0)
+    return r["lat"], r["lon"]
 
 
 def lcc2sp_constants(
@@ -543,6 +617,42 @@ def lcc2sp_constants(
     return n, aF, rho0, e
 
 
+def _lcc2sp_fwd(m, lon, lat, lat1d, lat2d, lat0d, lon0d, a, e2, fe, fn):
+    n, aF, rho0, e = lcc2sp_constants(lat1d, lat2d, lat0d, a, e2)
+    phi, dl = m.let({"_phi": m.radians(lat), "_dl": _dl_wrapped(m, lon, lon0d)})
+    [sp] = m.let({"_sp": m.sin(phi)})
+    [t] = m.let({"_t": m.tan(m.lit(math.pi / 4) - phi / 2) * m.pow(
+        (m.lit(1.0) + m.lit(e) * sp) / (m.lit(1.0) - m.lit(e) * sp),
+        m.lit(e / 2),
+    )})
+    [rho] = m.let({"_rho": m.lit(aF) * m.pow(t, m.lit(n))})
+    return _cone_xy(m, rho, n, dl, rho0, fe, fn)
+
+
+def _lcc2sp_inv(m, x, y, lat1d, lat2d, lat0d, lon0d, a, e2, fe, fn):
+    n, aF, rho0, e = lcc2sp_constants(lat1d, lat2d, lat0d, a, e2)
+    sgn = 1.0 if n >= 0 else -1.0
+    xs, ys = _cone_shift(m, x, y, sgn, rho0, fe, fn)
+    rho, theta = m.let({
+        "_rho": m.lit(sgn) * m.sqrt(xs * xs + ys * ys),
+        "_theta": m.atan2(xs, ys),
+    })
+    [t] = m.let(
+        {"_t": m.pow(m.lit(sgn) * rho / (sgn * aF), m.lit(1.0 / n))}
+    )
+    # chi (conformal latitude) seed, then unrolled fixed point
+    [phi] = m.let({"_phi2": m.lit(math.pi / 2) - m.lit(2.0) * m.atan(t)})
+    for _ in range(6):
+        [s] = m.let({"_sphi": m.sin(phi)})
+        [phi] = m.let({"_phi2": m.lit(math.pi / 2) - m.lit(2.0) * m.atan(
+            t * m.pow(
+                (m.lit(1.0) - m.lit(e) * s) / (m.lit(1.0) + m.lit(e) * s),
+                m.lit(e / 2),
+            )
+        )})
+    return {"lat": m.degrees(phi), "lon": m.lit(lon0d) + m.degrees(theta / n)}
+
+
 def lonlat_to_lcc2sp(
     df,
     lon,
@@ -561,32 +671,10 @@ def lonlat_to_lcc2sp(
     """Ellipsoidal LCC two-standard-parallel forward (Snyder 15-7/15-9,
     EPSG 9802) as column expressions: t(phi) = tan(pi/4 - phi/2) *
     ((1 + e sin phi)/(1 - e sin phi))^(e/2), rho = aF t^n."""
-    n, aF, rho0, e = lcc2sp_constants(lat1d, lat2d, lat0d, a, e2)
-    d = df.withColumns({
-        "_phi": F.radians(lat),
-        "_dl": F.pmod(
-            F.radians(lon - F.lit(lon0d)) + F.lit(math.pi),
-            F.lit(2.0 * math.pi),
-        ) - F.lit(math.pi),
-    })
-    d = d.withColumn("_sp", F.sin("_phi"))
-    d = d.withColumn(
-        "_t",
-        F.tan(F.lit(math.pi / 4) - F.col("_phi") / 2)
-        * F.pow(
-            (F.lit(1.0) + F.lit(e) * F.col("_sp"))
-            / (F.lit(1.0) - F.lit(e) * F.col("_sp")),
-            F.lit(e / 2),
-        ),
+    return _columns(
+        df, _lcc2sp_fwd, lon, lat, {"x": out_x, "y": out_y},
+        lat1d, lat2d, lat0d, lon0d, a, e2, false_easting, false_northing,
     )
-    d = d.withColumn("_rho", F.lit(aF) * F.pow("_t", F.lit(n)))
-    d = d.withColumns({
-        out_x: F.col("_rho") * F.sin(F.lit(n) * F.col("_dl"))
-        + F.lit(false_easting),
-        out_y: F.lit(rho0 + false_northing)
-        - F.col("_rho") * F.cos(F.lit(n) * F.col("_dl")),
-    })
-    return d.drop("_phi", "_dl", "_sp", "_t", "_rho")
 
 
 def lcc2sp_to_lonlat(
@@ -608,61 +696,18 @@ def lcc2sp_to_lonlat(
     standard fixed-point iteration phi <- pi/2 - 2 atan(t ((1 - e sin
     phi)/(1 + e sin phi))^(e/2)), unrolled 6 times (contraction ~e^2/2
     per step => sub-nanometre for earth ellipsoids)."""
-    n, aF, rho0, e = lcc2sp_constants(lat1d, lat2d, lat0d, a, e2)
-    sgn = 1.0 if n >= 0 else -1.0
-    d = df.withColumns({
-        "_xs": (x - F.lit(false_easting)) * F.lit(sgn),
-        "_ys": (F.lit(rho0 + false_northing) - y) * F.lit(sgn),
-    })
-    d = d.withColumns({
-        "_rho": F.lit(sgn) * F.sqrt(
-            F.col("_xs") * F.col("_xs") + F.col("_ys") * F.col("_ys")
-        ),
-        "_theta": F.atan2(F.col("_xs"), F.col("_ys")),
-    })
-    d = d.withColumn(
-        "_t", F.pow(F.lit(sgn) * F.col("_rho") / F.lit(sgn * aF),
-                    F.lit(1.0 / n))
+    return _columns(
+        df, _lcc2sp_inv, x, y, {"lon": out_lon, "lat": out_lat},
+        lat1d, lat2d, lat0d, lon0d, a, e2, false_easting, false_northing,
     )
-    # chi (conformal latitude) seed, then unrolled fixed point
-    d = d.withColumn(
-        "_phi2",
-        F.lit(math.pi / 2) - F.lit(2.0) * F.atan("_t"),
-    )
-    for _ in range(6):
-        d = d.withColumn("_sphi", F.sin("_phi2")).withColumn(
-            "_phi2",
-            F.lit(math.pi / 2)
-            - F.lit(2.0)
-            * F.atan(
-                F.col("_t")
-                * F.pow(
-                    (F.lit(1.0) - F.lit(e) * F.col("_sphi"))
-                    / (F.lit(1.0) + F.lit(e) * F.col("_sphi")),
-                    F.lit(e / 2),
-                )
-            ),
-        )
-    d = d.withColumns({
-        out_lat: F.degrees("_phi2"),
-        out_lon: F.lit(lon0d) + F.degrees(F.col("_theta") / F.lit(n)),
-    })
-    return d.drop(*[c for c in d.columns if c.startswith("_")])
 
 
 def lcc2sp_forward_numpy(lon, lat, lat1d, lat2d, lat0d, lon0d,
                          a=WGS_A, e2=E2_WGS):
-    """Numpy twin of :func:`lonlat_to_lcc2sp` (no false offsets)."""
-    n, aF, rho0, e = lcc2sp_constants(lat1d, lat2d, lat0d, a, e2)
-    phi = np.radians(np.asarray(lat, "float64"))
-    dl = np.radians(np.asarray(lon, "float64") - lon0d)
-    dl = (dl + np.pi) % (2 * np.pi) - np.pi
-    sp = np.sin(phi)
-    t = np.tan(np.pi / 4 - phi / 2) * ((1 + e * sp) / (1 - e * sp)) ** (
-        e / 2
-    )
-    rho = aF * t ** n
-    return rho * np.sin(n * dl), rho0 - rho * np.cos(n * dl)
+    """Numpy evaluation of :func:`lonlat_to_lcc2sp` (no false offsets)."""
+    r = _arrays(_lcc2sp_fwd, lon, lat, lat1d, lat2d, lat0d, lon0d,
+                a, e2, 0.0, 0.0)
+    return r["x"], r["y"]
 
 
 # ---------------------------------------------------------------------------
@@ -706,6 +751,51 @@ def tm_constants(a: float = WGS_A, f: float = WGS_F) -> dict:
     }
 
 
+def _tm_fwd(m, lon, lat, lon0d, k0, a, f, fe, fn):
+    k = tm_constants(a, f)
+    kA = k0 * k["A"]
+    c = k["c"]
+    sp, lp = m.let({
+        "_sp": m.sin(m.radians(lat)),
+        "_lp": m.radians(lon - lon0d),
+    })
+    [t] = m.let(
+        {"_t": m.sinh(m.atanh(sp) - m.lit(c) * m.atanh(m.lit(c) * sp))}
+    )
+    xip, etap = m.let({
+        "_xip": m.atan2(t, m.cos(lp)),
+        "_etap": m.atanh(m.sin(lp) / m.sqrt(m.lit(1.0) + t * t)),
+    })
+    xi, eta = xip, etap
+    for j, aj in enumerate(k["alpha"], 1):
+        xi = xi + m.lit(aj) * m.sin(m.lit(2.0 * j) * xip) \
+            * m.cosh(m.lit(2.0 * j) * etap)
+        eta = eta + m.lit(aj) * m.cos(m.lit(2.0 * j) * xip) \
+            * m.sinh(m.lit(2.0 * j) * etap)
+    return {"x": m.lit(fe) + m.lit(kA) * eta, "y": m.lit(fn) + m.lit(kA) * xi}
+
+
+def _tm_inv(m, e, n, lon0d, k0, a, f, fe, fn):
+    k = tm_constants(a, f)
+    kA = k0 * k["A"]
+    xi, eta = m.let({"_xi": (n - fn) / kA, "_eta": (e - fe) / kA})
+    xip, etap = xi, eta
+    for j, bj in enumerate(k["beta"], 1):
+        xip = xip - m.lit(bj) * m.sin(m.lit(2.0 * j) * xi) \
+            * m.cosh(m.lit(2.0 * j) * eta)
+        etap = etap - m.lit(bj) * m.cos(m.lit(2.0 * j) * xi) \
+            * m.sinh(m.lit(2.0 * j) * eta)
+    xip, etap = m.let({"_xip": xip, "_etap": etap})
+    [chi] = m.let({"_chi": m.asin(m.sin(xip) / m.cosh(etap))})
+    phi = chi
+    for j, dj in enumerate(k["delta"], 1):
+        phi = phi + m.lit(dj) * m.sin(m.lit(2.0 * j) * chi)
+    return {
+        "lat": m.degrees(phi),
+        "lon": m.lit(lon0d) + m.degrees(m.atan2(m.sinh(etap), m.cos(xip))),
+    }
+
+
 def lonlat_to_tm(
     df,
     lon,
@@ -724,39 +814,10 @@ def lonlat_to_tm(
     atanh(c sin phi)), then the alpha trigonometric series.  Valid to
     sub-mm within +-4 degrees of the central meridian (every UTM
     zone)."""
-    k = tm_constants(a, f)
-    kA = k0 * k["A"]
-    a1, a2, a3 = k["alpha"]
-    c = k["c"]
-    d = df.withColumns({
-        "_sp": F.sin(F.radians(lat)),
-        "_lp": F.radians(lon - F.lit(lon0d)),
-    })
-    d = d.withColumn(
-        "_t",
-        F.sinh(
-            F.atanh("_sp") - F.lit(c) * F.atanh(F.lit(c) * F.col("_sp"))
-        ),
+    return _columns(
+        df, _tm_fwd, lon, lat, {"x": out_e, "y": out_n},
+        lon0d, k0, a, f, false_easting, false_northing,
     )
-    d = d.withColumns({
-        "_xip": F.atan2(F.col("_t"), F.cos("_lp")),
-        "_etap": F.atanh(
-            F.sin("_lp")
-            / F.sqrt(F.lit(1.0) + F.col("_t") * F.col("_t"))
-        ),
-    })
-    xi = F.col("_xip")
-    eta = F.col("_etap")
-    for j, aj in ((1, a1), (2, a2), (3, a3)):
-        xi = xi + F.lit(aj) * F.sin(F.lit(2.0 * j) * F.col("_xip")) \
-            * F.cosh(F.lit(2.0 * j) * F.col("_etap"))
-        eta = eta + F.lit(aj) * F.cos(F.lit(2.0 * j) * F.col("_xip")) \
-            * F.sinh(F.lit(2.0 * j) * F.col("_etap"))
-    d = d.withColumns({
-        out_e: F.lit(false_easting) + F.lit(kA) * eta,
-        out_n: F.lit(false_northing) + F.lit(kA) * xi,
-    })
-    return d.drop("_sp", "_lp", "_t", "_xip", "_etap")
 
 
 def tm_to_lonlat(
@@ -774,34 +835,10 @@ def tm_to_lonlat(
 ):
     """Transverse Mercator inverse (Kruger beta series, then the
     conformal-to-geodetic delta series) as column expressions."""
-    k = tm_constants(a, f)
-    kA = k0 * k["A"]
-    b1, b2, b3 = k["beta"]
-    d1, d2, d3 = k["delta"]
-    d = df.withColumns({
-        "_xi": (n_col - F.lit(false_northing)) / F.lit(kA),
-        "_eta": (e_col - F.lit(false_easting)) / F.lit(kA),
-    })
-    xip = F.col("_xi")
-    etap = F.col("_eta")
-    for j, bj in ((1, b1), (2, b2), (3, b3)):
-        xip = xip - F.lit(bj) * F.sin(F.lit(2.0 * j) * F.col("_xi")) \
-            * F.cosh(F.lit(2.0 * j) * F.col("_eta"))
-        etap = etap - F.lit(bj) * F.cos(F.lit(2.0 * j) * F.col("_xi")) \
-            * F.sinh(F.lit(2.0 * j) * F.col("_eta"))
-    d = d.withColumns({"_xip": xip, "_etap": etap})
-    d = d.withColumn(
-        "_chi", F.asin(F.sin("_xip") / F.cosh("_etap"))
+    return _columns(
+        df, _tm_inv, e_col, n_col, {"lon": out_lon, "lat": out_lat},
+        lon0d, k0, a, f, false_easting, false_northing,
     )
-    phi = F.col("_chi")
-    for j, dj in ((1, d1), (2, d2), (3, d3)):
-        phi = phi + F.lit(dj) * F.sin(F.lit(2.0 * j) * F.col("_chi"))
-    d = d.withColumns({
-        out_lat: F.degrees(phi),
-        out_lon: F.lit(lon0d)
-        + F.degrees(F.atan2(F.sinh("_etap"), F.cos("_xip"))),
-    })
-    return d.drop("_xi", "_eta", "_xip", "_etap", "_chi")
 
 
 def utm_zone_lon0(zone: int) -> float:
@@ -831,21 +868,9 @@ def utm_to_lonlat(df, e_col, n_col, zone: int, south: bool = False,
 
 
 def tm_forward_numpy(lon, lat, lon0d, k0=0.9996, a=WGS_A, f=WGS_F):
-    """Numpy twin of :func:`lonlat_to_tm` (no false offsets)."""
-    k = tm_constants(a, f)
-    kA = k0 * k["A"]
-    c = k["c"]
-    sp = np.sin(np.radians(np.asarray(lat, "float64")))
-    lp = np.radians(np.asarray(lon, "float64") - lon0d)
-    t = np.sinh(np.arctanh(sp) - c * np.arctanh(c * sp))
-    xip = np.arctan2(t, np.cos(lp))
-    etap = np.arctanh(np.sin(lp) / np.sqrt(1.0 + t * t))
-    xi, eta = xip.copy(), etap.copy()
-    for j, aj in ((1, k["alpha"][0]), (2, k["alpha"][1]),
-                  (3, k["alpha"][2])):
-        xi += aj * np.sin(2 * j * xip) * np.cosh(2 * j * etap)
-        eta += aj * np.cos(2 * j * xip) * np.sinh(2 * j * etap)
-    return kA * eta, kA * xi
+    """Numpy evaluation of :func:`lonlat_to_tm` (no false offsets)."""
+    r = _arrays(_tm_fwd, lon, lat, lon0d, k0, a, f, 0.0, 0.0)
+    return r["x"], r["y"]
 
 
 # ---------------------------------------------------------------------------
@@ -854,7 +879,49 @@ def tm_forward_numpy(lon, lat, lon0d, k0=0.9996, a=WGS_A, f=WGS_F):
 # aspect with scale true at lat_ts: rho = 2 R k0 tan(pi/4 -+ phi/2),
 # k0 = (1 +- sin lat_ts)/2) and 7-1/7-2 (Mercator true at lat_ts:
 # k0 = cos lat_ts).  Same discipline as LCC: constants are Python
-# floats, per-row math is JVM expressions.
+# floats, per-row math is one formula.
+
+
+def _stere_k0(lat_ts: float) -> tuple[float, float]:
+    """(pole sign, scale factor): the pole follows the sign of
+    ``lat_ts`` (WRF's convention: TRUELAT1 < 0 = south polar)."""
+    sgn = -1.0 if lat_ts < 0 else 1.0
+    return sgn, (1.0 + math.sin(math.radians(abs(lat_ts)))) / 2.0
+
+
+def _stere_fwd(m, lon, lat, lat_ts, lon0d, R):
+    sgn, k0 = _stere_k0(lat_ts)
+    phi = m.radians(lat) * sgn
+    dl = m.radians(lon - lon0d) * sgn
+    rho = m.lit(2.0 * R * k0) * m.tan(m.lit(math.pi / 4) - phi / 2)
+    return {"x": rho * m.sin(dl) * sgn, "y": -rho * m.cos(dl) * sgn}
+
+
+def _stere_inv(m, x, y, lat_ts, lon0d, R):
+    sgn, k0 = _stere_k0(lat_ts)
+    xs, ys = x * sgn, y * sgn
+    rho = m.sqrt(xs * xs + ys * ys)
+    phi = m.lit(math.pi / 2) - m.lit(2.0) * m.atan(rho / (2.0 * R * k0))
+    return {
+        "lat": m.degrees(phi) * sgn,
+        "lon": m.lit(lon0d) + m.degrees(m.atan2(xs, -ys)) * sgn,
+    }
+
+
+def _merc_fwd(m, lon, lat, lat_ts, lon0d, R):
+    rk = R * math.cos(math.radians(lat_ts))
+    return {
+        "x": m.lit(rk) * m.radians(lon - lon0d),
+        "y": m.lit(rk) * m.log(m.tan(m.lit(math.pi / 4) + m.radians(lat) / 2)),
+    }
+
+
+def _merc_inv(m, x, y, lat_ts, lon0d, R):
+    rk = R * math.cos(math.radians(lat_ts))
+    return {
+        "lon": m.lit(lon0d) + m.degrees(x / rk),
+        "lat": m.degrees(m.lit(2.0) * m.atan(m.exp(y / rk)) - math.pi / 2),
+    }
 
 
 def lonlat_to_stere(
@@ -863,16 +930,8 @@ def lonlat_to_stere(
 ):
     """Spherical polar stereographic forward, pole chosen by the sign
     of ``lat_ts`` (WRF's convention: TRUELAT1 < 0 = south polar)."""
-    south = lat_ts < 0
-    k0 = (1.0 + math.sin(math.radians(abs(lat_ts)))) / 2.0
-    phi = F.radians(lat) * F.lit(-1.0 if south else 1.0)
-    dl = (F.radians(lon - F.lit(lon0d))) * F.lit(-1.0 if south else 1.0)
-    rho = F.lit(2.0 * R * k0) * F.tan(F.lit(math.pi / 4) - phi / 2)
-    d = df.withColumns({
-        out_x: rho * F.sin(dl) * F.lit(-1.0 if south else 1.0),
-        out_y: -rho * F.cos(dl) * F.lit(-1.0 if south else 1.0),
-    })
-    return d
+    return _columns(df, _stere_fwd, lon, lat, {"x": out_x, "y": out_y},
+                    lat_ts, lon0d, R)
 
 
 def stere_to_lonlat(
@@ -881,18 +940,8 @@ def stere_to_lonlat(
 ):
     """Inverse spherical polar stereographic (Snyder 20-14/20-16
     polar simplification)."""
-    south = lat_ts < 0
-    k0 = (1.0 + math.sin(math.radians(abs(lat_ts)))) / 2.0
-    sgn = -1.0 if south else 1.0
-    xs, ys = x * F.lit(sgn), y * F.lit(sgn)
-    rho = F.sqrt(xs * xs + ys * ys)
-    phi = F.lit(math.pi / 2) - F.lit(2.0) * F.atan(
-        rho / F.lit(2.0 * R * k0)
-    )
-    return df.withColumns({
-        out_lat: F.degrees(phi) * F.lit(sgn),
-        out_lon: F.lit(lon0d) + F.degrees(F.atan2(xs, -ys)) * F.lit(sgn),
-    })
+    return _columns(df, _stere_inv, x, y, {"lon": out_lon, "lat": out_lat},
+                    lat_ts, lon0d, R)
 
 
 def lonlat_to_mercator(
@@ -901,13 +950,8 @@ def lonlat_to_mercator(
 ):
     """Spherical Mercator with scale true at ``lat_ts`` (Snyder
     7-1/7-2; ``lat_ts=0, R=6378137, lon0=0`` is Web Mercator)."""
-    k0 = math.cos(math.radians(lat_ts))
-    return df.withColumns({
-        out_x: F.lit(R * k0) * F.radians(lon - F.lit(lon0d)),
-        out_y: F.lit(R * k0) * F.log(
-            F.tan(F.lit(math.pi / 4) + F.radians(lat) / 2)
-        ),
-    })
+    return _columns(df, _merc_fwd, lon, lat, {"x": out_x, "y": out_y},
+                    lat_ts, lon0d, R)
 
 
 def mercator_to_lonlat(
@@ -915,104 +959,95 @@ def mercator_to_lonlat(
     R: float = WRF_SPHERE_R, out_lon: str = "lon", out_lat: str = "lat",
 ):
     """Inverse spherical Mercator (Snyder 7-4/7-5)."""
-    k0 = math.cos(math.radians(lat_ts))
-    return df.withColumns({
-        out_lon: F.lit(lon0d) + F.degrees(x / F.lit(R * k0)),
-        out_lat: F.degrees(
-            F.lit(2.0) * F.atan(F.exp(y / F.lit(R * k0)))
-            - F.lit(math.pi / 2)
-        ),
-    })
+    return _columns(df, _merc_inv, x, y, {"lon": out_lon, "lat": out_lat},
+                    lat_ts, lon0d, R)
 
 
 # ---------------------------------------------------------------------------
 # Rotated lat-lon (the UKCP18 / regional-climate grid; GRIB2 template
-# 3.1) — the rotation-matrix construction in sources/grib2.py
-# (rotated_to_true/true_to_rotated, invariants pinned in
-# tests/test_grib2.py) re-expressed as JVM column transforms with the
-# SAME formula shape, column-vs-numpy parity-tested.
+# 3.1): an explicit rotation-matrix product on the unit sphere, which
+# pins the sign conventions by construction instead of by a memorized
+# formula — the invariants (pole image, origin image, angular-distance
+# preservation, involution with the inverse) are asserted in
+# tests/test_grib2.py.  The rotated system's north pole sits at true
+# (-sp_lat, sp_lon - 180).
+
+
+def _rotation(sp_lat: float, sp_lon: float) -> tuple[float, ...]:
+    """cos/sin of the pole tilt theta = 90 - np_lat and of the pole
+    longitude np_lon."""
+    theta = math.radians(90.0 + sp_lat)
+    lam_p = math.radians(sp_lon - 180.0)
+    return math.cos(theta), math.sin(theta), math.cos(lam_p), math.sin(lam_p)
+
+
+def _rotated_to_true(m, lon_r, lat_r, sp_lat, sp_lon):
+    """Ry(theta) then Rz(np_lon), after a 180-degree pre-rotation about
+    z: the rotated lambda_r = 0 meridian faces AWAY from the pole's
+    true meridian, so rotated (0, 0) lands on the domain (the UK for
+    UKCP18), not its antipode."""
+    ct, st, cl, sl = _rotation(sp_lat, sp_lon)
+    phi, lam = m.let({"_phi": m.radians(lat_r), "_lam": m.radians(lon_r)})
+    x, y, z = m.let({
+        "_x": -m.cos(phi) * m.cos(lam),
+        "_y": -m.cos(phi) * m.sin(lam),
+        "_z": m.sin(phi),
+    })
+    x1, z1 = m.let({"_x1": x * ct + z * st, "_z1": -x * st + z * ct})
+    x2, y2 = m.let({"_x2": x1 * cl - y * sl, "_y2": x1 * sl + y * cl})
+    return {
+        "lat": m.degrees(m.asin(m.clip(z1, -1.0, 1.0))),
+        "lon": m.degrees(m.atan2(y2, x2)),
+    }
+
+
+def _true_to_rotated(m, lon, lat, sp_lat, sp_lon):
+    """Transpose rotations in reverse order, then undo the 180-degree
+    pre-rotation."""
+    ct, st, cl, sl = _rotation(sp_lat, sp_lon)
+    phi, lam = m.let({"_phi": m.radians(lat), "_lam": m.radians(lon)})
+    x, y, z = m.let({
+        "_x": m.cos(phi) * m.cos(lam),
+        "_y": m.cos(phi) * m.sin(lam),
+        "_z": m.sin(phi),
+    })
+    x1, y1 = m.let({"_x1": x * cl + y * sl, "_y1": -x * sl + y * cl})
+    x2, z2 = m.let({"_x2": x1 * ct - z * st, "_z2": x1 * st + z * ct})
+    return {
+        "lat": m.degrees(m.asin(m.clip(z2, -1.0, 1.0))),
+        "lon": m.degrees(m.atan2(-y1, -x2)),
+    }
 
 
 def rotated_to_lonlat(
     df, lon_r, lat_r, sp_lat: float, sp_lon: float,
     out_lon: str = "lon", out_lat: str = "lat",
 ):
-    """Rotated-pole coordinates -> true WGS84 degrees: explicit
-    Ry(90-np_lat) then Rz(np_lon) rotation product on the unit sphere
-    (with the 180-degree pre-rotation that puts rotated (0,0) on the
-    domain, not its antipode) — mirrors grib2.rotated_to_true."""
-    np_lat = -sp_lat
-    np_lon = sp_lon - 180.0
-    theta = math.radians(90.0 - np_lat)
-    lam_p = math.radians(np_lon)
-    d = df.withColumns({
-        "_phi": F.radians(lat_r), "_lam": F.radians(lon_r),
-    })
-    d = d.withColumns({
-        "_x": -F.cos("_phi") * F.cos("_lam"),
-        "_y": -F.cos("_phi") * F.sin("_lam"),
-        "_z": F.sin("_phi"),
-    })
-    d = d.withColumns({
-        "_x1": F.col("_x") * F.lit(math.cos(theta))
-        + F.col("_z") * F.lit(math.sin(theta)),
-        "_z1": -F.col("_x") * F.lit(math.sin(theta))
-        + F.col("_z") * F.lit(math.cos(theta)),
-    })
-    d = d.withColumns({
-        "_x2": F.col("_x1") * F.lit(math.cos(lam_p))
-        - F.col("_y") * F.lit(math.sin(lam_p)),
-        "_y2": F.col("_x1") * F.lit(math.sin(lam_p))
-        + F.col("_y") * F.lit(math.cos(lam_p)),
-    })
-    d = d.withColumns({
-        out_lat: F.degrees(F.asin(
-            F.least(F.greatest(F.col("_z1"), F.lit(-1.0)), F.lit(1.0))
-        )),
-        out_lon: F.degrees(F.atan2(F.col("_y2"), F.col("_x2"))),
-    })
-    return d.drop("_phi", "_lam", "_x", "_y", "_z", "_x1", "_z1",
-                  "_x2", "_y2")
+    """Rotated-pole coordinates -> true WGS84 degrees (columns)."""
+    return _columns(df, _rotated_to_true, lon_r, lat_r,
+                    {"lon": out_lon, "lat": out_lat}, sp_lat, sp_lon)
 
 
 def lonlat_to_rotated(
     df, lon, lat, sp_lat: float, sp_lon: float,
     out_lon: str = "lon_r", out_lat: str = "lat_r",
 ):
-    """True WGS84 degrees -> rotated-pole coordinates (transpose
-    rotations, reverse order) — mirrors grib2.true_to_rotated."""
-    np_lat = -sp_lat
-    np_lon = sp_lon - 180.0
-    theta = math.radians(90.0 - np_lat)
-    lam_p = math.radians(np_lon)
-    d = df.withColumns({
-        "_phi": F.radians(lat), "_lam": F.radians(lon),
-    })
-    d = d.withColumns({
-        "_x": F.cos("_phi") * F.cos("_lam"),
-        "_y": F.cos("_phi") * F.sin("_lam"),
-        "_z": F.sin("_phi"),
-    })
-    d = d.withColumns({
-        "_x1": F.col("_x") * F.lit(math.cos(lam_p))
-        + F.col("_y") * F.lit(math.sin(lam_p)),
-        "_y1": -F.col("_x") * F.lit(math.sin(lam_p))
-        + F.col("_y") * F.lit(math.cos(lam_p)),
-    })
-    d = d.withColumns({
-        "_x2": F.col("_x1") * F.lit(math.cos(theta))
-        - F.col("_z") * F.lit(math.sin(theta)),
-        "_z2": F.col("_x1") * F.lit(math.sin(theta))
-        + F.col("_z") * F.lit(math.cos(theta)),
-    })
-    d = d.withColumns({
-        out_lat: F.degrees(F.asin(
-            F.least(F.greatest(F.col("_z2"), F.lit(-1.0)), F.lit(1.0))
-        )),
-        out_lon: F.degrees(F.atan2(-F.col("_y1"), -F.col("_x2"))),
-    })
-    return d.drop("_phi", "_lam", "_x", "_y", "_z", "_x1", "_y1",
-                  "_x2", "_z2")
+    """True WGS84 degrees -> rotated-pole coordinates (columns)."""
+    return _columns(df, _true_to_rotated, lon, lat,
+                    {"lon": out_lon, "lat": out_lat}, sp_lat, sp_lon)
+
+
+def rotated_to_true(lat_r, lon_r, sp_lat: float, sp_lon: float):
+    """Rotated-pole coordinates -> true (lat, lon) degrees (numpy; the
+    GRIB2 template 3.1 decoder)."""
+    r = _arrays(_rotated_to_true, lon_r, lat_r, sp_lat, sp_lon)
+    return r["lat"], r["lon"]
+
+
+def true_to_rotated(lat, lon, sp_lat: float, sp_lon: float):
+    """Inverse of ``rotated_to_true`` (numpy)."""
+    r = _arrays(_true_to_rotated, lon, lat, sp_lat, sp_lon)
+    return r["lat"], r["lon"]
 
 
 def haversine_m(lat1, lon1, lat2, lon2, R: float = 6371000.0) -> Column:
@@ -1030,10 +1065,7 @@ def haversine_m(lat1, lon1, lat2, lon2, R: float = 6371000.0) -> Column:
     is immaterial for banding/radius pre-filters (pad the radius by
     1%); for survey-grade distances use
     :func:`ellipsoidal_distance_udf` (Vincenty, sub-mm)."""
-    lat1 = F.col(lat1) if isinstance(lat1, str) else lat1
-    lon1 = F.col(lon1) if isinstance(lon1, str) else lon1
-    lat2 = F.col(lat2) if isinstance(lat2, str) else lat2
-    lon2 = F.col(lon2) if isinstance(lon2, str) else lon2
+    lat1, lon1, lat2, lon2 = map(_COLUMNS.arg, (lat1, lon1, lat2, lon2))
     dphi = F.radians(lat2 - lat1) / 2
     dlam = F.radians(lon2 - lon1) / 2
     a = (
@@ -1051,10 +1083,7 @@ def bearing_deg(lat1, lon1, lat2, lon2) -> Column:
     point 1 toward point 2, in [-180, 180] (atan2 convention):
     theta = atan2(sin dlam cos phi2, cos phi1 sin phi2 - sin phi1
     cos phi2 cos dlam)."""
-    lat1 = F.col(lat1) if isinstance(lat1, str) else lat1
-    lon1 = F.col(lon1) if isinstance(lon1, str) else lon1
-    lat2 = F.col(lat2) if isinstance(lat2, str) else lat2
-    lon2 = F.col(lon2) if isinstance(lon2, str) else lon2
+    lat1, lon1, lat2, lon2 = map(_COLUMNS.arg, (lat1, lon1, lat2, lon2))
     p1, p2 = F.radians(lat1), F.radians(lat2)
     dl = F.radians(lon2 - lon1)
     return F.degrees(F.atan2(
@@ -1076,7 +1105,7 @@ def destination_point(lat, lon, bearing, dist_m,
     banding, and synthetic-grid construction; not for navigation."""
     p1 = F.radians(lat)
     th = F.radians(bearing)
-    d = dist_m / F.lit(R)
+    d = _COLUMNS.arg(dist_m) / F.lit(R)
     sp2 = F.sin(p1) * F.cos(d) + F.cos(p1) * F.sin(d) * F.cos(th)
     p2 = F.asin(F.least(F.greatest(sp2, F.lit(-1.0)), F.lit(1.0)))
     l2 = F.radians(lon) + F.atan2(
@@ -1132,58 +1161,57 @@ def wrf_lcc_params(attrs: dict) -> dict:
     }
 
 
-def wrf_projection(attrs: dict):
-    """(forward, inverse) column-transform pair for a wrfout file's
-    NATIVE projection, dispatched on ``MAP_PROJ``: 1 Lambert conformal,
-    2 polar stereographic (true at TRUELAT1, pole by its sign),
-    3 Mercator (true at TRUELAT1), 6 lat-lon identity.  Call as
-    ``fwd(df, lon, lat, out_x=..., out_y=...)`` and ``inv(df, x, y,
-    out_lon=..., out_lat=...)``.  Named error otherwise."""
-    import functools
+def _latlon_fwd(m, lon, lat):
+    return {"x": lon * 1.0, "y": lat * 1.0}
 
-    def scalar(name):
-        return _attr_scalar(attrs, name)
 
-    mp = int(scalar("MAP_PROJ"))
+def _latlon_inv(m, x, y):
+    return {"lon": x * 1.0, "lat": y * 1.0}
+
+
+def _wrf_native(attrs: dict):
+    """(forward formula, inverse formula, parameters) of a wrfout
+    file's NATIVE projection — the one ``MAP_PROJ`` dispatch behind
+    :func:`wrf_projection` and :func:`wrf_ll_to_xy_scalar`: 1 Lambert
+    conformal, 2 polar stereographic (true at TRUELAT1, pole by its
+    sign), 3 Mercator (true at TRUELAT1), 6 lat-lon identity.  Named
+    error otherwise."""
+    mp = int(_attr_scalar(attrs, "MAP_PROJ"))
     if mp == 1:
         p = wrf_lcc_params(attrs)
-        # uniform out-column defaults across all MAP_PROJ branches
-        # (call-site kwargs still override partial kwargs)
-        return (
-            functools.partial(lonlat_to_lcc, **p, out_x="x", out_y="y"),
-            functools.partial(lcc_to_lonlat, **p),
+        return _lcc_fwd, _lcc_inv, (
+            p["lat1d"], p["lat2d"], p["lat0d"], p["lon0d"], p["R"], 0.0, 0.0
         )
-    if mp == 2:
-        kw = {"lat_ts": scalar("TRUELAT1"),
-              "lon0d": scalar("STAND_LON"), "R": WRF_SPHERE_R}
-        return (
-            functools.partial(lonlat_to_stere, **kw),
-            functools.partial(stere_to_lonlat, **kw),
-        )
-    if mp == 3:
-        kw = {"lat_ts": scalar("TRUELAT1"),
-              "lon0d": scalar("STAND_LON"), "R": WRF_SPHERE_R}
-        return (
-            functools.partial(lonlat_to_mercator, **kw),
-            functools.partial(mercator_to_lonlat, **kw),
-        )
+    if mp in (2, 3):
+        params = (_attr_scalar(attrs, "TRUELAT1"),
+                  _attr_scalar(attrs, "STAND_LON"), WRF_SPHERE_R)
+        if mp == 2:
+            return _stere_fwd, _stere_inv, params
+        return _merc_fwd, _merc_inv, params
     if mp == 6:
-
-        def _fwd(df, lon, lat, out_x="x", out_y="y", **_):
-            lon = F.col(lon) if isinstance(lon, str) else lon
-            lat = F.col(lat) if isinstance(lat, str) else lat
-            return df.withColumns({out_x: lon * 1.0, out_y: lat * 1.0})
-
-        def _inv(df, x, y, out_lon="lon", out_lat="lat", **_):
-            x = F.col(x) if isinstance(x, str) else x
-            y = F.col(y) if isinstance(y, str) else y
-            return df.withColumns({out_lon: x * 1.0, out_lat: y * 1.0})
-
-        return _fwd, _inv
+        return _latlon_fwd, _latlon_inv, ()
     raise ValueError(
         f"MAP_PROJ={mp} is not a WRF projection this engine knows "
         "(1 LCC, 2 polar stereographic, 3 Mercator, 6 lat-lon)"
     )
+
+
+def wrf_projection(attrs: dict):
+    """(forward, inverse) column-transform pair for a wrfout file's
+    NATIVE projection, dispatched on ``MAP_PROJ`` (see
+    :func:`_wrf_native`).  Call as ``fwd(df, lon, lat, out_x=...,
+    out_y=...)`` and ``inv(df, x, y, out_lon=..., out_lat=...)``."""
+    fwd, inv, params = _wrf_native(attrs)
+
+    def forward(df, lon, lat, out_x="x", out_y="y"):
+        return _columns(df, fwd, lon, lat, {"x": out_x, "y": out_y}, *params)
+
+    def inverse(df, x, y, out_lon="lon", out_lat="lat"):
+        return _columns(
+            df, inv, x, y, {"lon": out_lon, "lat": out_lat}, *params
+        )
+
+    return forward, inverse
 
 
 def _wrf_grid_geometry(attrs: dict) -> tuple[float, float, float, float, int, int]:
@@ -1215,8 +1243,6 @@ def wrf_ll_to_xy(
     construction.  Callers snap to cells with ``F.round``."""
     fwd, _ = wrf_projection(attrs)
     dx, dy, cen_lon, cen_lat, nx, ny = _wrf_grid_geometry(attrs)
-    lon = F.col(lon) if isinstance(lon, str) else lon
-    lat = F.col(lat) if isinstance(lat, str) else lat
     d = fwd(df, lon, lat, out_x="_px", out_y="_py")
     d = fwd(d, F.lit(cen_lon), F.lit(cen_lat), out_x="_cx", out_y="_cy")
     return d.withColumns({
@@ -1249,51 +1275,6 @@ def wrf_xy_to_ll(
     return d.drop("_gx", "_gy", "_cx", "_cy")
 
 
-def _wrf_fwd_scalar(attrs: dict, lon: float, lat: float) -> tuple[float, float]:
-    """Scalar (plain ``math``) twin of the ``wrf_projection`` FORWARD
-    branches, mirroring each column transform's formula line by line
-    — Snyder 15-1/15-2 (LCC), the polar-stereographic pole-sign form,
-    7-1/7-2 (Mercator), identity (lat-lon)."""
-    mp = int(_attr_scalar(attrs, "MAP_PROJ"))
-    if mp == 1:
-        p = wrf_lcc_params(attrs)
-        n, F_, rho0 = lcc_constants(
-            p["lat1d"], p["lat2d"], p["lat0d"], p["R"]
-        )
-        phi = math.radians(lat)
-        dl = math.fmod(
-            math.radians(lon - p["lon0d"]) + math.pi, 2.0 * math.pi
-        )
-        if dl < 0.0:
-            dl += 2.0 * math.pi
-        dl -= math.pi
-        rho = p["R"] * F_ / math.tan(math.pi / 4 + phi / 2) ** n
-        return rho * math.sin(n * dl), rho0 - rho * math.cos(n * dl)
-    if mp == 2:
-        lat_ts = _attr_scalar(attrs, "TRUELAT1")
-        lon0d = _attr_scalar(attrs, "STAND_LON")
-        sgn = -1.0 if lat_ts < 0 else 1.0
-        k0 = (1.0 + math.sin(math.radians(abs(lat_ts)))) / 2.0
-        phi = math.radians(lat) * sgn
-        dl = math.radians(lon - lon0d) * sgn
-        rho = 2.0 * WRF_SPHERE_R * k0 * math.tan(math.pi / 4 - phi / 2)
-        return rho * math.sin(dl) * sgn, -rho * math.cos(dl) * sgn
-    if mp == 3:
-        lat_ts = _attr_scalar(attrs, "TRUELAT1")
-        lon0d = _attr_scalar(attrs, "STAND_LON")
-        rk = WRF_SPHERE_R * math.cos(math.radians(lat_ts))
-        return (
-            rk * math.radians(lon - lon0d),
-            rk * math.log(math.tan(math.pi / 4 + math.radians(lat) / 2)),
-        )
-    if mp == 6:
-        return float(lon), float(lat)
-    raise ValueError(
-        f"MAP_PROJ={mp} is not a WRF projection this engine knows "
-        "(1 LCC, 2 polar stereographic, 3 Mercator, 6 lat-lon)"
-    )
-
-
 def wrf_ll_to_xy_scalar(
     attrs: dict, lon: float, lat: float
 ) -> tuple[float, float]:
@@ -1302,14 +1283,16 @@ def wrf_ll_to_xy_scalar(
     block — the endpoint-resolution twin the cross-section front
     doors use (wrf-python's ``to_xy_coords`` step for lat/lon
     ``CoordPair`` start/end), so resolving two endpoints never runs a
-    Spark job.  Same MAP_PROJ dispatch and center-normalized index
-    arithmetic as the column transform."""
+    Spark job.  Same MAP_PROJ dispatch, projection formula and
+    center-normalized index arithmetic as the column transform,
+    evaluated with ``math``."""
     dx, dy, cen_lon, cen_lat, nx, ny = _wrf_grid_geometry(attrs)
-    px, py = _wrf_fwd_scalar(attrs, lon, lat)
-    cx, cy = _wrf_fwd_scalar(attrs, cen_lon, cen_lat)
+    fwd, _, params = _wrf_native(attrs)
+    p = fwd(_SCALAR, float(lon), float(lat), *params)
+    c = fwd(_SCALAR, cen_lon, cen_lat, *params)
     return (
-        (px - cx) / dx + (nx - 1) / 2.0,
-        (py - cy) / dy + (ny - 1) / 2.0,
+        (p["x"] - c["x"]) / dx + (nx - 1) / 2.0,
+        (p["y"] - c["y"]) / dy + (ny - 1) / 2.0,
     )
 
 
@@ -1342,7 +1325,7 @@ def to_crs(df, crs: str | int, lon="lon", lat="lat",
     lon = F.col(lon) if isinstance(lon, str) else lon
     lat = F.col(lat) if isinstance(lat, str) else lat
     if code == 4326:
-        return df.withColumns({out_x: lon * 1.0, out_y: lat * 1.0})
+        return _columns(df, _latlon_fwd, lon, lat, {"x": out_x, "y": out_y})
     if code == 3857:
         return df.withColumns({
             out_x: lonlat_to_webmercator_x(lon),
@@ -1392,7 +1375,7 @@ def from_crs(df, crs: str | int, x="x", y="y",
     x = F.col(x) if isinstance(x, str) else x
     y = F.col(y) if isinstance(y, str) else y
     if code == 4326:
-        return df.withColumns({out_lon: x * 1.0, out_lat: y * 1.0})
+        return _columns(df, _latlon_inv, x, y, {"lon": out_lon, "lat": out_lat})
     if code == 3857:
         return df.withColumns({
             out_lon: webmercator_to_lon(x),
@@ -1453,48 +1436,31 @@ GRS80_F = 1.0 / 298.257222101
 GRS80_E2 = GRS80_F * (2.0 - GRS80_F)
 
 
-def _authalic_q_float(sinphi: float, e: float, e2: float) -> float:
-    """Snyder eq. 3-12 as a Python float (constant precomputation):
+def _authalic_q(m, s, e: float, e2: float):
+    """Snyder eq. 3-12 over sin(phi):
     q = (1-e^2)[ s/(1-e^2 s^2) - (1/2e) ln((1-es)/(1+es)) ].
     At e = 0 (spherical earth — the common GRIB2 shape) the limit is
-    q = 2 s, which makes every authalic-based projection reduce
-    EXACTLY to its Snyder spherical form (beta = phi, Rq = R,
-    D = 1)."""
+    q = 2 s, a separate branch (the general form divides by e), which
+    makes every authalic-based projection reduce EXACTLY to its Snyder
+    spherical form (beta = phi, Rq = R, D = 1)."""
     if e == 0.0:
-        return 2.0 * sinphi
-    return (1.0 - e2) * (
-        sinphi / (1.0 - e2 * sinphi * sinphi)
-        - (1.0 / (2.0 * e))
-        * math.log((1.0 - e * sinphi) / (1.0 + e * sinphi))
+        return m.lit(2.0) * s
+    return m.lit(1.0 - e2) * (
+        s / (m.lit(1.0) - m.lit(e2) * s * s)
+        - m.lit(1.0 / (2.0 * e))
+        * m.log((m.lit(1.0) - m.lit(e) * s) / (m.lit(1.0) + m.lit(e) * s))
     )
 
 
-def _authalic_q_col(sinphi: Column, e: float, e2: float) -> Column:
-    """Column twin of :func:`_authalic_q_float` — same literal layout so
-    a DuckDB oracle restating the formula agrees to the last few ulps.
-    The e = 0 spherical limit (q = 2 s) is a separate branch like the
-    float/numpy twins (the general form divides by e)."""
-    if e == 0.0:
-        return F.lit(2.0) * sinphi
-    return F.lit(1.0 - e2) * (
-        sinphi / (F.lit(1.0) - F.lit(e2) * sinphi * sinphi)
-        - F.lit(1.0 / (2.0 * e))
-        * F.log(
-            (F.lit(1.0) - F.lit(e) * sinphi)
-            / (F.lit(1.0) + F.lit(e) * sinphi)
-        )
-    )
+def _authalic_q_float(sinphi: float, e: float, e2: float) -> float:
+    """:func:`_authalic_q` as a Python float (constant precomputation)."""
+    return _authalic_q(_SCALAR, sinphi, e, e2)
 
 
-def _authalic_q_np(s, e: float, e2: float):
-    """Numpy twin of :func:`_authalic_q_float` over a sin(phi) array —
-    the one copy every *_forward_numpy shares."""
-    if e2 == 0.0:
-        return 2.0 * s
-    return (1.0 - e2) * (
-        s / (1.0 - e2 * s * s)
-        - (1.0 / (2.0 * e)) * np.log((1.0 - e * s) / (1.0 + e * s))
-    )
+def _asin_clamped(m, ratio):
+    """asin of an authalic ratio clamped to [-1, 1]: a last-ulp
+    |ratio| > 1 at the pole must not go NaN."""
+    return m.asin(m.greatest(m.lit(-1.0), m.least(m.lit(1.0), ratio)))
 
 
 def authalic_series_coeffs(e2: float) -> tuple[float, float, float]:
@@ -1512,7 +1478,7 @@ def authalic_series_coeffs(e2: float) -> tuple[float, float, float]:
 def laea_constants(lat0d: float, a: float = GRS80_A,
                    e2: float = GRS80_E2) -> dict:
     """Precomputed ellipsoidal-LAEA constants (Snyder 24-20, 3-11..13,
-    14-15) shared by the column transforms, the numpy twins, and the
+    14-15) shared by the column transforms, the numpy kernels, and the
     SQL oracle builders — identical literals everywhere."""
     e = math.sqrt(e2)
     phi1 = math.radians(lat0d)
@@ -1525,6 +1491,70 @@ def laea_constants(lat0d: float, a: float = GRS80_A,
     return {
         "e": e, "e2": e2, "qp": qp, "rq": rq, "d": d,
         "sinb1": math.sin(beta1), "cosb1": math.cos(beta1),
+    }
+
+
+def _geodetic_deg(m, bt, e2: float):
+    """Geodetic latitude (degrees) from the authalic latitude ``bt`` by
+    the closed series 3-18."""
+    c2, c4, c6 = authalic_series_coeffs(e2)
+    return m.degrees(
+        bt
+        + m.lit(c2) * m.sin(m.lit(2.0) * bt)
+        + m.lit(c4) * m.sin(m.lit(4.0) * bt)
+        + m.lit(c6) * m.sin(m.lit(6.0) * bt)
+    )
+
+
+def _laea_fwd(m, lon, lat, lat0d, lon0d, a, e2, fe, fn):
+    k = laea_constants(lat0d, a, e2)
+    s, dl = m.let({
+        "_s": m.sin(m.radians(lat)), "_dl": _dl_wrapped(m, lon, lon0d),
+    })
+    [beta] = m.let({"_beta": _asin_clamped(
+        m, _authalic_q(m, s, k["e"], k["e2"]) / k["qp"]
+    )})
+    sb, cb, cdl = m.let(
+        {"_sb": m.sin(beta), "_cb": m.cos(beta), "_cdl": m.cos(dl)}
+    )
+    [B] = m.let({"_B": m.lit(k["rq"]) * m.sqrt(
+        m.lit(2.0)
+        / (m.lit(1.0) + m.lit(k["sinb1"]) * sb + m.lit(k["cosb1"]) * cb * cdl)
+    )})
+    return {
+        "x": B * k["d"] * cb * m.sin(dl) + fe,
+        "y": (B / k["d"])
+        * (m.lit(k["cosb1"]) * sb - m.lit(k["sinb1"]) * cb * cdl)
+        + fn,
+    }
+
+
+def _laea_inv(m, x, y, lat0d, lon0d, a, e2, fe, fn):
+    k = laea_constants(lat0d, a, e2)
+    d, qp, sinb1, cosb1 = k["d"], k["qp"], k["sinb1"], k["cosb1"]
+    xs, ys = m.let({"_xs": x - fe, "_ys": y - fn})
+    [rho] = m.let(
+        {"_rho": m.sqrt((xs / d) * (xs / d) + (m.lit(d) * ys) * (m.lit(d) * ys))}
+    )
+    [ce] = m.let({"_ce": m.lit(2.0) * m.asin(rho / (2.0 * k["rq"]))})
+    [q] = m.let({"_q": m.where(
+        rho == 0.0,
+        m.lit(qp * sinb1),
+        m.lit(qp)
+        * (m.cos(ce) * sinb1 + m.lit(d) * ys * m.sin(ce) * cosb1 / rho),
+    )})
+    [bt] = m.let({"_bt": _asin_clamped(m, q / qp)})
+    return {
+        "lat": _geodetic_deg(m, bt, e2),
+        "lon": m.lit(lon0d) + m.degrees(m.where(
+            rho == 0.0,
+            m.lit(0.0),
+            m.atan2(
+                xs * m.sin(ce),
+                m.lit(d) * rho * cosb1 * m.cos(ce)
+                - m.lit(d ** 2) * ys * sinb1 * m.sin(ce),
+            ),
+        )),
     }
 
 
@@ -1545,51 +1575,10 @@ def lonlat_to_laea(
     (Snyder eqs. 24-17/24-18): B = Rq sqrt(2/(1 + sin b1 sin b +
     cos b1 cos b cos dl)), x = B D cos b sin dl, y = (B/D)(cos b1 sin b
     - sin b1 cos b cos dl) — with dl wrapped to (-pi, pi]."""
-    lon = F.col(lon) if isinstance(lon, str) else lon
-    lat = F.col(lat) if isinstance(lat, str) else lat
-    k = laea_constants(lat0d, a, e2)
-    d = df.withColumns({
-        "_s": F.sin(F.radians(lat)),
-        "_dl": F.pmod(
-            F.radians(lon - F.lit(lon0d)) + F.lit(math.pi),
-            F.lit(2.0 * math.pi),
-        ) - F.lit(math.pi),
-    })
-    d = d.withColumn(
-        "_beta",
-        F.asin(
-            F.greatest(
-                F.lit(-1.0),
-                F.least(
-                    F.lit(1.0),
-                    _authalic_q_col(F.col("_s"), k["e"], k["e2"])
-                    / F.lit(k["qp"]),
-                ),
-            )
-        ),
+    return _columns(
+        df, _laea_fwd, lon, lat, {"x": out_x, "y": out_y},
+        lat0d, lon0d, a, e2, false_easting, false_northing,
     )
-    d = d.withColumns({
-        "_sb": F.sin(F.col("_beta")),
-        "_cb": F.cos(F.col("_beta")),
-        "_cdl": F.cos(F.col("_dl")),
-    })
-    d = d.withColumn(
-        "_B",
-        F.lit(k["rq"]) * F.sqrt(
-            F.lit(2.0)
-            / (F.lit(1.0) + F.lit(k["sinb1"]) * F.col("_sb")
-               + F.lit(k["cosb1"]) * F.col("_cb") * F.col("_cdl"))
-        ),
-    )
-    d = d.withColumns({
-        out_x: F.col("_B") * F.lit(k["d"]) * F.col("_cb")
-        * F.sin(F.col("_dl")) + F.lit(false_easting),
-        out_y: (F.col("_B") / F.lit(k["d"]))
-        * (F.lit(k["cosb1"]) * F.col("_sb")
-           - F.lit(k["sinb1"]) * F.col("_cb") * F.col("_cdl"))
-        + F.lit(false_northing),
-    })
-    return d.drop("_s", "_dl", "_beta", "_sb", "_cb", "_cdl", "_B")
 
 
 def laea_to_lonlat(
@@ -1610,114 +1599,25 @@ def laea_to_lonlat(
     authalic via the closed series 3-18 (error O(e^8), micrometres —
     no iteration in the plan).  The projection-origin point (rho = 0)
     is handled explicitly."""
-    x = F.col(x) if isinstance(x, str) else x
-    y = F.col(y) if isinstance(y, str) else y
-    k = laea_constants(lat0d, a, e2)
-    c2, c4, c6 = authalic_series_coeffs(e2)
-    d = df.withColumns({
-        "_xs": x - F.lit(false_easting),
-        "_ys": y - F.lit(false_northing),
-    })
-    d = d.withColumn(
-        "_rho",
-        F.sqrt(
-            (F.col("_xs") / F.lit(k["d"])) * (F.col("_xs") / F.lit(k["d"]))
-            + (F.lit(k["d"]) * F.col("_ys"))
-            * (F.lit(k["d"]) * F.col("_ys"))
-        ),
+    return _columns(
+        df, _laea_inv, x, y, {"lon": out_lon, "lat": out_lat},
+        lat0d, lon0d, a, e2, false_easting, false_northing,
     )
-    d = d.withColumn(
-        "_ce", F.lit(2.0) * F.asin(F.col("_rho") / F.lit(2.0 * k["rq"]))
-    )
-    d = d.withColumn(
-        "_q",
-        F.when(F.col("_rho") == 0.0, F.lit(k["qp"] * k["sinb1"])).otherwise(
-            F.lit(k["qp"])
-            * (F.cos(F.col("_ce")) * F.lit(k["sinb1"])
-               + F.lit(k["d"]) * F.col("_ys") * F.sin(F.col("_ce"))
-               * F.lit(k["cosb1"]) / F.col("_rho"))
-        ),
-    )
-    d = d.withColumn(
-        "_bt",
-        F.asin(F.greatest(F.lit(-1.0),
-                          F.least(F.lit(1.0), F.col("_q") / F.lit(k["qp"])))),
-    )
-    d = d.withColumns({
-        out_lat: F.degrees(
-            F.col("_bt")
-            + F.lit(c2) * F.sin(F.lit(2.0) * F.col("_bt"))
-            + F.lit(c4) * F.sin(F.lit(4.0) * F.col("_bt"))
-            + F.lit(c6) * F.sin(F.lit(6.0) * F.col("_bt"))
-        ),
-        out_lon: F.lit(lon0d) + F.degrees(
-            F.when(F.col("_rho") == 0.0, F.lit(0.0)).otherwise(
-                F.atan2(
-                    F.col("_xs") * F.sin(F.col("_ce")),
-                    F.lit(k["d"]) * F.col("_rho") * F.lit(k["cosb1"])
-                    * F.cos(F.col("_ce"))
-                    - F.lit(k["d"] ** 2) * F.col("_ys")
-                    * F.lit(k["sinb1"]) * F.sin(F.col("_ce")),
-                )
-            )
-        ),
-    })
-    return d.drop("_xs", "_ys", "_rho", "_ce", "_q", "_bt")
 
 
 def laea_forward_numpy(lon, lat, lat0d, lon0d, a=GRS80_A, e2=GRS80_E2,
                        fe=0.0, fn=0.0):
-    """Numpy twin of :func:`lonlat_to_laea` (same constants kernel)."""
-    k = laea_constants(lat0d, a, e2)
-    phi = np.radians(np.asarray(lat, "float64"))
-    dl = np.radians(np.asarray(lon, "float64") - lon0d)
-    dl = np.mod(dl + np.pi, 2.0 * np.pi) - np.pi
-    s = np.sin(phi)
-    q = _authalic_q_np(s, k["e"], e2)
-    # clamp: a last-ulp q/qp > 1 at the pole must not go NaN (the
-    # inverses clamp the same ratio)
-    beta = np.arcsin(np.clip(q / k["qp"], -1.0, 1.0))
-    B = k["rq"] * np.sqrt(
-        2.0 / (1.0 + k["sinb1"] * np.sin(beta)
-               + k["cosb1"] * np.cos(beta) * np.cos(dl))
-    )
-    x = B * k["d"] * np.cos(beta) * np.sin(dl) + fe
-    y = (B / k["d"]) * (k["cosb1"] * np.sin(beta)
-                        - k["sinb1"] * np.cos(beta) * np.cos(dl)) + fn
-    return x, y
+    """Numpy evaluation of :func:`lonlat_to_laea`."""
+    r = _arrays(_laea_fwd, lon, lat, lat0d, lon0d, a, e2, fe, fn)
+    return r["x"], r["y"]
 
 
 def laea_inverse_numpy(x, y, lat0d, lon0d, a=GRS80_A, e2=GRS80_E2,
                        fe=0.0, fn=0.0):
-    """Numpy twin of :func:`laea_to_lonlat`."""
-    k = laea_constants(lat0d, a, e2)
-    c2, c4, c6 = authalic_series_coeffs(e2)
-    xs = np.asarray(x, "float64") - fe
-    ys = np.asarray(y, "float64") - fn
-    rho = np.sqrt((xs / k["d"]) ** 2 + (k["d"] * ys) ** 2)
-    ce = 2.0 * np.arcsin(rho / (2.0 * k["rq"]))
+    """Numpy evaluation of :func:`laea_to_lonlat`."""
     with np.errstate(invalid="ignore", divide="ignore"):
-        q = np.where(
-            rho == 0.0,
-            k["qp"] * k["sinb1"],
-            k["qp"] * (np.cos(ce) * k["sinb1"]
-                       + k["d"] * ys * np.sin(ce) * k["cosb1"] / rho),
-        )
-    beta = np.arcsin(np.clip(q / k["qp"], -1.0, 1.0))
-    lat_out = np.degrees(
-        beta + c2 * np.sin(2 * beta) + c4 * np.sin(4 * beta)
-        + c6 * np.sin(6 * beta)
-    )
-    lam = np.where(
-        rho == 0.0,
-        0.0,
-        np.arctan2(
-            xs * np.sin(ce),
-            k["d"] * rho * k["cosb1"] * np.cos(ce)
-            - k["d"] ** 2 * ys * k["sinb1"] * np.sin(ce),
-        ),
-    )
-    return lon0d + np.degrees(lam), lat_out
+        r = _arrays(_laea_inv, x, y, lat0d, lon0d, a, e2, fe, fn)
+    return r["lon"], r["lat"]
 
 
 def albers_constants(lat1d: float, lat2d: float, lat0d: float,
@@ -1739,6 +1639,38 @@ def albers_constants(lat1d: float, lat2d: float, lat0d: float,
     return {"e": e, "e2": e2, "n": n, "c": c, "rho0": rho0, "qp": qp}
 
 
+def _albers_fwd(m, lon, lat, lat1d, lat2d, lat0d, lon0d, a, e2, fe, fn):
+    k = albers_constants(lat1d, lat2d, lat0d, a, e2)
+    s, th = m.let({
+        "_s": m.sin(m.radians(lat)),
+        "_th": m.lit(k["n"]) * _dl_wrapped(m, lon, lon0d),
+    })
+    [rho] = m.let({"_rho": m.lit(a) * m.sqrt(
+        m.lit(k["c"]) - m.lit(k["n"]) * _authalic_q(m, s, k["e"], k["e2"])
+    ) / k["n"]})
+    return {
+        "x": rho * m.sin(th) + fe,
+        "y": m.lit(k["rho0"] + fn) - rho * m.cos(th),
+    }
+
+
+def _albers_inv(m, x, y, lat1d, lat2d, lat0d, lon0d, a, e2, fe, fn):
+    k = albers_constants(lat1d, lat2d, lat0d, a, e2)
+    sgn = 1.0 if k["n"] >= 0 else -1.0
+    xs, ys = _cone_shift(m, x, y, sgn, k["rho0"], fe, fn)
+    rho, th = m.let(
+        {"_rho": m.sqrt(xs * xs + ys * ys), "_th": m.atan2(xs, ys)}
+    )
+    [q] = m.let({"_q": (
+        m.lit(k["c"]) - rho * rho * (k["n"] ** 2 / (a * a))
+    ) / k["n"]})
+    [bt] = m.let({"_bt": _asin_clamped(m, q / k["qp"])})
+    return {
+        "lat": _geodetic_deg(m, bt, e2),
+        "lon": m.lit(lon0d) + m.degrees(th / k["n"]),
+    }
+
+
 def lonlat_to_albers(
     df,
     lon,
@@ -1757,31 +1689,10 @@ def lonlat_to_albers(
     """Append ellipsoidal Albers-equal-area-conic metre columns (Snyder
     eqs. 14-1..14-4): rho = a sqrt(C - n q)/n, theta = n dl,
     x = rho sin theta, y = rho0 - rho cos theta."""
-    lon = F.col(lon) if isinstance(lon, str) else lon
-    lat = F.col(lat) if isinstance(lat, str) else lat
-    k = albers_constants(lat1d, lat2d, lat0d, a, e2)
-    d = df.withColumns({
-        "_s": F.sin(F.radians(lat)),
-        "_th": F.lit(k["n"]) * (
-            F.pmod(
-                F.radians(lon - F.lit(lon0d)) + F.lit(math.pi),
-                F.lit(2.0 * math.pi),
-            ) - F.lit(math.pi)
-        ),
-    })
-    d = d.withColumn(
-        "_rho",
-        F.lit(a) * F.sqrt(
-            F.lit(k["c"]) - F.lit(k["n"])
-            * _authalic_q_col(F.col("_s"), k["e"], k["e2"])
-        ) / F.lit(k["n"]),
+    return _columns(
+        df, _albers_fwd, lon, lat, {"x": out_x, "y": out_y},
+        lat1d, lat2d, lat0d, lon0d, a, e2, false_easting, false_northing,
     )
-    d = d.withColumns({
-        out_x: F.col("_rho") * F.sin(F.col("_th")) + F.lit(false_easting),
-        out_y: F.lit(k["rho0"] + false_northing)
-        - F.col("_rho") * F.cos(F.col("_th")),
-    })
-    return d.drop("_s", "_th", "_rho")
 
 
 def albers_to_lonlat(
@@ -1802,74 +1713,34 @@ def albers_to_lonlat(
     """Inverse ellipsoidal Albers (Snyder eqs. 14-19..14-21 + series
     3-18): q = (C - rho^2 n^2 / a^2)/n, theta = atan2(x, rho0 - y)
     (axes sign-flipped for a south-viewing cone, n < 0)."""
-    x = F.col(x) if isinstance(x, str) else x
-    y = F.col(y) if isinstance(y, str) else y
-    k = albers_constants(lat1d, lat2d, lat0d, a, e2)
-    c2, c4, c6 = authalic_series_coeffs(e2)
-    sgn = 1.0 if k["n"] >= 0 else -1.0
-    d = df.withColumns({
-        "_xs": (x - F.lit(false_easting)) * F.lit(sgn),
-        "_ys": (F.lit(k["rho0"] + false_northing) - y) * F.lit(sgn),
-    })
-    d = d.withColumns({
-        "_rho": F.sqrt(F.col("_xs") * F.col("_xs")
-                       + F.col("_ys") * F.col("_ys")),
-        "_th": F.atan2(F.col("_xs"), F.col("_ys")),
-    })
-    d = d.withColumn(
-        "_q",
-        (F.lit(k["c"])
-         - F.col("_rho") * F.col("_rho") * F.lit(k["n"] ** 2 / (a * a)))
-        / F.lit(k["n"]),
+    return _columns(
+        df, _albers_inv, x, y, {"lon": out_lon, "lat": out_lat},
+        lat1d, lat2d, lat0d, lon0d, a, e2, false_easting, false_northing,
     )
-    d = d.withColumn(
-        "_bt",
-        F.asin(F.greatest(F.lit(-1.0),
-                          F.least(F.lit(1.0), F.col("_q") / F.lit(k["qp"])))),
-    )
-    d = d.withColumns({
-        out_lat: F.degrees(
-            F.col("_bt")
-            + F.lit(c2) * F.sin(F.lit(2.0) * F.col("_bt"))
-            + F.lit(c4) * F.sin(F.lit(4.0) * F.col("_bt"))
-            + F.lit(c6) * F.sin(F.lit(6.0) * F.col("_bt"))
-        ),
-        out_lon: F.lit(lon0d) + F.degrees(F.col("_th") / F.lit(k["n"])),
-    })
-    return d.drop("_xs", "_ys", "_rho", "_th", "_q", "_bt")
 
 
 def albers_forward_numpy(lon, lat, lat1d, lat2d, lat0d, lon0d,
                          a=GRS80_A, e2=GRS80_E2, fe=0.0, fn=0.0):
-    """Numpy twin of :func:`lonlat_to_albers`."""
-    k = albers_constants(lat1d, lat2d, lat0d, a, e2)
-    phi = np.radians(np.asarray(lat, "float64"))
-    dl = np.radians(np.asarray(lon, "float64") - lon0d)
-    dl = np.mod(dl + np.pi, 2.0 * np.pi) - np.pi
-    s = np.sin(phi)
-    q = _authalic_q_np(s, k["e"], e2)
-    rho = a * np.sqrt(k["c"] - k["n"] * q) / k["n"]
-    th = k["n"] * dl
-    return rho * np.sin(th) + fe, k["rho0"] - rho * np.cos(th) + fn
+    """Numpy evaluation of :func:`lonlat_to_albers`."""
+    r = _arrays(_albers_fwd, lon, lat, lat1d, lat2d, lat0d, lon0d,
+                a, e2, fe, fn)
+    return r["x"], r["y"]
 
 
 def albers_inverse_numpy(x, y, lat1d, lat2d, lat0d, lon0d,
                          a=GRS80_A, e2=GRS80_E2, fe=0.0, fn=0.0):
-    """Numpy twin of :func:`albers_to_lonlat`."""
-    k = albers_constants(lat1d, lat2d, lat0d, a, e2)
-    c2, c4, c6 = authalic_series_coeffs(e2)
-    sgn = 1.0 if k["n"] >= 0 else -1.0
-    xs = (np.asarray(x, "float64") - fe) * sgn
-    ys = (k["rho0"] + fn - np.asarray(y, "float64")) * sgn
-    rho = np.sqrt(xs * xs + ys * ys)
-    th = np.arctan2(xs, ys)
-    q = (k["c"] - (rho * k["n"] / a) ** 2) / k["n"]
-    beta = np.arcsin(np.clip(q / k["qp"], -1.0, 1.0))
-    lat_out = np.degrees(
-        beta + c2 * np.sin(2 * beta) + c4 * np.sin(4 * beta)
-        + c6 * np.sin(6 * beta)
+    """Numpy evaluation of :func:`albers_to_lonlat`."""
+    r = _arrays(_albers_inv, x, y, lat1d, lat2d, lat0d, lon0d,
+                a, e2, fe, fn)
+    return r["lon"], r["lat"]
+
+
+def _box_area(m, lon1, lat1, lon2, lat2, a, e2):
+    e = math.sqrt(e2)
+    dq = _authalic_q(m, m.sin(m.radians(lat2)), e, e2) - _authalic_q(
+        m, m.sin(m.radians(lat1)), e, e2
     )
-    return lon0d + np.degrees(th / k["n"]), lat_out
+    return m.lit(a * a / 2.0) * m.radians(lon2 - lon1) * dq
 
 
 def ellipsoid_box_area_m2(
@@ -1886,27 +1757,16 @@ def ellipsoid_box_area_m2(
     additivity, and unlike the reference's degrees^2 planar areas
     (delphine/regrid.py:261-262), which overweight high latitudes by
     1/cos(lat)."""
-    e = math.sqrt(e2)
-    lon1 = F.col(lon1) if isinstance(lon1, str) else lon1
-    lat1 = F.col(lat1) if isinstance(lat1, str) else lat1
-    lon2 = F.col(lon2) if isinstance(lon2, str) else lon2
-    lat2 = F.col(lat2) if isinstance(lat2, str) else lat2
-    dq = _authalic_q_col(F.sin(F.radians(lat2)), e, e2) - _authalic_q_col(
-        F.sin(F.radians(lat1)), e, e2
-    )
-    return F.lit(a * a / 2.0) * F.radians(lon2 - lon1) * dq
+    m = _COLUMNS
+    return _box_area(m, *map(m.arg, (lon1, lat1, lon2, lat2)), a, e2)
 
 
 def ellipsoid_box_area_m2_float(
     lon1: float, lat1: float, lon2: float, lat2: float,
     a: float = GRS80_A, e2: float = GRS80_E2,
 ) -> float:
-    """Python-float twin of :func:`ellipsoid_box_area_m2`."""
-    e = math.sqrt(e2)
-    dq = _authalic_q_float(
-        math.sin(math.radians(lat2)), e, e2
-    ) - _authalic_q_float(math.sin(math.radians(lat1)), e, e2)
-    return a * a / 2.0 * math.radians(lon2 - lon1) * dq
+    """:func:`ellipsoid_box_area_m2` as a Python float."""
+    return _box_area(_SCALAR, lon1, lat1, lon2, lat2, a, e2)
 
 
 def ellipsoid_polygon_area_m2(
@@ -1936,8 +1796,8 @@ def ellipsoid_polygon_area_m2(
     e = math.sqrt(e2)
     n = F.size(xs)
     idx = F.sequence(F.lit(0), n - 1)
-    q_of = lambda i: _authalic_q_col(  # noqa: E731 — local closure
-        F.sin(F.radians(F.element_at(ys, i + 1))), e, e2
+    q_of = lambda i: _authalic_q(  # noqa: E731 — local closure
+        _COLUMNS, F.sin(F.radians(F.element_at(ys, i + 1))), e, e2
     )
     lam_of = lambda i: F.radians(F.element_at(xs, i + 1))  # noqa: E731
     nxt = lambda i: (i + 1) % n  # noqa: E731
@@ -2047,6 +1907,26 @@ def cea_constants(lat_ts: float, a: float = GRS80_A,
             "qp": _authalic_q_float(1.0, e, e2)}
 
 
+def _cea_fwd(m, lon, lat, lat_ts, lon0d, a, e2):
+    k = cea_constants(lat_ts, a, e2)
+    q = _authalic_q(m, m.sin(m.radians(lat)), k["e"], k["e2"])
+    return {
+        "x": m.lit(a * k["k0"]) * _dl_wrapped(m, lon, lon0d),
+        "y": m.lit(a) * q / (2.0 * k["k0"]),
+    }
+
+
+def _cea_inv(m, x, y, lat_ts, lon0d, a, e2):
+    k = cea_constants(lat_ts, a, e2)
+    [bt] = m.let({"_bt": _asin_clamped(
+        m, m.lit(2.0 * k["k0"]) * y / a / k["qp"]
+    )})
+    return {
+        "lat": _geodetic_deg(m, bt, e2),
+        "lon": m.lit(lon0d) + m.degrees(x / (a * k["k0"])),
+    }
+
+
 def lonlat_to_cea(
     df,
     lon,
@@ -2063,18 +1943,8 @@ def lonlat_to_cea(
     projection family of NSIDC's EASE-Grid 2.0 (EPSG:6933,
     lat_ts = 30 on WGS84; the engine's k0 reproduces the published
     half-width 17,367,530.45 m at lon = 180, tests/test_crs.py)."""
-    lon = F.col(lon) if isinstance(lon, str) else lon
-    lat = F.col(lat) if isinstance(lat, str) else lat
-    k = cea_constants(lat_ts, a, e2)
-    dl = F.pmod(
-        F.radians(lon - F.lit(lon0d)) + F.lit(math.pi),
-        F.lit(2.0 * math.pi),
-    ) - F.lit(math.pi)
-    q = _authalic_q_col(F.sin(F.radians(lat)), k["e"], k["e2"])
-    return df.withColumns({
-        out_x: F.lit(a * k["k0"]) * dl,
-        out_y: F.lit(a) * q / F.lit(2.0 * k["k0"]),
-    })
+    return _columns(df, _cea_fwd, lon, lat, {"x": out_x, "y": out_y},
+                    lat_ts, lon0d, a, e2)
 
 
 def cea_to_lonlat(
@@ -2090,61 +1960,22 @@ def cea_to_lonlat(
 ):
     """Inverse ellipsoidal CEA: q = 2 y k0 / a, geodetic latitude via
     the authalic series 3-18, lon = lon0 + x/(a k0)."""
-    x = F.col(x) if isinstance(x, str) else x
-    y = F.col(y) if isinstance(y, str) else y
-    k = cea_constants(lat_ts, a, e2)
-    c2, c4, c6 = authalic_series_coeffs(e2)
-    d = df.withColumn(
-        "_bt",
-        F.asin(
-            F.greatest(
-                F.lit(-1.0),
-                F.least(
-                    F.lit(1.0),
-                    F.lit(2.0 * k["k0"]) * y / F.lit(a) / F.lit(k["qp"]),
-                ),
-            )
-        ),
-    )
-    d = d.withColumns({
-        out_lat: F.degrees(
-            F.col("_bt")
-            + F.lit(c2) * F.sin(F.lit(2.0) * F.col("_bt"))
-            + F.lit(c4) * F.sin(F.lit(4.0) * F.col("_bt"))
-            + F.lit(c6) * F.sin(F.lit(6.0) * F.col("_bt"))
-        ),
-        out_lon: F.lit(lon0d) + F.degrees(x / F.lit(a * k["k0"])),
-    })
-    return d.drop("_bt")
+    return _columns(df, _cea_inv, x, y, {"lon": out_lon, "lat": out_lat},
+                    lat_ts, lon0d, a, e2)
 
 
 def cea_forward_numpy(lon, lat, lat_ts, lon0d=0.0, a=GRS80_A,
                       e2=GRS80_E2):
-    """Numpy twin of :func:`lonlat_to_cea`."""
-    k = cea_constants(lat_ts, a, e2)
-    dl = np.radians(np.asarray(lon, "float64") - lon0d)
-    dl = np.mod(dl + np.pi, 2.0 * np.pi) - np.pi
-    s = np.sin(np.radians(np.asarray(lat, "float64")))
-    q = _authalic_q_np(s, k["e"], e2)
-    return a * k["k0"] * dl, a * q / (2.0 * k["k0"])
+    """Numpy evaluation of :func:`lonlat_to_cea`."""
+    r = _arrays(_cea_fwd, lon, lat, lat_ts, lon0d, a, e2)
+    return r["x"], r["y"]
 
 
 def cea_inverse_numpy(x, y, lat_ts, lon0d=0.0, a=GRS80_A,
                       e2=GRS80_E2):
-    """Numpy twin of :func:`cea_to_lonlat`."""
-    k = cea_constants(lat_ts, a, e2)
-    c2, c4, c6 = authalic_series_coeffs(e2)
-    beta = np.arcsin(np.clip(
-        2.0 * k["k0"] * np.asarray(y, "float64") / a / k["qp"],
-        -1.0, 1.0,
-    ))
-    lat_out = np.degrees(
-        beta + c2 * np.sin(2 * beta) + c4 * np.sin(4 * beta)
-        + c6 * np.sin(6 * beta)
-    )
-    return (lon0d
-            + np.degrees(np.asarray(x, "float64") / (a * k["k0"])),
-            lat_out)
+    """Numpy evaluation of :func:`cea_to_lonlat`."""
+    r = _arrays(_cea_inv, x, y, lat_ts, lon0d, a, e2)
+    return r["lon"], r["lat"]
 
 
 def _vincenty_lambda_state(lat1, lon1, lat2, lon2, f: float,

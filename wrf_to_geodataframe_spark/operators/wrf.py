@@ -525,8 +525,8 @@ def wrf_times(
     """(file, lt, time): each shard's decoded time axis — the wrfout
     ``Times`` (Time, DateStrLen) char array ('YYYY-MM-DD_HH:MM:SS',
     no CF units attribute) or any CF ``units``-attributed numeric
-    coordinate, decoded EXECUTOR-SIDE with the same
-    ``decode_cf_time_values`` the virtual layer's time axis uses.
+    coordinate, decoded EXECUTOR-SIDE by ``netcdf.decode_time_axis``,
+    the decode the NetCDF stream mirror stamps its rows with.
     One binaryFile task per shard; the output is #timesteps rows —
     metadata-sized, so downstream joins broadcast it.
 
@@ -552,27 +552,16 @@ def wrf_times(
     files = spark.read.format("binaryFile").load(path)
 
     def _batches(it):
-        import numpy as np
-
         from wrf_to_geodataframe_spark.sources.hdf5 import (
             read_netcdf_any_bytes,
         )
-        from wrf_to_geodataframe_spark.sources.netcdf import (
-            decode_cf_time_values,
-        )
+        from wrf_to_geodataframe_spark.sources.netcdf import decode_time_axis
 
         for pdf in it:
             rows = []
             for fname, buf in zip(pdf["path"], pdf["content"]):
                 ds = read_netcdf_any_bytes(bytes(buf), name=fname)
-                if time_var not in ds["variables"]:
-                    raise ValueError(
-                        f"{fname}: no time variable {time_var!r}"
-                    )
-                tv = ds["variables"][time_var]
-                tns = decode_cf_time_values(
-                    np.asarray(tv["data"]), tv.get("attrs", {})
-                )
+                tns = decode_time_axis(ds, fname, time_var)
                 if single_step and tns.shape[0] != 1:
                     raise ValueError(
                         f"{fname}: {tns.shape[0]} timesteps in "

@@ -17,8 +17,9 @@ numpy implementation of the public spec:
   family): rotation-matrix construction with the rotated origin on
   the south pole's meridian, invariants pinned in tests; 3.30,
   Lambert conformal conic (WRF's native projection; NAM/HRRR):
-  from-scratch spherical LCC forward/inverse (Snyder eqs. 15-1..15-5,
-  pinned to his published worked example); and 3.40, GAUSSIAN grids
+  spherical LCC forward/inverse (Snyder eqs. 15-1..15-5, pinned to
+  his published worked example; the same formulas as the column
+  transforms in functions/crs.py); and 3.40, GAUSSIAN grids
   (ERA5's native rows): latitudes = arcsin of the Legendre P_2N
   roots, re-verified against the polynomial.  Curvilinear grids come
   out as 2-D lat/lon — the engine's explicit-key model carries them
@@ -58,6 +59,15 @@ from __future__ import annotations
 import struct
 
 import numpy as np
+
+from wrf_to_geodataframe_spark.functions.crs import (  # noqa: F401
+    laea_forward_numpy,
+    laea_inverse_numpy,
+    lcc_forward,
+    lcc_inverse,
+    rotated_to_true,
+    true_to_rotated,
+)
 
 __all__ = [
     "Grib2Error",
@@ -227,48 +237,6 @@ def _unpack_complex(s5: bytes, payload: bytes, ndata: int,
     return (float(ref) + x.astype("float64") * (2.0 ** e)) / (10.0 ** d)
 
 
-def _lcc_constants(lat1d: float, lat2d: float, lat0d: float, R: float):
-    """Spherical Lambert conformal conic constants (Snyder, Map
-    Projections — A Working Manual, eqs. 15-1..15-3): cone constant
-    n, F, and rho0 at the reference latitude."""
-    p1, p2, p0 = map(np.radians, (lat1d, lat2d, lat0d))
-    if abs(lat1d - lat2d) < 1e-12:
-        n = np.sin(p1)
-    else:
-        n = (
-            np.log(np.cos(p1) / np.cos(p2))
-            / np.log(np.tan(np.pi / 4 + p2 / 2)
-                     / np.tan(np.pi / 4 + p1 / 2))
-        )
-    F = np.cos(p1) * np.tan(np.pi / 4 + p1 / 2) ** n / n
-    rho0 = R * F / np.tan(np.pi / 4 + p0 / 2) ** n
-    return n, F, rho0
-
-
-def lcc_forward(lat, lon, lat1d, lat2d, lat0d, lon0d, R):
-    """(lat, lon) degrees -> (x, y) metres on the spherical LCC."""
-    n, F, rho0 = _lcc_constants(lat1d, lat2d, lat0d, R)
-    p = np.radians(np.asarray(lat, dtype="float64"))
-    dl = np.radians(np.asarray(lon, dtype="float64") - lon0d)
-    # wrap to (-pi, pi] so grids straddling lon0 +- 180 stay sane
-    dl = (dl + np.pi) % (2 * np.pi) - np.pi
-    rho = R * F / np.tan(np.pi / 4 + p / 2) ** n
-    return rho * np.sin(n * dl), rho0 - rho * np.cos(n * dl)
-
-
-def lcc_inverse(x, y, lat1d, lat2d, lat0d, lon0d, R):
-    """(x, y) metres -> (lat, lon) degrees on the spherical LCC."""
-    n, F, rho0 = _lcc_constants(lat1d, lat2d, lat0d, R)
-    x = np.asarray(x, dtype="float64")
-    y = np.asarray(y, dtype="float64")
-    rho = np.sign(n) * np.sqrt(x * x + (rho0 - y) ** 2)
-    theta = np.arctan2(
-        np.sign(n) * x, np.sign(n) * (rho0 - y)
-    )
-    lat = 2 * np.arctan((R * F / rho) ** (1.0 / n)) - np.pi / 2
-    return np.degrees(lat), lon0d + np.degrees(theta / n)
-
-
 def _earth_radius(body: bytes) -> float:
     """Shape-of-earth octets (template offset 0..15): spherical radii
     only (projected grids on a spheroid are out of scope; NCEP LCC and
@@ -283,59 +251,6 @@ def _earth_radius(body: bytes) -> float:
         val = struct.unpack_from(">I", body, 2)[0]
         return val / (10.0 ** sf)
     raise Grib2Error(f"shape of earth {shape} not supported for projected grids")
-
-
-def rotated_to_true(lat_r, lon_r, sp_lat: float, sp_lon: float):
-    """Rotated-pole coordinates -> true (lat, lon) degrees.  The
-    rotated system's north pole sits at true (-sp_lat, sp_lon - 180);
-    implemented as an explicit rotation-matrix product (Ry then Rz),
-    which pins the sign conventions by construction instead of by a
-    memorized formula — the invariants (pole image, origin image,
-    angular-distance preservation, involution with the inverse) are
-    asserted in tests/test_grib2.py."""
-    np_lat = -sp_lat
-    np_lon = sp_lon - 180.0
-    phi = np.radians(np.asarray(lat_r, dtype="float64"))
-    lam = np.radians(np.asarray(lon_r, dtype="float64"))
-    # the rotated lambda_r = 0 meridian faces AWAY from the pole's
-    # true meridian (rotated origin lands at (90 - np_lat, sp_lon) —
-    # the UKCP18 rotation puts rotated (0,0) on the UK, not its
-    # antipode): pre-rotate 180 degrees about z
-    x = -np.cos(phi) * np.cos(lam)
-    y = -np.cos(phi) * np.sin(lam)
-    z = np.sin(phi)
-    theta = np.radians(90.0 - np_lat)
-    # Ry(theta): tilt the pole toward +x, then Rz(np_lon)
-    x1 = x * np.cos(theta) + z * np.sin(theta)
-    z1 = -x * np.sin(theta) + z * np.cos(theta)
-    lam_p = np.radians(np_lon)
-    x2 = x1 * np.cos(lam_p) - y * np.sin(lam_p)
-    y2 = x1 * np.sin(lam_p) + y * np.cos(lam_p)
-    lat = np.degrees(np.arcsin(np.clip(z1, -1.0, 1.0)))
-    lon = np.degrees(np.arctan2(y2, x2))
-    return lat, lon
-
-
-def true_to_rotated(lat, lon, sp_lat: float, sp_lon: float):
-    """Inverse of ``rotated_to_true`` (transpose rotations, reverse
-    order)."""
-    np_lat = -sp_lat
-    np_lon = sp_lon - 180.0
-    phi = np.radians(np.asarray(lat, dtype="float64"))
-    lam = np.radians(np.asarray(lon, dtype="float64"))
-    x = np.cos(phi) * np.cos(lam)
-    y = np.cos(phi) * np.sin(lam)
-    z = np.sin(phi)
-    lam_p = np.radians(np_lon)
-    x1 = x * np.cos(lam_p) + y * np.sin(lam_p)
-    y1 = -x * np.sin(lam_p) + y * np.cos(lam_p)
-    theta = np.radians(90.0 - np_lat)
-    x2 = x1 * np.cos(theta) - z * np.sin(theta)
-    z2 = x1 * np.sin(theta) + z * np.cos(theta)
-    lat_r = np.degrees(np.arcsin(np.clip(z2, -1.0, 1.0)))
-    # undo the 180-degree pre-rotation (see rotated_to_true)
-    lon_r = np.degrees(np.arctan2(-y1, -x2))
-    return lat_r, lon_r
 
 
 def _parse_grid_template_3_1(body: bytes) -> dict:
@@ -478,11 +393,6 @@ def _parse_grid_template_3_140(body: bytes) -> dict:
     plane; lat/lon come from the inverse transform
     (functions/crs.laea_inverse_numpy — Snyder ch. 24; the e = 0
     authalic limit makes the spherical GRIB2 earths exact)."""
-    from wrf_to_geodataframe_spark.functions.crs import (
-        laea_forward_numpy,
-        laea_inverse_numpy,
-    )
-
     def u4(o):
         return struct.unpack_from(">I", body, o)[0]
 

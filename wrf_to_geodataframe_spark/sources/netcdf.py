@@ -602,16 +602,23 @@ def read_netcdf_dir(
     )
 
 
-def _shard_time(ds: dict, fname: str, time_var: str):
-    """The ONE decoded timestamp of a one-timestep shard's
-    ``time_var`` (WRF ``Times`` chars or a CF numeric coordinate);
-    a named error on any other step count."""
-    import pandas as pd
-
+def decode_time_axis(ds: dict, fname: str, time_var: str) -> np.ndarray:
+    """A parsed shard's ``time_var`` (WRF ``Times`` chars or a CF
+    numeric coordinate) decoded to int64 ns; a named error when the
+    shard has no such variable.  Callers apply their own step-count
+    rule."""
     if time_var not in ds["variables"]:
         raise ValueError(f"{fname}: no time variable {time_var!r}")
     tv = ds["variables"][time_var]
-    tns = decode_cf_time_values(np.asarray(tv["data"]), tv.get("attrs", {}))
+    return decode_cf_time_values(np.asarray(tv["data"]), tv.get("attrs", {}))
+
+
+def _shard_time(ds: dict, fname: str, time_var: str):
+    """The ONE decoded timestamp of a one-timestep shard's
+    ``time_var``; a named error on any other step count."""
+    import pandas as pd
+
+    tns = decode_time_axis(ds, fname, time_var)
     if tns.shape[0] != 1:
         raise ValueError(
             f"{fname}: {tns.shape[0]} timesteps in {time_var!r}; "
