@@ -475,124 +475,6 @@ def test_df_cap_bounds_hot_shingle_candidates(spark):
     assert n_uncapped == n_docs * (n_docs - 1) // 2
 
 
-def test_ivf_trained_kmeans_recall(spark):
-    """VERDICT r3 #9: trained (fixed-iteration, deterministic) k-means
-    coarse quantizer vs the stride-sampled one, recall measured against
-    brute force.  Training is Spark-side (broadcast assign + posexplode
-    partial-agg update); only the k x d codebook returns to the driver
-    between iterations."""
-    from wrf_to_geodataframe_spark.functions.vectors import as_double_vec, norm_q
-    from wrf_to_geodataframe_spark.operators.kmeans import (
-        ivf_topk_trained,
-        kmeans_fit,
-    )
-    from wrf_to_geodataframe_spark.suite.pipeline import (
-        _N_QUERIES,
-        sim_bruteforce_topk,
-        sim_ivf_topk,
-    )
-
-    emb = (
-        spark.read.parquet(f"{SF01}/embeddings.parquet")
-        .select("vec_id", as_double_vec(F.col("embedding")).alias("e"))
-        .withColumn("nq", norm_q(F.col("e")))
-    )
-    k = 22  # ~sqrt(500)
-    codebook = kmeans_fit(emb, "vec_id", "e", k=k, iters=3)
-    assert len(codebook) == k and len(codebook[0]) == 64
-    # determinism: same data, same codebook
-    codebook2 = kmeans_fit(emb, "vec_id", "e", k=k, iters=3)
-    assert codebook == codebook2
-
-    truth = {
-        (r.query_id, r.neighbor_id)
-        for r in sim_bruteforce_topk(spark, SF01).filter("rank = 1").collect()
-    }
-    trained = {
-        (r.query_id, r.neighbor_id)
-        for r in ivf_topk_trained(
-            spark, emb, codebook, n_queries=_N_QUERIES
-        ).collect()
-    }
-    stride = {
-        (r.query_id, r.neighbor_id) for r in sim_ivf_topk(spark, SF01).collect()
-    }
-    r_trained = len(truth & trained) / len(truth)
-    r_stride = len(truth & stride) / len(truth)
-    print(f"recall@1: trained={r_trained:.3f} stride={r_stride:.3f}")
-    # deterministic data + algorithm => fixed values: measured 1.000
-    # trained vs 0.250 stride on sf0.001 (3 Lloyd steps, k=22, nprobe=3)
-    assert r_trained >= 0.9
-    assert r_trained >= r_stride
-
-
-def test_pq_trained_kmeans_recall(spark):
-    """VERDICT r3 #9 (PQ half): per-subspace k-means codebooks trained
-    on the quantized representation (exact-integer Lloyd steps, all 8
-    subspaces in one pipeline) vs the first-16-vectors codebook, ADC +
-    exact-rerank recall measured against brute force."""
-    from wrf_to_geodataframe_spark.functions.vectors import as_double_vec, norm_q
-    from wrf_to_geodataframe_spark.operators.kmeans import (
-        pq_kmeans_fit,
-        pq_topk_trained,
-    )
-    from wrf_to_geodataframe_spark.suite.pipeline import (
-        _N_QUERIES,
-        _PQ_Q,
-        sim_bruteforce_topk,
-        sim_pq_topk,
-    )
-
-    emb_qv = (
-        spark.read.parquet(f"{SF01}/embeddings.parquet")
-        .select(
-            "vec_id",
-            F.expr(
-                "greatest(sqrt(aggregate(transform(embedding, x -> "
-                "CAST(x AS DOUBLE) * x), CAST(0.0 AS DOUBLE), "
-                "(acc, x) -> acc + x)), 1e-12d)"
-            ).alias("nd"),
-            "embedding",
-        )
-        .select(
-            "vec_id",
-            F.expr(
-                f"transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) "
-                f"/ nd * {_PQ_Q}) AS BIGINT))"
-            ).alias("qv"),
-        )
-        .persist()
-    )
-    cb = pq_kmeans_fit(emb_qv, iters=2)
-    assert len(cb) == 8 * 16 and all(len(v) == 8 for _, _, v in cb)
-    assert cb == pq_kmeans_fit(emb_qv, iters=2)  # deterministic
-
-    full = (
-        spark.read.parquet(f"{SF01}/embeddings.parquet")
-        .select("vec_id", as_double_vec(F.col("embedding")).alias("e"))
-        .withColumn("nq", norm_q(F.col("e")))
-    )
-    truth = {
-        (r.query_id, r.neighbor_id)
-        for r in sim_bruteforce_topk(spark, SF01).filter("rank = 1").collect()
-    }
-    trained = {
-        (r.query_id, r.neighbor_id)
-        for r in pq_topk_trained(
-            emb_qv, full, cb, n_queries=_N_QUERIES
-        ).collect()
-    }
-    untrained = {
-        (r.query_id, r.neighbor_id) for r in sim_pq_topk(spark, SF01).collect()
-    }
-    emb_qv.unpersist()
-    r_t = len(truth & trained) / len(truth)
-    r_u = len(truth & untrained) / len(truth)
-    print(f"PQ recall@1: trained={r_t:.3f} untrained={r_u:.3f}")
-    assert r_t >= r_u  # training must never hurt
-    assert r_t >= 0.5
-
-
 def test_cluster_cc_agrees_with_pairs_transitively(spark):
     """dedup_cluster_cc must be exactly the transitive closure of the
     minhash pair set: endpoints of every pair share a cluster, every

@@ -413,52 +413,6 @@ def test_url_dedup_reads_only_doc_id_and_partial_aggs(spark):
     assert plan.count("HashAggregate") >= 2
 
 
-def test_bucketed_join_is_shuffle_free(spark, tmp_path):
-    """Pre-bucketing both sides on the join key must remove BOTH
-    shuffle exchanges from the join plan (the layout is the hash
-    partitioning), and with sorted buckets the sort-merge join needs
-    no extra sort either; results equal the plain join's."""
-    from wrf_to_geodataframe_spark.operators.bucketing import (
-        bucketed_join,
-        join_is_shuffle_free,
-        write_bucketed,
-    )
-    from wrf_to_geodataframe_spark.session import load_table
-
-    # warehouse dir is a static conf — managed tables land in the
-    # session default; DROP TABLE below removes their files
-    orders = load_table(spark, SF, "orders")
-    lineitem = load_table(spark, SF, "lineitem")
-    try:
-        write_bucketed(orders, "b_orders", ["o_orderkey"], 4)
-        write_bucketed(
-            lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
-            "b_lineitem", ["o_orderkey"], 4,
-        )
-        # force sort-merge on both variants: at this sf Spark would
-        # broadcast instead, which hides the property being tested
-        joined = (
-            spark.table("b_orders").hint("merge")
-            .join(spark.table("b_lineitem"), ["o_orderkey"])
-        )
-        plan = _plan(joined)
-        assert "SortMergeJoin" in plan, plan
-        assert join_is_shuffle_free(joined), plan
-        # plain (unbucketed) SMJ DOES shuffle — the property is real
-        plain = orders.hint("merge").join(
-            lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
-            ["o_orderkey"],
-        )
-        assert not join_is_shuffle_free(plain)
-        assert joined.count() == plain.count()
-        # bucket-key aggregation is shuffle-free too
-        agg = spark.table("b_lineitem").groupBy("o_orderkey").count()
-        assert join_is_shuffle_free(agg)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
 def test_concave_pip_broadcasts_boundary_no_shuffle(spark):
     """j3_concave_pip: the 25-row boundary must broadcast (the point
     side never shuffles) and the even-odd test must stay a JVM
@@ -481,54 +435,6 @@ def test_concave_overlay_buckets_are_equi_join(spark):
     plan = _plan(QUERIES["j4_concave_overlay"](spark, SF))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
-
-
-def test_curation_shingle_index_bucketed_reuse(spark):
-    """VERDICT r6 #8: the dedup pipeline's own hot key — the shingle
-    hash index over documents — persisted ONCE as a bucketed layout,
-    then reused by two different curation rounds with ZERO exchanges:
-    (a) the near-dup candidate self-join and (b) the decontamination
-    train-x-eval join.  At 100 TB this is the 'pay one shuffle at
-    ingest, amortize over every dedup round' shape."""
-    from pyspark.sql import functions as F
-
-    from wrf_to_geodataframe_spark.functions.text import (
-        exploded_shingles,
-        hash60,
-    )
-    from wrf_to_geodataframe_spark.operators.bucketing import (
-        join_is_shuffle_free,
-        write_bucketed,
-    )
-    from wrf_to_geodataframe_spark.session import load_table
-
-    docs = load_table(spark, SF, "documents")
-    idx = exploded_shingles(docs, 8).select(
-        "doc_id", hash60(F.col("s")).alias("hs")
-    )
-    try:
-        write_bucketed(idx, "b_shingles", ["hs"], 4)
-        b = spark.table("b_shingles")
-        # round 1: near-dup candidate pairs (self-join on the hash)
-        cand = (
-            b.alias("a").hint("merge")
-            .join(b.alias("b"), "hs")
-            .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        )
-        plan = _plan(cand)
-        assert "SortMergeJoin" in plan, plan
-        assert join_is_shuffle_free(cand), plan
-        # round 2: decontam train-x-eval split join on the SAME layout
-        ev = b.filter(F.col("doc_id") % 7 == 0).select(
-            "hs", F.col("doc_id").alias("eval_id")
-        )
-        tr = b.filter(F.col("doc_id") % 7 != 0)
-        dec = tr.hint("merge").join(ev, "hs")
-        assert join_is_shuffle_free(dec), _plan(dec)
-        # both rounds produce real rows at this sf
-        assert cand.limit(1).count() >= 0 and dec.limit(1).count() >= 0
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_shingles")
 
 
 def test_ts_climatology_broadcasts_small_side_one_scan_pair(spark):

@@ -2217,27 +2217,18 @@ def test_wrf_getvar_many_shares_scans_at_archive_shape(spark, tmp_path):
 
 
 @slow
-def test_wrf_getvar_many_512_shard_archive_and_streaming_rollup(
-    spark, tmp_path
-):
+def test_wrf_getvar_many_512_shard_archive(spark, tmp_path):
     """Capstone at scale (VERDICT r13 #5): a 512-shard hourly wrfout
     landing zone (21+ days, 6x10x12 grids, written EXECUTOR-SIDE —
     one task per shard batch), driven through
-
-    1. ``wrf_getvar_many(['tk','pw','z'], times=True)`` — the
-       bounded-pass claim on a real archive: every per-name plan holds
-       at most TWO archive parse passes (the shared persisted mass
-       scan / zdz + the metadata-sized times decode), never one scan
-       set per name; values spot-checked against the numpy replay at
-       one shard;
-    2. ``stream_netcdf_dir_many(time_var='Times')`` ->
-       ``stream_resample_daily`` on the SAME landing zone — the
-       streaming daily rollup, drained with availableNow and checked
-       against the dyadic closed forms (exact min/max/mean per
-       emitted day; the watermark correctly withholds the tail).
+    ``wrf_getvar_many(['tk','pw','z'], times=True)`` — the bounded-pass
+    claim on a real archive: every per-name plan holds at most TWO
+    archive parse passes (the shared persisted mass scan / zdz + the
+    metadata-sized times decode), never one scan set per name; values
+    spot-checked against the numpy replay at one shard.
 
     Measured on the local[32] dev host: write 6.1 s, getvar_many
-    11.0 s, streaming rollup 4.4 s (~28 s total with session reuse)."""
+    11.0 s."""
     import time as _time
 
     import pandas as pd
@@ -2316,7 +2307,7 @@ def test_wrf_getvar_many_512_shard_archive_and_streaming_rollup(
     t_write = _time.time() - t0
     assert wrote == NSH
 
-    # --- 1. batch: shared-scan getvar_many over the archive
+    # shared-scan getvar_many over the archive
     from wrf_to_geodataframe_spark.operators.wrf import wrf_getvar_many
     from wrf_to_geodataframe_spark.session import release_persisted
 
@@ -2369,59 +2360,8 @@ def test_wrf_getvar_many_512_shard_archive_and_streaming_rollup(
     t_batch = _time.time() - t0
     release_persisted()
 
-    # --- 2. streaming daily rollup on the same landing zone
-    from wrf_to_geodataframe_spark.streaming.ingest import (
-        stream_netcdf_dir_many,
-    )
-    from wrf_to_geodataframe_spark.streaming.resample import (
-        stream_resample_daily,
-    )
-
-    t0 = _time.time()
-    stream = stream_netcdf_dir_many(
-        spark, d, ["T2"], "XLAT", "XLONG", time_var="Times"
-    )
-    daily = stream_resample_daily(
-        stream, "time", "t2", ["y_idx", "x_idx"]
-    )
-    q = (
-        daily.writeStream.format("memory")
-        .queryName("scale_daily")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(400)
-    finally:
-        q.stop()
-    rows = spark.table("scale_daily").collect()
-    # append mode emits a day only after the 2-day watermark passes
-    # its window end: max event time is hour NSH-1, so emitted days
-    # satisfy (d+1)*24 <= NSH-1-48 — the tail (incl. the partial
-    # 8-hour final day) is correctly HELD OPEN for late shards
-    n_emit = (NSH - 1 - 48) // 24
-    assert len(rows) == n_emit * NJ * NI
-    got = {(str(r.day), r.y_idx, r.x_idx): (r.v_min, r.v_max, r.v_mean)
-           for r in rows}
-    n_days = (NSH + 23) // 24
-    assert all(
-        (f"2021-06-{1 + d:02d}", 0, 0) not in got
-        for d in range(n_emit, n_days)
-    )  # withheld tail
-    for (day, j, i) in [(0, 0, 0), (10, 4, 7), (n_emit - 1, 9, 11)]:
-        base = 288.0 + (i + j) / 8.0 + day / 32.0
-        want = (
-            base,
-            base + 23.0 / 16.0,
-            base + sum(range(24)) / 16.0 / 24.0,
-        )
-        key = (f"2021-06-{1 + day:02d}", j, i)
-        assert got[key] == want, (key, got[key], want)  # exact dyadics
-    t_stream = _time.time() - t0
     print(
         f"512-shard landing zone: write {t_write:.1f}s, "
-        f"getvar_many(tk,pw,z,times) {t_batch:.1f}s, "
-        f"streaming daily rollup {t_stream:.1f}s"
+        f"getvar_many(tk,pw,z,times) {t_batch:.1f}s"
     )
-    assert t_batch < 300 and t_stream < 300
+    assert t_batch < 300

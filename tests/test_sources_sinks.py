@@ -396,30 +396,6 @@ def test_geopackage_empty_layer_and_null_first_value(tmp_path):
     con.close()
 
 
-def test_jsonl_corpus_reader_quarantines_corrupt_lines(spark, tmp_path):
-    from wrf_to_geodataframe_spark.sources.jsonl import (
-        read_jsonl,
-        split_quarantine,
-    )
-
-    p = tmp_path / "corpus.jsonl"
-    p.write_text(
-        '{"doc_id": "a", "text": "hello world", "lang": "en", "source": "web"}\n'
-        '{"doc_id": "b", "text": "bonjour", "lang": "fr", "source": "web"}\n'
-        "this line is not json at all\n"
-        '{"doc_id": "c", "text": "truncated...\n'
-        '{"doc_id": "d", "text": "ok", "lang": "en", "source": "books", "extra": 1}\n'
-    )
-    df = read_jsonl(spark, str(p))
-    clean, quarantine = split_quarantine(df)
-    got = {r.doc_id: r.text for r in clean.collect()}
-    # unknown extra fields are ignored under the explicit schema
-    assert got == {"a": "hello world", "b": "bonjour", "d": "ok"}
-    bad = [r.raw_line for r in quarantine.collect()]
-    assert len(bad) == 2
-    assert any("not json" in b for b in bad)
-
-
 def test_wkb_holes_and_multipolygon_round_trip():
     """General WKB model: polygon-with-hole and multipolygon encode /
     parse / area (holes subtracted), both byte orders, Z rejected."""

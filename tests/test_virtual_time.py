@@ -1,11 +1,11 @@
 """Virtual-layer TIME AXIS: ``build_virtual_manifest(...,
 time_var=...)`` decodes each file's CF time coordinate at INDEX time
-into a metadata-sized ``times`` sidecar; ``read_virtual`` /
-``stream_virtual`` then emit a real ``time`` timestamp column next to
-``t_idx`` — the archive-scale mirror of ``read_netcdf_grid(...,
-time_var=...)`` (xarray decode_cf at wrf_voronoi.py:115), and
-``time_to_windows`` turns timestamp ranges into pruned index windows
-(the time-axis sibling of ``bbox_to_windows``)."""
+into a metadata-sized ``times`` sidecar; ``read_virtual`` then emits a
+real ``time`` timestamp column next to ``t_idx`` — the archive-scale
+counterpart of ``read_netcdf_grid(..., time_var=...)`` (xarray
+decode_cf at wrf_voronoi.py:115), and ``time_to_windows`` turns
+timestamp ranges into pruned index windows (the time-axis sibling of
+``bbox_to_windows``)."""
 
 from __future__ import annotations
 
@@ -255,109 +255,6 @@ def test_multivar_read_carries_var_column_and_times(spark, tmp_path):
     # var= selection still narrows
     only = read_virtual(spark, man, var="Q2").collect()
     assert {r["var"] for r in only} == {"Q2"}
-
-
-def test_stream_virtual_carries_time_column(spark, tmp_path):
-    """stream==batch with the times sidecar: the stream-static join
-    maps every micro-batch row's t_idx to the same timestamp the
-    batch reader emits."""
-    import pandas as pd
-
-    from wrf_to_geodataframe_spark.sources.virtual import stream_virtual
-
-    _write_classic(str(tmp_path / "a.nc"), 2, seed=1, hour0=0.0)
-    _write_classic(str(tmp_path / "b.nc"), 2, seed=2, hour0=12.0)
-    man = str(tmp_path / "manifest")
-    build_virtual_manifest(
-        spark, str(tmp_path), "T2", "XLAT", "XLONG", man, time_var="t"
-    )
-    sdf = stream_virtual(spark, man)
-    assert sdf.isStreaming and "time" in sdf.columns
-    frames = []
-    q = (
-        sdf.writeStream.foreachBatch(
-            lambda b, _bid: frames.append(b.toPandas())
-        )
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = pd.concat(frames, ignore_index=True)
-    batch = read_virtual(spark, man).toPandas()
-    key = lambda df: sorted(  # noqa: E731
-        map(tuple, df[["t_idx", "y_idx", "x_idx", "time"]].itertuples(
-            index=False
-        ))
-    )
-    assert key(got) == key(batch)
-    assert len(got) == 4 * NY * NX
-
-
-def test_stream_virtual_post_definition_append_fails_loudly(
-    spark, tmp_path
-):
-    """A file appended by update_virtual_manifest WHILE the stream
-    runs carries t_idx values the definition-time times snapshot
-    doesn't know.  Those must NOT pass through as silent NULL
-    timestamps (wrong data): the micro-batch fails with the named
-    restart instruction — and a restarted stream (fresh definition,
-    same checkpoint) resumes exactly-once with the correct new
-    timestamps."""
-    import pandas as pd
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    from wrf_to_geodataframe_spark.sources.virtual import stream_virtual
-
-    _write_classic(str(tmp_path / "a.nc"), 2, seed=1, hour0=0.0)
-    man = str(tmp_path / "manifest")
-    build_virtual_manifest(
-        spark, str(tmp_path), "T2", "XLAT", "XLONG", man, time_var="t"
-    )
-    sdf = stream_virtual(spark, man)  # snapshot: t_idx 0..1 only
-    ckpt = str(tmp_path / "ckpt")
-    frames = []
-    sink = lambda b, _bid: frames.append(b.toPandas())  # noqa: E731
-    q = (
-        sdf.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert len(pd.concat(frames, ignore_index=True)) == 2 * NY * NX
-    # append while the stream definition is live
-    _write_classic(str(tmp_path / "b.nc"), 2, seed=2, hour0=12.0)
-    update_virtual_manifest(
-        spark, str(tmp_path), "T2", "XLAT", "XLONG", man, time_var="t"
-    )
-    q2 = (
-        sdf.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    with pytest.raises(
-        StreamingQueryException, match="times sidecar snapshot"
-    ):
-        q2.awaitTermination(120)
-    # restart = re-define (fresh sidecar snapshots) + same checkpoint:
-    # exactly-once resume picks up ONLY the appended rows, timestamped
-    frames2 = []
-    q3 = (
-        stream_virtual(spark, man)
-        .writeStream.foreachBatch(
-            lambda b, _bid: frames2.append(b.toPandas())
-        )
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q3.awaitTermination(120)
-    got = pd.concat(frames2, ignore_index=True)
-    assert len(got) == 2 * NY * NX
-    assert sorted(got["t_idx"].unique()) == [2, 3]
-    assert set(got["time"]) == {_expected_time(2), _expected_time(3)}
 
 
 def test_grib2_member_message_times(spark, tmp_path):

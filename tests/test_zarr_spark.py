@@ -115,6 +115,60 @@ def test_dist_scan_is_chunk_parallel(spark, tmp_path):
     assert len(per_key) == math.prod((2, 3, 3))  # ceil(3/2)*ceil(10/4)*ceil(14/5)
 
 
+@pytest.mark.parametrize(
+    "sep,packed", [(".", False), ("/", False), (".", True)],
+    ids=[".", "/", "packed"],
+)
+def test_dist_read_separator_and_cf_packed_coordinate(
+    spark, tmp_path, sep, packed
+):
+    """Both chunk-key separators, with ``chunk_key`` in the store's
+    native separator, and CF mask-and-scale on a packed value AND a
+    packed coordinate array."""
+    store = str(tmp_path / "live")
+    rng = np.random.default_rng(11)
+    nt, ny, nx = 2, 6, 8
+    vals = np.round(rng.standard_normal((nt, ny, nx)) * 8) / 8
+    yy, xx = np.meshgrid(np.arange(ny), np.arange(nx), indexing="ij")
+    variables = {
+        "T2": {"dims": ["t", "y", "x"], "data": vals},
+        "XLAT": {"dims": ["y", "x"], "data": 50.0 + yy * 0.25},
+        "XLONG": {"dims": ["y", "x"], "data": -3.0 + xx * 0.125},
+    }
+    if packed:
+        raw = np.arange(nt * ny * nx, dtype="int16").reshape(nt, ny, nx)
+        raw[0, 0, 0] = -999
+        variables["T2"] = {
+            "dims": ["t", "y", "x"], "data": raw,
+            "attrs": {"scale_factor": 0.5, "add_offset": 100.0,
+                      "_FillValue": -999},
+        }
+        variables["XLAT"] = {
+            "dims": ["y", "x"], "data": (yy * 4).astype("int16"),
+            "attrs": {"scale_factor": 0.0625, "add_offset": 50.0},
+        }
+    write_zarr(
+        store,
+        {"t": nt, "y": ny, "x": nx},
+        variables,
+        chunks={"T2": (1, 4, 3), "XLAT": (4, 3), "XLONG": (4, 3)},
+        dimension_separator=sep,
+    )
+    rows = read_zarr_dist(spark, store, "T2", "XLAT", "XLONG").collect()
+    assert len(rows) == nt * ny * nx
+    cells = {(r["t_idx"], r["y_idx"], r["x_idx"]): r for r in rows}
+    for (t, y, x), r in cells.items():
+        assert r["chunk_key"] == sep.join(map(str, (t, y // 4, x // 3)))
+        assert r["lat"] == 50.0 + y * 0.25
+        assert r["lon"] == -3.0 + x * 0.125
+        if packed:
+            masked = (t, y, x) == (0, 0, 0)
+            want = None if masked else raw[t, y, x] * 0.5 + 100.0
+        else:
+            want = vals[t, y, x]
+        assert r["value"] == want
+
+
 def test_driver_grid_matches_store(spark, tmp_path):
     store = str(tmp_path / "s")
     vals = _demo_store(store, nt=1)

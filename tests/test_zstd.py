@@ -1,12 +1,11 @@
 """Zstandard decoder (``sources/zstd.py``) cross-validated against the
 system zstd CLI / libzstd (the codec-interop discipline: every path is
 checked against an independent third-party implementation, both as
-fixed cases and as randomized fuzz) plus the .warc.zst ingestion loop.
+fixed cases and as randomized fuzz).
 """
 
 from __future__ import annotations
 
-import gzip
 import os
 import shutil
 import struct
@@ -21,7 +20,6 @@ from wrf_to_geodataframe_spark.sources.zstd import (
     ZstdError,
     is_zstd,
     libzstd_present,
-    warc_zstd_decompress,
     xxh64,
     zstd_decompress,
 )
@@ -152,26 +150,6 @@ def test_raw_content_dictionary_decode(tmp_path):
 
 
 @needs_cli
-def test_warc_zstd_dictionary_frame_layouts(tmp_path):
-    d = _train_dict(tmp_path)
-    dpath = str(tmp_path / "dict.bin")
-    s1 = b"WARC/1.1\r\nWARC-Type: response\r\n\r\nrecord one body"
-    s2 = b"WARC/1.1\r\nWARC-Type: request\r\n\r\nrecord two body!"
-    f1 = _cli(s1, "-9", "-D", dpath)
-    f2 = _cli(s2, "-5", "-D", dpath)
-    # plain dictionary in the leading skippable frame
-    wz = struct.pack("<II", 0x184D2A5D, len(d)) + d + f1 + f2
-    assert warc_zstd_decompress(wz) == s1 + s2
-    # dictionary itself zstd-compressed inside the skippable frame
-    dz = _cli(d, "-19")
-    wz2 = struct.pack("<II", 0x184D2A5D, len(dz)) + dz + f1 + f2
-    assert warc_zstd_decompress(wz2) == s1 + s2
-    # no dictionary frame at all -> plain multi-frame decode
-    g1 = _cli(s1, "-3")
-    assert warc_zstd_decompress(g1 + _cli(s2, "-3")) == s1 + s2
-
-
-@needs_cli
 @pytest.mark.skipif(not libzstd_present(), reason="libzstd absent")
 def test_libzstd_binding_agrees_with_reference_decoder(tmp_path):
     from wrf_to_geodataframe_spark.sources.zstd import _lib_decompress
@@ -219,58 +197,6 @@ def test_error_paths():
 def test_fuzz_round_trip_vs_cli(data, level, check):
     args = [level] + (["--check"] if check else [])
     assert zstd_decompress(_cli(data, *args)) == data
-
-
-# --------------------------------------------------- WARC integration
-
-
-def _record(wtype: str, payload: bytes) -> bytes:
-    h = [
-        b"WARC/1.0",
-        b"WARC-Type: " + wtype.encode(),
-        b"WARC-Record-ID: <urn:uuid:z>",
-        b"Content-Length: " + str(len(payload)).encode(),
-    ]
-    return b"\r\n".join(h) + b"\r\n\r\n" + payload + b"\r\n\r\n"
-
-
-@needs_cli
-def test_warc_zst_equals_gzip_twin():
-    from wrf_to_geodataframe_spark.sources.warc import iter_warc_records
-
-    recs = [
-        _record("warcinfo", b"robots: classic\r\n"),
-        _record("response", b"HTTP/1.1 200 OK\r\n\r\nhello zstd world"),
-        _record("request", b"GET / HTTP/1.1\r\n\r\n"),
-    ]
-    gz = b"".join(gzip.compress(r) for r in recs)
-    zst = b"".join(_cli(r, "-9") for r in recs)
-    assert list(iter_warc_records(gz)) == list(iter_warc_records(zst))
-    # with a leading dictionary skippable frame (empty-payload variant
-    # must also be tolerated: treated as "no dictionary")
-    skip = struct.pack("<II", 0x184D2A5D, 0)
-    assert list(iter_warc_records(skip + zst)) == list(
-        iter_warc_records(gz)
-    )
-
-
-@needs_cli
-def test_read_warc_spark_source_zst(spark, tmp_path):
-    from wrf_to_geodataframe_spark.sources.warc import read_warc
-
-    recs = [
-        _record("response", b"HTTP/1.1 200 OK\r\nContent-Type: text/html"
-                            b"\r\n\r\n<html>doc A</html>"),
-        _record("response", b"HTTP/1.1 404 NO\r\n\r\ngone"),
-    ]
-    (tmp_path / "a.warc.zst").write_bytes(
-        b"".join(_cli(r, "-9") for r in recs)
-    )
-    rows = read_warc(spark, str(tmp_path)).collect()
-    assert len(rows) == 2
-    bodies = {bytes(r.body) for r in rows}
-    assert b"<html>doc A</html>" in bodies
-    assert {r.http_status for r in rows} == {200, 404}
 
 
 @settings(max_examples=150, deadline=None)

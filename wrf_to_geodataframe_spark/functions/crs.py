@@ -1796,16 +1796,25 @@ def ellipsoid_polygon_area_m2(
     e = math.sqrt(e2)
     n = F.size(xs)
     idx = F.sequence(F.lit(0), n - 1)
-    q_of = lambda i: _authalic_q(  # noqa: E731 — local closure
-        _COLUMNS, F.sin(F.radians(F.element_at(ys, i + 1))), e, e2
-    )
-    lam_of = lambda i: F.radians(F.element_at(xs, i + 1))  # noqa: E731
+    # per-vertex radians and authalic q, each evaluated ONCE per vertex:
+    # the arrays ride in the fold's initial accumulator, which Spark
+    # evaluates once, whereas an expression inside the merge lambda is
+    # re-evaluated on every step
+    lam = F.transform(xs, F.radians)
+    sin_phi = F.transform(ys, lambda y: F.sin(F.radians(y)))
+    q = F.transform(sin_phi, lambda v: _authalic_q(_COLUMNS, v, e, e2))
+    at = lambda arr, i: F.element_at(arr, i + 1)  # noqa: E731
     nxt = lambda i: (i + 1) % n  # noqa: E731
     s = F.aggregate(
         idx,
-        F.lit(0.0),
-        lambda acc, i: acc
-        + (lam_of(nxt(i)) - lam_of(i)) * (q_of(i) + q_of(nxt(i))),
+        F.struct(lam.alias("lam"), q.alias("q"), F.lit(0.0).alias("s")),
+        lambda acc, i: acc.withField(
+            "s",
+            acc["s"]
+            + (at(acc["lam"], nxt(i)) - at(acc["lam"], i))
+            * (at(acc["q"], i) + at(acc["q"], nxt(i))),
+        ),
+        lambda acc: acc["s"],
     )
     # degenerate rings (< 3 vertices) have zero area by definition —
     # and without the guard n = 0 would build sequence(0, -1) =

@@ -1,6 +1,5 @@
-"""URL canonicalization as a pure column expression — shared by the
-batch dedup operator (``suite/pipeline.url_dedup``) and the streaming
-form (``streaming/urls.py``) so the two can never drift.
+"""URL canonicalization as a pure column expression — the key of the
+dedup operator ``suite/pipeline.url_dedup``.
 
 Rules (the standard crawl-frontier normalization set): drop the
 fragment, lowercase scheme and host, strip default ports (443 for

@@ -232,8 +232,7 @@ def triangulate_rows(
     zero-area slivers).  ``invalid='raise'`` (default) fails loudly
     with the offending row's key values in the message;
     ``invalid='skip'`` quarantines the ring (drops its rows) so one
-    bad polygon cannot abort a 1M-row overlay — the jsonl-source
-    quarantine discipline."""
+    bad polygon cannot abort a 1M-row overlay."""
     if invalid not in ("raise", "skip"):
         raise ValueError(f"invalid= must be 'raise' or 'skip', got {invalid}")
     from wrf_to_geodataframe_spark.geometry.polygons import (

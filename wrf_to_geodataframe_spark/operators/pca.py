@@ -9,13 +9,12 @@ partial (count, sum, Gram) statistics in exact integer arithmetic
 (values quantized to ``floor(v * 2^20)`` — dyadic, so dequantization is
 exact in binary — partial sums are BIGINT, overflow-safe to ~10^12 rows
 at unit-norm 64-dim inputs); partials are P x (d + d^2 + 1) numbers, a
-bounded O(1)-control-state collect like the kmeans codebooks
-(operators/kmeans.py).  The d x d eigendecomposition runs on the driver
-(numpy ``eigh`` on the symmetric covariance — d is 64-ish, never data-
-sized), components broadcast back, and the projection is a zero-shuffle
-Arrow map.  Integer partials add exactly in ANY order, so the fit is
-BIT-DETERMINISTIC across runs and cluster layouts — same discipline as
-the suite's quantized aggregates.
+bounded O(1)-control-state collect.  The d x d eigendecomposition runs
+on the driver (numpy ``eigh`` on the symmetric covariance — d is
+64-ish, never data-sized), components broadcast back, and the
+projection is a zero-shuffle Arrow map.  Integer partials add exactly
+in ANY order, so the fit is BIT-DETERMINISTIC across runs and cluster
+layouts — same discipline as the suite's quantized aggregates.
 """
 
 from __future__ import annotations

@@ -525,8 +525,7 @@ def wrf_times(
     """(file, lt, time): each shard's decoded time axis — the wrfout
     ``Times`` (Time, DateStrLen) char array ('YYYY-MM-DD_HH:MM:SS',
     no CF units attribute) or any CF ``units``-attributed numeric
-    coordinate, decoded EXECUTOR-SIDE by ``netcdf.decode_time_axis``,
-    the decode the NetCDF stream mirror stamps its rows with.
+    coordinate, decoded EXECUTOR-SIDE by ``netcdf.decode_time_axis``.
     One binaryFile task per shard; the output is #timesteps rows —
     metadata-sized, so downstream joins broadcast it.
 

@@ -248,6 +248,33 @@ def _byte_string_as_bytes(raw: str, default: int) -> int:
         return default
 
 
+def _small_scan_split(df, path: str) -> tuple[int, int] | None:
+    """``(est, defaultParallelism)`` for a byte-SMALL scan, where
+    ``est`` = ceil(dataset bytes / ``spark.sql.files.maxPartitionBytes``)
+    is below ``defaultParallelism``; None when the scan already spans
+    at least ``defaultParallelism`` such splits, or when its size is
+    UNKNOWN (non-posix path, stat error): fail OPEN to "archive-scale"
+    and leave the scan alone — the 100 TB path must never pay a
+    full-corpus shuffle because the driver could not stat an
+    object-store URI (ADVICE r17)."""
+    p = df.sparkSession.sparkContext.defaultParallelism
+    default_pb = 128 * 1024 * 1024
+    try:
+        raw = df.sparkSession.conf.get(
+            "spark.sql.files.maxPartitionBytes", str(default_pb)
+        )
+        max_pb = max(1, _byte_string_as_bytes(raw, default_pb))
+    except Exception:
+        max_pb = default_pb
+    total = _dataset_bytes(path)
+    if total <= 0:
+        return None
+    est = max(1, -(-total // max_pb))  # ceil-div
+    if est >= p:
+        return None
+    return est, p
+
+
 def ensure_scan_parallelism(df, path: str, *keys: str):
     """Spread a byte-small scan across the cores before a CPU-heavy
     expression chain (md5 shingle hashing, regex scrubbing, fold
@@ -267,26 +294,10 @@ def ensure_scan_parallelism(df, path: str, *keys: str):
     plan and can run a listing job (it tripped the
     construction-is-lazy pin).  ``keys`` hash-partition the spread
     (deterministic layout, no round-robin input sort — guide §2.5)."""
-    sc = df.sparkSession.sparkContext
-    p = sc.defaultParallelism
-    default_pb = 128 * 1024 * 1024
-    try:
-        raw = df.sparkSession.conf.get(
-            "spark.sql.files.maxPartitionBytes", str(default_pb)
-        )
-        max_pb = max(1, _byte_string_as_bytes(raw, default_pb))
-    except Exception:
-        max_pb = default_pb
-    total = _dataset_bytes(path)
-    if total <= 0:
-        # UNKNOWN size (non-posix path, stat error): fail OPEN to
-        # "archive-scale" and leave the scan alone — the 100 TB path
-        # must never pay a full-corpus shuffle because the driver
-        # could not stat an object-store URI (ADVICE r17).
+    split = _small_scan_split(df, path)
+    if split is None:
         return df
-    est = max(1, -(-total // max_pb))  # ceil-div
-    if est >= p:
-        return df
+    p = split[1]
     return df.repartition(p, *keys) if keys else df.repartition(p)
 
 
@@ -311,23 +322,10 @@ def coalesce_small_scan(df, path: str):
     Only apply this to queries whose per-row compute is a cast/rename
     (codegen floor); a CPU-heavy chain over a coalesced scan would
     serialize (use ensure_scan_parallelism's criterion instead)."""
-    sc = df.sparkSession.sparkContext
-    p = sc.defaultParallelism
-    default_pb = 128 * 1024 * 1024
-    try:
-        raw = df.sparkSession.conf.get(
-            "spark.sql.files.maxPartitionBytes", str(default_pb)
-        )
-        max_pb = max(1, _byte_string_as_bytes(raw, default_pb))
-    except Exception:
-        max_pb = default_pb
-    total = _dataset_bytes(path)
-    if total <= 0:
-        return df  # unknown size: fail open, leave the scan alone
-    est = max(1, -(-total // max_pb))  # ceil-div
-    if est >= p:
+    split = _small_scan_split(df, path)
+    if split is None:
         return df
-    return df.coalesce(est)
+    return df.coalesce(split[0])
 
 
 # ---------------------------------------------------------------------------

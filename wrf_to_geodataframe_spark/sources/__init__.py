@@ -6,8 +6,6 @@ netCDF4/pillow in this container):
   (NetCDF-4/HDF5 spec-subset reader incl. the ``szip`` CCSDS
   extended-Rice filter codec), ``shapefile``, ``geopackage``
   (GPKG sink + distributed GeoParquet 1.1 sink/scan).
-- text/crawl: ``jsonl`` (schema + quarantine), ``warc`` (ISO 28500 /
-  Common Crawl, distributed).
 - images (each cross-validated against the system library when
   present): ``png`` (libpng), ``jpeg`` + ``jpeg_arith`` (libjpeg,
   four entropy paths), ``webp`` (VP8L both directions) + ``vp8`` /
@@ -15,6 +13,5 @@ netCDF4/pillow in this container):
   ``gif`` (giflib), ``tiff`` (libtiff), ``bmp`` (BMP + netpbm,
   self-goldened), ``avif`` (GATED: decodes through the system libavif
   when present, named error + triage otherwise).
-- audio/video: ``wav`` (RIFF/PCM both directions), ``audio_triage``
-  (MP3/Ogg/FLAC headers), ``video`` (MP4/Matroska triage).
+- audio: ``wav`` (RIFF/PCM both directions).
 """

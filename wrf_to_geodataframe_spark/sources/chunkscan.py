@@ -1,6 +1,5 @@
 """The one chunk-parallel scan kernel behind every chunked-array source
-(zarr v2 chunks, zarr v3 shards, NetCDF-4/HDF5 chunks, and the
-live-zarr stream tail).
+(zarr v2 chunks, zarr v3 shards, NetCDF-4/HDF5 chunks).
 
 A chunked (t, y, x) or (y, x) variable becomes the engine's long table
 (t_idx, y_idx, x_idx, lat, lon, value) the same way whatever the
@@ -18,8 +17,7 @@ container:
 
 A format supplies only ``locate`` (chunk index -> manifest fields,
 driver side) and ``decode`` (manifest rows -> decoded chunk arrays,
-executor side); ``chunk_frames`` is also what the streaming tail runs
-per arriving chunk object, so stream == batch holds by construction.
+executor side).
 """
 
 from __future__ import annotations

@@ -763,11 +763,11 @@ def read_geotiff_dist(spark, path: str, band: int = 0, level: int = 0):
     return mdf.mapInPandas(_scan, schema)
 
 
-def _decode_geotiff_files(files, band: int = 0):
-    """The per-file decode behind ``read_geotiff_dir`` AND its stream
-    mirror: a (path, content) ``binaryFile`` frame becomes
-    (file, y_idx, x_idx, lon, lat, value) for ``band``, decoded
-    executor-side."""
+def read_geotiff_dir(spark, path: str, band: int = 0):
+    """Distributed S1 over a directory of GeoTIFFs (one raster per
+    scene/date — the satellite-archive shape): ``binaryFile`` scan,
+    each file decoded executor-side.  Emits (file, y_idx, x_idx, lon,
+    lat, value) for ``band``."""
     from pyspark.sql.types import (
         DoubleType,
         LongType,
@@ -789,14 +789,5 @@ def _decode_geotiff_files(files, band: int = 0):
                 frame.insert(0, "file", fname)
                 yield frame
 
+    files = spark.read.format("binaryFile").load(path)
     return files.select("path", "content").mapInPandas(_batches, schema)
-
-
-def read_geotiff_dir(spark, path: str, band: int = 0):
-    """Distributed S1 over a directory of GeoTIFFs (one raster per
-    scene/date — the satellite-archive shape): ``binaryFile`` scan ->
-    ``_decode_geotiff_files``.  Emits (file, y_idx, x_idx, lon, lat,
-    value)."""
-    return _decode_geotiff_files(
-        spark.read.format("binaryFile").load(path), band
-    )

@@ -49,7 +49,7 @@ moment an environment provides one.
 
 Scale path: a met archive is many files x many messages.
 ``read_grib2_dir`` distributes per-file via ``binaryFile`` +
-``mapInPandas`` (the WARC/NetCDF-dir pattern, sources/warc.py:132);
+``mapInPandas`` (the ``read_netcdf_dir`` pattern);
 within a task, messages decode independently.  Nothing data-sized
 crosses the driver.
 """
@@ -1114,11 +1114,13 @@ def read_grib2_msgs(spark, path: str):
     return mdf.mapInPandas(_scan, schema)
 
 
-def _decode_grib2_files(files):
-    """The per-file decode behind ``read_grib2_dir`` AND its stream
-    mirror: a (path, content) ``binaryFile`` frame becomes
-    (file, msg_idx, y_idx, x_idx, lat, lon, value), one frame per
-    message, parsed executor-side."""
+def read_grib2_dir(spark, path: str):
+    """Distributed S1 over a directory/glob of GRIB2 files — the
+    met-archive shape (one file per cycle/member, many messages per
+    file).  ``binaryFile`` scan (GRIB2 is not block-splittable; the
+    file is the parallelism unit, as with NetCDF archives), each file
+    parsed executor-side.  Emits (file, msg_idx, y_idx, x_idx, lat,
+    lon, value), one frame per message."""
     from pyspark.sql.types import (
         DoubleType,
         LongType,
@@ -1139,14 +1141,5 @@ def _decode_grib2_files(files):
                 msgs = read_grib2_bytes(bytes(buf), name=fname)
                 yield from _unnest_messages(msgs, fname)
 
+    files = spark.read.format("binaryFile").load(path)
     return files.select("path", "content").mapInPandas(_batches, schema)
-
-
-def read_grib2_dir(spark, path: str):
-    """Distributed S1 over a directory/glob of GRIB2 files — the
-    met-archive shape (one file per cycle/member, many messages per
-    file).  ``binaryFile`` scan (GRIB2 is not block-splittable; the
-    file is the parallelism unit, as with NetCDF archives) ->
-    ``_decode_grib2_files``.  Emits
-    (file, msg_idx, y_idx, x_idx, lat, lon, value)."""
-    return _decode_grib2_files(spark.read.format("binaryFile").load(path))

@@ -16,8 +16,7 @@ WRF/HadUK archive, one file per timestep/member — distributes via
 per file; .nc is not block-splittable) + ``mapInPandas`` running the
 same pure-numpy parser inside each executor task, emitting the long
 (file, t_idx, y_idx, x_idx, lat, lon, value) table.  No file content
-ever crosses the driver; at 100 TB the parallelism unit is the file,
-exactly as with WARC archives (sources/warc.py).
+ever crosses the driver; at 100 TB the parallelism unit is the file.
 """
 
 from __future__ import annotations
@@ -547,33 +546,6 @@ def _grid_fields(value_cols, time_col: int | None = None):
     return StructType(fields)
 
 
-def _decode_netcdf_files(files, var: str, lat_var: str, lon_var: str,
-                         time_index: int | None = None,
-                         time_var: str | None = None):
-    """The per-file decode behind ``read_netcdf_dir`` AND its stream
-    mirror: a (path, content) ``binaryFile`` frame — batch or
-    streaming — becomes the long table (file, t_idx, [time,] y_idx,
-    x_idx, lat, lon, value), each executor task running the pure-numpy
-    classic/HDF5 parser (``read_netcdf_any_bytes``) on its files."""
-
-    def _batches(it):
-        from wrf_to_geodataframe_spark.sources.hdf5 import (
-            read_netcdf_any_bytes,
-        )
-
-        for pdf in it:
-            for fname, buf in zip(pdf["path"], pdf["content"]):
-                ds = read_netcdf_any_bytes(bytes(buf), name=fname)
-                for frame in _unnest_grid(
-                    ds, var, lat_var, lon_var, time_index, time_var
-                ):
-                    frame.insert(0, "file", fname)
-                    yield frame
-
-    schema = _grid_fields(["value"], 2 if time_var is not None else None)
-    return files.select("path", "content").mapInPandas(_batches, schema)
-
-
 def read_netcdf_dir(
     spark,
     path: str,
@@ -590,16 +562,31 @@ def read_netcdf_dir(
     (executor-side decode, functions/cftime.py).
 
     ``binaryFile`` scan (one split per file — NetCDF is not
-    block-splittable, matching how such archives shard in practice) ->
-    ``_decode_netcdf_files``.  Emits the long table
+    block-splittable, matching how such archives shard in practice),
+    each executor task running the pure-numpy classic/HDF5 parser
+    (``read_netcdf_any_bytes``) on its files.  Emits the long table
     (file string, t_idx, y_idx, x_idx, lat, lon, value) — the engine's
     explicit-keys data model (SURVEY.md §1.1/§1.3) with the source
     file kept as a column so per-shard provenance survives the unnest.
     Nothing data-sized ever touches the driver."""
-    return _decode_netcdf_files(
-        spark.read.format("binaryFile").load(path),
-        var, lat_var, lon_var, time_index, time_var,
-    )
+
+    def _batches(it):
+        from wrf_to_geodataframe_spark.sources.hdf5 import (
+            read_netcdf_any_bytes,
+        )
+
+        for pdf in it:
+            for fname, buf in zip(pdf["path"], pdf["content"]):
+                ds = read_netcdf_any_bytes(bytes(buf), name=fname)
+                for frame in _unnest_grid(
+                    ds, var, lat_var, lon_var, time_index, time_var
+                ):
+                    frame.insert(0, "file", fname)
+                    yield frame
+
+    schema = _grid_fields(["value"], 2 if time_var is not None else None)
+    files = spark.read.format("binaryFile").load(path)
+    return files.select("path", "content").mapInPandas(_batches, schema)
 
 
 def decode_time_axis(ds: dict, fname: str, time_var: str) -> np.ndarray:
@@ -613,28 +600,23 @@ def decode_time_axis(ds: dict, fname: str, time_var: str) -> np.ndarray:
     return decode_cf_time_values(np.asarray(tv["data"]), tv.get("attrs", {}))
 
 
-def _shard_time(ds: dict, fname: str, time_var: str):
-    """The ONE decoded timestamp of a one-timestep shard's
-    ``time_var``; a named error on any other step count."""
-    import pandas as pd
+def read_netcdf_dir_many(
+    spark,
+    path: str,
+    variables: list[str],
+    lat_var: str,
+    lon_var: str,
+):
+    """``read_netcdf_dir`` for SEVERAL same-grid variables in ONE
+    archive scan: each shard's bytes are fetched and parsed once, and
+    every requested variable becomes its own column —
+    (file, t_idx, y_idx, x_idx, lat, lon, <var1.lower()>, ...).
 
-    tns = decode_time_axis(ds, fname, time_var)
-    if tns.shape[0] != 1:
-        raise ValueError(
-            f"{fname}: {tns.shape[0]} timesteps in {time_var!r}; "
-            "stream_netcdf_dir_many(time_var=...) requires "
-            "one-timestep-per-shard archives"
-        )
-    return pd.Timestamp(tns[0])
-
-
-def _decode_netcdf_files_many(files, variables: list[str], lat_var: str,
-                              lon_var: str, time_var: str | None = None):
-    """The per-file decode behind ``read_netcdf_dir_many`` AND its
-    stream mirror: each shard is parsed ONCE and every requested
-    variable becomes its own column.  ``time_var`` (stream mirror
-    only) stamps every row with the shard's single decoded timestamp
-    as a ``time`` column after ``lon``."""
+    The variables must share the first variable's grid shape (same
+    dims per time slice) — a mismatch raises a NAMED error inside the
+    task rather than mis-aligning raveled cells.  This is the reader
+    multi-variable derivations (wrf_getvar's T/P/PB/QVAPOR joins)
+    should use: N columns for one scan instead of N scans."""
     variables = list(variables)
     if not variables:
         raise ValueError("read_netcdf_dir_many needs at least one variable")
@@ -670,37 +652,11 @@ def _decode_netcdf_files_many(files, variables: list[str], lat_var: str,
                         f[var.lower()] = e["value"].to_numpy()
                 for f in frames:
                     f.insert(0, "file", fname)
-                    if time_var is not None:
-                        f.insert(6, "time", _shard_time(ds, fname, time_var))
                     yield f
 
-    schema = _grid_fields(
-        [v.lower() for v in variables], 6 if time_var is not None else None
-    )
+    schema = _grid_fields([v.lower() for v in variables])
+    files = spark.read.format("binaryFile").load(path)
     return files.select("path", "content").mapInPandas(_batches, schema)
-
-
-def read_netcdf_dir_many(
-    spark,
-    path: str,
-    variables: list[str],
-    lat_var: str,
-    lon_var: str,
-):
-    """``read_netcdf_dir`` for SEVERAL same-grid variables in ONE
-    archive scan: each shard's bytes are fetched and parsed once, and
-    every requested variable becomes its own column —
-    (file, t_idx, y_idx, x_idx, lat, lon, <var1.lower()>, ...).
-
-    The variables must share the first variable's grid shape (same
-    dims per time slice) — a mismatch raises a NAMED error inside the
-    task rather than mis-aligning raveled cells.  This is the reader
-    multi-variable derivations (wrf_getvar's T/P/PB/QVAPOR joins)
-    should use: N columns for one scan instead of N scans."""
-    return _decode_netcdf_files_many(
-        spark.read.format("binaryFile").load(path),
-        variables, lat_var, lon_var,
-    )
 
 
 def write_netcdf_dir(

@@ -61,7 +61,6 @@ __all__ = [
     "build_virtual_manifest",
     "compact_manifest",
     "read_virtual",
-    "stream_virtual",
     "update_virtual_manifest",
 ]
 
@@ -535,9 +534,8 @@ def build_virtual_manifest(
     ``units``-attributed values or a WRF 'Times' char array): it is
     decoded at INDEX time into an ``out_path/times`` sidecar (one row
     per global timestep — still metadata-sized), and ``read_virtual``
-    / ``stream_virtual`` then emit a real ``time`` timestamp column
-    next to ``t_idx`` (the archive-scale mirror of
-    ``read_netcdf_grid(..., time_var=...)``).
+    then emits a real ``time`` timestamp column next to ``t_idx`` (the
+    archive-scale counterpart of ``read_netcdf_grid(..., time_var=...)``).
 
     The metadata walk runs ON EXECUTORS (one task per file batch); the
     driver only lists file names.  Global time bounds are assigned with
@@ -1231,54 +1229,6 @@ def read_virtual(
     return out
 
 
-def stream_virtual(
-    spark,
-    manifest_path: str,
-    var: str | None = None,
-    max_files_per_trigger: int | None = None,
-    max_sidecar_bytes: int = 256 * 2**20,
-):
-    """STREAMING mirror of ``read_virtual``: tail a virtual manifest
-    that ``update_virtual_manifest`` keeps appending to — each model
-    cycle's newly indexed chunk rows become a micro-batch of decoded
-    grid rows (same schema as ``read_virtual``), without re-reading
-    anything already processed (file-source checkpointing is
-    exactly-once per manifest parquet file).  Output schema matches
-    ``read_virtual``: ``(file, var, t_idx, y_idx, x_idx, lat, lon,
-    value)`` plus ``time`` when the manifest has a times sidecar.
-
-    The chunk table IS the stream: ``update_virtual_manifest`` appends
-    new parquet files under ``<manifest>/chunks``, and the parquet
-    file source discovers them per trigger.  The coordinate sidecar
-    AND the times sidecar are snapshotted at stream DEFINITION (the
-    shared-grid archive shape); a chunk row arriving with an unseen
-    coord_hash — or a t_idx missing from the times snapshot (a file
-    appended by ``update_virtual_manifest`` while the stream ran) —
-    fails loudly with a restart instruction rather than decoding with
-    stale coordinates or silently NULL timestamps."""
-    from pyspark.sql import functions as F
-
-    chunks_dir = os.path.join(manifest_path, "chunks")
-    schema = spark.read.parquet(chunks_dir).schema  # one footer read
-    r = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        r = r.option("maxFilesPerTrigger", max_files_per_trigger)
-    man = r.parquet(chunks_dir)
-    if var is not None:
-        man = man.filter(F.col("var") == var)
-    bgrids = _broadcast_sidecar(spark, manifest_path, max_sidecar_bytes)
-    _scan = _chunk_scanner(bgrids, (None, None, None))
-    out = man.mapInPandas(_scan, _virtual_out_schema())
-    # stream-static join against the times sidecar SNAPSHOT — strict:
-    # a joined-null time means the manifest gained timesteps after
-    # definition, which must not pass through as silent NULLs (the
-    # same discipline as the coord-hash restart error)
-    times = _try_read_times(spark, manifest_path)
-    if times is not None:
-        out = _with_time_column(out, times, var, strict=True)
-    return out
-
-
 def _try_read_times(spark, manifest_path: str):
     """The ``times`` sidecar DataFrame (var, t, time_ns), or None for
     manifests built without ``time_var`` — probed with one parquet
@@ -1294,15 +1244,12 @@ def _try_read_times(spark, manifest_path: str):
         return None
 
 
-def _with_time_column(out, times, var, strict: bool = False):
+def _with_time_column(out, times, var):
     """LEFT-join the (small, broadcast) times sidecar onto the decoded
     grid rows on ``(var, t_idx)`` — each variable maps to its own
     axis, so multi-variable manifests with diverging axes stay
     unambiguous.  ``time`` is a microsecond timestamp; the sidecar
-    keeps exact int64 ns.  ``strict`` (the streaming path) raises on a
-    joined-null — a t_idx the sidecar snapshot doesn't know means the
-    manifest gained timesteps after the stream was defined, and a
-    silent NULL timestamp would be wrong data, not missing data."""
+    keeps exact int64 ns."""
     from pyspark.sql import functions as F
 
     if var is not None:
@@ -1311,22 +1258,6 @@ def _with_time_column(out, times, var, strict: bool = False):
         "var", F.col("t").alias("t_idx"), "time_ns"
     ).distinct()
     time_col = F.timestamp_micros(F.expr("time_ns div 1000"))
-    if strict:
-        time_col = F.when(
-            F.col("time_ns").isNull(),
-            F.raise_error(F.concat(
-                F.lit("stream_virtual: t_idx "),
-                F.col("t_idx").cast("string"),
-                F.lit(" of var "), F.col("var"),
-                F.lit(
-                    " is not in the times sidecar snapshot — the "
-                    "manifest gained new timesteps after this stream "
-                    "was defined; restart it to pick up the new "
-                    "sidecar (file-source checkpointing resumes "
-                    "exactly-once)"
-                ),
-            )).cast("timestamp"),
-        ).otherwise(time_col)
     return (
         out.join(F.broadcast(tm), ["var", "t_idx"], "left")
         .withColumn("time", time_col)
@@ -1435,9 +1366,9 @@ def _broadcast_sidecar(spark, manifest_path: str, max_sidecar_bytes: int):
 
 
 def _chunk_scanner(bgrids, bounds):
-    """The per-task chunk decoder shared by ``read_virtual`` (batch)
-    and ``stream_virtual`` (micro-batch): manifest rows in, long grid
-    rows out, byte-range reads against the indexed files."""
+    """The per-task chunk decoder of ``read_virtual``: manifest rows
+    in, long grid rows out, byte-range reads against the indexed
+    files."""
     import pandas as pd
 
     from wrf_to_geodataframe_spark.sources.grib2 import read_grib2_bytes
@@ -1542,7 +1473,7 @@ def _chunk_scanner(bgrids, bounds):
                             f"{row.file}: coordinate grid "
                             f"{row.coord_hash} is not in the sidecar "
                             "snapshot — the manifest gained a new grid "
-                            "after this read/stream was defined; "
+                            "after this read was defined; "
                             "restart it to pick up the new sidecar"
                         )
                     yy, xx = np.meshgrid(

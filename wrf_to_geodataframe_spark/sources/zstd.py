@@ -1,6 +1,6 @@
-"""Zstandard (RFC 8878) frame decoder — the ``.warc.zst`` ingestion
-path (VERDICT r7 item #3: newer crawl tooling ships zstd-compressed
-WARCs; the classic Common Crawl layout is per-record gzip).
+"""Zstandard (RFC 8878) frame decoder — the ``zstd`` codec of the zarr
+v2/v3 chunk scans (``sources/zarr.py`` incl. blosc's zstd sub-codec,
+``sources/zarr3.py``).
 
 From-scratch pure-python/numpy implementation of the public RFC 8878
 format — no code derived from the zstd reference implementation; the
@@ -28,18 +28,13 @@ optional gated fast path for production decode:
   updates LL,ML,OF), repeat-offset history with the litlen-0 twist,
   overlap-safe match copy;
 - dictionaries: raw-content and structured (magic 0xEC30A437: Huffman
-  + OF/ML/LL entropy tables + initial repeat offsets + content), and
-  the warc-zstd convention of a leading skippable frame carrying the
-  (possibly itself zstd-compressed) dictionary.
+  + OF/ML/LL entropy tables + initial repeat offsets + content).
 
-Scale shape: one ``.warc.zst`` file is one Spark task
-(``sources/warc.py``); this module is the per-task kernel.  When the
-system libzstd is present it is preferred for bulk decode (gated, the
-sources/avif.py pattern) — the pure decoder remains the reference
-implementation and the correctness oracle for the binding.  Measured
-on this container: pure ~6 MB/s, libzstd ~400+ MB/s — a 1 GB crawl
-shard is libzstd territory; the pure path is for validation and for
-environments with no library at all.
+A gated binding to the system libzstd (``_lib_decompress``, the
+sources/avif.py pattern) is cross-validated against the pure decoder
+in ``tests/test_zstd.py``; the pure decoder is the reference
+implementation.  Measured on a 4-vCPU host: pure ~6 MB/s, libzstd
+~400+ MB/s.
 """
 
 from __future__ import annotations
@@ -766,39 +761,10 @@ def zstd_decompress(data: bytes, zdict: ZstdDict | bytes | None = None) -> bytes
             content, pos = _decode_frame(data, pos + 4, zdict)
         except (IndexError, struct.error) as exc:
             # malformed input must always surface as ZstdError — this
-            # path decodes UNTRUSTED crawl archives
+            # path decodes UNTRUSTED store chunks
             raise ZstdError(f"corrupt frame: {exc}") from exc
         parts.append(content)
     return b"".join(parts)
-
-
-def warc_zstd_decompress(data: bytes) -> bytes:
-    """Decode a ``.warc.zst`` file: per the IIPC warc-zstd convention,
-    a LEADING skippable frame (conventionally magic 0x184D2A5D)
-    carries the dictionary used by all following frames; the
-    dictionary payload may itself be a zstd frame.  Without a leading
-    skippable frame this is a plain multi-frame decode."""
-    zdict = None
-    pos = 0
-    if len(data) >= 8:
-        magic = struct.unpack_from("<I", data)[0]
-        if _MAGIC_SKIP_LO <= magic <= _MAGIC_SKIP_HI:
-            size = struct.unpack_from("<I", data, 4)[0]
-            payload = bytes(data[8:8 + size])
-            if (
-                len(payload) >= 4
-                and struct.unpack_from("<I", payload)[0] == _MAGIC
-            ):
-                payload = zstd_decompress(payload)
-            if payload:
-                zdict = ZstdDict(payload)
-            pos = 8 + size
-    if _LIB is not None:
-        try:
-            return _lib_decompress(bytes(data[pos:]), zdict)
-        except ZstdError:
-            pass  # fall through to the reference decoder
-    return zstd_decompress(data[pos:], zdict)
 
 
 def is_zstd(data: bytes) -> bool:
@@ -866,8 +832,8 @@ def _lib_decompress(data: bytes, zdict: ZstdDict | None) -> bytes:
     pos = 0
     n = len(data)
     # ONE ctypes copy of the archive; frames are addressed by pointer
-    # offset — slicing data[pos:] per frame would be O(n^2) across the
-    # many per-record frames of a .warc.zst
+    # offset — slicing data[pos:] per frame would be O(n^2) across
+    # many concatenated frames
     buf = ctypes.create_string_buffer(bytes(data), n)
     base = ctypes.addressof(buf)
     while pos < n:

@@ -1437,10 +1437,7 @@ def _bloom_positions(key, k: int = _BLOOM_K, m: int = _BLOOM_BITS):
 def bloom_word_table(keys: DataFrame, key_col: str = "key") -> DataFrame:
     """(widx, w): the FIXED-SIZE Bloom filter as 32-bit words — each
     key sets _BLOOM_K md5-derived bits via one partial-agg ``bit_or``
-    groupBy.  The ONE build implementation shared by the batch gate
-    (dedup_bloom_incremental) and the streaming screen
-    (streaming/dedup.bloom_words_static), so the bit arithmetic cannot
-    drift between them (the chunk_tokens discipline)."""
+    groupBy.  The build behind the ``dedup_bloom_incremental`` gate."""
     pos = keys.select(
         F.explode(
             F.array(*_bloom_positions(F.col(key_col)))
@@ -1464,8 +1461,7 @@ def bloom_probe(
     Groups on the COMPACT (group_cols, key) only (never the full row:
     payload columns would otherwise key the shuffle and the aggregate
     hash map, and byte-identical rows would silently merge); callers
-    join payload back by the group key.  Shared by batch and
-    streaming, like bloom_word_table."""
+    join payload back by the group key."""
     probes = df.select(
         *group_cols, key_col,
         F.explode(
@@ -3101,10 +3097,7 @@ def curate_v2(docs: DataFrame, target: int) -> DataFrame:
 
 def curate_clean(docs: DataFrame) -> DataFrame:
     """Stages 1-4 of the curation chain (quality -> repetition -> PII
-    scrub -> decontamination), PRE-dedup — factored out so the
-    streaming mirror's stream==batch equivalence test
-    (``tests/test_streaming.py``) can compare row-for-row against the
-    real batch operator, not a re-derivation."""
+    scrub -> decontamination), PRE-dedup."""
     text = F.col("text")
     toks = tokens(text)
     n_words = F.size(toks).cast("long")
@@ -4155,7 +4148,7 @@ def pca_project_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     relative), absorbed by the 2^-10 output quantization.
 
     The fit is EAGER by design (one bounded O(d^2) partials collect,
-    the kmeans/BPE discipline — exempted in the laziness plan test);
+    the BPE discipline — exempted in the laziness plan test);
     the projection + variance aggregate stays lazy."""
     from wrf_to_geodataframe_spark.operators.pca import (
         fit_pca,
@@ -4876,12 +4869,11 @@ def bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is exactly why classic BPE trains on the frequency dict.
 
     The per-round argmax is a BOUNDED driver collect — one row per
-    round, the same accepted pattern as the k-means codebook trainer
-    (``operators/kmeans.py``): iterative algorithms checkpoint their
-    O(1) control state on the driver while all data-sized work stays
-    distributed.  (A fully lazy formulation exists but its plan tree
-    doubles per round — measured 7 s of plan build + 15 s of repeated
-    subtree execution at sf0.1 vs ~3 s for this form.)"""
+    round: iterative algorithms checkpoint their O(1) control state on
+    the driver while all data-sized work stays distributed.  (A fully
+    lazy formulation exists but its plan tree doubles per round —
+    measured 7 s of plan build + 15 s of repeated subtree execution at
+    sf0.1 vs ~3 s for this form.)"""
     docs = _spread_docs(spark, sf_dir)
     rows = _bpe_train_merges(docs)
     return spark.createDataFrame(
@@ -5331,9 +5323,7 @@ def url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     genuine collisions exist and the hash match exercises every
     normalization rule, not a vacuous identity map.
 
-    Canonicalization lives in ``functions/urls.canonical_url`` and is
-    SHARED with the streaming form (``streaming/urls.py``) so batch
-    and stream semantics cannot drift.
+    Canonicalization lives in ``functions/urls.canonical_url``.
 
     Scale shape: pure JVM string/array expressions inside whole-stage
     codegen (regexp_extract / split / filter / array_sort — no Python),
@@ -6103,19 +6093,13 @@ def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     not a stride multiple.  Entirely codegen array HOFs — split once,
     generate starts with ``sequence``, slice per start — no UDFs, no
     shuffle (per-row explode only), so it streams through 100 TB of
-    documents at scan speed.  The transform itself (chunk_tokens) is
-    STATELESS and stream-legal: streaming/chunk.py wraps the same
-    function over readStream for ingest-time chunking, with a
-    stream==batch equivalence test."""
+    documents at scan speed."""
     docs = _spread_docs(spark, sf_dir)
     return chunk_tokens(docs)
 
 
 def chunk_tokens(docs: DataFrame, w: int = 32, s: int = 24) -> DataFrame:
-    """The shared chunking transform over any (doc_id, text) frame —
-    batch gate and streaming mirror both call THIS, so the window
-    semantics can never drift between them (the curate_clean
-    pattern)."""
+    """The chunking transform over any (doc_id, text) frame."""
     toks = tokens(F.col("text"))
     d = docs.select("doc_id", toks.alias("toks")).withColumn(
         "g", F.greatest(F.size("toks") - w, F.lit(0)).cast("bigint")
@@ -6167,12 +6151,8 @@ FROM st
 def holdout_split(text_col) -> "F.Column":
     """The CONTENT-hash train/val/test assignment (``hash60(text) %
     100``: <90 train, <95 val, else test) as one codegen expression —
-    the SHARED rule between the batch ``pipeline_split_holdout`` gate
-    and ``streaming/curate.stream_split_holdout``, so an arriving
-    document gets the identical split at ingest that a batch pass
-    would assign (same text => same bucket, stream or batch; factored
-    like chunk_tokens/curate_clean so the two surfaces cannot
-    drift)."""
+    the rule of the ``pipeline_split_holdout`` gate (same text => same
+    bucket)."""
     from wrf_to_geodataframe_spark.functions.text import hash60
 
     bucket = F.pmod(hash60(text_col), F.lit(100))
