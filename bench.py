@@ -91,10 +91,10 @@ def main() -> None:
     n_passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "2"))
     for _ in range(max(1, n_passes)):
         pass_t: dict[str, float] = {}
-        # fixed alphabetical order: all_queries() deliberately front-loads
-        # never-driver-checked entries for the correctness sampler, which
-        # would otherwise shift residual-warm-up cost between rounds and
-        # make per-query timings incomparable round-over-round
+        # fixed alphabetical order: __spark_entry__.queries() deliberately
+        # front-loads never-checked entries for the correctness sampler,
+        # which would otherwise shift residual-warm-up cost between
+        # rounds and make per-query timings incomparable round-over-round
         for name, fn in sorted(qs.items()):
             t0 = time.time()
             try:

@@ -7,9 +7,9 @@ physical floats and ``_FillValue``/``missing_value`` matches into NaN.
 Every S1 scan path must agree on that decode:
 
 - whole-file driver reads (classic + NetCDF-4/HDF5),
-- record-slab parallel scan of one classic file,
-- chunk-parallel scan of one NetCDF-4 file,
-- the virtual (kerchunk-style) manifest layer.
+- the per-file ``binaryFile`` scan of a classic file,
+- the virtual (kerchunk-style) manifest layer, which is also the
+  chunk-parallel scan of one NetCDF-4 file (a one-file manifest).
 """
 
 from __future__ import annotations
@@ -19,10 +19,13 @@ import pytest
 
 from wrf_to_geodataframe_spark.sources.netcdf import (
     cf_mask_and_scale,
-    read_netcdf_chunks,
+    read_netcdf_dir,
     read_netcdf_grid,
-    read_netcdf_slabs,
     write_netcdf,
+)
+from wrf_to_geodataframe_spark.sources.virtual import (
+    build_virtual_manifest,
+    read_virtual,
 )
 
 SF, AO, FILL = 0.01, 270.0, -32767
@@ -176,9 +179,7 @@ def test_classic_slab_scan_matches_driver_read(spark, tmp_path):
             "XLONG": {"dims": ["y", "x"], "data": lon},
         },
     )
-    rows = read_netcdf_slabs(
-        spark, p, "T2", "XLAT", "XLONG", records_per_slab=2
-    ).collect()
+    rows = read_netcdf_dir(spark, p, "T2", "XLAT", "XLONG").collect()
     _check(rows, _expected(raw))
 
 
@@ -222,8 +223,10 @@ def test_netcdf4_chunk_scan_matches_driver_read(spark, tmp_path):
         compress=True,
         chunk={"T2": (2, 2, 3)},
     )
-    rows = read_netcdf_chunks(spark, p, "T2", "XLAT", "XLONG").collect()
-    _check(rows, _expected(raw))
+    man = build_virtual_manifest(
+        spark, [p], "T2", "XLAT", "XLONG", str(tmp_path / "man")
+    )
+    _check(read_virtual(spark, man).collect(), _expected(raw))
 
 
 def test_netcdf4_ea_chunk_scan_applies_packing(spark, tmp_path):
@@ -249,16 +252,14 @@ def test_netcdf4_ea_chunk_scan_applies_packing(spark, tmp_path):
         chunk={"T2": (1, 2, 4)},
         unlimited="t",
     )
-    rows = read_netcdf_chunks(spark, p, "T2", "XLAT", "XLONG").collect()
-    _check(rows, _expected(raw))
+    man = build_virtual_manifest(
+        spark, [p], "T2", "XLAT", "XLONG", str(tmp_path / "man")
+    )
+    _check(read_virtual(spark, man).collect(), _expected(raw))
 
 
 def test_virtual_manifest_applies_packing(spark, tmp_path):
     from wrf_to_geodataframe_spark.sources.hdf5_write import write_netcdf4
-    from wrf_to_geodataframe_spark.sources.virtual import (
-        build_virtual_manifest,
-        read_virtual,
-    )
 
     nt, ny, nx = 3, 4, 4
     lat, lon = _coords(ny, nx)

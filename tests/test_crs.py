@@ -1679,6 +1679,8 @@ _TRANSFORMS = {
     "to_crs_27700": (lambda d, a, b: _C.to_crs(d, "EPSG:27700", a, b), _LL),
     "from_crs_32630": (lambda d, a, b: _C.from_crs(d, "EPSG:32630", a, b),
                        _XY),
+    "from_crs_27700": (lambda d, a, b: _C.from_crs(d, "EPSG:27700", a, b),
+                       _XY),
     "lonlat_to_lcc": (lambda d, a, b: _C.lonlat_to_lcc(
         d, a, b, 30.0, 60.0, 40.0, -2.0), _LL),
     "lcc_to_lonlat": (lambda d, a, b: _C.lcc_to_lonlat(
@@ -1764,3 +1766,46 @@ def test_transforms_keep_caller_underscore_columns(spark, name):
     fn, names = _TRANSFORMS[name]
     out = fn(_transform_input(spark), *map(F.col, names))
     assert "_id" in out.columns
+
+
+def _staged_names(monkeypatch, fn, df, names) -> list:
+    """The column names ``fn`` passes to ``withColumns``/``withColumn``
+    while building its frame."""
+    cls = type(df)
+    seen: list = []
+    with_columns, with_column = cls.withColumns, cls.withColumn
+
+    def _many(self, *cols_map):
+        for m in cols_map:
+            seen.extend(m)
+        return with_columns(self, *cols_map)
+
+    def _one(self, name, col):
+        seen.append(name)
+        return with_column(self, name, col)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(cls, "withColumns", _many)
+        mp.setattr(cls, "withColumn", _one)
+        fn(df, *names)
+    return seen
+
+
+@pytest.mark.parametrize("name", sorted(_TRANSFORMS))
+def test_temporaries_never_overwrite_caller_columns(spark, monkeypatch, name):
+    """A caller column named like any temporary the transform stages
+    (``_phi``, ``_rho``, ``_px``, ``_ll``, ...) comes out unchanged, and
+    the transform's outputs equal a run without those columns."""
+    fn, names = _TRANSFORMS[name]
+    df = _transform_input(spark)
+    plain = fn(df, *names)
+    temps = [
+        c for c in dict.fromkeys(_staged_names(monkeypatch, fn, df, names))
+        if c not in plain.columns
+    ]
+    sentinels = {c: F.lit(-1000.0 - k) for k, c in enumerate(temps)}
+    out = fn(df.withColumns(sentinels), *names) if temps else plain
+    for k, c in enumerate(temps):
+        assert {r[0] for r in out.select(c).collect()} == {-1000.0 - k}, c
+    got = out.select(*plain.columns).orderBy("_id").collect()
+    assert repr(got) == repr(plain.orderBy("_id").collect())

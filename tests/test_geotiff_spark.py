@@ -1,5 +1,5 @@
 """Spark surfaces of the GeoTIFF source: tile-parallel single-file
-scan vs driver read, directory scan, nodata -> NaN semantics."""
+scan vs driver read, nodata -> NaN semantics."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from wrf_to_geodataframe_spark.sources.geotiff import (
-    read_geotiff_dir,
     read_geotiff_dist,
     read_geotiff_grid,
     write_geotiff,
@@ -90,18 +89,3 @@ def test_dist_overview_level(spark, tmp_path):
         assert v == arr[2 * y, 2 * x]
         assert lon == 10.0 + 0.5 * x
         assert lat == 60.0 - 0.5 * y
-
-
-def test_dir_scan_matches_union(spark, tmp_path):
-    d = tmp_path / "scenes"
-    os.makedirs(d)
-    arrays = {}
-    for k in range(3):
-        _p, arr = _raster(d, name=f"scene_{k}.tif", h=16, w=16)
-        arrays[f"scene_{k}.tif"] = arr
-    df = read_geotiff_dir(spark, str(d))
-    rows = df.collect()
-    assert len(rows) == 3 * 16 * 16
-    for r in rows:
-        base = os.path.basename(r["file"])
-        assert r["value"] == arrays[base][r["y_idx"], r["x_idx"]]

@@ -80,38 +80,6 @@ def test_dir_scan_runs_one_task_per_file(spark, tmp_path):
     assert df.count() == 4 * 2 * 4 * 5
 
 
-def test_msgs_scan_matches_grid_read(spark, tmp_path):
-    """Message-parallel single-file scan == driver unnest; byte-range
-    index covers the whole file with one entry per message."""
-    from wrf_to_geodataframe_spark.sources.grib2 import (
-        read_grib2_msgs,
-        scan_grib2_offsets,
-    )
-
-    d = str(tmp_path / "one")
-    _archive(d, nfiles=1, nmsg=6, nj=5, ni=7)
-    p = os.path.join(d, "cycle_0.grib2")
-    idx = scan_grib2_offsets(p)
-    assert [i for i, _o, _l in idx] == list(range(6))
-    assert idx[0][1] == 0
-    assert all(
-        idx[k][1] + idx[k][2] == idx[k + 1][1] for k in range(5)
-    )
-    assert idx[-1][1] + idx[-1][2] == os.path.getsize(p)
-    dist = read_grib2_msgs(spark, p)
-    assert dist.rdd.getNumPartitions() > 1
-    got = {
-        (r["msg_idx"], r["y_idx"], r["x_idx"]): r["value"]
-        for r in dist.collect()
-    }
-    drv = {
-        (r["msg_idx"], r["y_idx"], r["x_idx"]): r["value"]
-        for r in read_grib2_grid(spark, p).collect()
-    }
-    assert got == drv
-    assert len(got) == 6 * 5 * 7
-
-
 def test_dir_scan_aggregates(spark, tmp_path):
     d = str(tmp_path / "arch")
     _archive(d, nfiles=2, nmsg=1, nj=3, ni=3)

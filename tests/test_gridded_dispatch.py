@@ -1,5 +1,6 @@
 """``time_index`` dispatch on every chunk-parallel gridded scan
-(zarr v2, zarr v3, chunked NetCDF-4) + consolidated zarr metadata."""
+(zarr v2, zarr v3; the chunked NetCDF-4 file checks the driver read's
+range error) + consolidated zarr metadata."""
 
 from __future__ import annotations
 
@@ -79,7 +80,6 @@ def test_dispatch_time_index_every_chunk_scan(spark, tmp_path):
     """time_index selects one step on every chunk-parallel route —
     zarr v3 included (it used to be dropped there, returning all
     three steps)."""
-    from wrf_to_geodataframe_spark.sources.netcdf import read_netcdf_chunks
     from wrf_to_geodataframe_spark.sources.zarr import read_zarr_dist
     from wrf_to_geodataframe_spark.sources.zarr3 import read_zarr3_dist
 
@@ -87,11 +87,10 @@ def test_dispatch_time_index_every_chunk_scan(spark, tmp_path):
     readers = {
         "zarr2": read_zarr_dist,
         "zarr3": read_zarr3_dist,
-        "netcdf": read_netcdf_chunks,
     }
-    for fmt, path in paths.items():
-        rows = readers[fmt](
-            spark, path, "T2", "XLAT", "XLONG", time_index=1
+    for fmt, reader in readers.items():
+        rows = reader(
+            spark, paths[fmt], "T2", "XLAT", "XLONG", time_index=1
         ).collect()
         assert len(rows) == 16, fmt
         assert {r["t_idx"] for r in rows} == {1}, fmt
@@ -101,12 +100,9 @@ def test_dispatch_time_index_every_chunk_scan(spark, tmp_path):
 
 def test_out_of_range_time_index_named_error(spark, tmp_path):
     """An out-of-range time_index raises the same named ValueError,
-    giving the valid range, on all three chunk scans and the driver
+    giving the valid range, on both zarr chunk scans and the driver
     read — before any Spark job runs."""
-    from wrf_to_geodataframe_spark.sources.netcdf import (
-        read_netcdf_chunks,
-        read_netcdf_grid,
-    )
+    from wrf_to_geodataframe_spark.sources.netcdf import read_netcdf_grid
     from wrf_to_geodataframe_spark.sources.zarr import read_zarr_dist
     from wrf_to_geodataframe_spark.sources.zarr3 import read_zarr3_dist
 
@@ -114,7 +110,6 @@ def test_out_of_range_time_index_named_error(spark, tmp_path):
     readers = [
         (read_zarr_dist, paths["zarr2"]),
         (read_zarr3_dist, paths["zarr3"]),
-        (read_netcdf_chunks, paths["netcdf"]),
         (read_netcdf_grid, paths["netcdf"]),
     ]
     for reader, path in readers:

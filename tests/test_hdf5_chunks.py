@@ -1,7 +1,8 @@
-"""Chunk-parallel single-file NetCDF-4/HDF5 scan
-(sources/netcdf.py::read_netcdf_chunks + sources/hdf5.py::
-hdf5_chunk_manifest): manifest correctness, dist == driver equality
-over compressed chunked and contiguous layouts, time selection."""
+"""Chunk-parallel single-file NetCDF-4/HDF5 scan (sources/hdf5.py::
+hdf5_chunk_manifest behind a one-file virtual manifest,
+sources/virtual.py::read_virtual): manifest correctness, dist ==
+driver equality over compressed chunked and contiguous layouts, time
+selection."""
 
 from __future__ import annotations
 
@@ -12,7 +13,18 @@ from wrf_to_geodataframe_spark.sources.hdf5 import (
     read_netcdf_any,
 )
 from wrf_to_geodataframe_spark.sources.hdf5_write import write_netcdf4
-from wrf_to_geodataframe_spark.sources.netcdf import read_netcdf_chunks
+from wrf_to_geodataframe_spark.sources.virtual import (
+    build_virtual_manifest,
+    read_virtual,
+)
+
+
+def _scan(spark, tmp_path, p, var, time_range=None):
+    """Chunk-parallel scan of one file: a one-file virtual manifest."""
+    man = build_virtual_manifest(
+        spark, [p], var, "XLAT", "XLONG", str(tmp_path / "man")
+    )
+    return read_virtual(spark, man, time_range=time_range)
 
 
 def _write_file(path: str, nt=5, ny=9, nx=11, compress=True, chunk=None):
@@ -55,7 +67,7 @@ def test_manifest_lists_every_chunk(tmp_path):
 def test_chunks_scan_matches_whole_file_read(spark, tmp_path):
     p = str(tmp_path / "b.nc")
     vals = _write_file(p, compress=True, chunk=(2, 4, 4))
-    df = read_netcdf_chunks(spark, p, "T2", "XLAT", "XLONG")
+    df = _scan(spark, tmp_path, p, "T2")
     assert df.rdd.getNumPartitions() > 1
     rows = df.collect()
     assert len(rows) == 5 * 9 * 11
@@ -75,7 +87,7 @@ def test_chunks_scan_contiguous_pseudo_chunk(spark, tmp_path):
     assert man["chunks"] == (2, 4, 6)
     assert len(man["entries"]) == 1
     assert man["filters"] == []
-    df = read_netcdf_chunks(spark, p, "T2", "XLAT", "XLONG")
+    df = _scan(spark, tmp_path, p, "T2")
     got = {
         (r["t_idx"], r["y_idx"], r["x_idx"]): r["value"]
         for r in df.collect()
@@ -88,7 +100,7 @@ def test_chunks_scan_contiguous_pseudo_chunk(spark, tmp_path):
 def test_chunks_scan_time_index(spark, tmp_path):
     p = str(tmp_path / "d.nc")
     vals = _write_file(p, compress=True, chunk=(2, 4, 4))
-    df = read_netcdf_chunks(spark, p, "T2", "XLAT", "XLONG", time_index=3)
+    df = _scan(spark, tmp_path, p, "T2", time_range=(3, 3))
     rows = df.collect()
     assert len(rows) == 9 * 11
     assert {r["t_idx"] for r in rows} == {3}
@@ -99,7 +111,7 @@ def test_chunks_scan_time_index(spark, tmp_path):
 def test_chunks_scan_2d_variable(spark, tmp_path):
     p = str(tmp_path / "e.nc")
     _write_file(p, compress=True, chunk=(2, 4, 4))
-    df = read_netcdf_chunks(spark, p, "XLAT", "XLAT", "XLONG")
+    df = _scan(spark, tmp_path, p, "XLAT")
     rows = df.collect()
     assert len(rows) == 9 * 11
     assert {r["t_idx"] for r in rows} == {0}
@@ -155,7 +167,7 @@ def test_chunk_manifest_szip_written_file(spark, tmp_path):
     )
     man = hdf5_chunk_manifest(p, "T2")
     assert [f[0] for f in man["filters"]] == [4]
-    df = read_netcdf_chunks(spark, p, "T2", "XLAT", "XLONG")
+    df = _scan(spark, tmp_path, p, "T2")
     rows = df.collect()
     assert len(rows) == 4 * 8 * 9
     for r in rows:

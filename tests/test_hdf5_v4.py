@@ -247,8 +247,9 @@ def test_manifest_and_chunk_scan_support_v4(tmp_path, spark):
     """The kerchunk manifest + the chunk-parallel scan work on a
     v4 fixed-array file exactly as on v1-B-tree files."""
     from wrf_to_geodataframe_spark.sources.hdf5 import hdf5_chunk_manifest
-    from wrf_to_geodataframe_spark.sources.netcdf import (
-        read_netcdf_chunks,
+    from wrf_to_geodataframe_spark.sources.virtual import (
+        build_virtual_manifest,
+        read_virtual,
     )
 
     ny, nx = 4, 6
@@ -286,7 +287,10 @@ def test_manifest_and_chunk_scan_support_v4(tmp_path, spark):
     man = hdf5_chunk_manifest(p, "T2", aux_vars=("XLAT", "XLONG"))
     assert man["chunks"] == (2, 3)
     assert len(man["entries"]) == 4
-    rows = read_netcdf_chunks(spark, p, "T2", "XLAT", "XLONG").collect()
+    vman = build_virtual_manifest(
+        spark, [p], "T2", "XLAT", "XLONG", str(tmp_path / "man")
+    )
+    rows = read_virtual(spark, vman).collect()
     assert len(rows) == ny * nx
     for r in rows:
         assert r["value"] == r["y_idx"] * nx + r["x_idx"]
@@ -695,8 +699,9 @@ def test_ea_manifest_and_chunk_scan(tmp_path, spark):
     from wrf_to_geodataframe_spark.sources.hdf5 import (
         hdf5_chunk_manifest,
     )
-    from wrf_to_geodataframe_spark.sources.netcdf import (
-        read_netcdf_chunks,
+    from wrf_to_geodataframe_spark.sources.virtual import (
+        build_virtual_manifest,
+        read_virtual,
     )
 
     ny, nx = 4, 6
@@ -736,7 +741,10 @@ def test_ea_manifest_and_chunk_scan(tmp_path, spark):
     assert sorted(e[0] for e in man["entries"]) == [
         (0, 0), (0, 3), (2, 0), (2, 3)
     ]
-    rows = read_netcdf_chunks(spark, p, "T2", "XLAT", "XLONG").collect()
+    vman = build_virtual_manifest(
+        spark, [p], "T2", "XLAT", "XLONG", str(tmp_path / "man")
+    )
+    rows = read_virtual(spark, vman).collect()
     assert len(rows) == ny * nx
     for r in rows:
         assert r["value"] == r["y_idx"] * nx + r["x_idx"]

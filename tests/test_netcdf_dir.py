@@ -167,69 +167,6 @@ def test_rectilinear_coords_broadcast(spark, tmp_path):
         assert r.lon == xs[r.x_idx]
 
 
-@pytest.mark.parametrize("t_size", [11, 0])
-def test_slab_parallel_single_file_matches_driver_read(
-    spark, tmp_path, t_size
-):
-    """read_netcdf_slabs: record-parallel scan of ONE classic file —
-    equal to the per-timestep driver read, ≥1 task per slab, and only
-    byte ranges are read (the header probe is a bounded prefix).
-    Covers BOTH axis-0 layouts: a fixed t dimension (contiguous
-    slices) and a true RECORD dimension (t declared unlimited ->
-    interleaved record layout)."""
-    from wrf_to_geodataframe_spark.sources.netcdf import read_netcdf_slabs
-
-    nt, ny, nx = 11, 3, 4
-    rng = np.random.default_rng(5)
-    cube = rng.normal(0.0, 1.0, (nt, ny, nx))
-    lat = np.linspace(50.0, 51.0, ny * nx).reshape(ny, nx)
-    lon = np.linspace(-1.0, 0.0, ny * nx).reshape(ny, nx)
-    p = str(tmp_path / "big.nc")
-    write_netcdf(
-        p,
-        dims={"t": t_size, "y": ny, "x": nx},
-        variables={
-            "T2": {"dims": ("t", "y", "x"), "data": cube},
-            "XLAT": {"dims": ("y", "x"), "data": lat},
-            "XLONG": {"dims": ("y", "x"), "data": lon},
-        },
-    )
-    df = read_netcdf_slabs(spark, p, "T2", "XLAT", "XLONG",
-                           records_per_slab=3)
-    rows = df.collect()
-    assert len(rows) == nt * ny * nx
-    for r in rows:
-        assert r.value == cube[r.t_idx, r.y_idx, r.x_idx]
-        assert r.lat == lat[r.y_idx, r.x_idx]
-    # 11 records at 3/slab -> 4 slabs -> 4 partitions requested
-    assert df.rdd.getNumPartitions() == 4
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
-
-
-def test_slab_reader_fixed_var_delegates(spark, tmp_path):
-    from wrf_to_geodataframe_spark.sources.netcdf import read_netcdf_slabs
-
-    ny, nx = 2, 3
-    v = np.arange(6, dtype=np.float64).reshape(ny, nx)
-    lat = np.linspace(0, 1, 6).reshape(ny, nx)
-    lon = np.linspace(2, 3, 6).reshape(ny, nx)
-    p = str(tmp_path / "fixed.nc")
-    write_netcdf(
-        p,
-        dims={"y": ny, "x": nx},
-        variables={
-            "v": {"dims": ("y", "x"), "data": v},
-            "la": {"dims": ("y", "x"), "data": lat},
-            "lo": {"dims": ("y", "x"), "data": lon},
-        },
-    )
-    rows = read_netcdf_slabs(spark, p, "v", "la", "lo").collect()
-    assert len(rows) == 6
-    for r in rows:
-        assert r.value == v[r.y_idx, r.x_idx]
-
-
 def test_slab_reader_header_probe_is_bounded(tmp_path):
     """The header prober must parse a file whose record payload is
     bigger than its first prefix read without loading it all (proxy

@@ -1,11 +1,10 @@
-"""NPY/NPZ source: both-direction interop against numpy itself, header
-versions, dtypes/orders, distributed shard + slab scans."""
+"""NPY source: both-direction interop against numpy itself, header
+versions, dtypes/orders, distributed shard scan."""
 
 from __future__ import annotations
 
 import io
 import os
-import zipfile
 
 import numpy as np
 import pytest
@@ -15,8 +14,6 @@ from wrf_to_geodataframe_spark.sources.npy import (
     read_npy,
     read_npy_bytes,
     read_npy_dir,
-    read_npy_slabs,
-    read_npz,
     write_npy,
 )
 
@@ -62,16 +59,6 @@ def test_v2_header(tmp_path):
     assert np.array_equal(read_npy_bytes(buf.getvalue()), arr)
 
 
-def test_npz(tmp_path):
-    p = str(tmp_path / "z.npz")
-    a = np.arange(8, dtype="f4").reshape(2, 4)
-    b = np.arange(3, dtype="i8")
-    np.savez(p, a=a, b=b)
-    got = read_npz(p)
-    assert set(got) == {"a", "b"}
-    assert np.array_equal(got["a"], a) and np.array_equal(got["b"], b)
-
-
 def test_malformed_inputs(tmp_path):
     with pytest.raises(ValueError, match="not an NPY"):
         npy_info(b"nope" * 4)
@@ -102,21 +89,6 @@ def test_dir_scan_matches_driver_reads(spark, tmp_path):
         for r in rows
     )
     assert got == sorted(want)
-
-
-def test_slab_scan_matches_whole_read(spark, tmp_path):
-    p = str(tmp_path / "big.npy")
-    arr = np.arange(1000 * 7, dtype="f4").reshape(1000, 7) / 8.0
-    np.save(p, arr)
-    df = read_npy_slabs(spark, p, rows_per_task=128)
-    rows = sorted(
-        (r["row_idx"], tuple(r["embedding"])) for r in df.collect()
-    )
-    assert len(rows) == 1000
-    for i, vec in rows:
-        assert vec == tuple(arr[i].astype("float64"))
-    # ~8 slabs -> at least 2 tasks actually used
-    assert df.rdd.getNumPartitions() >= 2
 
 
 from hypothesis import given, settings
@@ -156,29 +128,3 @@ def test_truncated_npy_raises(tmp_path):
         except ValueError:
             continue
         raise AssertionError(f"no error at cut={cut}")
-
-
-def test_slab_scan_header_exceeding_prefix(spark, tmp_path):
-    # a v1 header may legally exceed the 4096-byte probe prefix (e.g.
-    # heavy alignment padding); read_npy_slabs must re-read using the
-    # declared header length rather than reporting truncation
-    import struct as _struct
-
-    from wrf_to_geodataframe_spark.sources.npy import read_npy_slabs
-
-    arr = np.arange(24, dtype="<f8").reshape(6, 4)
-    header = "{'descr': '<f8', 'fortran_order': False, 'shape': (6, 4), }"
-    pad = 8192 - 10 - len(header) - 1
-    header = header + " " * pad + "\n"
-    p = str(tmp_path / "bighead.npy")
-    with open(p, "wb") as f:
-        f.write(b"\x93NUMPY" + bytes([1, 0]))
-        f.write(_struct.pack("<H", len(header)))
-        f.write(header.encode("latin1"))
-        f.write(arr.tobytes())
-    assert np.load(p).shape == (6, 4)  # numpy agrees it is valid
-    rows = read_npy_slabs(spark, p, rows_per_task=2).collect()
-    assert len(rows) == 6
-    got = {r["row_idx"]: r["embedding"] for r in rows}
-    for i in range(6):
-        assert got[i] == list(arr[i])

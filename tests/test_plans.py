@@ -543,43 +543,6 @@ def test_graph_triangles_all_equi_joins(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_render_cells_plan_explode_not_join(spark):
-    """S5 renderer plan shape: tile assignment is a per-row EXPLODE of
-    the bbox-overlapping tile range — never a join against a tile
-    table — so the only joins in the plan are the deliberate 1-row
-    broadcast extent crossJoin; the groupBy(ty, tx) is the single
-    data shuffle."""
-    from pyspark.sql import functions as F
-
-    from wrf_to_geodataframe_spark.sources.render import render_cells
-
-    cells = spark.range(100).select(
-        F.col("id").alias("cell_id"),
-        F.array(
-            F.col("id").cast("double"),
-            F.col("id").cast("double") + 1,
-            F.col("id").cast("double") + 1,
-            F.col("id").cast("double"),
-        ).alias("xs"),
-        F.array(
-            F.lit(0.0), F.lit(0.0), F.lit(1.0), F.lit(1.0)
-        ).alias("ys"),
-        F.col("id").cast("double").alias("v"),
-    )
-    df = render_cells(
-        spark, cells, "v", (0.25, 0.25, 0.0, 0.0), 400, 4,
-        order_col="cell_id",
-    )
-    plan = _plan(df)
-    assert "CartesianProduct" not in plan
-    assert plan.count("Generate explode") == 2  # ty and tx ranges
-    # the only join is the deliberate 1-row broadcast extent crossJoin
-    assert plan.count("BroadcastNestedLoopJoin") <= 1
-    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
-    # one data shuffle: the groupBy(ty, tx)
-    assert plan.count("Exchange hashpartitioning") == 1
-
-
 def test_nearest_station_broadcasts_tiny_dim(spark):
     """j7's scale property: the station dimension is broadcast (never
     a shuffle-side join), the arg-min is a partial-aggregable

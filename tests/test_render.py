@@ -1,7 +1,7 @@
 """S5 plot sink (sources/render.py): scanline rasterization vs the
-even-odd PIP kernel, tile-parallel == single-image, deterministic
-colormap, PNG validity through the repo's own codec, and the pixel
-guard mirroring the reference's smallness check."""
+even-odd PIP kernel, deterministic colormap, the grid renderer's
+nodata, constant-field and off-canvas rules, PNG validity through the
+repo's own codec, and the tile pyramid."""
 
 from __future__ import annotations
 
@@ -13,9 +13,6 @@ from wrf_to_geodataframe_spark.sources.png import decode_png
 from wrf_to_geodataframe_spark.sources.render import (
     colormap_rgb,
     rasterize_polygon,
-    render_cells,
-    render_cells_png,
-    world_file,
 )
 
 
@@ -82,123 +79,63 @@ def test_rasterizer_concave_even_odd():
     assert full[1, 1]
 
 
-def _cells_df(spark):
-    # 2x2 unit squares tiling [0,2)x[0,2), distinct values
-    rows = []
-    for j in range(2):
-        for i in range(2):
-            rows.append((
-                j * 2 + i,
-                [float(i), float(i + 1), float(i + 1), float(i)],
-                [float(j), float(j), float(j + 1), float(j + 1)],
-                float(j * 2 + i),
-            ))
+def _grid_df(spark, rows):
+    import pandas as pd
+
     return spark.createDataFrame(
-        rows, "cell_id long, xs array<double>, ys array<double>, v double"
+        pd.DataFrame(rows, columns=["y_idx", "x_idx", "value"])
     )
 
 
-def test_tiles_stitch_to_single_image(spark):
-    """Tile-parallel render (3px tiles forcing seams through cell
-    interiors) stitches EXACTLY to the one-tile render — the
-    distributed==single discipline."""
-    cells = _cells_df(spark)
-    transform = (0.25, 0.25, 0.0, 0.0)
-    png_tiled, wf = render_cells_png(
-        spark, cells, "v", transform, 8, 8, tile=3, order_col="cell_id"
-    )
-    png_one, _ = render_cells_png(
-        spark, cells, "v", transform, 8, 8, tile=64, order_col="cell_id"
-    )
-    assert png_tiled == png_one
-    w, h, ch, raw = decode_png(png_one)
-    assert (w, h, ch) == (8, 8, 4)
-    img = np.frombuffer(raw, "uint8").reshape(8, 8, 4)
-    # full coverage: a tessellation leaves no background pixels
-    assert (img[:, :, 3] == 255).all()
-    # distinct quadrant colors; value order follows the colormap ramp
-    q = {(0, 0): img[1, 1], (0, 1): img[1, 6],
-         (1, 0): img[6, 1], (1, 1): img[6, 6]}
-    assert len({tuple(v) for v in q.values()}) == 4
-    assert tuple(q[(0, 0)][:3]) == (68, 1, 84)     # v=0 -> first anchor
-    assert tuple(q[(1, 1)][:3]) == (253, 231, 37)  # v=3 -> last anchor
-    # world file: pixel size + center-of-first-pixel origin
-    lines = wf.strip().splitlines()
-    assert float(lines[0]) == 0.25 and float(lines[3]) == 0.25
-    assert float(lines[4]) == 0.125 and float(lines[5]) == 0.125
+def _render_image(spark, grid, width, height, tile):
+    """``render_grid`` tiles stitched into one (height, width, 4) RGBA
+    array."""
+    from wrf_to_geodataframe_spark.sources.render import render_grid
 
-
-def test_render_tiles_dataframe_shape(spark):
-    cells = _cells_df(spark)
-    tiles = render_cells(
-        spark, cells, "v", (0.25, 0.25, 0.0, 0.0), 8, 8, tile=4,
-        order_col="cell_id",
-    ).collect()
-    assert sorted((r["tile_y"], r["tile_x"]) for r in tiles) == [
-        (0, 0), (0, 1), (1, 0), (1, 1)
-    ]
-    for r in tiles:
-        w, h, ch, _raw = decode_png(bytes(r["png"]))
-        assert (w, h, ch) == (4, 4, 4)
+    img = np.zeros((height, width, 4), dtype="uint8")
+    for r in render_grid(
+        spark, grid, width=width, height=height, tile=tile
+    ).collect():
+        w, h, ch, raw = decode_png(bytes(r["png"]))
+        img[r["tile_y"] * tile:r["tile_y"] * tile + h,
+            r["tile_x"] * tile:r["tile_x"] * tile + w] = (
+            np.frombuffer(raw, "uint8").reshape(h, w, ch)
+        )
+    return img
 
 
 def test_off_canvas_cells_are_dropped_not_exploded(spark):
-    """A cell whose bbox lies entirely off-canvas must not render:
-    F.sequence descends when start > stop, so without the pre-explode
-    filter a right/below cell generated the whole descending tile
-    range (negative tile dims -> crash) and an above/left cell painted
-    the wrong part of the image via negative indexing."""
-    base = _cells_df(spark)
-    extra = spark.createDataFrame(
-        [
-            # entirely right+below of the 8x8 canvas (pixel 0.25)
-            (10, [9.0, 10.0, 10.0, 9.0], [9.0, 9.0, 10.0, 10.0], 1.5),
-            # entirely left+above (negative world coords)
-            (11, [-5.0, -4.0, -4.0, -5.0], [-5.0, -5.0, -4.0, -4.0], 1.5),
-        ],
-        "cell_id long, xs array<double>, ys array<double>, v double",
-    )
-    transform = (0.25, 0.25, 0.0, 0.0)
-    png_with, _ = render_cells_png(
-        spark, base.unionByName(extra), "v", transform, 8, 8,
-        tile=3, order_col="cell_id",
-    )
-    png_without, _ = render_cells_png(
-        spark, base, "v", transform, 8, 8, tile=3, order_col="cell_id"
-    )
-    # off-canvas cells are inside [vmin, vmax] of the on-canvas values
+    """A cell whose index lies entirely off-canvas must not render nor
+    land in a tile: right/below and left/above (negative) cells are
+    filtered before tiling, so the image is the on-canvas image."""
+    base = [(y, x, float(y * 2 + x)) for y in range(2) for x in range(2)]
+    # off-canvas values are inside [vmin, vmax] of the on-canvas values
     # so the colormap scaling is unchanged -> images identical
-    assert png_with == png_without
+    extra = [(9, 9, 1.5), (-5, -5, 1.5)]
+    with_extra = _render_image(spark, _grid_df(spark, base + extra), 2, 2, 3)
+    without = _render_image(spark, _grid_df(spark, base), 2, 2, 3)
+    assert (with_extra == without).all()
 
 
 def test_tile_pyramid_rejects_odd_tile_size(spark):
-    from wrf_to_geodataframe_spark.sources.render import build_tile_pyramid
-
-    cells = _cells_df(spark)
-    tiles = render_cells(
-        spark, cells, "v", (0.25, 0.25, 0.0, 0.0), 8, 8, tile=4,
-        order_col="cell_id",
+    from wrf_to_geodataframe_spark.sources.render import (
+        build_tile_pyramid,
+        render_grid,
     )
+
+    grid = _grid_df(
+        spark, [(y, x, float(y * 8 + x)) for y in range(8) for x in range(8)]
+    )
+    tiles = render_grid(spark, grid, width=8, height=8, tile=4)
     with pytest.raises(ValueError, match="even tile size"):
         build_tile_pyramid(spark, tiles, levels=1, tile=5)
 
 
-def test_single_image_pixel_guard(spark):
-    cells = _cells_df(spark)
-    with pytest.raises(ValueError, match="max_pixels"):
-        render_cells_png(
-            spark, cells, "v", (0.25, 0.25, 0.0, 0.0), 8000, 8000
-        )
-
-
 def test_constant_value_renders_midscale(spark):
-    cells = _cells_df(spark).withColumn("v", _lit_one())
-    png, _ = render_cells_png(
-        spark, cells, "v", (0.5, 0.5, 0.0, 0.0), 4, 4,
-        order_col="cell_id",
-    )
-    w, h, ch, raw = decode_png(png)
-    img = np.frombuffer(raw, "uint8").reshape(4, 4, 4)
+    grid = _grid_df(
+        spark, [(y, x, 0.0) for y in range(4) for x in range(4)]
+    ).withColumn("value", _lit_one())
+    img = _render_image(spark, grid, 4, 4, 4)
     mid = colormap_rgb(np.int64(128))
     assert (img[:, :, :3] == mid).all()
 
@@ -212,7 +149,7 @@ def _lit_one():
 def test_render_grid_from_long_table(spark):
     """The grid fast path: (y_idx, x_idx, value) rows -> pixel tiles;
     NULLs stay transparent background (the nodata convention); the
-    colormap matches the polygon path's on identical values."""
+    value extent maps onto the colormap's two ends."""
     import pandas as pd
 
     from wrf_to_geodataframe_spark.sources.render import render_grid
@@ -244,34 +181,6 @@ def test_render_grid_from_long_table(spark):
     assert (img[:, :, 3][mask] == 255).all()
 
 
-def test_write_png_tiles_executor_side(spark, tmp_path):
-    import os
-
-    from wrf_to_geodataframe_spark.sources.render import (
-        render_cells,
-        write_png_tiles,
-    )
-
-    cells = _cells_df(spark)
-    transform = (0.25, 0.25, 0.0, 0.0)
-    tiles = render_cells(
-        spark, cells, "v", transform, 8, 8, tile=4, order_col="cell_id"
-    )
-    out = str(tmp_path / "tiles")
-    n = write_png_tiles(tiles, out, transform=transform, tile=4)
-    assert n == 4
-    names = sorted(os.listdir(out))
-    assert names == [
-        "tile_0_0.pgw", "tile_0_0.png", "tile_0_1.pgw", "tile_0_1.png",
-        "tile_1_0.pgw", "tile_1_0.png", "tile_1_1.pgw", "tile_1_1.png",
-    ]
-    w, h, ch, _ = decode_png(open(os.path.join(out, "tile_1_1.png"), "rb").read())
-    assert (w, h, ch) == (4, 4, 4)
-    # tile (1,1)'s world file shifts the origin by one 4px tile
-    lines = open(os.path.join(out, "tile_1_1.pgw")).read().splitlines()
-    assert float(lines[4]) == 1.0 + 0.125 and float(lines[5]) == 1.0 + 0.125
-
-
 def test_nan_values_render_as_nodata_not_poison(spark):
     """NaN (the nodata convention GeoTIFF/virtual reads emit) must
     render as background AND not poison the global extent — Spark's
@@ -295,27 +204,6 @@ def test_nan_values_render_as_nodata_not_poison(spark):
     # extent is (0, 3), not (0, NaN): endpoints hit the ramp ends
     assert tuple(img[0, 0, :3]) == tuple(colormap_rgb(np.int64(0)))
     assert tuple(img[1, 0, :3]) == tuple(colormap_rgb(np.int64(255)))
-    # polygon path: NaN-valued cell drops out, others keep their ramp
-    from wrf_to_geodataframe_spark.sources.render import render_cells_png
-
-    cells = _cells_df(spark).withColumn(
-        "v", _nan_if_zero()
-    )
-    png, _ = render_cells_png(
-        spark, cells, "v", (0.5, 0.5, 0.0, 0.0), 4, 4,
-        order_col="cell_id",
-    )
-    w, h, ch, raw = decode_png(png)
-    img = np.frombuffer(raw, "uint8").reshape(4, 4, 4)
-    assert img[0, 0, 3] == 0                          # NaN cell: background
-    assert tuple(img[0, 3, :3]) == tuple(colormap_rgb(np.int64(0)))
-    assert tuple(img[3, 3, :3]) == tuple(colormap_rgb(np.int64(255)))
-
-
-def _nan_if_zero():
-    from pyspark.sql import functions as F
-
-    return F.when(F.col("v") == 0.0, float("nan")).otherwise(F.col("v"))
 
 
 def test_tile_pyramid_levels_and_alpha_weighting(spark):

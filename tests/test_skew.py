@@ -1,5 +1,6 @@
-"""Salting primitives: exact equivalence with the unsalted plan, and
-the partition-spread property that is their whole point."""
+"""Salting primitive: the partition-spread property that is its whole
+point, retry stability, and the AQE evidence for when salting is
+needed."""
 
 from __future__ import annotations
 
@@ -18,21 +19,6 @@ def _skewed_fact(spark, n_hot=5000, n_cold=50):
     return hot.unionByName(cold)
 
 
-def test_salted_join_equals_plain_join(spark):
-    from wrf_to_geodataframe_spark.operators.skew import salted_join
-
-    fact = _skewed_fact(spark)
-    dim = spark.createDataFrame(
-        [(k, f"name{k}") for k in range(1, 10)], "k long, name string"
-    )
-    plain = {(r.fact_id, r.name) for r in fact.join(dim, "k").collect()}
-    salted = {
-        (r.fact_id, r.name)
-        for r in salted_join(fact, dim, "k", ["fact_id"], n_salts=8).collect()
-    }
-    assert salted == plain
-
-
 def test_salted_join_spreads_hot_key(spark):
     from wrf_to_geodataframe_spark.operators.skew import deterministic_salt
 
@@ -45,23 +31,6 @@ def test_salted_join_spreads_hot_key(spark):
     counts = {r.s: r["count"] for r in salts}
     assert len(counts) == 8  # every salt bucket used
     assert max(counts.values()) < 0.25 * 5000  # no bucket dominates
-
-
-def test_salted_distinct_count_equals_exact(spark):
-    from wrf_to_geodataframe_spark.operators.skew import salted_distinct_count
-
-    fact = _skewed_fact(spark)
-    exact = {
-        r.k: r.n
-        for r in fact.groupBy("k")
-        .agg(F.countDistinct("v").alias("n"))
-        .collect()
-    }
-    got = {
-        r.k: r.n_distinct
-        for r in salted_distinct_count(fact, "k", "v", n_salts=8).collect()
-    }
-    assert got == exact
 
 
 def test_salt_is_retry_stable(spark):
@@ -93,7 +62,7 @@ def test_salt_is_retry_stable(spark):
 #     runtime broadcast conversion (tested at scale in
 #     test_scale.py::test_quality_lm_score_1000x_stopword_skew); when
 #     the build side outgrows broadcast, the mitigation is explicit
-#     salting (salted_join above), NOT AQE.
+#     salting (deterministic_salt above), NOT AQE.
 
 
 class _conf:

@@ -5,7 +5,6 @@ to end on this engine."""
 from __future__ import annotations
 
 import json
-import os
 import sqlite3
 import struct
 
@@ -311,7 +310,6 @@ def test_reference_workflow_end_to_end(spark, tmp_path):
 
     from wrf_to_geodataframe_spark.geometry.tessellate import tessellate
     from wrf_to_geodataframe_spark.operators.resample import daily_stats_period_mean
-    from wrf_to_geodataframe_spark.sources.geopackage import write_cells_geopackage
     from wrf_to_geodataframe_spark.sources.netcdf import read_netcdf_grid, write_netcdf
 
     # a small curvilinear grid in a NetCDF file
@@ -356,11 +354,17 @@ def test_reference_workflow_end_to_end(spark, tmp_path):
     assert joined.filter("t_min IS NULL").count() == 0
 
     out = str(tmp_path / "cells.gpkg")
-    write_cells_geopackage(
-        joined.select("y_idx", "x_idx", "x1", "y1", "x2", "y2",
-                      "t_min", "t_max", "t_mean"),
-        out,
-    )
+    rows = [
+        {
+            "geom": np.array([[r.x1, r.y1], [r.x2, r.y1],
+                              [r.x2, r.y2], [r.x1, r.y2]]),
+            "y_idx": r.y_idx, "x_idx": r.x_idx,
+            "t_min": r.t_min, "t_max": r.t_max, "t_mean": r.t_mean,
+        }
+        for r in joined.select("y_idx", "x_idx", "x1", "y1", "x2", "y2",
+                               "t_min", "t_max", "t_mean").collect()
+    ]
+    write_geopackage(out, "cells", rows)
     con = sqlite3.connect(out)
     n = con.execute('SELECT count(*) FROM "cells"').fetchone()[0]
     assert n == ny * nx
@@ -442,47 +446,6 @@ def test_wkb_holes_and_multipolygon_round_trip():
     zwkb = struct.pack("<BII", 1, 1003, 0)
     with pytest.raises(ValueError, match="Z/M"):
         parse_wkb(zwkb)
-
-
-def test_geometry_stats_and_ring_explode_distributed(spark):
-    """Spark surface for beyond-single-ring GeoParquet: stats triage
-    and the native-model ring explode, Arrow-batched."""
-    from wrf_to_geodataframe_spark.sources.geopackage import (
-        explode_wkb_rings,
-        multipolygon_wkb,
-        polygon_wkb_rings,
-        with_geometry_stats,
-    )
-
-    outer = [[0.0, 0.0], [10.0, 0.0], [10.0, 10.0], [0.0, 10.0]]
-    hole = [[4.0, 4.0], [6.0, 4.0], [6.0, 6.0], [4.0, 6.0]]
-    far = [[100.0, 0.0], [101.0, 0.0], [101.0, 1.0], [100.0, 1.0]]
-    rows = [
-        (1, polygon_wkb_rings([outer])),
-        (2, polygon_wkb_rings([outer, hole])),
-        (3, multipolygon_wkb([[outer, hole], [far]])),
-    ]
-    df = spark.createDataFrame(rows, "id long, geometry binary")
-    got = {
-        r.id: r for r in with_geometry_stats(df, "geometry").collect()
-    }
-    assert (got[1].n_parts, got[1].n_holes, got[1].area) == (1, 0, 100.0)
-    assert (got[2].n_parts, got[2].n_holes, got[2].area) == (1, 1, 96.0)
-    assert (got[3].n_parts, got[3].n_holes, got[3].area) == (2, 1, 97.0)
-
-    rings = explode_wkb_rings(df, "geometry").collect()
-    by_id = {}
-    for r in rings:
-        by_id.setdefault(r.id, []).append(r)
-    assert len(by_id[1]) == 1 and not by_id[1][0].is_hole
-    assert len(by_id[2]) == 2
-    assert sorted(r.is_hole for r in by_id[2]) == [False, True]
-    assert len(by_id[3]) == 3
-    parts = sorted((r.part_idx, r.ring_idx, r.is_hole) for r in by_id[3])
-    assert parts == [(0, 0, False), (0, 1, True), (1, 0, False)]
-    # vertex arrays come back as the engine's native open rings
-    g = [r for r in by_id[2] if not r.is_hole][0].geom
-    assert [list(v) for v in g] == outer
 
 
 def test_geoparquet_covering_prunes_for_external_readers(spark, tmp_path):
@@ -742,101 +705,6 @@ def test_geopackage_round_trip_holes_multipolygons_concave(tmp_path):
     np.testing.assert_array_equal(back[0]["geom"], concave)
 
 
-def test_appendable_archive_workflow_end_to_end(spark, tmp_path):
-    """The reference workflow at ARCHIVE scale with the round-9
-    pieces: a TIME-APPENDABLE NetCDF-4 archive (Extensible Array
-    chunk index, the libver-latest default wrf_voronoi.py:115 opens)
-    -> kerchunk-style virtual manifest -> incremental append of a new
-    model cycle -> bbox-derived index windows -> pruned byte-range
-    window read -> per-cell period mean -> choropleth tiles through
-    the S5 renderer, decoded and spot-checked."""
-    import os
-
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from wrf_to_geodataframe_spark.sources.hdf5_write import write_netcdf4
-    from wrf_to_geodataframe_spark.sources.png import decode_png
-    from wrf_to_geodataframe_spark.sources.render import (
-        colormap_rgb,
-        render_grid,
-        write_png_tiles,
-    )
-    from wrf_to_geodataframe_spark.sources.virtual import (
-        bbox_to_windows,
-        build_virtual_manifest,
-        read_virtual,
-        update_virtual_manifest,
-    )
-
-    nt, ny, nx = 4, 8, 8
-    d = str(tmp_path / "arch")
-    man = str(tmp_path / "man")
-    os.makedirs(d)
-    yy, xx = np.meshgrid(np.arange(ny), np.arange(nx), indexing="ij")
-    tt = np.arange(nt)
-
-    def _cycle(f):
-        write_netcdf4(
-            os.path.join(d, f"cycle_{f}.nc"),
-            {"t": nt, "y": ny, "x": nx},
-            {
-                "T2": {"dims": ["t", "y", "x"],
-                       "data": (f * 1000.0 + tt[:, None, None] * 100
-                                + yy * nx + xx) / 8.0},
-                "XLAT": {"dims": ["y", "x"], "data": 50.0 + yy * 0.25},
-                "XLONG": {"dims": ["y", "x"], "data": -3.0 + xx * 0.125},
-            },
-            compress=True, chunk={"T2": (2, 4, 4)}, unlimited="t",
-        )
-
-    for f in range(3):
-        _cycle(f)
-    build_virtual_manifest(spark, d, "T2", "XLAT", "XLONG", man)
-    _cycle(3)  # the next model cycle lands
-    assert update_virtual_manifest(
-        spark, d, "T2", "XLAT", "XLONG", man
-    ) == 1
-
-    # spatial windows from a lat/lon bbox (P4 at archive scale)
-    yr, xr = bbox_to_windows(
-        spark, man, lat_range=(50.5, 51.25), lon_range=(-2.75, -2.25)
-    )
-    assert yr == (2, 5) and xr == (2, 6)
-
-    # time window straddling the appended cycle (global t 10..14)
-    window = read_virtual(
-        spark, man, time_range=(10, 14), y_range=yr, x_range=xr
-    )
-    mean = window.groupBy("y_idx", "x_idx").agg(
-        F.avg("value").alias("t_mean")
-    )
-    rows = {(r["y_idx"], r["x_idx"]): r["t_mean"] for r in mean.collect()}
-    assert len(rows) == 4 * 5
-    # closed form: mean over global t of (f*1000 + lt*100 + y*nx+x)/8
-    expect = np.mean(
-        [(t // nt) * 1000 + (t % nt) * 100 for t in range(10, 15)]
-    )
-    for (y, x), v in rows.items():
-        assert abs(v - (expect + y * nx + x) / 8.0) < 1e-9
-
-    # S5: render the mean field, persist tiles, decode and spot-check
-    tiles = render_grid(
-        spark, mean, value_col="t_mean", width=nx, height=ny, tile=4
-    )
-    out = str(tmp_path / "tiles")
-    n = write_png_tiles(tiles, out, transform=(0.125, 0.25, -3.0, 50.0),
-                        tile=4)
-    assert n == 4  # windowed cells span all four 4px tiles of the 8x8
-    w, h, ch, raw = decode_png(
-        open(os.path.join(out, "tile_0_0.png"), "rb").read()
-    )
-    img = np.frombuffer(raw, "uint8").reshape(h, w, ch)
-    # cell (2,2) is the window minimum -> ramp start; outside stays bg
-    assert tuple(img[2, 2, :3]) == tuple(colormap_rgb(np.int64(0)))
-    assert img[0, 0, 3] == 0
-
-
 def test_shapefile_sink_round_trip(spark, tmp_path):
     """S2 SINK: write_shapefile -> .shp/.shx/.dbf that the engine's
     own reader (and the spec) agree on: ccw rings stored cw+closed,
@@ -966,56 +834,3 @@ def test_shapefile_round_trip_property(tmp_path_factory, data, n_polys):
         assert rec["name"] == att["name"]
         assert rec["code"] == att["code"]
         assert rec["w"] == pytest.approx(att["w"], abs=5e-7)
-
-
-def test_shapefile_dir_scan_matches_driver_union(spark, tmp_path):
-    """read_shapefile_dir == union of per-file driver reads, with one
-    shared attribute schema; a file with diverging fields fails
-    loudly; the plan is binaryFile -> MapInPandas (no driver
-    createDataFrame)."""
-    from wrf_to_geodataframe_spark.sources.shapefile import (
-        read_shapefile,
-        read_shapefile_dir,
-        write_shapefile,
-    )
-
-    d = tmp_path / "arch"
-    d.mkdir()
-    for f in range(3):
-        rings = [
-            [[float(f), 0.0], [float(f) + 1, 0.0],
-             [float(f) + 1, 1.0], [float(f), 1.0]],
-            [[10.0 + f, 10.0], [12.0 + f, 10.0], [11.0 + f, 12.0]],
-        ]
-        write_shapefile(
-            str(d / f"region_{f}.shp"), rings,
-            [{"name": f"r{f}a", "code": f * 10},
-             {"name": f"r{f}b", "code": f * 10 + 1}],
-        )
-    df = read_shapefile_dir(spark, str(d))
-    rows = df.collect()
-    assert len(rows) == 6
-    got = {(os.path.basename(r["file"]), r["fid"]):
-           (r["name"], r["code"], tuple(map(tuple, r["geom"])))
-           for r in rows}
-    for f in range(3):
-        single = read_shapefile(
-            spark, str(d / f"region_{f}.shp")
-        ).collect()
-        for r in single:
-            key = (f"region_{f}.shp", r["fid"])
-            assert got[key] == (
-                r["name"], r["code"], tuple(map(tuple, r["geom"]))
-            )
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
-    assert "Scan binaryFile" in plan
-
-    # schema divergence fails loudly
-    write_shapefile(
-        str(d / "rogue.shp"),
-        [[[0.0, 0.0], [1.0, 0.0], [1.0, 1.0]]],
-        [{"other": "x"}],
-    )
-    with pytest.raises(Exception, match="shared schema"):
-        read_shapefile_dir(spark, str(d)).collect()

@@ -318,100 +318,6 @@ def test_grib2_virtual_time_window_prunes_messages(spark, tmp_path):
         ) / 8.0
 
 
-def test_update_manifest_appends_new_files_only(spark, tmp_path):
-    """Daily-cycle append: indexing the grown directory adds ONLY the
-    new file's chunks, at the end of the global time axis; a second
-    update with nothing new is a no-op."""
-    from wrf_to_geodataframe_spark.sources.virtual import (
-        update_virtual_manifest,
-    )
-
-    d, out = str(tmp_path / "src"), str(tmp_path / "man")
-    os.makedirs(d)
-    _write_archive(d, n_files=2)
-    build_virtual_manifest(spark, d, "T2", "XLAT", "XLONG", out)
-    before = spark.read.parquet(os.path.join(out, "chunks")).count()
-    # a new cycle arrives (existing files must stay byte-identical —
-    # the manifest indexes their offsets)
-    yy, xx = np.meshgrid(np.arange(NY), np.arange(NX), indexing="ij")
-    tt = np.arange(NT)
-    write_netcdf4(
-        os.path.join(d, "shard_2.nc"),
-        {"t": NT, "y": NY, "x": NX},
-        {
-            "T2": {"dims": ["t", "y", "x"],
-                   "data": _val(2, tt[:, None, None], yy, xx)},
-            "XLAT": {"dims": ["y", "x"], "data": 50.0 + yy * 0.25},
-            "XLONG": {"dims": ["y", "x"], "data": -3.0 + xx * 0.125},
-        },
-        compress=True,
-        chunk={"T2": (2, 4, 3)},
-    )
-    assert update_virtual_manifest(
-        spark, d, "T2", "XLAT", "XLONG", out
-    ) == 1
-    assert update_virtual_manifest(
-        spark, d, "T2", "XLAT", "XLONG", out
-    ) == 0
-    after = spark.read.parquet(os.path.join(out, "chunks"))
-    assert after.count() > before
-    got = _got(read_virtual(spark, out))
-    assert got == _expected(files=range(3))
-    # the appended file owns the tail of the time axis
-    tail = _got(read_virtual(spark, out, time_range=(2 * NT, 3 * NT - 1)))
-    assert tail == _expected(files=[2])
-
-
-def test_compact_manifest_coalesces_contiguous_records(spark, tmp_path):
-    """A classic single-record-variable archive stores one manifest
-    row per record; compaction must fuse each file's records into one
-    byte-contiguous run and decode identically."""
-    from wrf_to_geodataframe_spark.sources.virtual import compact_manifest
-
-    d = str(tmp_path / "src")
-    out, cout = str(tmp_path / "man"), str(tmp_path / "man_c")
-    os.makedirs(d)
-    yy, xx = np.meshgrid(np.arange(NY), np.arange(NX), indexing="ij")
-    for f in range(2):
-        tt = np.arange(NT)
-        write_netcdf(
-            os.path.join(d, f"s{f}.nc"),
-            {"t": 0, "y": NY, "x": NX},
-            {
-                "T2": {"dims": ["t", "y", "x"],
-                       "data": _val(f, tt[:, None, None], yy, xx)},
-                "XLAT": {"dims": ["y", "x"], "data": 50.0 + yy * 0.25},
-                "XLONG": {"dims": ["y", "x"], "data": -3.0 + xx * 0.125},
-            },
-        )
-    build_virtual_manifest(spark, d, "T2", "XLAT", "XLONG", out)
-    compact_manifest(spark, out, cout)
-    n0 = spark.read.parquet(os.path.join(out, "chunks")).count()
-    n1 = spark.read.parquet(os.path.join(cout, "chunks")).count()
-    assert n0 == 2 * NT and n1 == 2  # one fused run per file
-    got = _got(read_virtual(spark, cout))
-    assert got == _expected(files=range(2))
-    # pruned read through the fused rows still trims exactly
-    assert _got(read_virtual(spark, cout, time_range=(2, 5))) == _expected(
-        files=range(2), trange=(2, 5)
-    )
-
-
-def test_compact_manifest_leaves_compressed_chunks_alone(spark, archive):
-    from wrf_to_geodataframe_spark.sources.virtual import compact_manifest
-
-    _, out = archive
-    cout = out + "_compacted"
-    compact_manifest(spark, out, cout)
-    # deflate chunks and interleaved record vars are not mergeable;
-    # row count may only change via the classic single-var case, which
-    # this mixed archive does not contain
-    n0 = spark.read.parquet(os.path.join(out, "chunks")).count()
-    n1 = spark.read.parquet(os.path.join(cout, "chunks")).count()
-    assert n0 == n1
-    assert _got(read_virtual(spark, cout)) == _expected()
-
-
 def test_stale_manifest_fails_loudly_on_rewritten_file(spark, tmp_path):
     """Byte offsets are only valid for the indexed bytes: rewriting an
     indexed file (different size) must raise, not decode garbage."""
@@ -552,38 +458,6 @@ def test_mosaic_nodata_becomes_null(spark, tmp_path):
     assert [(r["y_idx"], r["x_idx"]) for r in nulls] == [(3, 5)]
 
 
-def test_grib2_incremental_update_appends_cycle(spark, tmp_path):
-    """A new GRIB2 cycle file appended to the archive is indexed
-    incrementally and owns the tail of the time axis."""
-    from wrf_to_geodataframe_spark.sources.grib2 import write_grib2
-    from wrf_to_geodataframe_spark.sources.virtual import (
-        update_virtual_manifest,
-    )
-
-    d, out = str(tmp_path / "src"), str(tmp_path / "man")
-    os.makedirs(d)
-    ny, nx = _write_grib2_archive(d, n_files=1, n_msgs=2)
-    build_virtual_manifest(spark, d, "", None, None, out,
-                           pattern="*.grib2")
-    x = 10000 + np.arange(ny * nx).reshape(ny, nx)
-    write_grib2(os.path.join(d, "cycle_9.grib2"), [{
-        "values": x / 8.0,
-        "lat0": 50.0, "lon0": 357.0, "dlat": -0.25, "dlon": 0.125,
-        "param_category": 0,
-        "packing": {"template": 0, "ref": 0.0, "e": -3, "d": 0,
-                    "nbits": 16},
-    }])
-    assert update_virtual_manifest(
-        spark, d, "", None, None, out, pattern="*.grib2"
-    ) == 1
-    tail = read_virtual(spark, out, time_range=(2, 2)).collect()
-    assert len(tail) == ny * nx
-    for r in tail:
-        assert r["value"] == (
-            10000 + r["y_idx"] * nx + r["x_idx"]
-        ) / 8.0
-
-
 def test_multi_variable_manifest_selects_by_var(spark, tmp_path):
     """One indexing pass over an archive with TWO variables; reads
     select by var (a pushed manifest predicate) and each variable has
@@ -639,45 +513,6 @@ def test_sidecar_size_guard_named_error(spark, archive):
     # raising the cap back restores the read
     assert len(read_virtual(spark, out, time_range=(0, 0),
                             max_sidecar_bytes=256 * 2**20).collect()) > 0
-
-
-def test_update_manifest_anti_join_appends_only_new(spark, tmp_path):
-    """update_virtual_manifest diffs the directory listing against the
-    indexed set with a LEFT ANTI join (driver collects only the NEW
-    batch) and appends at the end of the global time axis."""
-    from wrf_to_geodataframe_spark.sources.virtual import (
-        update_virtual_manifest,
-    )
-
-    d = str(tmp_path / "src")
-    os.makedirs(d)
-    _write_archive(d, n_files=2, classic_every=0)
-    out = str(tmp_path / "man")
-    build_virtual_manifest(spark, d, "T2", "XLAT", "XLONG", out)
-    assert update_virtual_manifest(
-        spark, d, "T2", "XLAT", "XLONG", out
-    ) == 0  # no-op: nothing new
-    # drop two more files in and re-update
-    yy, xx = np.meshgrid(np.arange(NY), np.arange(NX), indexing="ij")
-    lat = (50.0 + yy * 0.25).astype("float64")
-    lon = (-3.0 + xx * 0.125).astype("float64")
-    for f in (2, 3):
-        tt = np.arange(NT)
-        vals = _val(f, tt[:, None, None], yy, xx).astype("float64")
-        write_netcdf4(
-            os.path.join(d, f"shard_{f}.nc"),
-            {"t": NT, "y": NY, "x": NX},
-            {
-                "T2": {"dims": ["t", "y", "x"], "data": vals},
-                "XLAT": {"dims": ["y", "x"], "data": lat},
-                "XLONG": {"dims": ["y", "x"], "data": lon},
-            },
-            compress=True, chunk={"T2": (2, 4, 3)},
-        )
-    assert update_virtual_manifest(
-        spark, d, "T2", "XLAT", "XLONG", out
-    ) == 2
-    assert _got(read_virtual(spark, out)) == _expected(files=range(4))
 
 
 def test_fsio_dispatch_and_named_error(tmp_path, monkeypatch):
@@ -1065,14 +900,14 @@ def test_read_virtual_over_s3_issues_pruned_ranged_gets(
 
 def test_time_offsets_cumsum_per_var():
     """Files take consecutive slices of each var's time axis in
-    ``file_no`` order (input order does not matter), starting at
-    ``base_t``; each var restarts at ``base_t``."""
+    ``file_no`` order (input order does not matter), starting at 0;
+    each var restarts at 0."""
     files = ["a.nc", "b.nc", "c.nc"]
     triples = [("T2", 2, 4), ("Q2", 0, 3), ("T2", 0, 3), ("T2", 1, 2)]
-    assert _time_offsets(triples, files, 10) == [
-        ("Q2", 0, 10), ("T2", 0, 10), ("T2", 1, 13), ("T2", 2, 15),
+    assert _time_offsets(triples, files) == [
+        ("Q2", 0, 0), ("T2", 0, 0), ("T2", 1, 3), ("T2", 2, 5),
     ]
-    assert _time_offsets([], files, 0) == []
+    assert _time_offsets([], files) == []
 
 
 @pytest.mark.parametrize("bad", [(None, 1, 3), ("T2", 1, None)])
@@ -1081,4 +916,4 @@ def test_time_offsets_missing_var_or_nt_names_file(bad):
     naming its file, not a ``TypeError`` from sorting ``None``."""
     files = ["a.nc", "b.nc"]
     with pytest.raises(ValueError, match="b.nc"):
-        _time_offsets([("T2", 0, 2), bad], files, 0)
+        _time_offsets([("T2", 0, 2), bad], files)

@@ -19,7 +19,6 @@ from wrf_to_geodataframe_spark.sources.virtual import (
     build_virtual_manifest,
     read_virtual,
     time_to_windows,
-    update_virtual_manifest,
 )
 
 NY, NX = 3, 4
@@ -95,44 +94,6 @@ def test_mixed_archive_time_column(spark, tmp_path):
     assert v[(4, 0, 1)] == 2 * 10000 + 1 * 100 + 1
 
 
-def test_update_appends_time_axis(spark, tmp_path):
-    _write_classic(str(tmp_path / "a.nc"), 2, seed=1, hour0=0.0)
-    man = str(tmp_path / "manifest")
-    build_virtual_manifest(
-        spark, str(tmp_path), "T2", "XLAT", "XLONG", man, time_var="t"
-    )
-    _write_classic(str(tmp_path / "b.nc"), 2, seed=2, hour0=12.0)
-    n = update_virtual_manifest(
-        spark, str(tmp_path), "T2", "XLAT", "XLONG", man, time_var="t"
-    )
-    assert n == 1
-    rows = read_virtual(spark, man).collect()
-    got = {r["t_idx"]: r["time"] for r in rows}
-    assert got == {i: _expected_time(i) for i in range(4)}
-
-
-def test_update_time_var_consistency_raises(spark, tmp_path):
-    _write_classic(str(tmp_path / "a.nc"), 2, seed=1, hour0=0.0)
-    with_t = str(tmp_path / "with_t")
-    without_t = str(tmp_path / "without_t")
-    build_virtual_manifest(
-        spark, str(tmp_path), "T2", "XLAT", "XLONG", with_t, time_var="t"
-    )
-    build_virtual_manifest(
-        spark, str(tmp_path), "T2", "XLAT", "XLONG", without_t
-    )
-    _write_classic(str(tmp_path / "b.nc"), 2, seed=2, hour0=12.0)
-    with pytest.raises(ValueError, match="pass the same time_var"):
-        update_virtual_manifest(
-            spark, str(tmp_path), "T2", "XLAT", "XLONG", with_t
-        )
-    with pytest.raises(ValueError, match="built without time_var"):
-        update_virtual_manifest(
-            spark, str(tmp_path), "T2", "XLAT", "XLONG", without_t,
-            time_var="t",
-        )
-
-
 def test_no_times_sidecar_reads_without_time_column(spark, tmp_path):
     _write_classic(str(tmp_path / "a.nc"), 2, seed=1, hour0=0.0)
     man = str(tmp_path / "manifest")
@@ -176,24 +137,6 @@ def test_time_to_windows_prunes(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="no times sidecar"):
         time_to_windows(spark, plain, ("2021-06-01", "2021-06-02"))
-
-
-def test_compaction_preserves_time_axis(spark, tmp_path):
-    """compact_manifest copies the times sidecar through — a
-    compacted archive keeps its timestamps (byte-range coalescing
-    never changes the axis)."""
-    from wrf_to_geodataframe_spark.sources.virtual import compact_manifest
-
-    _write_classic(str(tmp_path / "a.nc"), 4, seed=1, hour0=0.0,
-                   record=True)
-    man = str(tmp_path / "manifest")
-    build_virtual_manifest(
-        spark, str(tmp_path), "T2", "XLAT", "XLONG", man, time_var="t"
-    )
-    cman = compact_manifest(spark, man, str(tmp_path / "compact"))
-    rows = read_virtual(spark, cman).collect()
-    got = {r["t_idx"]: r["time"] for r in rows}
-    assert got == {i: _expected_time(i) for i in range(4)}
 
 
 def test_wrf_times_char_axis(spark, tmp_path):

@@ -518,103 +518,6 @@ def _vp8l_payload(rgba, w, h):
     return encode_vp8l(rgba, w, h)
 
 
-def test_animated_webp_frames_and_compositing():
-    """Hand-muxed two-frame animation: frame extraction returns the
-    exact lossless pixels + timing/placement; compositing overlays
-    frame 2 at its offset (no-blend) and disposal clears its rect."""
-    import numpy as np
-
-    from wrf_to_geodataframe_spark.sources.webp import (
-        decode_webp_animation,
-        webp_frames,
-        webp_info,
-    )
-
-    f1 = np.zeros((8, 10, 4), np.uint8)
-    f1[..., 0] = 200
-    f1[..., 3] = 255
-    f2 = np.zeros((4, 4, 4), np.uint8)
-    f2[..., 1] = 99
-    f2[..., 3] = 255
-    anim = _mux_animation(
-        (10, 8),
-        [
-            (0, 0, 10, 8, 40, 0x02, b"VP8L", _vp8l_payload(f1.tobytes(), 10, 8)),
-            # frame 2: offset (4,2), no-blend (bit1) + dispose (bit0)
-            (4, 2, 4, 4, 70, 0x03, b"VP8L", _vp8l_payload(f2.tobytes(), 4, 4)),
-        ],
-    )
-    info = webp_info(anim)
-    assert info["animation"] and (info["width"], info["height"]) == (10, 8)
-    assert info["n_frames"] == 2
-
-    frames = webp_frames(anim)
-    assert [f["duration_ms"] for f in frames] == [40, 70]
-    assert (frames[1]["x"], frames[1]["y"]) == (4, 2)
-    got2 = np.frombuffer(frames[1]["pixels"], np.uint8).reshape(4, 4, 4)
-    np.testing.assert_array_equal(got2, f2)
-
-    snaps = decode_webp_animation(anim)
-    assert len(snaps) == 2
-    np.testing.assert_array_equal(snaps[0][1], f1)
-    c2 = snaps[1][1]
-    np.testing.assert_array_equal(c2[2:6, 4:8], f2)  # overlaid rect
-    np.testing.assert_array_equal(c2[0:2, :], f1[0:2, :])  # untouched
-
-
-def test_animated_webp_alpha_blend():
-    """A half-transparent frame must alpha-blend onto the canvas."""
-    import numpy as np
-
-    from wrf_to_geodataframe_spark.sources.webp import decode_webp_animation
-
-    base = np.zeros((2, 2, 4), np.uint8)
-    base[..., 0] = 100
-    base[..., 3] = 255
-    over = np.zeros((2, 2, 4), np.uint8)
-    over[..., 2] = 200
-    over[..., 3] = 128  # ~half transparent
-    anim = _mux_animation(
-        (2, 2),
-        [
-            (0, 0, 2, 2, 10, 0x02, b"VP8L", _vp8l_payload(base.tobytes(), 2, 2)),
-            (0, 0, 2, 2, 10, 0x00, b"VP8L", _vp8l_payload(over.tobytes(), 2, 2)),
-        ],
-    )
-    snaps = decode_webp_animation(anim)
-    c = snaps[1][1]
-    # blended red = 100 * 255 * (255-128)/255 // 255 ~ 49-50
-    assert 45 <= int(c[0, 0, 0]) <= 55
-    assert 95 <= int(c[0, 0, 2]) <= 105  # 200*128/255 ~ 100
-    assert int(c[0, 0, 3]) == 255
-
-
-def test_animated_webp_lossy_frame():
-    """An ANMF frame whose payload is a lossy VP8 still decodes
-    through the RFC 6386 path and matches the standalone decode."""
-    import numpy as np
-
-    from wrf_to_geodataframe_spark.sources.webp import webp_frames
-
-    blob = bytes.fromhex(
-        "52494646a600000057454250565038209a000000b005009d012a200018003eed"
-        "6eae5229a62423a80801301d896c009d32847037ba70866ea8e800356b82ccff"
-        "f4193469d6c70c92111000fb991876e866262473fc7b32c8b55d03890fa5982d"
-        "9ac684db7431ca652edc49075e7447ec3672f226f7ce508b6223871c8093ce1c"
-        "1235683fe467b14a2ba94e503172819ab89aa61b465e481dc9efff24a6339df3"
-        "6be7bac68deb568f31bd80c62000"
-    )
-    still_w, still_h, still_c, still_px = decode_webp(blob)
-    payload = blob[20 : 20 + int.from_bytes(blob[16:20], "little")]
-    anim = _mux_animation(
-        (still_w, still_h),
-        [(0, 0, still_w, still_h, 25, 0x02, b"VP8 ", payload)],
-    )
-    (f,) = webp_frames(anim)
-    assert (f["width"], f["height"], f["channels"]) == (still_w, still_h, 3)
-    assert f["pixels"] == still_px
-
-
 def test_hypothesis_vp8l_round_trip_fuzz():
     """Property: any RGBA buffer round-trips through the VP8L
     encoder/decoder, with and without subtract-green (completing the

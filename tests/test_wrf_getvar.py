@@ -385,32 +385,6 @@ def test_getvar_auto_reads_global_attrs(spark, archive):
         wrf_global_attrs(tempfile.mkdtemp(prefix="empty_wrf_"))
 
 
-def test_ll_to_xy_archive_shape(spark, archive):
-    """The wrf-python call shape ll_to_xy(wrfin, ...): attrs read off
-    the archive — the domain center lands on the grid midpoint and
-    xy_to_ll inverts to fp precision."""
-    from wrf_to_geodataframe_spark.operators.wrf import (
-        wrf_ll_to_xy_archive,
-        wrf_xy_to_ll_archive,
-    )
-
-    pts = spark.createDataFrame(
-        [(-100.375, 38.5), (-101.0, 38.0)], "lon double, lat double"
-    )
-    d = wrf_ll_to_xy_archive(archive, pts, "lon", "lat")
-    d = wrf_xy_to_ll_archive(archive, d, "i", "j",
-                             out_lon="lon2", out_lat="lat2")
-    rows = d.collect()
-    center = [r for r in rows if r.lon == -100.375][0]
-    # archive gattrs: CEN at (-100.375, 38.5), mass grid 6x5 -> the
-    # center maps to ((6-1)/2, (5-1)/2)
-    assert center.i == pytest.approx(2.5, abs=1e-9)
-    assert center.j == pytest.approx(2.0, abs=1e-9)
-    for r in rows:
-        assert r.lon2 == pytest.approx(r.lon, abs=1e-9)
-        assert r.lat2 == pytest.approx(r.lat, abs=1e-9)
-
-
 def test_getvar_raw_variable_fallback(spark, archive):
     """wrf-python parity: getvar returns any variable the FILE itself
     carries — PSFC (2-D plane) and QVAPOR (per-level) read raw with
@@ -1675,43 +1649,6 @@ def test_wrf_interplevel_theta_coordinate(spark, archive):
         assert got[(f, j, i)] == pytest.approx(want, rel=1e-12), (f, j, i)
 
 
-def test_wrf_smooth2d_front_door(spark, archive):
-    """wrf_smooth2d == the numpy 5-point smoother per slab: 2-D field
-    (one plane per shard) and a per-level field (each (file, k) slab
-    independent); boundaries keep their value."""
-    from wrf_to_geodataframe_spark.operators.wrf import wrf_smooth2d
-
-    def np_smooth(a):
-        out = a.copy()
-        inner = (
-            a[1:-1, 1:-1] / 2.0
-            + (a[1:-1, :-2] + a[1:-1, 2:] + a[:-2, 1:-1] + a[2:, 1:-1])
-            / 8.0
-        )
-        out[1:-1, 1:-1] = inner
-        return out
-
-    got = _collect(wrf_smooth2d(spark, archive, "ter"), "ter_sm")
-    jj, ii = np.meshgrid(np.arange(NJ), np.arange(NI), indexing="ij")
-    ter = 120.0 + (ii * 3.0 + jj * 5.0) / 4.0
-    sm = np_smooth(ter)
-    for f in range(NF):
-        for (j, i) in [(0, 0), (2, 3), (NJ - 1, NI - 1)]:
-            assert got[(f, j, i)] == sm[j, i], (f, j, i)
-    got3 = _collect(
-        wrf_smooth2d(spark, archive, "theta", passes=2), "theta_sm"
-    )
-    for f in range(NF):
-        v = _fields(float(f))
-        th = v["t"] + 300.0
-        for k in (0, NK - 1):
-            want = np_smooth(np_smooth(th[k]))
-            for (j, i) in [(1, 1), (3, 4)]:
-                assert got3[(f, k, j, i)] == want[j, i], (f, k, j, i)
-    with pytest.raises(ValueError, match="single-component"):
-        wrf_smooth2d(spark, archive, "wspd_wdir")
-
-
 def test_geopt_stag(spark, archive):
     """geopt_stag == g * zstag on the staggered levels (the
     wrf-python name), NK + 1 levels kept."""
@@ -1949,20 +1886,6 @@ def test_wrf_interp2dxy_bent_path(spark, archive):
     with pytest.raises(ValueError, match="single-component"):
         wrf_interp2dxy(spark, archive, "uvmet", [(1.0, 1.0)],
                        attrs=ATTRS)
-
-
-def test_wrf_xy_helper(spark, archive):
-    """xy(): the resolved line's own sample points, shared resolver."""
-    from wrf_to_geodataframe_spark.operators.wrf import wrf_xy
-
-    rows = wrf_xy(
-        spark, archive, pivot_point=(2, 2), angle=90.0
-    ).orderBy("s").collect()
-    assert [(r.x, r.y) for r in rows] == [(float(s), 2.0)
-                                         for s in range(6)]
-    rows = wrf_xy(spark, archive, start=(0.5, 0.5), end=(4.5, 2.5),
-                  n_points=5).orderBy("s").collect()
-    assert rows[2].x == 2.5 and rows[2].y == 1.5
 
 
 def test_ll_to_xy_scalar_matches_column_all_projections(spark):

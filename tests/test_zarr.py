@@ -32,7 +32,6 @@ import pytest
 from wrf_to_geodataframe_spark.sources.zarr import (
     ZarrError,
     _blosc_decompress,
-    is_zarr_store,
     read_zarr_array,
     read_zarr_store,
     write_zarr,
@@ -220,7 +219,6 @@ def test_roundtrip_3d_and_attrs(tmp_path):
                 "attrs": {"units": "K"}}},
         attrs={"title": "demo"}, chunks={"T2": (1, 2, 3)},
     )
-    assert is_zarr_store(store)
     ds = read_zarr_store(store)
     assert ds["attrs"]["title"] == "demo"
     assert ds["variables"]["T2"]["attrs"]["units"] == "K"

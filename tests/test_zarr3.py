@@ -17,7 +17,6 @@ import pytest
 from wrf_to_geodataframe_spark.sources.zarr import ZarrError
 from wrf_to_geodataframe_spark.sources.zarr3 import (
     crc32c,
-    is_zarr3_store,
     read_zarr3_array,
     read_zarr3_dist,
     read_zarr3_store,
@@ -252,7 +251,6 @@ def test_roundtrip_dtypes(tmp_path, dtype, comp):
     write_zarr3(store, {"y": 5, "x": 7},
                 {"v": {"dims": ["y", "x"], "data": data}},
                 chunks={"v": (2, 3)}, compressor=comp)
-    assert is_zarr3_store(store)
     ds = read_zarr3_store(store)
     assert ds["variables"]["v"]["dims"] == ["y", "x"]
     assert ds["dims"] == {"y": 5, "x": 7}
@@ -327,56 +325,6 @@ def test_fuzz_roundtrip_layouts(tmp_path):
 
 
 # -- Spark surface -------------------------------------------------------
-
-def test_write_dist_sharded_roundtrip(spark, tmp_path):
-    """Long table -> distributed SHARDED sink -> driver read AND
-    shard-parallel scan: values, coords, object count all correct."""
-    from pyspark.sql import functions as F
-
-    from wrf_to_geodataframe_spark.sources.zarr3 import write_zarr3_dist
-
-    nt, ny, nx = 2, 9, 11
-    src = (
-        spark.range(nt * ny * nx)
-        .select(
-            (F.col("id") / (ny * nx)).cast("long").alias("t_idx"),
-            ((F.col("id") / nx) % ny).cast("long").alias("y_idx"),
-            (F.col("id") % nx).alias("x_idx"),
-        )
-        .withColumn("lat", 50.0 + F.col("y_idx") * 0.25)
-        .withColumn("lon", -3.0 + F.col("x_idx") * 0.125)
-        .withColumn(
-            "value",
-            (F.col("t_idx") * 1000 + F.col("y_idx") * nx + F.col("x_idx"))
-            .cast("double"),
-        )
-    )
-    out = str(tmp_path / "out")
-    manifest = write_zarr3_dist(
-        src, out, chunk=(1, 2, 2), shard=(1, 4, 4)
-    ).collect()
-    # shards: nt * ceil(9/4) * ceil(11/4)
-    assert len(manifest) == 2 * 3 * 3
-    assert sum(r["n_cells"] for r in manifest) == nt * ny * nx
-    ds = read_zarr3_store(out)
-    t2 = ds["variables"]["T2"]
-    assert t2["dims"] == ["t", "y", "x"]
-    for t in range(nt):
-        want = t * 1000 + np.arange(ny)[:, None] * nx + np.arange(nx)
-        np.testing.assert_array_equal(t2["data"][t], want)
-    np.testing.assert_array_equal(
-        ds["variables"]["XLAT"]["data"],
-        50.0 + np.arange(ny)[:, None] * 0.25 + np.zeros((ny, nx)),
-    )
-    back = read_zarr3_dist(spark, out, "T2", "XLAT", "XLONG")
-    got = {
-        (r["t_idx"], r["y_idx"], r["x_idx"]): r["value"]
-        for r in back.collect()
-    }
-    assert len(got) == nt * ny * nx
-    for (t, y, x), v in got.items():
-        assert v == t * 1000 + y * nx + x
-
 
 def test_dist_scan_sharded_matches_driver(spark, tmp_path):
     rng = np.random.default_rng(77)

@@ -1,7 +1,6 @@
-"""Spark surfaces of the zarr source/sink (sources/zarr.py):
-chunk-parallel distributed scan vs driver read, distributed chunk
-sink round-trip, missing-chunk fill, time selection, and the
-partitioning/scale-shape assertions."""
+"""Spark surfaces of the zarr source (sources/zarr.py): chunk-parallel
+distributed scan vs driver read, missing-chunk fill, time selection,
+and the partitioning/scale-shape assertions."""
 
 from __future__ import annotations
 
@@ -17,7 +16,6 @@ from wrf_to_geodataframe_spark.sources.zarr import (
     read_zarr_grid,
     read_zarr_store,
     write_zarr,
-    write_zarr_dist,
 )
 
 
@@ -177,68 +175,3 @@ def test_driver_grid_matches_store(spark, tmp_path):
     assert len(rows) == 10 * 14
     for r in rows:
         assert r["value"] == vals[0, r["y_idx"], r["x_idx"]]
-
-
-def test_write_zarr_dist_roundtrip(spark, tmp_path):
-    """Long table -> distributed chunk sink -> driver store read:
-    values, coords, metadata and chunk layout all round-trip."""
-    nt, ny, nx = 2, 9, 11
-    src = (
-        spark.range(nt * ny * nx)
-        .select(
-            (F.col("id") / (ny * nx)).cast("long").alias("t_idx"),
-            ((F.col("id") / nx) % ny).cast("long").alias("y_idx"),
-            (F.col("id") % nx).alias("x_idx"),
-        )
-        .withColumn("lat", 50.0 + F.col("y_idx") * 0.25)
-        .withColumn("lon", -3.0 + F.col("x_idx") * 0.125)
-        .withColumn(
-            "value",
-            (F.col("t_idx") * 1000 + F.col("y_idx") * nx + F.col("x_idx"))
-            .cast("double"),
-        )
-    )
-    out = str(tmp_path / "out")
-    manifest = write_zarr_dist(
-        src, out, chunk_t=1, chunk_y=4, chunk_x=4
-    ).collect()
-    assert len(manifest) == nt * 3 * 3
-    assert sum(r["n_cells"] for r in manifest) == nt * ny * nx
-    ds = read_zarr_store(out)
-    t2 = ds["variables"]["T2"]
-    assert t2["dims"] == ["t", "y", "x"]
-    assert t2["data"].shape == (nt, ny, nx)
-    for t in range(nt):
-        want = t * 1000 + np.arange(ny)[:, None] * nx + np.arange(nx)
-        np.testing.assert_array_equal(t2["data"][t], want)
-    np.testing.assert_array_equal(
-        ds["variables"]["XLAT"]["data"],
-        50.0 + np.arange(ny)[:, None] * 0.25 + np.zeros((ny, nx)),
-    )
-    np.testing.assert_array_equal(
-        ds["variables"]["XLONG"]["data"],
-        -3.0 + np.zeros((ny, nx)) + np.arange(nx) * 0.125,
-    )
-
-
-def test_write_read_dist_loop(spark, tmp_path):
-    """Full distributed loop: dist sink -> dist scan, no driver data."""
-    ny, nx = 8, 8
-    src = (
-        spark.range(ny * nx)
-        .select(
-            F.lit(0).cast("long").alias("t_idx"),
-            (F.col("id") / nx).cast("long").alias("y_idx"),
-            (F.col("id") % nx).alias("x_idx"),
-        )
-        .withColumn("lat", F.col("y_idx") * 1.0)
-        .withColumn("lon", F.col("x_idx") * 1.0)
-        .withColumn("value", (F.col("y_idx") * 31 + F.col("x_idx")).cast("double"))
-    )
-    out = str(tmp_path / "loop")
-    write_zarr_dist(src, out, chunk_y=3, chunk_x=5).collect()
-    back = read_zarr_dist(spark, out, "T2", "XLAT", "XLONG")
-    m = _collect_map(back)
-    assert len(m) == ny * nx
-    for (t, y, x), (lat, lon, v) in m.items():
-        assert (lat, lon, v) == (float(y), float(x), float(y * 31 + x))

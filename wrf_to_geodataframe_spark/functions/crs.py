@@ -16,7 +16,9 @@ three namespaces evaluate it:
   (``_phi``, ``_dl``, ``_rho``, ...) through ``withColumns``, so each
   stage references the previous stage's aliases and the expression tree
   stays linear in formula length; a transform drops exactly the
-  temporaries it made.  Column-name arguments become Columns once.
+  temporaries it made, and a temporary whose name is already a caller
+  column is staged under a free name, so caller columns pass through
+  unchanged.  Column-name arguments become Columns once.
 - the NUMPY namespace (``_NUMPY``) evaluates the same formula over
   float64 arrays: the ``*_forward_numpy`` / ``*_inverse_numpy`` kernels,
   the forward pandas UDFs, and the GRIB2 grid decoders (``lcc_forward``,
@@ -94,10 +96,27 @@ _SCALAR = _Math(
 )
 
 
+def _free_names(taken: set, *names: str) -> list:
+    """Each of ``names``, or the first of ``name_1``, ``name_2``, ...
+    not in ``taken``; every name returned is added to ``taken``."""
+    out = []
+    for name in names:
+        free, k = name, 0
+        while free in taken:
+            k += 1
+            free = f"{name}_{k}"
+        taken.add(free)
+        out.append(free)
+    return out
+
+
 class _ColumnMath(_Math):
     """The Column namespace over ``df``: ``let`` appends its columns and
     returns references to them; ``out`` appends the results and drops
-    the temporaries this namespace made (never the caller's columns)."""
+    the temporaries this namespace made (never the caller's columns).
+    A temporary named like a caller column is staged under a free name
+    (``_free_names``; the caller's columns are read once, at the first
+    ``let``), and later ``let``s of that name reuse it."""
 
     def __init__(self, df=None):
         super().__init__(
@@ -106,7 +125,7 @@ class _ColumnMath(_Math):
             sqrt=F.sqrt, log=F.log, exp=F.exp, radians=F.radians,
             degrees=F.degrees, pow=F.pow, pmod=F.pmod, greatest=F.greatest,
             least=F.least, where=lambda c, a, b: F.when(c, a).otherwise(b),
-            lit=F.lit, df=df, made=[],
+            lit=F.lit, df=df, made={}, taken=None,
         )
 
     @staticmethod
@@ -114,13 +133,18 @@ class _ColumnMath(_Math):
         return F.col(v) if isinstance(v, str) else v
 
     def let(self, cols: dict) -> list:
-        self.df = self.df.withColumns(cols)
-        self.made += [c for c in cols if c not in self.made]
-        return [F.col(c) for c in cols]
+        if self.taken is None:
+            self.taken = set(self.df.columns)
+        for c in cols:
+            if c not in self.made:
+                [self.made[c]] = _free_names(self.taken, c)
+        staged = {self.made[c]: v for c, v in cols.items()}
+        self.df = self.df.withColumns(staged)
+        return [F.col(c) for c in staged]
 
     def out(self, cols: dict):
         d = self.df.withColumns(cols)
-        return d.drop(*self.made) if self.made else d
+        return d.drop(*self.made.values()) if self.made else d
 
 
 # stage-free Column formulas (no ``let``) share one namespace
@@ -1243,14 +1267,17 @@ def wrf_ll_to_xy(
     construction.  Callers snap to cells with ``F.round``."""
     fwd, _ = wrf_projection(attrs)
     dx, dy, cen_lon, cen_lat, nx, ny = _wrf_grid_geometry(attrs)
-    d = fwd(df, lon, lat, out_x="_px", out_y="_py")
-    d = fwd(d, F.lit(cen_lon), F.lit(cen_lat), out_x="_cx", out_y="_cy")
+    px, py, cx, cy = _free_names(
+        set(df.columns), "_px", "_py", "_cx", "_cy"
+    )
+    d = fwd(df, lon, lat, out_x=px, out_y=py)
+    d = fwd(d, F.lit(cen_lon), F.lit(cen_lat), out_x=cx, out_y=cy)
     return d.withColumns({
-        out_i: (F.col("_px") - F.col("_cx")) / F.lit(dx)
+        out_i: (F.col(px) - F.col(cx)) / F.lit(dx)
         + F.lit((nx - 1) / 2.0),
-        out_j: (F.col("_py") - F.col("_cy")) / F.lit(dy)
+        out_j: (F.col(py) - F.col(cy)) / F.lit(dy)
         + F.lit((ny - 1) / 2.0),
-    }).drop("_px", "_py", "_cx", "_cy")
+    }).drop(px, py, cx, cy)
 
 
 def wrf_xy_to_ll(
@@ -1264,15 +1291,16 @@ def wrf_xy_to_ll(
     dx, dy, cen_lon, cen_lat, nx, ny = _wrf_grid_geometry(attrs)
     i = F.col(i) if isinstance(i, str) else i
     j = F.col(j) if isinstance(j, str) else j
-    d = fwd(df, F.lit(cen_lon), F.lit(cen_lat), out_x="_cx", out_y="_cy")
-    d = d.withColumns({
-        "_gx": (i - F.lit((nx - 1) / 2.0)) * F.lit(dx) + F.col("_cx"),
-        "_gy": (j - F.lit((ny - 1) / 2.0)) * F.lit(dy) + F.col("_cy"),
-    })
-    d = inv(
-        d, F.col("_gx"), F.col("_gy"), out_lon=out_lon, out_lat=out_lat
+    gx, gy, cx, cy = _free_names(
+        set(df.columns), "_gx", "_gy", "_cx", "_cy"
     )
-    return d.drop("_gx", "_gy", "_cx", "_cy")
+    d = fwd(df, F.lit(cen_lon), F.lit(cen_lat), out_x=cx, out_y=cy)
+    d = d.withColumns({
+        gx: (i - F.lit((nx - 1) / 2.0)) * F.lit(dx) + F.col(cx),
+        gy: (j - F.lit((ny - 1) / 2.0)) * F.lit(dy) + F.col(cy),
+    })
+    d = inv(d, F.col(gx), F.col(gy), out_lon=out_lon, out_lat=out_lat)
+    return d.drop(gx, gy, cx, cy)
 
 
 def wrf_ll_to_xy_scalar(
@@ -1383,10 +1411,11 @@ def from_crs(df, crs: str | int, x="x", y="y",
         })
     if code == 27700:
         inv = osgb_inverse_pandas_udf()
-        d = df.withColumn("_ll", inv(x, y))
+        [ll] = _free_names(set(df.columns), "_ll")
+        d = df.withColumn(ll, inv(x, y))
         return d.withColumns({
-            out_lon: F.col("_ll.lon"), out_lat: F.col("_ll.lat"),
-        }).drop("_ll")
+            out_lon: F.col(f"{ll}.lon"), out_lat: F.col(f"{ll}.lat"),
+        }).drop(ll)
     if 32601 <= code <= 32660:
         return utm_to_lonlat(df, x, y, code - 32600,
                              out_lon=out_lon, out_lat=out_lat)

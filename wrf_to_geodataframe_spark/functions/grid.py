@@ -46,21 +46,6 @@ def box_area(x1: Column, y1: Column, x2: Column, y2: Column) -> Column:
     return (x2 - x1) * (y2 - y1)
 
 
-def interval_overlap(a1: Column, a2: Column, b1: Column, b2: Column) -> Column:
-    """Length of the overlap of two 1-D intervals, clamped at 0."""
-    return F.greatest(F.least(a2, b2) - F.greatest(a1, b1), F.lit(0.0))
-
-
-def box_intersection_area(
-    ax1: Column, ay1: Column, ax2: Column, ay2: Column,
-    bx1: Column, by1: Column, bx2: Column, by2: Column,
-) -> Column:
-    """Area of the intersection of two axis-aligned boxes — the analytic
-    form of ``gpd.overlay(..., "intersection").area`` for rectilinear
-    grids (``delphine/regrid.py:267-270``)."""
-    return interval_overlap(ax1, ax2, bx1, bx2) * interval_overlap(ay1, ay2, by1, by2)
-
-
 def box_within_bbox(
     x1: Column, y1: Column, x2: Column, y2: Column,
     xmin: Column, ymin: Column, xmax: Column, ymax: Column,

@@ -1,11 +1,9 @@
 """Skew mitigation primitives (brief: "salting for skew").
 
-AQE's skew-join splitter handles moderate skew at runtime; these are the
-explicit tools for the pathological cases AQE can't fix — a single hot
-key whose rows exceed one executor's memory, or a skewed aggregation
-whose partial state is itself huge.
+AQE's skew-join splitter handles moderate skew at runtime; the explicit
+tool for a hot key AQE can't fix is a salt that spreads its rows.
 
-Both use a DETERMINISTIC salt (md5 of stable row attributes, never
+The salt is DETERMINISTIC (md5 of stable row attributes, never
 rand()): results are reproducible under retries and speculative
 execution, which nondeterministic salts silently break (a retried task
 re-salts differently and rows migrate between partitions mid-job).
@@ -15,7 +13,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from wrf_to_geodataframe_spark.functions.text import hash60
@@ -27,66 +25,3 @@ def deterministic_salt(cols: Sequence[Column], n_salts: int) -> Column:
     key = F.concat_ws("\x1f", *[c.cast("string") for c in cols])
     return (hash60(key) % n_salts).cast("int")
 
-
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    salt_cols: Sequence[str],
-    n_salts: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi join where ``fact`` is heavily skewed on ``key``: fact rows
-    get a deterministic salt from ``salt_cols`` (columns that vary
-    within a key, e.g. the fact's primary key), the dim side replicates
-    ``n_salts``x, and the join runs on (key, salt) — the hot key's rows
-    spread over ``n_salts`` tasks instead of one straggler.
-
-    Cost model: dim is replicated n_salts times (use for small-to-medium
-    dims; a broadcastable dim doesn't need salting at all), fact is
-    scanned once.  Result equals the plain join exactly for the
-    fact-preserving join types (inner/left/left_semi/left_anti).  For
-    right/full/right_semi the replicated dim rows that match NO fact row
-    would each surface n_salts times, so those types are rejected."""
-    safe = {"inner", "left", "leftouter", "left_outer",
-            "left_semi", "leftsemi", "semi",
-            "left_anti", "leftanti", "anti", "cross"}
-    if how.lower() not in safe:
-        raise ValueError(
-            f"salted_join supports only fact-preserving join types "
-            f"{sorted(safe)}; how={how!r} would duplicate unmatched dim "
-            f"rows n_salts times"
-        )
-    salted_fact = fact.withColumn(
-        "_salt", deterministic_salt([F.col(c) for c in salt_cols], n_salts)
-    )
-    salted_dim = dim.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    return salted_fact.join(salted_dim, [key, "_salt"], how).drop("_salt")
-
-
-def salted_distinct_count(
-    df: DataFrame,
-    group_key: str,
-    distinct_col: str,
-    n_salts: int = 8,
-) -> DataFrame:
-    """count(DISTINCT x) per group when one group dominates: stage 1
-    dedups (key, salt, x) locally, stage 2 merges per-salt partial
-    counts — the hot group's distinct state is split n_salts ways
-    instead of converging on one task.
-
-    Returns (group_key, n_distinct)."""
-    salted = df.withColumn(
-        "_salt", deterministic_salt([F.col(distinct_col)], n_salts)
-    )
-    partial = (
-        salted.select(group_key, "_salt", distinct_col)
-        .distinct()
-        .groupBy(group_key, "_salt")
-        .agg(F.count(F.lit(1)).alias("_part"))
-    )
-    return partial.groupBy(group_key).agg(
-        F.sum("_part").cast("long").alias("n_distinct")
-    )

@@ -488,34 +488,6 @@ def _attrs_or_file(
     )
 
 
-def wrf_ll_to_xy_archive(
-    path: str, df: DataFrame, lon, lat, out_i: str = "i", out_j: str = "j"
-) -> DataFrame:
-    """wrf-python's actual ``ll_to_xy(wrfin, ...)`` call shape: the
-    projection block comes from the ARCHIVE itself
-    (:func:`wrf_global_attrs`, metadata-only) instead of a hand-typed
-    attrs dict — then the same lazy grid-index column transform
-    (functions/crs.wrf_ll_to_xy)."""
-    from wrf_to_geodataframe_spark.functions.crs import wrf_ll_to_xy
-
-    return wrf_ll_to_xy(
-        wrf_global_attrs(path), df, lon, lat, out_i=out_i, out_j=out_j
-    )
-
-
-def wrf_xy_to_ll_archive(
-    path: str, df: DataFrame, i, j,
-    out_lon: str = "lon", out_lat: str = "lat",
-) -> DataFrame:
-    """wrf-python's ``xy_to_ll(wrfin, ...)``: the inverse of
-    :func:`wrf_ll_to_xy_archive`, attrs read off the archive."""
-    from wrf_to_geodataframe_spark.functions.crs import wrf_xy_to_ll
-
-    return wrf_xy_to_ll(
-        wrf_global_attrs(path), df, i, j, out_lon=out_lon, out_lat=out_lat
-    )
-
-
 def wrf_times(
     spark: SparkSession,
     path: str,
@@ -1566,37 +1538,6 @@ def _resolve_cross_line(
     )
 
 
-def wrf_xy(
-    spark: SparkSession,
-    path: str,
-    start: tuple[float, float] | None = None,
-    end: tuple[float, float] | None = None,
-    n_points: int | None = None,
-    attrs: dict | None = None,
-    pivot_point: tuple[float, float] | None = None,
-    angle: float | None = None,
-    latlon: bool = False,
-) -> DataFrame:
-    """wrf-python's ``xy()`` helper as a front door: the cross-section
-    line's sample points themselves, as a (s, x, y) DataFrame —
-    resolved through the same three call shapes as vertcross
-    (:func:`_resolve_cross_line`) so a caller can inspect or reuse the
-    line (e.g. to feed :func:`wrf_interp2dxy`) without sampling a
-    field."""
-    start, end, n = _resolve_cross_line(
-        spark, path, start, end, n_points, attrs, pivot_point, angle,
-        latlon,
-    )
-    step = 1.0 / (n - 1) if n > 1 else 0.0
-    return spark.range(n).select(
-        F.col("id").alias("s"),
-        (F.lit(start[0])
-         + F.col("id") * F.lit((end[0] - start[0]) * step)).alias("x"),
-        (F.lit(start[1])
-         + F.col("id") * F.lit((end[1] - start[1]) * step)).alias("y"),
-    )
-
-
 def wrf_vertcross(
     spark: SparkSession,
     path: str,
@@ -1687,44 +1628,6 @@ def wrf_interp2dxy(
     return interp2dxy(
         fld, vals[0], "k", "x_idx", "y_idx", xy,
         out_col=vals[0], extra_keys=["file"],
-    )
-
-
-def wrf_smooth2d(
-    spark: SparkSession,
-    path: str,
-    field: str,
-    passes: int = 1,
-    lat_var: str = "XLAT",
-    lon_var: str = "XLONG",
-    attrs: dict | None = None,
-    **kw,
-) -> DataFrame:
-    """wrf-python ``smooth2d(getvar(...), passes)`` over the archive:
-    the RIP 5-point smoother applied per horizontal plane of any
-    single-component getvar field (2-D surface staples smooth their
-    one plane; per-level fields smooth each (file, k) slab
-    independently) — operators/dynamics.smooth2d's pencil-window
-    passes with the shard (and level) key as the slab group.  Output
-    column ``<name>_sm``."""
-    from wrf_to_geodataframe_spark.operators.dynamics import smooth2d
-
-    fld = wrf_getvar(
-        spark, path, field, lat_var=lat_var, lon_var=lon_var,
-        attrs=attrs, **kw,
-    )
-    keys = [c for c in fld.columns
-            if c in ("file", "k", "y_idx", "x_idx", "time")]
-    vals = [c for c in fld.columns if c not in keys]
-    if len(vals) != 1:
-        raise ValueError(
-            f"smooth2d needs a single-component field; {field!r} "
-            f"carries {vals}"
-        )
-    groups = [c for c in keys if c in ("file", "k")]
-    return smooth2d(
-        fld, vals[0], "x_idx", "y_idx", passes=int(passes),
-        group_cols=groups,
     )
 
 

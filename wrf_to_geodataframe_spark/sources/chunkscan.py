@@ -1,5 +1,6 @@
-"""The one chunk-parallel scan kernel behind every chunked-array source
-(zarr v2 chunks, zarr v3 shards, NetCDF-4/HDF5 chunks).
+"""The one chunk-parallel scan kernel behind the zarr sources (zarr v2
+chunks, zarr v3 shards); NetCDF-4/HDF5 chunks scan through the
+virtual-dataset layer (``sources/virtual.py``).
 
 A chunked (t, y, x) or (y, x) variable becomes the engine's long table
 (t_idx, y_idx, x_idx, lat, lon, value) the same way whatever the

@@ -12,10 +12,7 @@ the field, round-tripped by :func:`read_geoparquet`.
 Beyond the engine's native single-ring model, the WKB layer reads the
 full GeoParquet polygon surface: :func:`parse_wkb` handles polygons
 with holes and multipolygons in either byte order (Z/M rejected
-cleanly), :func:`wkb_area` subtracts holes, and the Spark-side
-:func:`with_geometry_stats` / :func:`explode_wkb_rings` triage and
-re-express third-party geometries as single-ring rows every existing
-operator consumes.
+cleanly), :func:`wkb_area` subtracts holes.
 """
 
 from __future__ import annotations
@@ -353,86 +350,6 @@ def with_wkb_column(df, poly_col: str, out_col: str = "wkb"):
     return df.withColumn(out_col, _encode(col(poly_col)))
 
 
-def with_geometry_stats(df, wkb_col: str = "geometry"):
-    """Attach ``n_parts``, ``n_holes``, ``area`` (holes subtracted)
-    parsed from a general WKB column — the cheap per-row triage for
-    third-party GeoParquet whose geometries exceed the engine's native
-    single-ring model.  Arrow-vectorized pandas_udf, fully
-    distributed."""
-    from pyspark.sql.functions import col, pandas_udf
-
-    @pandas_udf("struct<n_parts: int, n_holes: int, area: double>")
-    def _stats(wkbs: pd.Series) -> pd.DataFrame:
-        parts, holes, areas = [], [], []
-        for b in wkbs:
-            _k, polys = parse_wkb(bytes(b))
-            parts.append(len(polys))
-            holes.append(sum(len(p) - 1 for p in polys))
-            areas.append(
-                sum(
-                    _ring_area(p[0]) - sum(_ring_area(h) for h in p[1:])
-                    for p in polys
-                )
-            )
-        return pd.DataFrame(
-            {"n_parts": parts, "n_holes": holes, "area": areas}
-        )
-
-    return df.withColumn("geom_stats", _stats(col(wkb_col))).select(
-        "*", "geom_stats.*"
-    ).drop("geom_stats")
-
-
-def explode_wkb_rings(df, wkb_col: str = "geometry", keep_cols=None):
-    """Explode a general WKB column into the engine's NATIVE geometry
-    model: one row per ring with ``part_idx``, ``ring_idx``,
-    ``is_hole`` and the open vertex array ``geom`` — so multipolygon /
-    holed GeoParquet feeds every existing single-ring operator (area,
-    clip, overlay, spatial join) with holes handled as negative-area
-    rows.  ``mapInPandas`` (Arrow), one input row -> n_ring rows,
-    fully distributed."""
-    from pyspark.sql.types import (
-        ArrayType,
-        BooleanType,
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
-
-    keep_cols = list(keep_cols or [c for c in df.columns if c != wkb_col])
-    kept_fields = [f for f in df.schema.fields if f.name in keep_cols]
-    schema = StructType(
-        kept_fields
-        + [
-            StructField("part_idx", IntegerType()),
-            StructField("ring_idx", IntegerType()),
-            StructField("is_hole", BooleanType()),
-            StructField("geom", ArrayType(ArrayType(DoubleType()))),
-        ]
-    )
-
-    def _batches(it):
-        for pdf in it:
-            rows = []
-            for _, rec in pdf.iterrows():
-                _k, polys = parse_wkb(bytes(rec[wkb_col]))
-                for pi, rings in enumerate(polys):
-                    for ri, ring in enumerate(rings):
-                        rows.append(
-                            {
-                                **{c: rec[c] for c in keep_cols},
-                                "part_idx": pi,
-                                "ring_idx": ri,
-                                "is_hole": ri > 0,
-                                "geom": [list(v) for v in ring],
-                            }
-                        )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    return df.mapInPandas(_batches, schema)
-
-
 def _crs_projjson(crs: str):
     """Map the engine's CRS identifiers to the GeoParquet ``crs`` field:
     ``None`` for the spec default (OGC:CRS84 / plain lon-lat WGS84),
@@ -618,29 +535,3 @@ def read_geoparquet(spark, path: str, geom_col: str = "geometry", bbox=None):
                 meta = json.loads(kv[b"geo"])
     return df, meta
 
-
-def write_cells_geopackage(df, path: str, layer: str = "cells") -> None:
-    """S3 sink for a tessellation result DataFrame (geometry/tessellate
-    schema: wkt unused here, envelope-based ring from x1..y2 when no
-    vertex array is present).
-
-    Driver-side ``toPandas`` by design — small outputs only (the
-    reference's demonstrated scale is <= ~10^5 cells).  Past ~10^5 rows
-    use :func:`write_geoparquet`, which writes WKB part files from the
-    executors with no driver collect."""
-    pdf = df.toPandas()
-    rows = []
-    for _, r in pdf.iterrows():
-        if "geom" in pdf.columns:
-            ring = np.asarray([list(v) for v in r["geom"]], dtype=float)
-        else:
-            ring = np.array(
-                [[r.x1, r.y1], [r.x2, r.y1], [r.x2, r.y2], [r.x1, r.y2]]
-            )
-        attrs = {
-            k: r[k]
-            for k in pdf.columns
-            if k not in ("geom", "wkt") and np.isscalar(r[k])
-        }
-        rows.append({"geom": ring, **attrs})
-    write_geopackage(path, layer, rows)

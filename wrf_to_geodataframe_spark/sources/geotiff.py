@@ -35,9 +35,7 @@ the same interop discipline as every other codec in the repo.
 
 Scale path: ``read_geotiff_dist`` extracts the tile manifest from the
 IFD (mmap, metadata pages only — an IFD indexes the whole raster in
-KBs) and executors seek directly to their tiles' byte ranges;
-``read_geotiff_dir`` parallelizes across files via ``binaryFile``
-(the WARC/NetCDF/GRIB pattern).
+KBs) and executors seek directly to their tiles' byte ranges.
 """
 
 from __future__ import annotations
@@ -56,13 +54,11 @@ from wrf_to_geodataframe_spark.sources.tiff import (
 
 __all__ = [
     "GeoTiffError",
-    "is_tiff",
     "geotiff_info",
     "read_geotiff",
     "write_geotiff",
     "read_geotiff_grid",
     "read_geotiff_dist",
-    "read_geotiff_dir",
 ]
 
 
@@ -84,14 +80,6 @@ _T_SAMPLE_FMT = 339
 _T_PIXEL_SCALE, _T_TIEPOINT, _T_TRANSFORM = 33550, 33922, 34264
 _T_GEO_DIR, _T_GEO_DOUBLES, _T_GEO_ASCII = 34735, 34736, 34737
 _T_GDAL_NODATA = 42113
-
-
-def is_tiff(buf: bytes) -> bool:
-    return len(buf) >= 8 and buf[:2] in (b"II", b"MM") and (
-        struct.unpack_from(
-            ("<" if buf[:2] == b"II" else ">") + "H", buf, 2
-        )[0] in (42, 43)
-    )
 
 
 def _parse_ifds(buf, max_ifds: int = 64) -> tuple[list[dict], str, bool]:
@@ -762,32 +750,3 @@ def read_geotiff_dist(spark, path: str, band: int = 0, level: int = 0):
 
     return mdf.mapInPandas(_scan, schema)
 
-
-def read_geotiff_dir(spark, path: str, band: int = 0):
-    """Distributed S1 over a directory of GeoTIFFs (one raster per
-    scene/date — the satellite-archive shape): ``binaryFile`` scan,
-    each file decoded executor-side.  Emits (file, y_idx, x_idx, lon,
-    lat, value) for ``band``."""
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [StructField("file", StringType())]
-        + [StructField(c, LongType()) for c in ("y_idx", "x_idx")]
-        + [StructField(c, DoubleType()) for c in ("lon", "lat", "value")]
-    )
-
-    def _batches(it):
-        for pdf in it:
-            for fname, buf in zip(pdf["path"], pdf["content"]):
-                frame = _geotiff_frame(*read_geotiff(bytes(buf)), band)
-                frame.insert(0, "file", fname)
-                yield frame
-
-    files = spark.read.format("binaryFile").load(path)
-    return files.select("path", "content").mapInPandas(_batches, schema)

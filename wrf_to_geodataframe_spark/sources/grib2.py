@@ -71,7 +71,6 @@ from wrf_to_geodataframe_spark.functions.crs import (  # noqa: F401
 
 __all__ = [
     "Grib2Error",
-    "is_grib2",
     "read_grib2",
     "read_grib2_bytes",
     "write_grib2",
@@ -99,10 +98,6 @@ def _enc_smag(v: int, nbytes: int) -> bytes:
         raise Grib2Error(f"sign-magnitude overflow: {v}")
     u = mag | ((1 << (bits - 1)) if v < 0 else 0)
     return int(u).to_bytes(nbytes, "big")
-
-
-def is_grib2(buf: bytes) -> bool:
-    return len(buf) >= 16 and buf[:4] == b"GRIB" and buf[7] == 2
 
 
 def _unpack_bits(data: bytes, nbits: int, n: int) -> np.ndarray:
@@ -1061,57 +1056,6 @@ def scan_grib2_offsets(path: str) -> list[tuple[int, int, int]]:
     if not out:
         raise Grib2Error(f"{path}: empty GRIB2 file")
     return out
-
-
-def read_grib2_msgs(spark, path: str):
-    """Message-parallel scan of ONE large GRIB2 file — the complement
-    of ``read_grib2_dir`` (which parallelizes across files): a single
-    GFS cycle file packs hundreds of messages, and one-file-one-task
-    would serialize it.  The driver builds the byte-range message
-    index (``scan_grib2_offsets``); each executor task seeks straight
-    to its messages and decodes only those bytes.  Emits the same
-    (msg_idx, y_idx, x_idx, lat, lon, value) table as
-    ``read_grib2_grid``.  Requires a path every executor can open."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    offsets = scan_grib2_offsets(path)
-    mdf = spark.createDataFrame(
-        offsets, "msg_idx long, off long, length long"
-    ).repartition(
-        max(1, min(len(offsets),
-                   spark.sparkContext.defaultParallelism * 2)),
-        "msg_idx",
-    )
-    schema = StructType(
-        [
-            StructField("msg_idx", LongType()),
-            StructField("y_idx", LongType()),
-            StructField("x_idx", LongType()),
-            StructField("lat", DoubleType()),
-            StructField("lon", DoubleType()),
-            StructField("value", DoubleType()),
-        ]
-    )
-
-    def _scan(it):
-        with open(path, "rb") as fh:
-            for pdf in it:
-                for row in pdf.itertuples(index=False):
-                    fh.seek(int(row.off))
-                    msgs = read_grib2_bytes(
-                        fh.read(int(row.length)), name=path
-                    )
-                    for frame in _unnest_messages(msgs, None):
-                        frame["msg_idx"] = int(row.msg_idx)
-                        yield frame
-
-    return mdf.mapInPandas(_scan, schema)
 
 
 def read_grib2_dir(spark, path: str):

@@ -377,8 +377,8 @@ def decode_chunk_pipeline(
     ``filter_mask`` bit i set means pipeline filter i was SKIPPED for
     this chunk (HDF5 optional-filter semantics — e.g. szip leaves
     incompressible chunks unfiltered).  Module-level so executor tasks
-    of the distributed chunk scan (sources/netcdf.py
-    ``read_netcdf_chunks``) can decode without holding a file object."""
+    of the virtual-dataset scan (sources/virtual.py ``read_virtual``)
+    can decode without holding a file object."""
     for i in range(len(filters) - 1, -1, -1):
         if filter_mask & (1 << i):
             continue

@@ -85,8 +85,8 @@ def _parse_header(buf: bytes, name: str = "<bytes>") -> dict:
     """Parse ONLY the classic-format header -> {cdf2, numrecs, dims
     (list of (name, size)), attrs, entries (list of (name, dimids,
     attrs, nc_type, begin)), rec_dim, recsize}.  Needs just the header
-    bytes, not the whole file — the slab-parallel single-file source
-    (``read_netcdf_slabs``) feeds it a bounded prefix read."""
+    bytes, not the whole file — ``_read_header_from_file`` feeds it a
+    bounded prefix read."""
     if buf[:3] != b"CDF" or buf[3] not in (1, 2):
         raise ValueError(f"{name}: not a NetCDF classic (CDF-1/CDF-2) file")
     cdf2 = buf[3] == 2
@@ -732,79 +732,6 @@ def write_netcdf_dir(
     )
 
 
-def read_netcdf_chunks(
-    spark,
-    path: str,
-    var: str,
-    lat_var: str,
-    lon_var: str,
-    time_index: int | None = None,
-):
-    """Chunk-parallel scan of ONE huge NetCDF-4/HDF5 file — the HDF5
-    counterpart of ``read_netcdf_slabs`` (classic), closing the one
-    layout where single-file parallelism was previously per-file only.
-
-    The driver extracts the CHUNK MANIFEST (``hdf5_chunk_manifest``:
-    mmap walk of object headers + v1 chunk B-tree — O(index), no data
-    pages) and broadcasts the small coordinate scales; each executor
-    task seeks directly to its chunks' byte ranges and runs the
-    filter pipeline (deflate/shuffle/szip) itself.  Unwritten chunks
-    yield the reader's fill (0.0).  Emits the same
-    (t_idx, y_idx, x_idx, lat, lon, value) long table as the other
-    single-file source, through the zarr scans' kernel
-    (``sources/chunkscan.py``).  Requires a path every executor can
-    open (local mode, NFS/Lustre — the HPC archive shape)."""
-    from wrf_to_geodataframe_spark.sources.chunkscan import (
-        grid_coords,
-        scan_chunks,
-    )
-    from wrf_to_geodataframe_spark.sources.hdf5 import (
-        decode_chunk_pipeline,
-        hdf5_chunk_manifest,
-    )
-
-    man = hdf5_chunk_manifest(path, var, aux_vars=(lat_var, lon_var))
-    chunks = man["chunks"]
-    meta = {
-        "shape": man["shape"],
-        "chunks": chunks,
-        "dtype": np.dtype(man["dtype"]),
-        "filters": man["filters"],
-        "fill": man["fill"],
-        "attrs": man["attrs"],
-    }
-    stored = {
-        tuple(o // c for o, c in zip(offs, chunks)): (addr, nbytes, mask)
-        for offs, addr, nbytes, mask in man["entries"]
-    }
-
-    def _decode(m, rows):
-        dt = m["dtype"]
-        nchunk = int(np.prod(m["chunks"]))
-        with open(path, "rb") as fh:
-            for row in rows:
-                if row.addr < 0:
-                    yield row, None
-                    continue
-                fh.seek(int(row.addr))
-                raw = decode_chunk_pipeline(
-                    fh.read(int(row.nbytes)), m["filters"],
-                    dt.itemsize, nchunk, int(row.fmask),
-                )
-                carr = np.frombuffer(raw, dt, count=nchunk)
-                yield row, carr.reshape(m["chunks"]).astype(
-                    dt.newbyteorder("="), copy=False
-                )
-
-    return scan_chunks(
-        spark, var, meta,
-        grid_coords(man["aux"][lat_var], man["aux_attrs"][lat_var],
-                    man["aux"][lon_var], man["aux_attrs"][lon_var]),
-        time_index, "addr long, nbytes long, fmask long",
-        lambda idx: stored.get(idx, (-1, 0, 0)), _decode, keyed=False,
-    )
-
-
 def _read_header_from_file(path: str) -> dict:
     """Parse the classic header with bounded prefix reads (64 KiB
     doubling) — a 50 GB model file never round-trips through memory
@@ -830,138 +757,3 @@ def _read_header_from_file(path: str) -> dict:
                 )
             size *= 8
 
-
-def read_netcdf_slabs(
-    spark,
-    path: str,
-    var: str,
-    lat_var: str,
-    lon_var: str,
-    records_per_slab: int | None = None,
-):
-    """Record-parallel scan of ONE huge classic NetCDF file — the
-    complement of ``read_netcdf_dir`` (which parallelizes across
-    files): a single multi-year model output can be tens of GB, and
-    one-file-one-task would serialize it.
-
-    The driver reads ONLY the header (bounded prefix read) plus the
-    small fixed coordinate variables; the record dimension is split
-    into slabs of ``records_per_slab`` records, and each executor task
-    seeks directly to its slab's byte ranges (the classic format's
-    record layout is arithmetic: ``begin + rec * step``), reading just
-    its own bytes.  Coordinates ship once via a broadcast.  Emits the
-    same (t_idx, y_idx, x_idx, lat, lon, value) long table as the
-    other S1 sources.
-
-    Requires a filesystem every executor can open by path (local mode,
-    NFS/Lustre — the usual HPC archive home); HDF5-backed NetCDF-4
-    files get the same single-file parallelism via chunk-index walks
-    in ``read_netcdf_chunks``."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    hdr = _read_header_from_file(path)
-    dims = hdr["dims"]
-    entry = {e[0]: e for e in hdr["entries"]}
-    if var not in entry:
-        raise ValueError(f"{path}: no variable {var!r}")
-    nm, dimids, vatts, t, begin = entry[var]
-    rec_dim = hdr["rec_dim"]
-    is_rec = rec_dim is not None and dimids and dimids[0] == rec_dim
-    if len(dimids) == 2:
-        # plain 2-D grid: nothing to slab over; one driver read
-        return read_netcdf_grid(spark, path, var, lat_var, lon_var)
-    if len(dimids) != 3:
-        raise ValueError(f"{path}: {var!r} is not a (t, y, x) grid")
-    grid_shape = [dims[d][1] for d in dimids[1:]]
-    ny, nx = grid_shape
-    per_rec = ny * nx
-    if is_rec:
-        # record layout: slabs interleave across record variables
-        step = (
-            hdr["recsize"] if hdr["n_recvars"] > 1 else _SIZES[t] * per_rec
-        )
-        nrec = hdr["numrecs"]
-    else:
-        # fixed 3-D variable: contiguous slices along axis 0
-        step = _SIZES[t] * per_rec
-        nrec = dims[dimids[0]][1]
-    dtype = _DTYPES[t]
-
-    def _fixed_var(name: str) -> np.ndarray:
-        e = entry[name]
-        shape = [dims[d][1] for d in e[1]]
-        count = int(np.prod(shape, initial=1))
-        with open(path, "rb") as f:
-            f.seek(e[4])
-            raw = f.read(count * _SIZES[e[3]])
-        arr = np.frombuffer(raw, dtype=_DTYPES[e[3]], count=count)
-        arr = arr.reshape(shape).astype(arr.dtype.newbyteorder("="))
-        return np.asarray(cf_mask_and_scale(arr, e[2] or {}))
-
-    lat = _fixed_var(lat_var)
-    lon = _fixed_var(lon_var)
-    if lat.ndim == 1 and lon.ndim == 1:
-        lon, lat = np.meshgrid(lon, lat)
-    yy, xx = np.meshgrid(np.arange(ny), np.arange(nx), indexing="ij")
-    coords = spark.sparkContext.broadcast(
-        (
-            yy.ravel().astype("int64"),
-            xx.ravel().astype("int64"),
-            lat.ravel().astype("float64"),
-            lon.ravel().astype("float64"),
-        )
-    )
-    if records_per_slab is None:
-        target = spark.sparkContext.defaultParallelism * 2
-        records_per_slab = max(1, -(-nrec // target))
-    ranges = [
-        (s, min(s + records_per_slab, nrec))
-        for s in range(0, nrec, records_per_slab)
-    ]
-    schema = StructType(
-        [
-            StructField("t_idx", LongType()),
-            StructField("y_idx", LongType()),
-            StructField("x_idx", LongType()),
-            StructField("lat", DoubleType()),
-            StructField("lon", DoubleType()),
-            StructField("value", DoubleType()),
-        ]
-    )
-    rdf = spark.createDataFrame(
-        ranges, "rec_start long, rec_end long"
-    ).repartition(len(ranges), "rec_start")
-
-    nbytes_rec = _SIZES[t] * per_rec
-
-    def _slabs(it):
-        y_f, x_f, lat_f, lon_f = coords.value
-        with open(path, "rb") as f:
-            for pdf in it:
-                for rs, re_ in zip(pdf["rec_start"], pdf["rec_end"]):
-                    for rec in range(int(rs), int(re_)):
-                        f.seek(begin + rec * step)
-                        vals = np.frombuffer(
-                            f.read(nbytes_rec), dtype=dtype, count=per_rec
-                        )
-                        vals = cf_mask_and_scale(vals, vatts or {})
-                        yield pd.DataFrame(
-                            {
-                                "t_idx": np.full(
-                                    per_rec, rec, dtype="int64"
-                                ),
-                                "y_idx": y_f,
-                                "x_idx": x_f,
-                                "lat": lat_f,
-                                "lon": lon_f,
-                                "value": vals.astype("float64"),
-                            }
-                        )
-
-    return rdf.mapInPandas(_slabs, schema)

@@ -1,24 +1,16 @@
-"""NumPy ``.npy`` / ``.npz`` source+sink — the de-facto exchange format
+"""NumPy ``.npy`` source+sink — the de-facto exchange format
 embedding dumps and model activations arrive in (the `embeddings`
-side-channel of the LLM-pipeline brief; a 100-GB ``.npy`` of vectors is
-one flat array with a fixed row stride, which makes it BYTE-SPLITTABLE
-— the rare format where single-file parallelism needs no index at all).
+side-channel of the LLM-pipeline brief).
 
 From-scratch implementation of the NPY format spec (versions 1.0/2.0/
 3.0: magic, little-endian header length u2/u4, Python-literal header
-dict with ``descr``/``fortran_order``/``shape``); ``.npz`` is the
-stdlib-zip container of members.  numpy itself is the in-container
-validator: every test round-trips BOTH directions against
+dict with ``descr``/``fortran_order``/``shape``).  numpy itself is the
+in-container validator: every test round-trips BOTH directions against
 ``np.save``/``np.load`` (the codec-interop discipline, cf.
 tests/test_png_interop.py).
 
-Distributed scans:
-- ``read_npy_dir``: one task per shard file (the
-  ``np.save``-per-worker layout embedding jobs emit).
-- ``read_npy_slabs``: ONE huge 2-D ``.npy`` split by row ranges —
-  driver parses the ~100-byte header, executors seek to
-  ``offset + row * rowstride``; C-order only (Fortran order interleaves
-  rows across the file, the whole-file reader handles it).
+Distributed scan: ``read_npy_dir``, one task per shard file (the
+``np.save``-per-worker layout embedding jobs emit).
 """
 
 from __future__ import annotations
@@ -27,7 +19,6 @@ import ast
 import glob
 import os
 import struct
-import zipfile
 
 import numpy as np
 
@@ -38,8 +29,6 @@ __all__ = [
     "read_npy",
     "read_npy_bytes",
     "read_npy_dir",
-    "read_npy_slabs",
-    "read_npz",
     "write_npy",
 ]
 
@@ -91,17 +80,6 @@ def read_npy_bytes(buf: bytes, name: str = "<bytes>") -> np.ndarray:
 def read_npy(path: str) -> np.ndarray:
     with open(path, "rb") as f:
         return np.array(read_npy_bytes(f.read(), path))
-
-
-def read_npz(path: str) -> dict[str, np.ndarray]:
-    out = {}
-    with zipfile.ZipFile(path) as z:
-        for member in z.namelist():
-            key = member[:-4] if member.endswith(".npy") else member
-            out[key] = np.array(
-                read_npy_bytes(z.read(member), f"{path}:{member}")
-            )
-    return out
 
 
 def write_npy(path: str, arr: np.ndarray) -> None:
@@ -169,58 +147,3 @@ def read_npy_dir(spark, src: str | list[str], pattern: str = "*.npy"):
 
     return fdf.mapInPandas(_scan, _SCHEMA)
 
-
-def read_npy_slabs(spark, path: str, rows_per_task: int = 65536):
-    """Row-range-parallel scan of ONE large 2-D C-order ``.npy``: the
-    driver reads only the header (~100 bytes); each task seeks to its
-    slab's byte range.  The format's fixed row stride is the whole
-    manifest — no chunk index to build or store."""
-    with open(path, "rb") as f:
-        head = f.read(4096)
-        # a valid header may exceed the fixed prefix (v1 allows up to
-        # 64 KiB, v2/v3 up to 4 GiB — long structured descrs or heavy
-        # padding); the declared header length is in the first 12
-        # bytes, so re-read exactly what's needed before failing
-        if len(head) >= 12 and head[:6] == _MAGIC:
-            if head[6] == 1:
-                need = 10 + struct.unpack_from("<H", head, 8)[0]
-            elif head[6] in (2, 3):
-                need = 12 + struct.unpack_from("<I", head, 8)[0]
-            else:
-                need = len(head)
-            if need > len(head):
-                f.seek(0)
-                head = f.read(need)
-    info = npy_info(head, path)
-    if info["fortran"]:
-        raise ValueError(f"{path}: Fortran-order file is not row-splittable")
-    if len(info["shape"]) != 2:
-        raise ValueError(f"{path}: expected 2-D, got {info['shape']}")
-    n, d = info["shape"]
-    stride = d * info["dtype"].itemsize
-    dt_str = info["dtype"].str
-    offset = info["offset"]
-    slabs = [
-        (r0, min(r0 + rows_per_task, n))
-        for r0 in range(0, n, rows_per_task)
-    ]
-    sc = spark.sparkContext
-    sdf = spark.createDataFrame(
-        slabs, "r0 long, r1 long"
-    ).repartition(
-        max(1, min(len(slabs), sc.defaultParallelism * 2)), "r0"
-    )
-
-    def _scan(it):
-        dt = np.dtype(dt_str)
-        with open(path, "rb") as fh:
-            for pdf in it:
-                for row in pdf.itertuples(index=False):
-                    r0, r1 = int(row.r0), int(row.r1)
-                    fh.seek(offset + r0 * stride)
-                    raw = fh.read((r1 - r0) * stride)
-                    arr = np.frombuffer(raw, dt).reshape(r1 - r0, d)
-                    arr = arr.astype(dt.newbyteorder("="), copy=False)
-                    yield _emit_rows(arr, path, r0)
-
-    return sdf.mapInPandas(_scan, _SCHEMA)

@@ -3,27 +3,19 @@
 The reference renders its tessellations/regrids as matplotlib
 choropleths (``gdf.plot(varname)`` at wrf_voronoi.py:181 and
 haduk_voronoi.py:72-75, guarded by ``len(gdf) < 10_000``).  This
-module is that sink re-expressed for the engine: polygon cells
-colored by value are RASTERIZED to georeferenced PNG tiles — scanline
-even-odd fill (the same predicate family as the engine's PIP
-kernels), a deterministic integer-interpolated colormap, and the
-repo's own libpng-cross-validated PNG encoder (sources/png.py).
+module is that sink re-expressed for the engine: a long grid table
+colored by value becomes PNG tiles through a deterministic
+integer-interpolated colormap and the repo's own libpng-cross-validated
+PNG encoder (sources/png.py); ``rasterize_polygon`` is the even-odd
+scanline fill (the same predicate family as the engine's PIP kernels)
+for polygon cells.
 
 Scale shape (the part matplotlib fundamentally cannot do): rendering
-is TILE-PARALLEL — cells are assigned to the pixel tiles their bbox
-overlaps (an explode + groupBy, no cross join), each tile rasterizes
-its own cells in one Arrow task, and the output is a DataFrame of
-(tile_y, tile_x, png) rows written as a tile set — a 10^8-cell
-choropleth renders as a slippy-map layer with no driver-sized state.
-``render_cells_png`` is the single-image convenience with the
-reference's smallness guard lifted to PIXELS (named error, not a
-silent skip).
-
-Determinism: adjacent cells share edges; pixel centers on a shared
-edge must not depend on task order.  Cells paint in ascending
-``order_col`` within every tile (stable sort), so ties resolve the
-same way in every layout — and for a tessellation (disjoint interiors)
-only edge pixels are ever contested.
+is TILE-PARALLEL — ``render_grid`` assigns each cell to its pixel tile
+and paints each tile in one Arrow task, so the output is a DataFrame
+of (tile_y, tile_x, png) rows — a 10^8-cell field renders as a
+slippy-map layer (``build_tile_pyramid`` for the coarser zooms) with
+no driver-sized state.
 """
 
 from __future__ import annotations
@@ -34,11 +26,7 @@ __all__ = [
     "build_tile_pyramid",
     "colormap_rgb",
     "rasterize_polygon",
-    "render_cells",
-    "render_cells_png",
     "render_grid",
-    "world_file",
-    "write_png_tiles",
 ]
 
 # viridis-like anchors (dark purple -> blue -> green -> yellow),
@@ -127,16 +115,6 @@ def rasterize_polygon(xs, ys, transform, width: int, height: int):
     return r0, c0, mask
 
 
-def world_file(transform) -> str:
-    """ESRI world-file text for the affine (pw, ph, ox, oy) with the
-    pixel-center convention this module renders under."""
-    pw, ph, ox, oy = (float(t) for t in transform)
-    return "\n".join(
-        f"{v:.10f}"
-        for v in (pw, 0.0, 0.0, ph, ox + 0.5 * pw, oy + 0.5 * ph)
-    ) + "\n"
-
-
 def _scale_to_255(df, value_col):
     """(df + 'cidx' 0..255 column, computed from the GLOBAL min/max via
     a broadcast 1-row agg — the A1 pattern, no driver round-trip).
@@ -169,156 +147,6 @@ def _scale_to_255(df, value_col):
         )
         .withColumn("cidx", F.least(F.greatest("cidx", F.lit(0)), F.lit(255)))
         .drop("vmin", "vmax")
-    )
-
-
-def render_cells(
-    spark,
-    cells,
-    value_col: str,
-    transform,
-    width: int,
-    height: int,
-    xs_col: str = "xs",
-    ys_col: str = "ys",
-    order_col: str | None = None,
-    tile: int = 256,
-    background=(0, 0, 0, 0),
-):
-    """Tile-parallel choropleth: polygon cells (``xs_col``/``ys_col``
-    vertex arrays, colored by ``value_col`` through the global-extent
-    colormap) -> DataFrame (tile_y, tile_x, png binary) of RGBA PNG
-    tiles on the pixel grid defined by ``transform`` (pw, ph, ox, oy)
-    and the ``height x width`` canvas.  Cells land only on the tiles
-    their bbox overlaps (explode + groupBy — never a cross join);
-    each tile rasterizes in one Arrow task."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from wrf_to_geodataframe_spark.sources.png import encode_png
-
-    pw, ph, ox, oy = (float(t) for t in transform)
-    order = order_col or value_col
-    d = _scale_to_255(cells, value_col).select(
-        F.col(xs_col).alias("xs"), F.col(ys_col).alias("ys"),
-        "cidx", F.col(order).alias("ord"),
-    )
-    # tile assignment from the vertex bbox, in pixel space
-    d = d.withColumn(
-        "px0", F.array_min(F.transform("xs", lambda x: (x - ox) / pw))
-    ).withColumn(
-        "px1", F.array_max(F.transform("xs", lambda x: (x - ox) / pw))
-    ).withColumn(
-        "py0", F.array_min(F.transform("ys", lambda y: (y - oy) / ph))
-    ).withColumn(
-        "py1", F.array_max(F.transform("ys", lambda y: (y - oy) / ph))
-    )
-    nty = -(-height // tile)
-    ntx = -(-width // tile)
-    # drop cells whose bbox lies entirely off-canvas BEFORE exploding:
-    # F.sequence DESCENDS when start > stop, so an off-canvas cell
-    # would otherwise generate the whole descending tile range
-    # (negative / out-of-range tile indices).
-    d = d.filter(
-        (F.col("px1") >= 0) & (F.col("px0") < F.lit(float(width)))
-        & (F.col("py1") >= 0) & (F.col("py0") < F.lit(float(height)))
-    )
-    d = (
-        d.withColumn(
-            "ty",
-            F.explode(
-                F.sequence(
-                    F.greatest(F.floor(F.col("py0") / tile), F.lit(0)),
-                    F.least(
-                        F.floor(F.col("py1") / tile), F.lit(nty - 1)
-                    ),
-                )
-            ),
-        )
-        .withColumn(
-            "tx",
-            F.explode(
-                F.sequence(
-                    F.greatest(F.floor(F.col("px0") / tile), F.lit(0)),
-                    F.least(
-                        F.floor(F.col("px1") / tile), F.lit(ntx - 1)
-                    ),
-                )
-            ),
-        )
-        .drop("px0", "px1", "py0", "py1")
-    )
-    bg = tuple(int(b) for b in background)
-    tile_sz = int(tile)
-    W, H = int(width), int(height)
-
-    def _paint(key, pdf):
-        ty, tx = int(key[0]), int(key[1])
-        th = min(tile_sz, H - ty * tile_sz)
-        tw = min(tile_sz, W - tx * tile_sz)
-        img = np.empty((th, tw, 4), dtype="uint8")
-        img[...] = bg
-        # tile-local affine: same pixel size, origin shifted
-        t_transform = (
-            pw, ph, ox + tx * tile_sz * pw, oy + ty * tile_sz * ph,
-        )
-        pdf = pdf.sort_values("ord", kind="stable")
-        for row in pdf.itertuples(index=False):
-            r0, c0, mask = rasterize_polygon(
-                row.xs, row.ys, t_transform, tw, th
-            )
-            if not mask.any():
-                continue
-            rgb = colormap_rgb(np.int64(row.cidx))
-            sel = img[r0:r0 + mask.shape[0], c0:c0 + mask.shape[1]]
-            sel[mask] = (*rgb.tolist(), 255)
-        png = encode_png(img.tobytes(), tw, th, channels=4)
-        return pd.DataFrame(
-            {"tile_y": [ty], "tile_x": [tx], "png": [png]}
-        )
-
-    return (
-        d.groupBy("ty", "tx")
-        .applyInPandas(_paint, "tile_y int, tile_x int, png binary")
-    )
-
-
-def render_cells_png(
-    spark,
-    cells,
-    value_col: str,
-    transform,
-    width: int,
-    height: int,
-    max_pixels: int = 16_000_000,
-    **kw,
-) -> tuple[bytes, str]:
-    """Single-image convenience (the reference's ``.plot()`` shape):
-    render the whole canvas as ONE RGBA PNG + its world file.  The
-    reference guards plots by row count (haduk_voronoi.py:72,
-    ``len(gdf) < 10_000``); here the guard is PIXELS and it fails
-    loudly instead of silently skipping."""
-    if width * height > max_pixels:
-        raise ValueError(
-            f"single-image render of {width}x{height} exceeds "
-            f"max_pixels={max_pixels}; use render_cells (tile set) "
-            "or raise the guard explicitly"
-        )
-    from wrf_to_geodataframe_spark.sources.png import decode_png, encode_png
-
-    tiles = render_cells(
-        spark, cells, value_col, transform, width, height, **kw
-    ).collect()
-    img = np.zeros((height, width, 4), dtype="uint8")
-    tile = int(kw.get("tile", 256))
-    for r in tiles:
-        w_t, h_t, ch, raw = decode_png(bytes(r["png"]))
-        block = np.frombuffer(raw, "uint8").reshape(h_t, w_t, ch)
-        y0, x0 = r["tile_y"] * tile, r["tile_x"] * tile
-        img[y0:y0 + h_t, x0:x0 + w_t] = block
-    return (
-        encode_png(img.tobytes(), width, height, channels=4),
-        world_file(transform),
     )
 
 
@@ -385,44 +213,6 @@ def render_grid(
         d.groupBy("ty", "tx")
         .applyInPandas(_paint, "tile_y int, tile_x int, png binary")
     )
-
-
-def write_png_tiles(tiles, out_dir: str, transform=None, tile: int = 256):
-    """Persist a (tile_y, tile_x, png) DataFrame as
-    ``<out_dir>/tile_<y>_<x>.png`` files, written BY THE EXECUTORS
-    (one task per partition — the driver never holds image bytes);
-    with ``transform`` each tile also gets its ``.pgw`` world file so
-    GIS tools mosaic the set directly.  Returns the number of tiles
-    written."""
-    import os
-
-    import pandas as pd
-
-    os.makedirs(out_dir, exist_ok=True)
-    t = None if transform is None else tuple(float(v) for v in transform)
-    tile_sz = int(tile)
-
-    def _write(it):
-        n = 0
-        for pdf in it:
-            for r in pdf.itertuples(index=False):
-                ty, tx = int(r.tile_y), int(r.tile_x)
-                base = os.path.join(out_dir, f"tile_{ty}_{tx}")
-                with open(base + ".png", "wb") as f:
-                    f.write(bytes(r.png))
-                if t is not None:
-                    pw, ph, ox, oy = t
-                    wf = world_file(
-                        (pw, ph, ox + tx * tile_sz * pw,
-                         oy + ty * tile_sz * ph)
-                    )
-                    with open(base + ".pgw", "w") as f:
-                        f.write(wf)
-                n += 1
-        yield pd.DataFrame({"n": [n]})
-
-    counts = tiles.mapInPandas(_write, "n long").collect()
-    return int(sum(r["n"] for r in counts))
 
 
 def build_tile_pyramid(spark, tiles, levels: int, tile: int = 256):

@@ -6,8 +6,7 @@ Returns the engine's wire format — one row per shape with the vertex
 array (outer ring for polygons), WKT, and the DBF attribute columns.
 The reference reads a borough boundary file this way and broadcasts it
 into P5; such files are small, so a driver-side parse +
-``createDataFrame`` is the right physical plan (at scale: binaryFile +
-mapInPandas, one file per task).
+``createDataFrame`` is the right physical plan.
 """
 
 from __future__ import annotations
@@ -295,148 +294,3 @@ def write_shapefile(
             'PRIMEM["Greenwich",0],UNIT["degree",0.0174532925199433]]'
         )
 
-
-def read_shapefile_dir(spark, path: str):
-    """Distributed S2 over a DIRECTORY (or glob) of shapefiles — the
-    at-scale form of the reference's boundary-file loop
-    (``gpd.read_file`` at wrf_voronoi.py:185-187) for archives of
-    per-region/admin-level files.
-
-    ``binaryFile`` scan over ``*.shp`` (one split per file — the
-    format is not block-splittable) -> ``mapInPandas``: each executor
-    task parses its .shp from the scanned bytes and the sibling .dbf
-    through :mod:`fsio` (so object-store URLs work), emitting one row
-    per shape with (file, fid, shape_type, geom, wkt) plus the
-    attribute columns.  The ATTRIBUTE SCHEMA is taken from the first
-    file's .dbf on the driver (a KB-sized header read); files whose
-    fields diverge fail loudly rather than silently dropping columns
-    (C -> string, N/F -> double when decimals are declared else
-    bigint, L -> boolean)."""
-    import glob as _glob
-
-    import pandas as pd
-    from pyspark.sql.types import (
-        ArrayType,
-        BooleanType,
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from wrf_to_geodataframe_spark.geometry.polygons import polygon_wkt
-
-    pattern = path if any(c in path for c in "*?[") else (
-        path.rstrip("/") + "/*.shp"
-    )
-    first = sorted(_glob.glob(pattern))
-    if not first:
-        raise ShapefileError(f"no .shp files match {pattern!r}")
-    fields0 = _dbf_fields(first[0][:-4] + ".dbf")
-
-    def _sql_type(ftype: str, fdec: int):
-        if ftype == "C":
-            return StringType()
-        if ftype == "L":
-            return BooleanType()
-        if ftype in ("N", "F"):
-            return DoubleType() if (fdec or ftype == "F") else LongType()
-        raise ShapefileError(f"dbf field type {ftype!r}")
-
-    schema = StructType(
-        [
-            StructField("file", StringType()),
-            StructField("fid", LongType()),
-            StructField("shape_type", LongType()),
-            StructField("geom", ArrayType(ArrayType(DoubleType()))),
-            StructField("wkt", StringType()),
-        ]
-        + [
-            StructField(nm, _sql_type(ft, fd))
-            for nm, ft, _fl, fd in fields0
-        ]
-    )
-    expect = [(nm, ft) for nm, ft, _fl, _fd in fields0]
-    files = spark.read.format("binaryFile").load(pattern)
-
-    def _batches(it):
-        from wrf_to_geodataframe_spark.sources import fsio
-
-        for pdf in it:
-            for fname, buf in zip(pdf["path"], pdf["content"]):
-                local = fname
-                if local.startswith("file://"):
-                    local = local[7:]
-                elif local.startswith("file:"):
-                    local = local[5:]  # Spark's file:/abs form
-                shapes = _read_shp_inner(bytes(buf), fname)
-                dbf_path = local[:-4] + ".dbf"
-                with fsio.open_binary(dbf_path) as fh:
-                    dbuf = fh.read()
-                try:
-                    flds = _dbf_fields_from_buf(dbuf)
-                    recs = _read_dbf_inner(dbuf)
-                except ShapefileError:
-                    raise
-                except (struct.error, IndexError, ValueError) as exc:
-                    raise ShapefileError(
-                        f"{dbf_path}: malformed .dbf: {exc}"
-                    ) from exc
-                got = [(nm, ft) for nm, ft, _fl, _fd in flds]
-                if got != expect:
-                    raise ShapefileError(
-                        f"{dbf_path}: attribute schema {got} != first "
-                        f"file's {expect} — a directory scan needs one "
-                        "shared schema"
-                    )
-                rows = []
-                for s, att in zip(shapes, recs):
-                    ring = (
-                        s["parts"][0] if s["parts"]
-                        else np.empty((0, 2))
-                    )
-                    if s["shape_type"] == SHP_POLYGON and len(ring) >= 3:
-                        ring = ring[::-1].copy()
-                        if np.allclose(ring[0], ring[-1]):
-                            ring = ring[:-1]
-                    rows.append(
-                        {
-                            "file": fname,
-                            "fid": s["fid"],
-                            "shape_type": s["shape_type"],
-                            "geom": [
-                                [float(x), float(y)] for x, y in ring
-                            ],
-                            "wkt": polygon_wkt(ring)
-                            if s["shape_type"] == SHP_POLYGON
-                            else None,
-                            **att,
-                        }
-                    )
-                yield pd.DataFrame(
-                    rows, columns=[f.name for f in schema.fields]
-                )
-
-    return files.select("path", "content").mapInPandas(_batches, schema)
-
-
-def _dbf_fields(path: str):
-    with open(path, "rb") as f:
-        return _dbf_fields_from_buf(f.read(4096))
-
-
-def _dbf_fields_from_buf(buf: bytes):
-    """(name, type, len, dec) per field from a .dbf header prefix."""
-    try:
-        fields = []
-        pos = 32
-        while buf[pos] != 0x0D:
-            name = buf[pos:pos + 11].split(b"\x00")[0].decode("ascii")
-            fields.append(
-                (name, chr(buf[pos + 11]), buf[pos + 16], buf[pos + 17])
-            )
-            pos += 32
-        return fields
-    except (IndexError, UnicodeDecodeError) as exc:
-        raise ShapefileError(f"malformed .dbf header: {exc}") from exc

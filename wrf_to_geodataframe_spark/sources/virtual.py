@@ -36,7 +36,10 @@ pure-numpy parsers:
   Arrow-batched ``mapInPandas`` in which each task seeks straight to
   its chunks' byte ranges and runs the filter pipeline
   (deflate/shuffle/szip) itself.  Chunk-level pruning is made exact by
-  a row-level trim inside the same task (no second pass).
+  a row-level trim inside the same task (no second pass).  This is the
+  engine's one chunk-parallel NetCDF-4/HDF5 scan: a single huge file
+  is a one-file manifest.  A manifest is built whole; an archive that
+  grows is re-indexed with ``build_virtual_manifest``.
 
 Scale shape: the manifest build is O(metadata) per file and embarrasses
 in parallel; the manifest itself is a parquet table (queryable,
@@ -59,9 +62,7 @@ import numpy as np
 __all__ = [
     "bbox_to_windows",
     "build_virtual_manifest",
-    "compact_manifest",
     "read_virtual",
-    "update_virtual_manifest",
 ]
 
 def _virtual_out_schema():
@@ -148,8 +149,8 @@ def _file_chunk_rows(path: str, file_no: int, var: str,
     (lt0/lt1) plus the file's time length ``nt``; the builder converts
     to global bounds declaratively.  Every chunk-grid cell is listed —
     unwritten HDF5 chunks with ``addr = -1`` (the reader fills them),
-    matching the single-file scan's semantics
-    (netcdf.py:read_netcdf_chunks).  GRIB2 files contribute one chunk
+    matching the whole-file reader's semantics
+    (hdf5.py:read_hdf5).  GRIB2 files contribute one chunk
     per (selected) MESSAGE — the byte-range unit wgrib2's ``.idx``
     sidecars index — with the whole message as the chunk payload and
     ``dtype = "grib2"`` telling the reader to decode it with the
@@ -550,81 +551,17 @@ def build_virtual_manifest(
     if not files:
         raise ValueError(f"no input files under {src!r}")
     _index_files(
-        spark, files, var, lat_var, lon_var, out_path,
-        base_t=0, write_mode="overwrite", time_var=time_var,
+        spark, files, var, lat_var, lon_var, out_path, time_var=time_var
     )
     return out_path
 
 
-def update_virtual_manifest(
-    spark,
-    src: str | list[str],
-    var: str,
-    lat_var: str,
-    lon_var: str,
-    out_path: str,
-    pattern: str = "*.nc",
-    time_var: str | None = None,
-) -> int:
-    """INCREMENTAL manifest maintenance — the daily-cycle append: index
-    only files not yet present in ``out_path`` and append their chunks
-    to the END of the global time axis (sorted-name order within the
-    new batch), leaving every existing row untouched.  Returns the
-    number of newly indexed files (0 = no-op, nothing written).
-
-    The new-file set is computed with a LEFT ANTI join of the
-    directory listing against the chunk table's distinct files — at
-    million-file archive scale the driver collects only the NEW batch
-    (bounded by the day's arrivals), never the full indexed file list.
-    The new batch's metadata walk runs on executors exactly like the
-    initial build.  New coordinate grids append to the sidecar;
-    readers dedupe by hash, so re-appending a grid that is already
-    present is harmless."""
-    from pyspark.sql import functions as F
-
-    files = (
-        sorted(glob.glob(os.path.join(src, pattern)))
-        if isinstance(src, str)
-        else list(src)
-    )
-    chunks_path = os.path.join(out_path, "chunks")
-    existing = spark.read.parquet(chunks_path)
-    has_times = _try_read_times(spark, out_path) is not None
-    if has_times and time_var is None:
-        raise ValueError(
-            f"{out_path}: manifest has a times sidecar — pass the same "
-            "time_var to update_virtual_manifest, or new steps would "
-            "have no timestamps"
-        )
-    if time_var is not None and not has_times:
-        raise ValueError(
-            f"{out_path}: manifest was built without time_var — "
-            "rebuild with build_virtual_manifest(..., time_var=...) "
-            "instead of appending a partial time axis"
-        )
-    listing = spark.createDataFrame([(f,) for f in files], "file string")
-    new = sorted(
-        r["file"]
-        for r in listing.join(
-            existing.select("file").distinct(), "file", "left_anti"
-        ).collect()
-    )
-    if not new:
-        return 0
-    base = existing.agg(F.max("t1")).collect()[0][0]
-    _index_files(
-        spark, new, var, lat_var, lon_var, out_path,
-        base_t=int(base), write_mode="append", time_var=time_var,
-    )
-    return len(new)
-
-
-def _time_offsets(triples, files, base_t):
+def _time_offsets(triples, files):
     """``(var, file_no, t_off)`` rows from distinct ``(var, file_no,
     nt)`` triples: within each var the files, in ``file_no`` order,
-    take consecutive slices of the global time axis starting at
-    ``base_t``.  A triple without a var or a time length raises a
-    ``ValueError`` naming its file (``files[file_no]``)."""
+    take consecutive slices of the global time axis starting at 0.  A
+    triple without a var or a time length raises a ``ValueError``
+    naming its file (``files[file_no]``)."""
     for v, fno, nt in triples:
         if v is None or nt is None:
             raise ValueError(
@@ -636,14 +573,13 @@ def _time_offsets(triples, files, base_t):
     for v, fno, nt in sorted(triples):
         if v != cur_var:
             cur_var, acc = v, 0
-        off_rows.append((v, fno, acc + base_t))
+        off_rows.append((v, fno, acc))
         acc += nt
     return off_rows
 
 
 def _index_files(
-    spark, files, var, lat_var, lon_var, out_path, base_t, write_mode,
-    time_var=None,
+    spark, files, var, lat_var, lon_var, out_path, time_var=None
 ):
     import pickle
 
@@ -730,7 +666,6 @@ def _index_files(
                 .collect()
             ],
             files,
-            base_t,
         )
         offsets = spark.createDataFrame(
             sc.parallelize(off_rows, 1),
@@ -744,7 +679,7 @@ def _index_files(
             .drop("lt0", "lt1", "nt", "t_off", "file_no")
             .repartitionByRange(n_out, "t0", "y0", "x0")
             .sortWithinPartitions("t0", "y0", "x0")
-            .write.mode(write_mode)
+            .write.mode("overwrite")
             .parquet(os.path.join(out_path, "chunks"))
         )
 
@@ -774,7 +709,7 @@ def _index_files(
             scanned.mapInPandas(_coords_it, _COORD_SCHEMA)
             .dropDuplicates(["coord_hash"])
             .coalesce(1)
-            .write.mode(write_mode)
+            .write.mode("overwrite")
             .parquet(os.path.join(out_path, "coords"))
         )
         if time_var is not None:
@@ -790,7 +725,7 @@ def _index_files(
                     "time_ns",
                 )
                 .coalesce(1)
-                .write.mode(write_mode)
+                .write.mode("overwrite")
                 .parquet(os.path.join(out_path, "times"))
             )
     finally:
@@ -969,106 +904,6 @@ def build_virtual_mosaic(
     ).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(out_path, "coords")
     )
-    return out_path
-
-
-def compact_manifest(spark, manifest_path: str, out_path: str) -> str:
-    """Manifest MAINTENANCE: coalesce runs of byte-CONTIGUOUS
-    full-plane chunks into single read units — gaps-and-islands
-    applied to byte ranges.  A classic-NetCDF record variable yields
-    one tiny manifest row per record; after compaction a run of K
-    adjacent records is ONE row with ``ct = K`` and the summed byte
-    range, so a read costs one seek instead of K (the small-files
-    problem, solved inside the index instead of rewriting data).
-
-    Only provably-safe rows merge: uncompressed (``filters == []`` —
-    compressed chunk boundaries cannot be recovered from a merged
-    range), raw-array (not GRIB2 messages), stored (``addr >= 0``),
-    sole chunk of their timestep within the file (full y/x plane, so
-    planes are contiguous in the global array), with touching time
-    intervals AND touching byte ranges.  Everything else passes
-    through untouched.  The merge itself is declarative — a window
-    lag -> run-id running sum -> groupBy, no driver loop — and writes
-    a NEW manifest at ``out_path`` (parquet reads are lazy; compacting
-    in place would race the scan of the input)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    man = _with_packing(
-        spark.read.parquet(os.path.join(manifest_path, "chunks"))
-    )
-    n_t = Window.partitionBy("file", "var", "t0")
-    man = man.withColumn("n_at_t", F.count(F.lit(1)).over(n_t))
-    mergeable = (
-        (F.col("n_at_t") == 1)
-        & (F.col("filters") == "[]")
-        & (F.col("dtype") != "grib2")
-        & (F.col("addr") >= 0)
-    )
-    plain = man.filter(~mergeable).drop("n_at_t")
-    cand = man.filter(mergeable).drop("n_at_t")
-
-    w = Window.partitionBy("file", "var").orderBy("t0")
-    runs = (
-        cand.withColumn(
-            "brk",
-            F.when(
-                (F.col("t0") == F.lag("t1").over(w))
-                & (
-                    F.col("addr")
-                    == F.lag("addr").over(w) + F.lag("nbytes").over(w)
-                ),
-                F.lit(0),
-            ).otherwise(F.lit(1)),
-        )
-        .withColumn(
-            "run",
-            F.sum("brk").over(
-                w.rowsBetween(Window.unboundedPreceding, 0)
-            ),
-        )
-        .groupBy("file", "var", "run")
-        .agg(
-            F.min("t0").alias("t0"),
-            F.max("t1").alias("t1"),
-            F.min("y0").alias("y0"),
-            F.max("y1").alias("y1"),
-            F.min("x0").alias("x0"),
-            F.max("x1").alias("x1"),
-            F.min("addr").alias("addr"),
-            F.sum("nbytes").alias("nbytes"),
-            F.min("fmask").alias("fmask"),
-            (F.max("t1") - F.min("t0")).alias("ct"),
-            F.first("cy").alias("cy"),
-            F.first("cx").alias("cx"),
-            F.first("dtype").alias("dtype"),
-            F.first("filters").alias("filters"),
-            F.first("fill").alias("fill"),
-            F.first("coord_hash").alias("coord_hash"),
-            F.first("fsize").alias("fsize"),
-            F.first("packing").alias("packing"),
-        )
-        .drop("run")
-    )
-    n_out = max(1, spark.sparkContext.defaultParallelism)
-    (
-        runs.unionByName(plain)
-        .repartitionByRange(n_out, "t0", "y0", "x0")
-        .sortWithinPartitions("t0", "y0", "x0")
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_path, "chunks"))
-    )
-    (
-        spark.read.parquet(os.path.join(manifest_path, "coords"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_path, "coords"))
-    )
-    times = _try_read_times(spark, manifest_path)
-    if times is not None:  # the time axis survives compaction as-is
-        times.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out_path, "times")
-        )
     return out_path
 
 
@@ -1398,7 +1233,7 @@ def _chunk_scanner(bgrids, bounds):
                     raise ValueError(
                         f"{file}: size {actual} != {int(fsize)} at "
                         "index time — file changed since the manifest "
-                        "was built; re-run build/update_virtual_manifest"
+                        "was built; re-run build_virtual_manifest"
                     )
                 fh = handles[file] = fsio.open_binary(file)
             return fh

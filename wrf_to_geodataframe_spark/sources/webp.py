@@ -29,8 +29,7 @@ Implemented from the public "WebP Lossless Bitstream Specification"
 Lossy "VP8 " key frames decode through the RFC 6386 decoder in
 ``sources/vp8.py`` (boolean coder, intra prediction, token partitions,
 loop filter) with the final RGB byte-identical to ``WebPDecodeRGB``;
-VP8X stills compose the ALPH alpha plane, and animations decode
-per-frame (``webp_frames``) and composited (``decode_webp_animation``).
+VP8X stills compose the ALPH alpha plane.
 
 Scale path mirrors ``sources/png.py``/``jpeg.py``: the codec runs
 inside Arrow ``mapInPandas`` batches, one image per call, spread
@@ -832,132 +831,6 @@ def encode_webp(
         payload += b"\x00"
     riff = b"WEBP" + b"VP8L" + struct.pack("<I", len(payload)) + payload
     return b"RIFF" + struct.pack("<I", len(riff)) + riff
-
-
-# ---------------------------------------------------------------------------
-# animation (VP8X + ANIM/ANMF)
-
-
-def webp_frames(data: bytes) -> list[dict]:
-    """Decode every ANMF frame of an animated WebP INDEPENDENTLY (no
-    canvas compositing): [{x, y, width, height, duration_ms, blend,
-    dispose, channels, pixels}] in presentation order.  Each frame's
-    payload (optional ALPH + VP8/VP8L sub-chunks) goes through the
-    same still decoders; the frame-sampling curation stage
-    (``operators/multimodal.py``) consumes exactly this shape."""
-    chunks = _riff_chunks(data)
-    frames = []
-    for tag, payload in chunks:
-        if tag != b"ANMF":
-            continue
-        if len(payload) < 16:
-            raise ValueError("truncated ANMF header")
-
-        def u24(off):
-            return payload[off] | payload[off + 1] << 8 | payload[off + 2] << 16
-
-        fx, fy = u24(0) * 2, u24(3) * 2
-        fw, fh = u24(6) + 1, u24(9) + 1
-        duration = u24(12)
-        flags = payload[15]
-        # frame data: sub-chunks (ALPH? + VP8/VP8L)
-        sub = payload[16:]
-        pos = 0
-        alph = None
-        frame_px = None
-        channels = 0
-        while pos + 8 <= len(sub):
-            stag = sub[pos : pos + 4]
-            (ssize,) = struct.unpack("<I", sub[pos + 4 : pos + 8])
-            sp = sub[pos + 8 : pos + 8 + ssize]
-            if stag == b"ALPH":
-                alph = sp
-            elif stag == b"VP8L":
-                w, h, channels, frame_px = decode_vp8l(sp)
-                if (w, h) != (fw, fh):
-                    raise ValueError("ANMF frame dims mismatch VP8L payload")
-            elif stag == b"VP8 ":
-                from wrf_to_geodataframe_spark.sources.vp8 import (
-                    decode_vp8_frame,
-                    yuv420_to_rgb,
-                )
-
-                w, h, y, u, v = decode_vp8_frame(sp)
-                if (w, h) != (fw, fh):
-                    raise ValueError("ANMF frame dims mismatch VP8 payload")
-                rgb = yuv420_to_rgb(y, u, v)
-                if alph is not None:
-                    a = _decode_alpha(alph, w, h)
-                    frame_px = np.dstack([rgb, a]).tobytes()
-                    channels = 4
-                else:
-                    frame_px = rgb.tobytes()
-                    channels = 3
-            pos += 8 + ssize + (ssize & 1)
-        if frame_px is None:
-            raise ValueError("ANMF frame without an image payload")
-        frames.append(
-            {
-                "x": fx,
-                "y": fy,
-                "width": fw,
-                "height": fh,
-                "duration_ms": duration,
-                "blend": not (flags & 2),  # bit1: 1 = do NOT blend
-                "dispose": bool(flags & 1),  # bit0: dispose to background
-                "channels": channels,
-                "pixels": frame_px,
-            }
-        )
-    if not frames:
-        raise ValueError("no ANMF frames (not an animated WebP)")
-    return frames
-
-
-def decode_webp_animation(data: bytes) -> list[tuple[int, np.ndarray]]:
-    """Composite an animated WebP onto its canvas: [(duration_ms,
-    canvas RGBA (h, w, 4))] snapshots per frame.  Disposal fills the
-    frame rect with transparent black (the common decoder behavior for
-    the ANIM background in curation pipelines); blending is the
-    container-spec alpha-blend."""
-    info = webp_info(data)
-    cw, ch = info["width"], info["height"]
-    canvas = np.zeros((ch, cw, 4), np.uint8)
-    out = []
-    for f in webp_frames(data):
-        px = np.frombuffer(f["pixels"], np.uint8).reshape(
-            f["height"], f["width"], f["channels"]
-        )
-        if f["channels"] == 3:
-            px = np.dstack([px, np.full(px.shape[:2], 255, np.uint8)])
-        x0, y0 = f["x"], f["y"]
-        x1, y1 = min(x0 + f["width"], cw), min(y0 + f["height"], ch)
-        px = px[: y1 - y0, : x1 - x0]
-        region = canvas[y0:y1, x0:x1].astype(np.int32)
-        src = px.astype(np.int32)
-        if f["blend"]:
-            a = src[:, :, 3:4]
-            blended = np.empty_like(src)
-            out_a = a + region[:, :, 3:4] * (255 - a) // 255
-            for c in range(3):
-                num = (
-                    src[:, :, c : c + 1] * a
-                    + region[:, :, c : c + 1]
-                    * region[:, :, 3:4]
-                    * (255 - a)
-                    // 255
-                )
-                blended[:, :, c : c + 1] = np.where(
-                    out_a > 0, num // np.maximum(out_a, 1), 0
-                )
-            blended[:, :, 3:4] = out_a
-            canvas[y0:y1, x0:x1] = blended.astype(np.uint8)
-        else:
-            canvas[y0:y1, x0:x1] = px
-        out.append((f["duration_ms"], canvas.copy()))
-        if f["dispose"]:
-            canvas[y0:y1, x0:x1] = 0
-    return out
 
 
 # ---------------------------------------------------------------------------

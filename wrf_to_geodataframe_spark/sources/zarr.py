@@ -10,7 +10,7 @@ spec (zarr-specs, storage spec v2) — no zarr/numcodecs dependency.
 
 Why Zarr is the BEST 100-TB ingest surface the engine has: unlike
 NetCDF/HDF5 (one opaque file, parallelized per-file in
-``read_netcdf_dir`` or by record arithmetic in ``read_netcdf_slabs``),
+``read_netcdf_dir`` or through a chunk index in ``read_virtual``),
 a Zarr store is ALREADY a flat namespace of independently-compressed
 chunk objects.  ``read_zarr_dist`` builds the chunk manifest by
 arithmetic from the tiny ``.zarray`` JSON (no directory listing), so
@@ -45,13 +45,11 @@ import numpy as np
 
 __all__ = [
     "ZarrError",
-    "is_zarr_store",
     "read_zarr_array",
     "read_zarr_store",
     "write_zarr",
     "read_zarr_grid",
     "read_zarr_dist",
-    "write_zarr_dist",
 ]
 
 
@@ -421,13 +419,6 @@ def read_zarr_array(
     return meta, out
 
 
-def is_zarr_store(path: str) -> bool:
-    return os.path.isdir(path) and (
-        os.path.exists(os.path.join(path, ".zgroup"))
-        or os.path.exists(os.path.join(path, ".zarray"))
-    )
-
-
 def read_zarr_store(path: str) -> dict:
     """Read a zarr v2 GROUP (one level, the xarray dataset layout) ->
     the same ``{attrs, variables: {name: {dims, attrs, data}}}`` shape
@@ -690,131 +681,3 @@ def read_zarr_dist(
         lambda idx: (_chunk_key(idx, meta["sep"]),), _decode, keyed=True,
     )
 
-
-def write_zarr_dist(
-    df,
-    outdir: str,
-    var_name: str = "T2",
-    var_col: str = "value",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    chunk_t: int = 1,
-    chunk_y: int = 64,
-    chunk_x: int = 64,
-    compressor: dict | None = {"id": "zlib", "level": 5},
-):
-    """Distributed S4 at cloud-archive shape: the inverse of
-    ``read_zarr_dist``.  The DRIVER writes only JSON metadata (shape
-    from a 1-row bounds aggregate — O(1) control state, the accepted
-    pattern); every chunk object is written INSIDE an executor task
-    via ``applyInPandas`` grouped on the chunk-grid key, so cell data
-    never crosses the driver and chunk writes never contend (one task
-    = one object, the object-store write shape).
-
-    Expects the engine's long table (t_idx, y_idx, x_idx, lat, lon,
-    value).  Returns the lazy manifest DataFrame (array, chunk_key,
-    n_cells); executing it performs the writes.
-    """
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    b = df.agg(
-        F.max("t_idx").alias("mt"),
-        F.max("y_idx").alias("my"),
-        F.max("x_idx").alias("mx"),
-    ).collect()[0]
-    nt, ny, nx = int(b["mt"]) + 1, int(b["my"]) + 1, int(b["mx"]) + 1
-    chunk_t = min(chunk_t, nt)
-    chunk_y = min(chunk_y, ny)
-    chunk_x = min(chunk_x, nx)
-
-    os.makedirs(outdir, exist_ok=True)
-    with open(os.path.join(outdir, ".zgroup"), "w") as f:
-        json.dump({"zarr_format": 2}, f)
-
-    def _array_meta(adir, shape, cshape, vdims, dt="<f8"):
-        os.makedirs(adir, exist_ok=True)
-        with open(os.path.join(adir, ".zarray"), "w") as f:
-            json.dump(
-                {
-                    "zarr_format": 2,
-                    "shape": list(shape),
-                    "chunks": list(cshape),
-                    "dtype": dt,
-                    "compressor": compressor,
-                    "fill_value": "NaN",
-                    "order": "C",
-                    "filters": None,
-                    "dimension_separator": ".",
-                },
-                f,
-            )
-        with open(os.path.join(adir, ".zattrs"), "w") as f:
-            json.dump({"_ARRAY_DIMENSIONS": list(vdims)}, f)
-
-    _array_meta(
-        os.path.join(outdir, var_name),
-        (nt, ny, nx),
-        (chunk_t, chunk_y, chunk_x),
-        ("t", "y", "x"),
-    )
-    for cname in ("XLAT", "XLONG"):
-        _array_meta(
-            os.path.join(outdir, cname),
-            (ny, nx),
-            (chunk_y, chunk_x),
-            ("y", "x"),
-        )
-
-    emeta3 = {
-        "chunks": (chunk_t, chunk_y, chunk_x),
-        "dtype": np.dtype("<f8"),
-        "order": "C",
-        "compressor": compressor,
-        "filters": [],
-    }
-    emeta2 = dict(emeta3, chunks=(chunk_y, chunk_x))
-
-    keyed = df.select(
-        (F.col("t_idx") / chunk_t).cast("long").alias("ct"),
-        (F.col("y_idx") / chunk_y).cast("long").alias("cy"),
-        (F.col("x_idx") / chunk_x).cast("long").alias("cx"),
-        "t_idx", "y_idx", "x_idx",
-        F.col(lat_col).alias("lat"),
-        F.col(lon_col).alias("lon"),
-        F.col(var_col).alias("value"),
-    )
-
-    def _write_value_chunk(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        ct = int(pdf["ct"].iloc[0])
-        cy = int(pdf["cy"].iloc[0])
-        cx = int(pdf["cx"].iloc[0])
-        grid = np.full((chunk_t, chunk_y, chunk_x), np.nan)
-        ti = pdf["t_idx"].to_numpy() - ct * chunk_t
-        yi = pdf["y_idx"].to_numpy() - cy * chunk_y
-        xi = pdf["x_idx"].to_numpy() - cx * chunk_x
-        grid[ti, yi, xi] = pdf["value"].to_numpy()
-        key = f"{ct}.{cy}.{cx}"
-        with open(os.path.join(outdir, var_name, key), "wb") as f:
-            f.write(_encode_chunk(grid, emeta3))
-        if ct == 0:
-            # coordinate chunks: written once, by the t-chunk-0 task
-            # that owns the same (cy, cx) tile
-            for cname, col in (("XLAT", "lat"), ("XLONG", "lon")):
-                cgrid = np.full((chunk_y, chunk_x), np.nan)
-                cgrid[yi, xi] = pdf[col].to_numpy()
-                with open(
-                    os.path.join(outdir, cname, f"{cy}.{cx}"), "wb"
-                ) as f:
-                    f.write(_encode_chunk(cgrid, emeta2))
-        return pd.DataFrame(
-            {
-                "array": [var_name],
-                "chunk_key": [key],
-                "n_cells": [len(pdf)],
-            }
-        )
-
-    return keyed.groupBy("ct", "cy", "cx").applyInPandas(
-        _write_value_chunk, "array string, chunk_key string, n_cells long"
-    )

@@ -48,11 +48,9 @@ from wrf_to_geodataframe_spark.sources.zarr import (
 
 __all__ = [
     "crc32c",
-    "is_zarr3_store",
     "read_zarr3_array",
     "read_zarr3_store",
     "write_zarr3",
-    "write_zarr3_dist",
     "read_zarr3_dist",
 ]
 
@@ -328,12 +326,6 @@ def _read_shard(blob: bytes, meta: dict, shard: dict,
 
 # -- store read ----------------------------------------------------------
 
-def is_zarr3_store(path: str) -> bool:
-    return os.path.isdir(path) and os.path.exists(
-        os.path.join(path, "zarr.json")
-    )
-
-
 def read_zarr3_array(adir: str) -> tuple[dict, np.ndarray]:
     meta = _array_meta(adir)
     shape, chunks = meta["shape"], meta["chunks"]
@@ -562,118 +554,6 @@ def _encode_shard(part: np.ndarray, inner: tuple, emeta: dict) -> bytes:
     raw = index.tobytes()
     raw += struct.pack("<I", crc32c(raw))
     return bytes(body) + raw
-
-
-def write_zarr3_dist(
-    df,
-    outdir: str,
-    var_name: str = "T2",
-    var_col: str = "value",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    chunk: tuple[int, int, int] = (1, 32, 32),
-    shard: tuple[int, int, int] = (1, 64, 64),
-    compressor: str | None = "gzip",
-):
-    """Distributed SHARDED v3 sink: the inverse of ``read_zarr3_dist``.
-    The driver writes only ``zarr.json`` metadata (shape from a 1-row
-    bounds aggregate); each ``applyInPandas`` task owns one SHARD —
-    it densifies its cells, gzip-encodes the inner chunks, appends the
-    crc32c-protected index and writes ONE storage object.  One task =
-    one object write, no coordination — and the object count is
-    divided by (shard/chunk)^3 versus a plain chunk store, the reason
-    sharding exists at 100 TB.  Returns the lazy manifest DataFrame
-    (array, chunk_key, n_cells)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    b = df.agg(
-        F.max("t_idx").alias("mt"),
-        F.max("y_idx").alias("my"),
-        F.max("x_idx").alias("mx"),
-    ).collect()[0]
-    nt, ny, nx = int(b["mt"]) + 1, int(b["my"]) + 1, int(b["mx"]) + 1
-    st = min(shard[0], max(chunk[0], nt))
-    sy = min(shard[1], max(chunk[1], ny))
-    sx = min(shard[2], max(chunk[2], nx))
-    ct = min(chunk[0], st)
-    cy = min(chunk[1], sy)
-    cx = min(chunk[2], sx)
-    st -= st % ct
-    sy -= sy % cy
-    sx -= sx % cx
-    sshape, cshape = (st, sy, sx), (ct, cy, cx)
-
-    os.makedirs(outdir, exist_ok=True)
-    with open(os.path.join(outdir, "zarr.json"), "w") as f:
-        json.dump(
-            {"zarr_format": 3, "node_type": "group", "attributes": {}},
-            f,
-        )
-    dt = np.dtype("<f8")
-    fill = dt.type(np.nan)
-
-    def _emit_meta(adir, shape, csh, ssh, vdims):
-        os.makedirs(adir, exist_ok=True)
-        meta, _sc = _meta_dict(
-            shape, csh, ssh, dt, vdims, "/", compressor, None, fill
-        )
-        with open(os.path.join(adir, "zarr.json"), "w") as f:
-            json.dump(meta, f)
-
-    _emit_meta(os.path.join(outdir, var_name), (nt, ny, nx), cshape,
-               sshape, ("t", "y", "x"))
-    for cname in ("XLAT", "XLONG"):
-        _emit_meta(os.path.join(outdir, cname), (ny, nx), (sy, sx),
-                   None, ("y", "x"))
-
-    emeta = {"dtype": dt, "codecs": _codec_list(compressor)}
-
-    keyed = df.select(
-        (F.col("t_idx") / st).cast("long").alias("ct"),
-        (F.col("y_idx") / sy).cast("long").alias("cy"),
-        (F.col("x_idx") / sx).cast("long").alias("cx"),
-        "t_idx", "y_idx", "x_idx",
-        F.col(lat_col).alias("lat"),
-        F.col(lon_col).alias("lon"),
-        F.col(var_col).alias("value"),
-    )
-
-    def _write_shard_group(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        stc = int(pdf["ct"].iloc[0])
-        syc = int(pdf["cy"].iloc[0])
-        sxc = int(pdf["cx"].iloc[0])
-        grid = np.full(sshape, np.nan)
-        ti = pdf["t_idx"].to_numpy() - stc * st
-        yi = pdf["y_idx"].to_numpy() - syc * sy
-        xi = pdf["x_idx"].to_numpy() - sxc * sx
-        grid[ti, yi, xi] = pdf["value"].to_numpy()
-        blob = _encode_shard(grid, cshape, emeta)
-        key = f"c/{stc}/{syc}/{sxc}"
-        cpath = os.path.join(outdir, var_name, key.replace("/", os.sep))
-        os.makedirs(os.path.dirname(cpath), exist_ok=True)
-        with open(cpath, "wb") as f:
-            f.write(blob)
-        if stc == 0:
-            for cname, col in (("XLAT", "lat"), ("XLONG", "lon")):
-                cgrid = np.full((sy, sx), np.nan)
-                cgrid[yi, xi] = pdf[col].to_numpy()
-                cp = os.path.join(outdir, cname, "c", str(syc), str(sxc))
-                os.makedirs(os.path.dirname(cp), exist_ok=True)
-                with open(cp, "wb") as f:
-                    f.write(_encode_chunk(cgrid, emeta))
-        return pd.DataFrame(
-            {
-                "array": [var_name],
-                "chunk_key": [key],
-                "n_cells": [len(pdf)],
-            }
-        )
-
-    return keyed.groupBy("ct", "cy", "cx").applyInPandas(
-        _write_shard_group,
-        "array string, chunk_key string, n_cells long",
-    )
 
 
 # -- Spark surface -------------------------------------------------------

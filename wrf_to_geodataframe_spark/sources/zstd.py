@@ -4,9 +4,8 @@ v2/v3 chunk scans (``sources/zarr.py`` incl. blosc's zstd sub-codec,
 
 From-scratch pure-python/numpy implementation of the public RFC 8878
 format — no code derived from the zstd reference implementation; the
-container's libzstd/CLI are used only as cross-validation oracles in
-``tests/test_zstd.py`` (the repo's codec-interop discipline) and as an
-optional gated fast path for production decode:
+``zstd`` CLI is used only as a cross-validation oracle in
+``tests/test_zstd.py`` (the repo's codec-interop discipline):
 
 - frame parsing: magic, frame-header descriptor (FCS field/dict-id
   sizes, single-segment, checksum), window descriptor, skippable
@@ -30,17 +29,11 @@ optional gated fast path for production decode:
 - dictionaries: raw-content and structured (magic 0xEC30A437: Huffman
   + OF/ML/LL entropy tables + initial repeat offsets + content).
 
-A gated binding to the system libzstd (``_lib_decompress``, the
-sources/avif.py pattern) is cross-validated against the pure decoder
-in ``tests/test_zstd.py``; the pure decoder is the reference
-implementation.  Measured on a 4-vCPU host: pure ~6 MB/s, libzstd
-~400+ MB/s.
+Measured on a 4-vCPU host: ~6 MB/s.
 """
 
 from __future__ import annotations
 
-import ctypes
-import ctypes.util
 import struct
 
 _MAGIC = 0xFD2FB528
@@ -764,107 +757,4 @@ def zstd_decompress(data: bytes, zdict: ZstdDict | bytes | None = None) -> bytes
             # path decodes UNTRUSTED store chunks
             raise ZstdError(f"corrupt frame: {exc}") from exc
         parts.append(content)
-    return b"".join(parts)
-
-
-def is_zstd(data: bytes) -> bool:
-    if len(data) < 4:
-        return False
-    magic = struct.unpack_from("<I", data)[0]
-    return magic == _MAGIC or _MAGIC_SKIP_LO <= magic <= _MAGIC_SKIP_HI
-
-
-# ------------------------------------------------- gated libzstd binding
-
-
-def _load_libzstd():
-    for name in ("libzstd.so.1", ctypes.util.find_library("zstd")):
-        if not name:
-            continue
-        try:
-            lib = ctypes.CDLL(name)
-            lib.ZSTD_isError.restype = ctypes.c_uint
-            lib.ZSTD_isError.argtypes = [ctypes.c_size_t]
-            lib.ZSTD_getFrameContentSize.restype = ctypes.c_ulonglong
-            lib.ZSTD_getFrameContentSize.argtypes = [
-                ctypes.c_void_p, ctypes.c_size_t
-            ]
-            lib.ZSTD_findFrameCompressedSize.restype = ctypes.c_size_t
-            lib.ZSTD_findFrameCompressedSize.argtypes = [
-                ctypes.c_void_p, ctypes.c_size_t
-            ]
-            lib.ZSTD_decompressBound.restype = ctypes.c_ulonglong
-            lib.ZSTD_decompressBound.argtypes = [
-                ctypes.c_void_p, ctypes.c_size_t
-            ]
-            lib.ZSTD_createDCtx.restype = ctypes.c_void_p
-            lib.ZSTD_freeDCtx.argtypes = [ctypes.c_void_p]
-            lib.ZSTD_decompress_usingDict.restype = ctypes.c_size_t
-            lib.ZSTD_decompress_usingDict.argtypes = [
-                ctypes.c_void_p,
-                ctypes.c_void_p, ctypes.c_size_t,
-                ctypes.c_void_p, ctypes.c_size_t,
-                ctypes.c_char_p, ctypes.c_size_t,
-            ]
-            return lib
-        except (OSError, AttributeError):
-            continue
-    return None
-
-
-_LIB = _load_libzstd()
-_FCS_UNKNOWN = (1 << 64) - 1  # ZSTD_CONTENTSIZE_UNKNOWN
-_FCS_ERROR = (1 << 64) - 2
-
-
-def libzstd_present() -> bool:
-    return _LIB is not None
-
-
-def _lib_decompress(data: bytes, zdict: ZstdDict | None) -> bytes:
-    """Bulk decode through the system libzstd, frame by frame.  Frames
-    without a declared content size fall back to the pure decoder (the
-    simple API needs the capacity up front)."""
-    # hand libzstd the ORIGINAL serialized dictionary (structured
-    # dicts keep their entropy-table framing this way)
-    dict_blob = zdict.raw if zdict is not None else b""
-    parts = []
-    pos = 0
-    n = len(data)
-    # ONE ctypes copy of the archive; frames are addressed by pointer
-    # offset — slicing data[pos:] per frame would be O(n^2) across
-    # many concatenated frames
-    buf = ctypes.create_string_buffer(bytes(data), n)
-    base = ctypes.addressof(buf)
-    while pos < n:
-        magic = struct.unpack_from("<I", data, pos)[0]
-        if _MAGIC_SKIP_LO <= magic <= _MAGIC_SKIP_HI:
-            size = struct.unpack_from("<I", data, pos + 4)[0]
-            pos += 8 + size
-            continue
-        fptr = ctypes.c_void_p(base + pos)
-        rest = n - pos
-        fsize = _LIB.ZSTD_findFrameCompressedSize(fptr, rest)
-        if _LIB.ZSTD_isError(fsize):
-            raise ZstdError("libzstd could not frame the input")
-        cap = _LIB.ZSTD_getFrameContentSize(fptr, rest)
-        if cap in (_FCS_UNKNOWN, _FCS_ERROR):
-            # streaming-compressed frames (e.g. the CLI reading stdin)
-            # declare no content size; the window-derived bound covers
-            cap = _LIB.ZSTD_decompressBound(fptr, fsize)
-            if cap == _FCS_ERROR:
-                raise ZstdError("libzstd could not bound the frame")
-        dst = ctypes.create_string_buffer(max(int(cap), 1))
-        dctx = _LIB.ZSTD_createDCtx()
-        try:
-            rc = _LIB.ZSTD_decompress_usingDict(
-                dctx, dst, int(cap), fptr, fsize,
-                dict_blob, len(dict_blob),
-            )
-        finally:
-            _LIB.ZSTD_freeDCtx(dctx)
-        if _LIB.ZSTD_isError(rc):
-            raise ZstdError("libzstd decompression error")
-        parts.append(dst.raw[:rc])
-        pos += fsize
     return b"".join(parts)

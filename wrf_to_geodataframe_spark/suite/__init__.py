@@ -60,10 +60,6 @@ and adversarial corpora in pytest.
 
 from __future__ import annotations
 
-import glob
-import json
-import os
-import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -85,46 +81,15 @@ _GROUPS = [
 ]
 
 
-def _driver_last_checked() -> dict[str, int]:
-    """Latest driver round that recorded an official correctness row per
-    query, read from the repo-root ``CORRECTNESS_r*.json`` files.  The
-    driver samples ~50 of the entries per round in
-    enumeration order, so ``all_queries`` enumerates STALEST-FIRST:
-    never-checked entries, then entries whose last official row is
-    oldest (judge r4 item #2 — e.g. ``dedup_ngram_jaccard``'s semantics
-    changed after its last r02 row).  Missing/unreadable files degrade
-    to the plain group order."""
-    root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    last: dict[str, int] = {}
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as f:
-                rows = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for name in rows:
-            last[name] = max(last.get(name, 0), rnd)
-    return last
-
-
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every query, in group order."""
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for g in _GROUPS:
         overlap = set(out) & set(g.QUERIES)
         if overlap:
             raise ValueError(f"duplicate query names: {overlap}")
         out.update(g.QUERIES)
-    last = _driver_last_checked()
-    # stable sort: stalest official driver row first (never-checked = 0),
-    # original group enumeration order within ties
-    names = sorted(out, key=lambda n: last.get(n, 0))
-    return {n: out[n] for n in names}
+    return out
 
 
 def all_oracles() -> dict[str, str]:

@@ -286,7 +286,7 @@ def quality_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     side blinds it — pinned by tests/test_skew.py::
     test_aqe_skew_rule_blind_through_aggregated_build_side), so past
     broadcast scale the fallback is explicit salting
-    (operators/skew.salted_join), not AQE.  Per-doc reduce is one
+    (operators/skew.deterministic_salt), not AQE.  Per-doc reduce is one
     partial-agg groupBy.  No window, no cross join."""
     docs = _spread_docs(spark, sf_dir)
     w = tokens(F.col("text"))

@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 
 from wrf_to_geodataframe_spark.functions.grid import (
     box_area,
-    box_intersection_area,
     box_intersects_box,
     box_within_bbox,
     cell_box,
