@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from wrf_to_geodataframe_spark.sources.geotiff import (
@@ -15,18 +16,31 @@ from wrf_to_geodataframe_spark.sources.geotiff import (
 )
 
 
+_NORTH_UP = (0.25, 0, 10.0, 0, -0.25, 60.0)
+
+
 def _raster(tmp, name="r.tif", h=40, w=56, **kw):
     rng = np.random.default_rng(13)
     arr = np.round(rng.standard_normal((h, w)) * 8).astype("float32") / 8
     p = os.path.join(str(tmp), name)
-    write_geotiff(p, arr, transform=(0.25, 0, 10.0, 0, -0.25, 60.0),
-                  epsg=4326, tiled=True, tile=(16, 16), compression=8,
-                  **kw)
+    kw = {"transform": _NORTH_UP, "tiled": True, "tile": (16, 16), **kw}
+    write_geotiff(p, arr, epsg=4326, compression=8, **kw)
     return p, arr
 
 
-def test_dist_matches_driver(spark, tmp_path):
-    p, arr = _raster(tmp_path)
+@pytest.mark.parametrize(
+    "kw",
+    [
+        {},
+        # 40 rows in strips of 16: the last strip holds 8 rows
+        {"tiled": False, "rows_per_strip": 16},
+        {"transform": (0.2, 0.1, 5.0, -0.1, 0.2, 7.0)},
+    ],
+    ids=["tiled", "strips_ragged", "rotated"],
+)
+def test_dist_matches_driver(spark, tmp_path, kw):
+    p, arr = _raster(tmp_path, **kw)
+    a, b, c, d, e, f = kw.get("transform", _NORTH_UP)
     dist = read_geotiff_dist(spark, p)
     assert dist.rdd.getNumPartitions() > 1
     got = {
@@ -40,8 +54,8 @@ def test_dist_matches_driver(spark, tmp_path):
     assert got == drv
     assert len(got) == 40 * 56
     for (y, x), (lon, lat, v) in got.items():
-        assert lon == 10.0 + 0.25 * x
-        assert lat == 60.0 - 0.25 * y
+        assert lon == a * x + b * y + c
+        assert lat == d * x + e * y + f
         assert v == arr[y, x]
 
 
