@@ -175,3 +175,22 @@ def test_driver_grid_matches_store(spark, tmp_path):
     assert len(rows) == 10 * 14
     for r in rows:
         assert r["value"] == vals[0, r["y_idx"], r["x_idx"]]
+
+
+def test_dist_mismatched_coordinate_shapes_is_a_named_error(spark, tmp_path):
+    """A 2-D latitude next to a 1-D longitude cannot be paired cell by
+    cell: the read itself names both shapes, before any task runs."""
+    store = str(tmp_path / "s")
+    yy, xx = np.meshgrid(np.arange(10), np.arange(14), indexing="ij")
+    write_zarr(
+        store,
+        {"t": 2, "y": 10, "x": 14},
+        {
+            "T2": {"dims": ["t", "y", "x"], "data": np.zeros((2, 10, 14))},
+            "XLAT": {"dims": ["y", "x"], "data": 50.0 + yy * 0.25},
+            "XLONG": {"dims": ["x"], "data": -3.0 + np.arange(14) * 0.125},
+        },
+        chunks={"T2": (1, 5, 7), "XLAT": (5, 7), "XLONG": (7,)},
+    )
+    with pytest.raises(ValueError, match=r"\(10, 14\).*\(14,\)"):
+        read_zarr_dist(spark, store, "T2", "XLAT", "XLONG")

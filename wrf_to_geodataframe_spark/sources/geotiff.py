@@ -617,67 +617,44 @@ def write_geotiff(
 
 # -- Spark surfaces ------------------------------------------------------
 
-def _affine_cols(transform):
-    a, b, c, d, e, f = transform
-
-    def lon(col, row):
-        return a * col + b * row + c
-
-    def lat(col, row):
-        return d * col + e * row + f
-
-    return lon, lat
-
-
-def _geotiff_frame(info: dict, arr: np.ndarray, band: int):
-    """One decoded raster's ``band`` -> (y_idx, x_idx, lon, lat, value)
-    frame; ``nodata`` cells become NaN."""
-    import pandas as pd
-
-    h, w = info["height"], info["width"]
-    yy, xx = np.meshgrid(np.arange(h), np.arange(w), indexing="ij")
-    lon_f, lat_f = _affine_cols(info["transform"])
-    vals = arr[:, :, band].astype("float64")
-    if info["nodata"] is not None:
-        vals = np.where(vals == info["nodata"], np.nan, vals)
-    gx = xx.ravel().astype("float64")
-    gy = yy.ravel().astype("float64")
-    return pd.DataFrame(
-        {
-            "y_idx": gy.astype("int64"),
-            "x_idx": gx.astype("int64"),
-            "lon": lon_f(gx, gy),
-            "lat": lat_f(gx, gy),
-            "value": vals.ravel(),
-        }
-    )
+_COLUMNS = ("y_idx", "x_idx", "lon", "lat", "value")
 
 
 def read_geotiff_grid(spark, path: str, band: int = 0):
     """Driver-side S1 ingest: one GeoTIFF -> long DataFrame
-    (y_idx, x_idx, lon, lat, value) for ``band``."""
-    return spark.createDataFrame(_geotiff_frame(*read_geotiff(path), band))
+    (y_idx, x_idx, lon, lat, value) for ``band``; ``nodata`` cells
+    become NaN.  The raster is one chunk of the shared kernel
+    (``chunkscan.chunk_frames``)."""
+    from wrf_to_geodataframe_spark.sources.chunkscan import chunk_frames
+    from wrf_to_geodataframe_spark.sources.netcdf import cf_mask_and_scale
+
+    info, arr = read_geotiff(path)
+    vals = cf_mask_and_scale(arr[None, :, :, band], _cf_attrs(info))
+    (frame,) = chunk_frames(
+        vals, (0, 0, 0), (1,) + vals.shape[1:], info["transform"]
+    )
+    return spark.createDataFrame(frame[list(_COLUMNS)])
+
+
+def _cf_attrs(info: dict) -> dict:
+    """A raster's ``nodata`` as the CF ``_FillValue`` that masks it."""
+    return {} if info["nodata"] is None else {"_FillValue": info["nodata"]}
 
 
 def read_geotiff_dist(spark, path: str, band: int = 0, level: int = 0):
     """Tile-parallel scan of ONE large (Big)GeoTIFF/COG — the raster
-    twin of the zarr/HDF5 chunk scans: the driver reads ONLY the IFD
-    (mmap; a COG's tile index is KBs for a raster of any size) and
-    each executor task seeks to its tiles' byte ranges and decodes
-    them itself.  ``level`` selects an overview IFD (0 = full
-    resolution) — reading a decimated pyramid level is the COG way to
-    scan a continental raster at reduced cost.  Emits (block_id,
-    y_idx, x_idx, lon, lat, value); requires a path every executor
-    can open."""
+    twin of the zarr chunk scans, on the same kernel
+    (``chunkscan.scan_chunks``): the driver reads ONLY the IFD (mmap;
+    a COG's tile index is KBs for a raster of any size), the manifest
+    is one (block_id, off, cnt) row per tile/strip, and each executor
+    task seeks to its blocks' byte ranges and decodes them itself.
+    ``level`` selects an overview IFD (0 = full resolution) — reading
+    a decimated pyramid level is the COG way to scan a continental
+    raster at reduced cost.  Emits (block_id, y_idx, x_idx, lon, lat,
+    value); requires a path every executor can open."""
     import mmap
 
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
+    from wrf_to_geodataframe_spark.sources.chunkscan import scan_chunks
 
     with open(path, "rb") as fh:
         mm = mmap.mmap(fh.fileno(), 0, access=mmap.ACCESS_READ)
@@ -685,68 +662,27 @@ def read_geotiff_dist(spark, path: str, band: int = 0, level: int = 0):
             info = geotiff_info(mm, level=level)
         finally:
             mm.close()
-    binfo = spark.sparkContext.broadcast(
-        {k: v for k, v in info.items() if k not in ("offsets", "counts")}
-    )
-    rows = [
-        (bi, off, cnt)
-        for bi, (off, cnt) in enumerate(zip(info["offsets"],
-                                            info["counts"]))
-    ]
-    mdf = spark.createDataFrame(
-        rows, "block_id long, off long, cnt long"
-    ).repartition(
-        max(1, min(len(rows), spark.sparkContext.defaultParallelism * 2)),
-        "block_id",
-    )
-    schema = StructType(
-        [
-            StructField("block_id", LongType()),
-            StructField("y_idx", LongType()),
-            StructField("x_idx", LongType()),
-            StructField("lon", DoubleType()),
-            StructField("lat", DoubleType()),
-            StructField("value", DoubleType()),
-        ]
+    meta = {k: v for k, v in info.items() if k not in ("offsets", "counts")}
+    meta.update(
+        shape=(info["height"], info["width"]),
+        chunks=(info["block_h"], info["block_w"]),
+        attrs=_cf_attrs(info),
     )
 
-    def _scan(it):
-        m = binfo.value
-        h, w = m["height"], m["width"]
-        bw, bh = m["block_w"], m["block_h"]
-        lon_f, lat_f = _affine_cols(m["transform"])
+    def _locate(idx):
+        bi = idx[0] * info["nbx"] + idx[1]
+        return bi, info["offsets"][bi], info["counts"][bi]
+
+    def _decode(m, rows):
+        bh = m["block_h"]
         with open(path, "rb") as fh:
-            for pdf in it:
-                for row in pdf.itertuples(index=False):
-                    bi = int(row.block_id)
-                    by, bx = divmod(bi, m["nbx"])
-                    y0, x0 = by * bh, bx * bw
-                    rows_n = bh if m["tiled"] else min(bh, h - y0)
-                    fh.seek(int(row.off))
-                    block = _decode_block(
-                        fh.read(int(row.cnt)), m, rows_n
-                    )
-                    ny, nx = min(bh, h - y0), min(bw, w - x0)
-                    vals = block[:ny, :nx, band].astype("float64")
-                    if m["nodata"] is not None:
-                        vals = np.where(
-                            vals == m["nodata"], np.nan, vals
-                        )
-                    yy, xx = np.meshgrid(
-                        np.arange(ny), np.arange(nx), indexing="ij"
-                    )
-                    gx = (xx.ravel() + x0).astype("float64")
-                    gy = (yy.ravel() + y0).astype("float64")
-                    yield pd.DataFrame(
-                        {
-                            "block_id": np.full(ny * nx, bi, "int64"),
-                            "y_idx": gy.astype("int64"),
-                            "x_idx": gx.astype("int64"),
-                            "lon": lon_f(gx, gy),
-                            "lat": lat_f(gx, gy),
-                            "value": vals.ravel(),
-                        }
-                    )
+            for row in rows:
+                fh.seek(int(row.off))
+                rows_n = bh if m["tiled"] else min(bh, m["height"] - row.y0)
+                block = _decode_block(fh.read(int(row.cnt)), m, rows_n)
+                yield row, block[:, :, band]
 
-    return mdf.mapInPandas(_scan, schema)
-
+    return scan_chunks(
+        spark, path, meta, info["transform"], None,
+        "block_id long, off long, cnt long", _locate, _decode,
+    ).select("block_id", *_COLUMNS)

@@ -989,43 +989,30 @@ def _encode_complex(present: np.ndarray, pack: dict) -> tuple[bytes, bytes]:
 
 # -- Spark surfaces ------------------------------------------------------
 
-def _unnest_messages(msgs: list[dict], fname: str | None):
-    """Yield one pandas frame per message in the engine's long shape
-    (msg_idx, y_idx, x_idx, lat, lon, value) — NaN (bitmapped-absent)
-    cells included, so grids stay dense and keyed."""
-    import pandas as pd
-
-    for mi, m in enumerate(msgs):
-        nj, ni = m["nj"], m["ni"]
-        yy, xx = np.meshgrid(np.arange(nj), np.arange(ni), indexing="ij")
-        if np.ndim(m["lat"]) == 2:  # curvilinear (Lambert conformal)
-            lat_flat = np.asarray(m["lat"]).ravel().astype("float64")
-            lon_flat = np.asarray(m["lon"]).ravel().astype("float64")
-        else:
-            lat_flat = np.repeat(m["lat"], ni).astype("float64")
-            lon_flat = np.tile(m["lon"], nj).astype("float64")
-        frame = pd.DataFrame(
-            {
-                "msg_idx": np.full(nj * ni, mi, dtype="int64"),
-                "y_idx": yy.ravel().astype("int64"),
-                "x_idx": xx.ravel().astype("int64"),
-                "lat": lat_flat,
-                "lon": lon_flat,
-                "value": m["values"].ravel().astype("float64"),
-            }
-        )
-        if fname is not None:
-            frame.insert(0, "file", fname)
-        yield frame
-
-
 def read_grib2_grid(spark, path: str):
     """Driver-side S1 ingest of one GRIB2 file -> long DataFrame
-    (msg_idx, y_idx, x_idx, lat, lon, value)."""
+    (msg_idx, y_idx, x_idx, lat, lon, value), one kernel chunk per
+    message; bitmapped-absent cells stay as NaN."""
     import pandas as pd
 
-    frames = list(_unnest_messages(read_grib2(path), None))
-    return spark.createDataFrame(pd.concat(frames, ignore_index=True))
+    from wrf_to_geodataframe_spark.sources.chunkscan import (
+        chunk_frames,
+        grid_coords,
+    )
+
+    frames = [
+        f
+        for i, m in enumerate(read_grib2(path))
+        for f in chunk_frames(
+            m["values"][None], (i, 0, 0), (i + 1, m["nj"], m["ni"]),
+            grid_coords(m["lat"], {}, m["lon"], {}),
+        )
+    ]
+    return spark.createDataFrame(
+        pd.concat(frames, ignore_index=True).rename(
+            columns={"t_idx": "msg_idx"}
+        )
+    )
 
 
 def scan_grib2_offsets(path: str) -> list[tuple[int, int, int]]:
@@ -1080,10 +1067,23 @@ def read_grib2_dir(spark, path: str):
     )
 
     def _batches(it):
+        from wrf_to_geodataframe_spark.sources.chunkscan import (
+            chunk_frames,
+            grid_coords,
+        )
+
         for pdf in it:
             for fname, buf in zip(pdf["path"], pdf["content"]):
                 msgs = read_grib2_bytes(bytes(buf), name=fname)
-                yield from _unnest_messages(msgs, fname)
+                for i, m in enumerate(msgs):
+                    for f in chunk_frames(
+                        m["values"][None], (i, 0, 0),
+                        (i + 1, m["nj"], m["ni"]),
+                        grid_coords(m["lat"], {}, m["lon"], {}),
+                    ):
+                        f = f.rename(columns={"t_idx": "msg_idx"})
+                        f.insert(0, "file", fname)
+                        yield f
 
     files = spark.read.format("binaryFile").load(path)
     return files.select("path", "content").mapInPandas(_batches, schema)

@@ -469,57 +469,45 @@ def cf_mask_and_scale(arr: "np.ndarray", attrs: dict) -> "np.ndarray":
 def _unnest_grid(ds: dict, var: str, lat_var: str, lon_var: str,
                  time_index: int | None, time_var: str | None = None):
     """Yield one pandas frame per time slice of ``var`` with columns
-    (t_idx, y_idx, x_idx, lat, lon, value).  2-D variables yield one
-    frame with t_idx 0; 3-D variables yield every record (or just
-    ``time_index`` when given).  When ``time_var`` names a CF time
-    coordinate, each frame additionally carries the decoded ``time``
-    timestamp.  CF packing attributes (scale_factor/add_offset/
-    _FillValue/missing_value) are applied per variable, matching
-    xarray's default mask-and-scale.  Shared by the driver-side
-    ``read_netcdf_grid`` and the executor-side ``read_netcdf_dir``."""
-    import pandas as pd
+    (t_idx, y_idx, x_idx, lat, lon, value): the whole variable is one
+    chunk at origin 0 of the shared kernel (``chunkscan.chunk_frames``).
+    2-D variables yield one frame with t_idx 0; 3-D variables yield
+    every record (or just ``time_index`` when given).  When
+    ``time_var`` names a CF time coordinate, each frame additionally
+    carries the decoded ``time`` timestamp.  CF packing attributes
+    (scale_factor/add_offset/_FillValue/missing_value) are applied per
+    variable, matching xarray's default mask-and-scale.  Shared by the
+    driver-side ``read_netcdf_grid`` and the executor-side
+    ``read_netcdf_dir``."""
+    from wrf_to_geodataframe_spark.sources.chunkscan import (
+        check_grid,
+        chunk_frames,
+        grid_coords,
+    )
 
     times = _cf_time_axis(ds, time_var) if time_var else None
-
-    def _scaled(name):
-        spec = ds["variables"][name]
-        return cf_mask_and_scale(spec["data"], spec.get("attrs", {}))
-
-    v = _scaled(var)
-    lat = _scaled(lat_var)
-    lon = _scaled(lon_var)
-    if lat.ndim == 1 and lon.ndim == 1:  # rectilinear: broadcast to 2-D
-        lon, lat = np.meshgrid(lon, lat)
+    spec = ds["variables"][var]
+    v = np.asarray(cf_mask_and_scale(spec["data"], spec.get("attrs", {})))
+    check_grid(var, v.shape, time_index)
     if v.ndim == 2:
-        slices = [(0, v)]
-    elif time_index is not None:
-        from wrf_to_geodataframe_spark.sources.chunkscan import check_grid
+        v, time_index = v[None], None
 
-        check_grid(var, v.shape, time_index)
-        slices = [(time_index, v[time_index])]
-    else:
-        slices = list(enumerate(v))
-    ny, nx = slices[0][1].shape
-    yy, xx = np.meshgrid(np.arange(ny), np.arange(nx), indexing="ij")
-    y_flat = yy.ravel().astype("int64")
-    x_flat = xx.ravel().astype("int64")
-    lat_flat = lat.ravel().astype("float64")
-    lon_flat = lon.ravel().astype("float64")
-    for t, sl in slices:
-        frame = pd.DataFrame(
-            {
-                "t_idx": np.full(ny * nx, t, dtype="int64"),
-                "y_idx": y_flat,
-                "x_idx": x_flat,
-                "lat": lat_flat,
-                "lon": lon_flat,
-                "value": sl.ravel().astype("float64"),
-            }
-        )
+    def _plane(name):
+        """A coordinate stored with leading unit axes (WRF's (Time, y,
+        x) XLAT) is one (y, x) plane."""
+        c = ds["variables"][name]
+        d = np.asarray(c["data"])
+        return (d if d.ndim == 1 else d.reshape(v.shape[1:])), c.get("attrs")
+
+    lat, lon = grid_coords(*_plane(lat_var), *_plane(lon_var))
+    windows = (None if time_index is None else (time_index, time_index),
+               None, None)
+    for frame in chunk_frames(v, (0, 0, 0), v.shape, (lat, lon), windows):
         if times is not None:
             frame.insert(
                 1, "time",
-                np.full(ny * nx, times[t], dtype="datetime64[ns]"),
+                np.full(len(frame), times[frame["t_idx"].iat[0]],
+                        dtype="datetime64[ns]"),
             )
         yield frame
 

@@ -66,24 +66,17 @@ __all__ = [
 ]
 
 def _virtual_out_schema():
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
+    """(file, var) + the kernel's (t_idx, y_idx, x_idx, lat, lon,
+    value)."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from wrf_to_geodataframe_spark.sources.chunkscan import chunk_schema
+
+    return StructType(
+        [StructField(c, StringType()) for c in ("file", "var")]
+        + chunk_schema().fields
     )
 
-    return StructType([
-        StructField("file", StringType()),
-        StructField("var", StringType()),
-        StructField("t_idx", LongType()),
-        StructField("y_idx", LongType()),
-        StructField("x_idx", LongType()),
-        StructField("lat", DoubleType()),
-        StructField("lon", DoubleType()),
-        StructField("value", DoubleType()),
-    ])
 
 _CHUNK_SCHEMA = (
     "file string, var string, file_no long, nt long, lt0 long, lt1 long, "
@@ -98,17 +91,6 @@ _COORD_SCHEMA = (
     "coord_hash string, ny long, nx long, lat binary, lon binary, "
     "affine array<double>"
 )
-
-
-def _coord_grids(lat: np.ndarray, lon: np.ndarray):
-    """Normalize coordinate variables to matching 2-D float64 grids."""
-    lat = np.asarray(lat, dtype="float64")
-    lon = np.asarray(lon, dtype="float64")
-    if lat.ndim == 1 and lon.ndim == 1:
-        lon, lat = np.meshgrid(lon, lat)
-    if lat.shape != lon.shape or lat.ndim != 2:
-        raise ValueError(f"coordinate shapes {lat.shape} vs {lon.shape}")
-    return np.ascontiguousarray(lat), np.ascontiguousarray(lon)
 
 
 def _hash_grids(lat: np.ndarray, lon: np.ndarray) -> str:
@@ -183,30 +165,24 @@ def _file_chunk_rows(path: str, file_no: int, var: str,
 
 
 def _hdf5_rows(path, file_no, var, lat_var, lon_var, time_var=None):
+    from wrf_to_geodataframe_spark.sources.chunkscan import (
+        check_grid,
+        grid_coords,
+    )
     from wrf_to_geodataframe_spark.sources.hdf5 import hdf5_chunk_manifest
-    from wrf_to_geodataframe_spark.sources.netcdf import cf_mask_and_scale
 
     aux = (lat_var, lon_var) + (
         (time_var,) if time_var is not None else ()
     )
     man = hdf5_chunk_manifest(path, var, aux_vars=aux)
-    shape, chunk = man["shape"], man["chunks"]
-    if len(shape) == 2:
-        shape = (1,) + tuple(shape)
-        chunk = (1,) + tuple(chunk)
-        tdim = False
-    elif len(shape) == 3:
-        shape, chunk = tuple(shape), tuple(chunk)
-        tdim = True
-    else:
-        raise ValueError(f"{var}: expected (t,y,x) or (y,x), got {shape}")
-    lat, lon = _coord_grids(
-        np.asarray(cf_mask_and_scale(
-            man["aux"][lat_var], man["aux_attrs"][lat_var]
-        )),
-        np.asarray(cf_mask_and_scale(
-            man["aux"][lon_var], man["aux_attrs"][lon_var]
-        )),
+    shape, chunk = tuple(man["shape"]), tuple(man["chunks"])
+    check_grid(var, shape)
+    tdim = len(shape) == 3
+    if not tdim:
+        shape, chunk = (1,) + shape, (1,) + chunk
+    lat, lon = grid_coords(
+        man["aux"][lat_var], man["aux_attrs"][lat_var],
+        man["aux"][lon_var], man["aux_attrs"][lon_var],
     )
     packing = _packing_json(man["attrs"])
     chash = _hash_grids(lat, lon)
@@ -263,17 +239,20 @@ def _time_rows(var, file_no, data, attrs, nt, path, time_var):
 
 
 def _classic_rows(path, file_no, var, lat_var, lon_var, time_var=None):
+    from wrf_to_geodataframe_spark.sources.chunkscan import (
+        check_grid,
+        grid_coords,
+    )
     from wrf_to_geodataframe_spark.sources.netcdf import (
         _DTYPES,
         _SIZES,
         _read_header_from_file,
-        cf_mask_and_scale,
     )
 
     def _fixed_var(hdr, name):
-        """Bounded byte-range read of one non-record variable — the
-        coordinate grids of a multi-GB classic file cost two seeks,
-        not a whole-file read."""
+        """Bounded byte-range read of one non-record variable and its
+        attributes — the coordinate grids of a multi-GB classic file
+        cost two seeks, not a whole-file read."""
         e = next((e for e in hdr["entries"] if e[0] == name), None)
         if e is None:
             raise ValueError(f"{path}: no variable {name!r}")
@@ -285,8 +264,7 @@ def _classic_rows(path, file_no, var, lat_var, lon_var, time_var=None):
         with open(path, "rb") as fh:
             fh.seek(beg)
             buf = fh.read(n * _SIZES[t])
-        arr = np.frombuffer(buf, _DTYPES[t], count=n).reshape(shp)
-        return np.asarray(cf_mask_and_scale(arr, atts or {}))
+        return np.frombuffer(buf, _DTYPES[t], count=n).reshape(shp), atts
 
     hdr = _read_header_from_file(path)
     dims, rec_dim = hdr["dims"], hdr["rec_dim"]
@@ -299,13 +277,12 @@ def _classic_rows(path, file_no, var, lat_var, lon_var, time_var=None):
     is_rec = rec_dim is not None and dimids and dimids[0] == rec_dim
     if is_rec:
         shape[0] = numrecs
+    check_grid(var, shape)
     if len(shape) == 2:
         nt, (ny, nx) = 1, shape
         is_rec = False
-    elif len(shape) == 3:
-        nt, ny, nx = shape
     else:
-        raise ValueError(f"{var}: expected (t,y,x) or (y,x), got {shape}")
+        nt, ny, nx = shape
     size, dtype = _SIZES[nc_type], np.dtype(_DTYPES[nc_type]).str
     plane = size * ny * nx
     # one pseudo-chunk per time plane; record vars stride by the shared
@@ -313,8 +290,8 @@ def _classic_rows(path, file_no, var, lat_var, lon_var, time_var=None):
     step = (
         recsize if (is_rec and hdr["n_recvars"] > 1) else plane
     )
-    lat, lon = _coord_grids(_fixed_var(hdr, lat_var),
-                            _fixed_var(hdr, lon_var))
+    lat, lon = grid_coords(*_fixed_var(hdr, lat_var),
+                           *_fixed_var(hdr, lon_var))
     chash = _hash_grids(lat, lon)
     fsize = os.path.getsize(path)
     rows = []
@@ -389,6 +366,7 @@ def _grib2_rows(path: str, file_no: int, var: str | None,
     35-41, what wgrib2/eccodes report) — into time-sidecar rows;
     messages whose product template carries no forecast octets count
     as the reference time."""
+    from wrf_to_geodataframe_spark.sources.chunkscan import grid_coords
     from wrf_to_geodataframe_spark.sources.grib2 import (
         Grib2Error,
         _parse_grid_template_3_0,
@@ -491,7 +469,7 @@ def _grib2_rows(path: str, file_no: int, var: str | None,
                     end_ns if end_ns is not None
                     else ref_ns + (fcst_ns or 0),
                 ))
-            lat, lon = _coord_grids(grid["lat"], grid["lon"])
+            lat, lon = grid_coords(grid["lat"], {}, grid["lon"], {})
             chash = _hash_grids(lat, lon)
             if chash not in seen:
                 seen.add(chash)
@@ -543,6 +521,17 @@ def build_virtual_manifest(
     a cumulative-sum window over the O(#files) per-file lengths — a
     single-partition window over a frame that is tiny by construction,
     then broadcast-joined back onto the chunk rows."""
+    _index_files(
+        spark, _list_files(src, pattern), var, lat_var, lon_var, out_path,
+        time_var=time_var,
+    )
+    return out_path
+
+
+def _list_files(src, pattern: str) -> list[str]:
+    """``src`` as an ordered file list: a directory globbed with
+    ``pattern`` in sorted-name order, or an explicit path list; no
+    files is a named error."""
     files = (
         sorted(glob.glob(os.path.join(src, pattern)))
         if isinstance(src, str)
@@ -550,10 +539,22 @@ def build_virtual_manifest(
     )
     if not files:
         raise ValueError(f"no input files under {src!r}")
-    _index_files(
-        spark, files, var, lat_var, lon_var, out_path, time_var=time_var
+    return files
+
+
+def _file_frame(spark, files):
+    """(file_no, path) frame of ``files`` in exactly the slice count a
+    per-file walk needs (r18): a bare createDataFrame slices tiny lists
+    over defaultParallelism mostly-empty partitions, and a repartition
+    adds an exchange on top — every downstream job then carried a
+    32-task parallelize stage for a handful of files.  Positional
+    slices spread the files as evenly as a file_no hash does."""
+    sc = spark.sparkContext
+    n_slices = max(1, min(len(files), sc.defaultParallelism * 2))
+    return spark.createDataFrame(
+        sc.parallelize(list(enumerate(files)), n_slices),
+        "file_no long, path string",
     )
-    return out_path
 
 
 def _time_offsets(triples, files):
@@ -588,18 +589,7 @@ def _index_files(
     from pyspark.storagelevel import StorageLevel
 
     sc = spark.sparkContext
-    # Parallelize the file list into exactly the slice count the walk
-    # needs (r18): a bare createDataFrame slices tiny lists over
-    # defaultParallelism mostly-empty partitions and the old
-    # repartition added an exchange on top — every downstream job then
-    # carried a 32-task parallelize stage for a handful of files.
-    # Positional slices spread the files as evenly as the old
-    # file_no hash did.
-    n_slices = max(1, min(len(files), sc.defaultParallelism * 2))
-    fdf = spark.createDataFrame(
-        sc.parallelize(list(enumerate(files)), n_slices),
-        "file_no long, path string",
-    )
+    fdf = _file_frame(spark, files)
 
     vars_ = [var] if isinstance(var, str) or var is None else list(var)
 
@@ -761,17 +751,9 @@ def build_virtual_mosaic(
         geotiff_info,
     )
 
-    files = (
-        sorted(glob.glob(os.path.join(src, pattern)))
-        if isinstance(src, str)
-        else list(src)
-    )
-    if not files:
-        raise ValueError(f"no input files under {src!r}")
+    files = _list_files(src, pattern)
     sc = spark.sparkContext
-    fdf = spark.createDataFrame(
-        [(p,) for p in files], "path string"
-    ).repartition(max(1, min(len(files), sc.defaultParallelism * 2)))
+    fdf = _file_frame(spark, files)
 
     def _scan_blocks(it):
         import mmap
@@ -886,8 +868,6 @@ def build_virtual_mosaic(
         .write.mode("overwrite")
         .parquet(os.path.join(out_path, "chunks"))
     )
-    import pandas as pd  # noqa: F811 (driver-side tiny frame)
-
     spark.createDataFrame(
         pd.DataFrame(
             {
@@ -1155,7 +1135,9 @@ def _with_packing(df):
 
 def _broadcast_sidecar(spark, manifest_path: str, max_sidecar_bytes: int):
     """Collect + broadcast the coordinate sidecar as {coord_hash ->
-    ("affine", params) | ("grid", lat, lon)}.  Size guard first: the
+    ``chunk_frames`` coords}: a mosaic's ``[pw, ph, ox, oy]`` row
+    becomes the affine ``(pw, 0, ox, 0, ph, oy)``, a grid row its 2-D
+    (lat, lon).  Size guard first: the
     sidecar is normally KBs (shared-grid archives dedupe to a handful
     of rows), but an archive of many DISTINCT large curvilinear grids
     would make it O(#grids x ny x nx x 16 B) — measured executor-side
@@ -1184,18 +1166,12 @@ def _broadcast_sidecar(spark, manifest_path: str, max_sidecar_bytes: int):
     grids = {}
     for r in coords_df.collect():
         if r["affine"] is not None:
-            grids[r["coord_hash"]] = (
-                "affine", np.asarray(r["affine"], "float64"),
-            )
+            pw, ph, ox, oy = np.asarray(r["affine"], "float64")
+            grids[r["coord_hash"]] = (pw, 0.0, ox, 0.0, ph, oy)
         else:
-            grids[r["coord_hash"]] = (
-                "grid",
-                np.frombuffer(r["lat"], "float64").reshape(
-                    r["ny"], r["nx"]
-                ),
-                np.frombuffer(r["lon"], "float64").reshape(
-                    r["ny"], r["nx"]
-                ),
+            grids[r["coord_hash"]] = tuple(
+                np.frombuffer(r[c], "float64").reshape(r["ny"], r["nx"])
+                for c in ("lat", "lon")
             )
     return spark.sparkContext.broadcast(grids)
 
@@ -1203,16 +1179,16 @@ def _broadcast_sidecar(spark, manifest_path: str, max_sidecar_bytes: int):
 def _chunk_scanner(bgrids, bounds):
     """The per-task chunk decoder of ``read_virtual``: manifest rows
     in, long grid rows out, byte-range reads against the indexed
-    files."""
-    import pandas as pd
-
+    files.  Each row's decoded (and CF-unpacked) block goes to the
+    shared kernel (``chunkscan.chunk_frames``) with its global extent
+    and the read's inclusive (t, y, x) windows ``bounds``."""
+    from wrf_to_geodataframe_spark.sources.chunkscan import chunk_frames
     from wrf_to_geodataframe_spark.sources.grib2 import read_grib2_bytes
     from wrf_to_geodataframe_spark.sources.hdf5 import decode_chunk_pipeline
     from wrf_to_geodataframe_spark.sources.netcdf import cf_mask_and_scale
 
     def _scan(it):
         grids = bgrids.value
-        trange, yrange, xrange_ = bounds
         handles: dict[str, object] = {}
         fcache: dict[str, list] = {}
         pcache: dict[str, dict] = {}
@@ -1252,6 +1228,7 @@ def _chunk_scanner(bgrids, bounds):
                         carr = msg["values"][None, ...].astype("float64")
                     elif row.dtype == "geotiff":
                         from wrf_to_geodataframe_spark.sources.geotiff import (  # noqa: E501
+                            _cf_attrs,
                             _decode_block,
                         )
 
@@ -1260,12 +1237,10 @@ def _chunk_scanner(bgrids, bounds):
                         fh.seek(int(row.addr))
                         raw = fh.read(int(row.nbytes))
                         arr = _decode_block(raw, meta, int(row.cy))
-                        carr = arr[:, :, meta["band"]][None, ...].astype(
-                            "float64"
+                        carr = cf_mask_and_scale(
+                            arr[:, :, meta["band"]][None, ...],
+                            _cf_attrs(meta),
                         )
-                        if meta["nodata"] is not None:
-                            carr = carr.copy()
-                            carr[carr == meta["nodata"]] = np.nan
                     elif row.addr >= 0:
                         dt = np.dtype(row.dtype)
                         fh = _open(row.file, row.fsize)
@@ -1297,11 +1272,6 @@ def _chunk_scanner(bgrids, bounds):
                         if attrs is None:
                             attrs = pcache[pk] = json.loads(pk)
                         carr = np.asarray(cf_mask_and_scale(carr, attrs))
-                    t0, y0, x0 = int(row.t0), int(row.y0), int(row.x0)
-                    nt = int(row.t1) - t0
-                    ny = int(row.y1) - y0
-                    nx = int(row.x1) - x0
-                    block = carr[:nt, :ny, :nx]
                     g = grids.get(row.coord_hash)
                     if g is None:
                         raise ValueError(
@@ -1311,42 +1281,13 @@ def _chunk_scanner(bgrids, bounds):
                             "after this read was defined; "
                             "restart it to pick up the new sidecar"
                         )
-                    yy, xx = np.meshgrid(
-                        np.arange(ny) + y0, np.arange(nx) + x0,
-                        indexing="ij",
-                    )
-                    yf, xf = yy.ravel(), xx.ravel()
-                    if g[0] == "affine":
-                        pw, ph, ox_, oy_ = g[1]
-                        lat_c = oy_ + yf * ph
-                        lon_c = ox_ + xf * pw
-                    else:
-                        _, lat_g, lon_g = g
-                        lat_c = lat_g[y0:y0 + ny, x0:x0 + nx].ravel()
-                        lon_c = lon_g[y0:y0 + ny, x0:x0 + nx].ravel()
-                    mask = np.ones(ny * nx, bool)
-                    if yrange is not None:
-                        mask &= (yf >= yrange[0]) & (yf <= yrange[1])
-                    if xrange_ is not None:
-                        mask &= (xf >= xrange_[0]) & (xf <= xrange_[1])
-                    for rel_t in range(nt):
-                        t = t0 + rel_t
-                        if trange is not None and not (
-                            trange[0] <= t <= trange[1]
-                        ):
-                            continue
-                        yield pd.DataFrame({
-                            "file": row.file,
-                            "var": row.var,
-                            "t_idx": np.full(int(mask.sum()), t, "int64"),
-                            "y_idx": yf[mask].astype("int64"),
-                            "x_idx": xf[mask].astype("int64"),
-                            "lat": lat_c[mask],
-                            "lon": lon_c[mask],
-                            "value": block[rel_t].ravel()[mask].astype(
-                                "float64"
-                            ),
-                        })
+                    for frame in chunk_frames(
+                        carr, (row.t0, row.y0, row.x0),
+                        (row.t1, row.y1, row.x1), g, bounds,
+                    ):
+                        frame.insert(0, "var", row.var)
+                        frame.insert(0, "file", row.file)
+                        yield frame
         finally:
             for fh in handles.values():
                 fh.close()

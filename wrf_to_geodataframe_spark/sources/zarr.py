@@ -668,7 +668,7 @@ def read_zarr_dist(
 
     def _decode(m, rows):
         for row in rows:
-            cpath = os.path.join(adir, row.key)
+            cpath = os.path.join(adir, row.chunk_key)
             if not os.path.exists(cpath):
                 yield row, None
                 continue
@@ -677,7 +677,7 @@ def read_zarr_dist(
 
     return scan_chunks(
         spark, var, meta, grid_coords(lat, lm["attrs"], lon, om["attrs"]),
-        time_index, "key string",
-        lambda idx: (_chunk_key(idx, meta["sep"]),), _decode, keyed=True,
+        time_index, "chunk_key string",
+        lambda idx: (_chunk_key(idx, meta["sep"]),), _decode,
     )
 

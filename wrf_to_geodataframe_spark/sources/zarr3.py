@@ -587,7 +587,7 @@ def read_zarr3_dist(
     def _decode(m, rows):
         shard = _shard_layout(m)
         for row in rows:
-            cpath = os.path.join(adir, row.key.replace("/", os.sep))
+            cpath = os.path.join(adir, row.chunk_key.replace("/", os.sep))
             if not os.path.exists(cpath):
                 yield row, None
                 continue
@@ -600,7 +600,7 @@ def read_zarr3_dist(
 
     return scan_chunks(
         spark, var, meta, grid_coords(lat, lm["attrs"], lon, om["attrs"]),
-        time_index, "key string",
+        time_index, "chunk_key string",
         lambda idx: (_chunk_key(idx, meta["key_sep"], meta["key_name"]),),
-        _decode, keyed=True,
+        _decode,
     )
