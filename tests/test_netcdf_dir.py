@@ -21,6 +21,7 @@ import pytest
 from tests.hdf5_fixture import FixtureWriter
 from wrf_to_geodataframe_spark.sources.netcdf import (
     read_netcdf_dir,
+    read_netcdf_dir_many,
     read_netcdf_grid,
     write_netcdf,
 )
@@ -122,6 +123,30 @@ def test_record_variable_unnests_every_time_slice(spark, tmp_path):
     ).collect()
     assert {r.t_idx for r in sliced} == {1}
     assert len(sliced) == ny * nx
+
+
+def test_dir_many_names_a_staggered_variable(spark, tmp_path):
+    """A variable on another grid (WRF's U on west_east_stag) is a
+    named error of the one-scan reader, raised before its plane is
+    unnested against the shared mass-grid coordinates."""
+    ny, nx = 3, 5
+    lat = np.linspace(50.0, 51.0, ny * nx).reshape(ny, nx)
+    lon = np.linspace(-1.0, 0.0, ny * nx).reshape(ny, nx)
+    p = str(tmp_path / "wrfout_stag.nc")
+    write_netcdf(
+        p,
+        dims={"t": 1, "y": ny, "x": nx, "xs": nx + 1},
+        variables={
+            "T": {"dims": ("t", "y", "x"), "data": np.zeros((1, ny, nx))},
+            "U": {"dims": ("t", "y", "xs"),
+                  "data": np.zeros((1, ny, nx + 1))},
+            "XLAT": {"dims": ("y", "x"), "data": lat},
+            "XLONG": {"dims": ("y", "x"), "data": lon},
+        },
+    )
+    df = read_netcdf_dir_many(spark, p, ["T", "U"], "XLAT", "XLONG")
+    with pytest.raises(Exception, match="does not share"):
+        df.collect()
 
 
 def test_one_task_per_file_and_executor_side_parse(spark, mixed_dir):

@@ -980,6 +980,11 @@ def test_getvar_many_equals_single_front_door(spark, archive):
         wrf_getvar_many(spark, archive, ["tk"],
                         options={"tk": {"bogus": 1}})
     assert release_persisted() >= 3  # bases + zdz (+ coords)
+    # one name shares nothing, so it persists nothing
+    slp = wrf_getvar_many(spark, archive, ["slp"])["slp"]
+    plan = slp._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" not in plan
+    assert release_persisted() == 0
 
 
 def test_pressure_aliases_geopt_height_agl(spark, archive):
@@ -1488,6 +1493,15 @@ def test_wind_single_products(spark, archive):
                     "wspd", "wdir")
     ws = _collect(wrf_getvar(spark, archive, "wspd"), "wspd")
     assert all(ws[k] == pair[k][0] for k in pair)
+    # with times=True the time column comes last, as for every name
+    # and in both front doors
+    assert (
+        wrf_getvar(spark, archive, "wspd", times=True).columns
+        == wrf_getvar_many(
+            spark, archive, ["wspd", "tk"], times=True
+        )["wspd"].columns
+        == ["file", "k", "y_idx", "x_idx", "wspd", "time"]
+    )
     many = wrf_getvar_many(
         spark, archive, ["wdir", "uvmet10_wspd10", "tk"], attrs=ATTRS
     )

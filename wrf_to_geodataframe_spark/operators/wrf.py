@@ -36,8 +36,10 @@ names its workflows consume.  CALDBZ defaults to rain-only; pass
 ``species=("QRAIN", "QSNOW", "QGRAUP")`` for the full-hydrometeor
 form (the snow/graupel terms ride the same single mass scan).
 ``times=True`` adds the decoded wrfout ``Times`` timestamp (and
-``getvar('times')`` returns the axis itself); :func:`wrf_getvar_many`
-shares one scan set across several names.  wrf-python alias
+``getvar('times')`` returns the axis itself).  :func:`wrf_getvar` is
+the one-name case of :func:`wrf_getvar_many`, the one getvar path:
+several names share one scan set, persisted only when two or more
+names share it.  wrf-python alias
 spellings (``temp``, ``th``, ``dp``, ``theta_e``, ...) resolve via
 ``ALIASES``; the storm diagnostics (``helicity``,
 ``updraft_helicity``) and ``cape_2d``'s lcl/lfc report heights above
@@ -251,40 +253,6 @@ def _coords(
     )
 
 
-def _zdz(
-    spark: SparkSession, path: str, lat_var: str, lon_var: str
-) -> DataFrame:
-    """(file, k, y_idx, x_idx, z, dz) at MASS levels from the
-    staggered geopotential: z = half-sum of adjacent staggered
-    heights, dz = their exact difference — one lead window per column
-    pencil over the staggered-only table (joining staggered against
-    mass levels first would silently drop the top staggered entry)."""
-    from wrf_to_geodataframe_spark.functions.meteo import (
-        geopotential_height,
-    )
-    from wrf_to_geodataframe_spark.sources.netcdf import (
-        read_netcdf_dir_many,
-    )
-
-    d = read_netcdf_dir_many(
-        spark, path, ["PH", "PHB"], lat_var, lon_var
-    ).select(
-        "file", F.col("t_idx").alias("k"), "y_idx", "x_idx", "ph", "phb"
-    ).withColumn(
-        "_zs", geopotential_height(F.col("ph"), F.col("phb"))
-    )
-    w = Window.partitionBy(*_KEY3).orderBy("k")
-    return (
-        d.withColumn("_zs2", F.lead("_zs").over(w))
-        .filter(F.col("_zs2").isNotNull())
-        .select(
-            *_KEY,
-            ((F.col("_zs") + F.col("_zs2")) / 2.0).alias("z"),
-            (F.col("_zs2") - F.col("_zs")).alias("dz"),
-        )
-    )
-
-
 def _zstag_tbl(
     spark: SparkSession, path: str, lat_var: str, lon_var: str
 ) -> DataFrame:
@@ -304,6 +272,28 @@ def _zstag_tbl(
     ).select(
         "file", F.col("t_idx").alias("k"), "y_idx", "x_idx",
         geopotential_height(F.col("ph"), F.col("phb")).alias("zstag"),
+    )
+
+
+def _zdz(
+    spark: SparkSession, path: str, lat_var: str, lon_var: str
+) -> DataFrame:
+    """(file, k, y_idx, x_idx, z, dz) at MASS levels from the
+    staggered heights (:func:`_zstag_tbl`): z = half-sum of adjacent
+    staggered heights, dz = their exact difference — one lead window
+    per column pencil over the staggered-only table (joining staggered
+    against mass levels first would silently drop the top staggered
+    entry)."""
+    w = Window.partitionBy(*_KEY3).orderBy("k")
+    return (
+        _zstag_tbl(spark, path, lat_var, lon_var)
+        .withColumn("_zs2", F.lead("zstag").over(w))
+        .filter(F.col("_zs2").isNotNull())
+        .select(
+            *_KEY,
+            ((F.col("zstag") + F.col("_zs2")) / 2.0).alias("z"),
+            (F.col("_zs2") - F.col("zstag")).alias("dz"),
+        )
     )
 
 
@@ -556,30 +546,17 @@ def wrf_getvar(
     **kw,
 ) -> DataFrame:
     """wrf-python ``getvar(...)`` over an archive of per-timestep
-    wrfout shards.  Returns a long DataFrame keyed by (file, k,
-    y_idx, x_idx) for per-level fields or (file, y_idx, x_idx) for
-    column diagnostics, value column(s) named after the quantity.
-    Unknown names raise with the supported list (never a silent
-    wrong answer).
-
-    ``times=True`` (any name) appends the shard's decoded ``Times``
-    timestamp as a ``time`` column — the wrf-python ``XTIME``
-    coordinate semantics — via one broadcast join against the
-    metadata-sized :func:`wrf_times` table (one row per shard,
-    enforced), so multi-timestep archives feed daily-resample /
-    period-mean rollups (the reference's wrf_voronoi.py:151-190
-    workflow) without a separate virtual manifest."""
-    from wrf_to_geodataframe_spark.functions import meteo as M
-
-    if varname in _WIND_SINGLE:
-        pair, comp = _WIND_SINGLE[varname]
-        out = wrf_getvar(
-            spark, path, pair, lat_var=lat_var, lon_var=lon_var,
-            attrs=attrs, **kw,
-        )
-        keys = [c for c in out.columns
-                if c in ("file", "k", "y_idx", "x_idx", "time")]
-        return out.select(*keys, F.col(comp).alias(varname))
+    wrfout shards: the one-name case of :func:`wrf_getvar_many`
+    (``kw`` are the name's options, ``times=True`` appends the shard's
+    decoded ``Times`` timestamp as a ``time`` column — the wrf-python
+    ``XTIME`` coordinate semantics — so multi-timestep archives feed
+    daily-resample / period-mean rollups, the reference's
+    wrf_voronoi.py:151-190 workflow).  Returns a long DataFrame keyed
+    by (file, k, y_idx, x_idx) for per-level fields or (file, y_idx,
+    x_idx) for column diagnostics, value column(s) named after the
+    quantity.  Unknown names raise with the supported list (never a
+    silent wrong answer).  ``getvar("times")`` returns the time axis
+    itself."""
     if varname in ("times", "xtimes"):
         # wrf-python getvar("times"): the decoded time coordinate
         # itself — the metadata-sized (file, lt, time) axis, no grid
@@ -588,79 +565,19 @@ def wrf_getvar(
                 f"getvar({varname!r}) takes no options"
             )
         return wrf_times(spark, path)
-    with_times = bool(kw.pop("times", False))
-    if with_times:
-        out = wrf_getvar(
-            spark, path, varname, lat_var=lat_var, lon_var=lon_var,
-            attrs=attrs, **kw,
-        )
-        tdf = wrf_times(spark, path, single_step=True).select(
-            "file", "time"
-        )
-        return out.join(F.broadcast(tdf), "file")
-
-    if ALIASES.get(varname, varname) not in SUPPORTED:
-        # wrf-python's raw-variable fallback: getvar(f, 'SMOIS') returns
-        # any variable the FILE itself carries.  A metadata-only probe
-        # of the first shard decides existence and shape (never a
-        # runtime surprise on executors), and only MASS-GRID variables
-        # qualify — horizontally staggered grids would silently
-        # misalign against the XLAT/XLONG coordinate join, so they
-        # raise with a pointer to the dedicated wind front doors.
-        raw = _raw_fallback(spark, path, varname, lat_var, lon_var, kw)
-        if raw is not None:
-            return raw
-
-    varname, (need, species) = _validate(varname, kw)
-    base = _base(spark, path, need, lat_var, lon_var)
-    return _dispatch(
-        spark, path, varname, base, species, attrs, lat_var, lon_var,
-        zdz=lambda: _zdz(spark, path, lat_var, lon_var),
-        coords=lambda: _coords(spark, path, lat_var, lon_var),
-        **kw,
-    )
-
-
-def _raw_fallback(
-    spark: SparkSession,
-    path: str,
-    varname: str,
-    lat_var: str,
-    lon_var: str,
-    kw: dict,
-) -> DataFrame | None:
-    """The getvar raw-variable path: ``varname`` as the file spells it
-    (case-sensitive, like wrf-python).  Returns None when the first
-    shard has no such variable (the caller then raises the standard
-    supported-names error); raises NAMED errors for options (raw reads
-    take none) and horizontally-staggered shapes.  2-D ``(y, x)``
-    planes key (file, y_idx, x_idx); per-level ``(k, y, x)`` variables
-    key (file, k, y_idx, x_idx) — a VERTICALLY staggered leading dim
-    (k+1 levels, PH/W-style) is fine, k is then the staggered index
-    (the zstag convention).  ``attrs=`` is accepted-and-unused, the
-    same convention as every non-projection name (tk, theta, ...):
-    attrs is a general wrf_getvar parameter consumed only where a
-    projection is involved."""
-    try:
-        dims_by_var = wrf_file_variables(path)
-    except ValueError:
-        return None  # unreadable/empty archive: standard error path
-    if varname not in dims_by_var:
-        return None
-    shape = _check_raw_shape(varname, dims_by_var, lat_var, kw)
-    d = _raw(spark, path, varname, lat_var, lon_var)
-    if len(shape) == 2:
-        return d.select(*_KEY3, varname.lower()).distinct()
-    return d.select(*_KEY, varname.lower())
+    times = bool(kw.pop("times", False))
+    return wrf_getvar_many(
+        spark, path, [varname], lat_var=lat_var, lon_var=lon_var,
+        attrs=attrs, times=times, options={varname: kw} if kw else None,
+    )[varname]
 
 
 def _check_raw_shape(
     varname: str, dims_by_var: dict, lat_var: str, kw: dict
 ) -> tuple[int, ...]:
-    """The raw-read validations shared by the single and MANY front
-    doors (identical named errors, property-pinned parity): raw reads
-    take no options, the mass-grid coordinate must exist to key rows,
-    and only mass-grid (y, x) / (k, y, x) shapes qualify."""
+    """The getvar raw-read validations: raw reads take no options, the
+    mass-grid coordinate must exist to key rows, and only mass-grid
+    (y, x) / (k, y, x) shapes qualify."""
     if kw:
         raise TypeError(
             f"getvar({varname!r}) is a raw file-variable read and "
@@ -686,12 +603,11 @@ def _check_raw_shape(
 def _validate(
     varname: str, kw: dict
 ) -> tuple[str, tuple[tuple[str, ...], tuple]]:
-    """Name/option validation shared by the single- and multi-name
-    front doors: resolves wrf-python alias spellings to the CANONICAL
-    name (returned first), then the raw-variable list (with
-    hydrometeor species substituted for dbz/mdbz) and the species
-    tuple.  Mutates ``kw`` (pops consumed options) and raises on
-    unknown names or options."""
+    """Name/option validation of one getvar name: resolves wrf-python
+    alias spellings to the CANONICAL name (returned first), then the
+    raw-variable list (with hydrometeor species substituted for
+    dbz/mdbz) and the species tuple.  Mutates ``kw`` (pops consumed
+    options) and raises on unknown names or options."""
     varname = ALIASES.get(varname, varname)
     if varname not in SUPPORTED:
         raise ValueError(
@@ -745,7 +661,7 @@ def _dispatch(
     """Compute one getvar quantity from a prebuilt raw-variable
     ``base`` (the mass-grid scan + destaggers).  ``zdz``/``coords``
     are zero-arg callables returning the layer-geometry / coordinate
-    tables so the multi-name front door can share ONE of each across
+    tables so :func:`wrf_getvar_many` can share ONE of each across
     every requested field."""
     from wrf_to_geodataframe_spark.functions import meteo as M
 
@@ -1107,28 +1023,32 @@ def wrf_getvar_many(
     times: bool = False,
     options: dict[str, dict] | None = None,
 ) -> dict[str, DataFrame]:
-    """Many ``getvar`` names over ONE shared set of archive scans —
-    the real wrf-python session shape (`getvar(f, "slp")` then
-    `getvar(f, "tk")` then ...), which called one-at-a-time re-reads
-    the archive per name.  Here the union of every requested name's
-    raw variables becomes a single persisted mass-grid scan per grid
-    shape (per-level fields share one; 2-D surface staples share
-    another — their row axes differ, so they cannot share a frame),
-    and the layer-geometry (``_zdz``) and coordinate (``_coords``)
-    tables are built and persisted at most once however many names
-    consume them.  At archive scale this turns k names from ~k full
-    passes into 2-4 bounded passes total.
+    """``getvar`` for one or more names over ONE shared set of
+    archive scans — the real wrf-python session shape (`getvar(f,
+    "slp")` then `getvar(f, "tk")` then ...), which called
+    one-at-a-time re-reads the archive per name; :func:`wrf_getvar`
+    is the one-name case.  The union of every requested name's raw
+    variables becomes a single mass-grid scan per grid shape
+    (per-level fields share one; 2-D surface staples share another —
+    their row axes differ, so they cannot share a frame), and the
+    layer-geometry (``_zdz``) and coordinate (``_coords``) tables are
+    built at most once however many names consume them.  At archive
+    scale this turns k names from ~k full passes into 2-4 bounded
+    passes total.
 
     ``options`` maps a name to its keyword options (e.g.
     ``{"mdbz": {"species": ("QRAIN", "QSNOW")}}``); options for names
     not requested raise.  ``times=True`` broadcasts the shard
-    timestamp onto every returned frame.  Returns {name: DataFrame}
-    with exactly the single-name front door's schemas (property-pinned
-    equal in tests/test_wrf_getvar.py).
+    timestamp onto every returned frame, as the last column.  Names
+    the engine does not derive fall back to the raw file variable of
+    that name (wrf-python's ``getvar(f, 'SMOIS')``), decided by a
+    metadata-only probe of the first shard.  Returns {name:
+    DataFrame}.
 
-    The persists register with session.track_persist — call
-    ``release_persisted()`` (or clear the cache) when the session
-    moves on, like every other multi-branch operator here."""
+    With two or more names the shared scans are persisted and
+    register with session.track_persist — call ``release_persisted()``
+    (or clear the cache) when the session moves on, like every other
+    multi-branch operator here; one name persists nothing."""
     from wrf_to_geodataframe_spark.session import track_persist
 
     if not varnames:
@@ -1148,13 +1068,13 @@ def wrf_getvar_many(
         proj[name] = pair[1] if pair else None
         nm = pair[0] if pair else name
         if pair is None and ALIASES.get(nm, nm) not in SUPPORTED:
-            # the raw file-variable fallback, MANY-shape (single-name
-            # parity: same metadata-only probe, same named errors).
-            # 2-D raws ride the shared SURFACE union scan (their grid
-            # is validated identical); 3-D raws get their own scan —
-            # their level count is the file's own (possibly staggered,
-            # the zstag convention), not necessarily the mass k the
-            # shared per-level union assumes.
+            # the raw file-variable fallback: only MASS-GRID variables
+            # qualify (horizontally staggered grids would misalign
+            # against the XLAT/XLONG coordinates).  2-D raws ride the
+            # SURFACE union scan (their grid is validated identical);
+            # 3-D raws get their own scan — their level count is the
+            # file's own (possibly staggered, the zstag convention),
+            # not necessarily the mass k the per-level union assumes.
             if raw_shapes is None:
                 try:
                     raw_shapes = wrf_file_variables(path)
@@ -1163,9 +1083,7 @@ def wrf_getvar_many(
             if nm in raw_shapes:
                 shape = _check_raw_shape(nm, raw_shapes, lat_var, kw)
                 raw_kind[name] = len(shape)
-                canon[name], needs[name], specs[name], kws[name] = (
-                    name, (name,) if len(shape) == 2 else (), (), {}
-                )
+                needs[name] = (name,) if len(shape) == 2 else ()
                 continue
         canon[name], (needs[name], specs[name]) = _validate(nm, kw)
         kws[name] = kw
@@ -1175,6 +1093,7 @@ def wrf_getvar_many(
             return raw_kind[n] == 2
         return canon[n] in _SFC_RAW
 
+    share = len(varnames) > 1
     bases: dict[bool, DataFrame | None] = {}
     for is_sfc in (False, True):
         group = [n for n in varnames if _is_sfc(n) == is_sfc]
@@ -1182,23 +1101,16 @@ def wrf_getvar_many(
             dict.fromkeys(v for n in group for v in needs[n])
         )
         b = _base(spark, path, union, lat_var, lon_var)
-        bases[is_sfc] = track_persist(b) if b is not None else None
+        bases[is_sfc] = track_persist(b) if share and b is not None else b
 
-    shared: dict[str, DataFrame] = {}
+    memo: dict = {}
 
-    def zdz() -> DataFrame:
-        if "zdz" not in shared:
-            shared["zdz"] = track_persist(
-                _zdz(spark, path, lat_var, lon_var)
-            )
-        return shared["zdz"]
-
-    def coords() -> DataFrame:
-        if "coords" not in shared:
-            shared["coords"] = track_persist(
-                _coords(spark, path, lat_var, lon_var)
-            )
-        return shared["coords"]
+    def shared(build) -> DataFrame:
+        # one table per call, persisted only when names can share it
+        if build not in memo:
+            df = build(spark, path, lat_var, lon_var)
+            memo[build] = track_persist(df) if share else df
+        return memo[build]
 
     tdf = None
     if times:
@@ -1207,32 +1119,51 @@ def wrf_getvar_many(
         )
     out: dict[str, DataFrame] = {}
     for name in varnames:
-        if name in raw_kind:
-            if raw_kind[name] == 2:
-                df = bases[True].select(
-                    *_KEY3, name.lower()
-                ).distinct()
-            else:
-                df = _raw(spark, path, name, lat_var, lon_var).select(
-                    *_KEY, name.lower()
-                )
-            if tdf is not None:
-                df = df.join(F.broadcast(tdf), "file")
-            out[name] = df
-            continue
-        df = _dispatch(
-            spark, path, canon[name], bases[_is_sfc(name)],
-            specs[name], attrs, lat_var, lon_var,
-            zdz=zdz, coords=coords, **kws[name],
-        )
-        if proj[name]:
-            keys = [c for c in df.columns
-                    if c in ("file", "k", "y_idx", "x_idx")]
-            df = df.select(*keys, F.col(proj[name]).alias(name))
+        if raw_kind.get(name) == 2:
+            df = bases[True].select(*_KEY3, name.lower()).distinct()
+        elif name in raw_kind:
+            df = _raw(spark, path, name, lat_var, lon_var).select(
+                *_KEY, name.lower()
+            )
+        else:
+            df = _dispatch(
+                spark, path, canon[name], bases[_is_sfc(name)],
+                specs[name], attrs, lat_var, lon_var,
+                zdz=lambda: shared(_zdz), coords=lambda: shared(_coords),
+                **kws[name],
+            )
+            if proj[name]:
+                keys = [c for c in df.columns if c in _KEY]
+                df = df.select(*keys, F.col(proj[name]).alias(name))
         if tdf is not None:
             df = df.join(F.broadcast(tdf), "file")
         out[name] = df
     return out
+
+
+def _value_col(
+    fld: DataFrame, name: str, op: str, per_level: bool, hint: str = ""
+) -> str:
+    """The one value column of getvar frame ``fld`` (for name
+    ``name``) that ``op`` consumes — named errors when the frame is
+    2-D but ``per_level`` is wanted (or the reverse) and when it
+    carries more than one component.  ``time`` is a key, not a
+    component: ``times=True`` frames pass."""
+    cols = fld.columns
+    if ("k" in cols) != per_level:
+        want, got = "per-level", "2-D"
+        if not per_level:
+            want, got = got, want
+        raise ValueError(
+            f"{op} must be a {want} field; {name!r} is {got}{hint}"
+        )
+    vals = [c for c in cols if c not in (*_KEY, "time")]
+    if len(vals) != 1:
+        raise ValueError(
+            f"{op} must be a single-component field; {name!r} carries "
+            f"{vals}"
+        )
+    return vals[0]
 
 
 def wrf_interplevel(
@@ -1328,37 +1259,19 @@ def wrf_interplevel(
         spark, path, names, lat_var=lat_var, lon_var=lon_var,
         attrs=attrs, options={field: kw} if kw else None,
     )
-    for name in (field, on):
-        if "k" not in many[name].columns:
-            raise ValueError(
-                f"interplevel needs per-level inputs; {name!r} is 2-D"
-            )
-
-    def _vals(name: str, keys: tuple) -> str:
-        got = [c for c in many[name].columns if c not in (*keys, "time")]
-        if len(got) != 1:
-            raise ValueError(
-                f"interplevel needs single-component inputs; {name!r} "
-                f"carries {got}"
-            )
-        return got[0]
-
     # the frames carry CANONICAL column names — derive them from the
-    # frames (the wrf_vertcross rule), never from the caller's spelling
-    fcol = _vals(field, _KEY)
-    ocol = _vals(on, _KEY)
+    # frames, never from the caller's spelling
+    fcol = _value_col(many[field], field, "interplevel's field", True)
+    ocol = _value_col(many[on], on, "interplevel's coordinate", True)
     d = many[field].join(many[on], _KEY)
     if neg:
         d = d.withColumn(ocol, -F.col(ocol))
     if tgt_name is not None:
         tf = many[tgt_name]
-        if "k" in tf.columns:
-            raise ValueError(
-                f"interplevel's target surface must be a 2-D field; "
-                f"{tgt_name!r} is per-level — pass it as on= or pick a "
-                "single-plane name"
-            )
-        tcol = _vals(tgt_name, _KEY3)
+        tcol = _value_col(
+            tf, tgt_name, "interplevel's target surface", False,
+            " — pass it as on= or pick a single-plane name",
+        )
         # LEFT join: a column whose target plane is missing must keep
         # its rows so interplevel_field's column universe still emits
         # the promised NULL row (an inner join would silently drop the
@@ -1574,20 +1487,12 @@ def wrf_vertcross(
         spark, path, field, lat_var=lat_var, lon_var=lon_var,
         attrs=attrs, **kw,
     )
-    if "k" not in fld.columns:
-        raise ValueError(
-            f"vertcross needs a per-level field; {field!r} is 2-D — "
-            "use wrf_interpline"
-        )
-    vals = [c for c in fld.columns if c not in (*_KEY, "time")]
-    if len(vals) != 1:
-        raise ValueError(
-            f"vertcross needs a single-component field; {field!r} "
-            f"carries {vals}"
-        )
+    col = _value_col(
+        fld, field, "vertcross's field", True, " — use wrf_interpline"
+    )
     return vertcross(
-        fld, vals[0], "k", "x_idx", "y_idx", start, end, n_points,
-        out_col=vals[0], extra_keys=["file"],
+        fld, col, "k", "x_idx", "y_idx", start, end, n_points,
+        out_col=col, extra_keys=["file"],
     )
 
 
@@ -1614,20 +1519,12 @@ def wrf_interp2dxy(
         spark, path, field, lat_var=lat_var, lon_var=lon_var,
         attrs=attrs, **kw,
     )
-    if "k" not in fld.columns:
-        raise ValueError(
-            f"interp2dxy needs a per-level field; {field!r} is 2-D — "
-            "use wrf_interpline"
-        )
-    vals = [c for c in fld.columns if c not in (*_KEY, "time")]
-    if len(vals) != 1:
-        raise ValueError(
-            f"interp2dxy needs a single-component field; {field!r} "
-            f"carries {vals}"
-        )
+    col = _value_col(
+        fld, field, "interp2dxy's field", True, " — use wrf_interpline"
+    )
     return interp2dxy(
-        fld, vals[0], "k", "x_idx", "y_idx", xy,
-        out_col=vals[0], extra_keys=["file"],
+        fld, col, "k", "x_idx", "y_idx", xy,
+        out_col=col, extra_keys=["file"],
     )
 
 
@@ -1669,24 +1566,14 @@ def wrf_interpline(
         spark, path, field, lat_var=lat_var, lon_var=lon_var,
         attrs=attrs, **kw,
     )
-    if "k" in fld.columns:
-        raise ValueError(
-            f"interpline needs a 2-D field; {field!r} is per-level — "
-            "use wrf_vertcross"
-        )
-    # 'time' is a key, not a component (the wrf_vertcross rule):
-    # times=True must not trip the single-component check, and the
-    # decoded timestamp rides through as a grouping key
-    vals = [c for c in fld.columns if c not in (*_KEY3, "time")]
-    if len(vals) != 1:
-        raise ValueError(
-            f"interpline needs a single-component field; {field!r} "
-            f"carries {vals}"
-        )
+    col = _value_col(
+        fld, field, "interpline's field", False, " — use wrf_vertcross"
+    )
+    # the decoded timestamp of times=True rides through as a key
     keys = ["file"] + (["time"] if "time" in fld.columns else [])
     out = vertcross(
-        fld.withColumn("_lvl", F.lit(0)), vals[0], "_lvl",
+        fld.withColumn("_lvl", F.lit(0)), col, "_lvl",
         "x_idx", "y_idx", start, end, n_points,
-        out_col=vals[0], extra_keys=keys,
+        out_col=col, extra_keys=keys,
     )
-    return out.select(*keys, "s", vals[0])
+    return out.select(*keys, "s", col)

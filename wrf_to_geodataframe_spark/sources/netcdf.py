@@ -368,30 +368,20 @@ def read_netcdf_grid(
 
 
 def decode_cf_time_values(data: "np.ndarray", attrs: dict) -> "np.ndarray":
-    """Decode one CF time coordinate's values + attributes ->
-    datetime64[ns], without needing a whole-dataset dict — the entry
-    point the virtual layer's index-time axis decoding uses.  Fixed
-    HDF5 strings (``S19`` 1-D) normalize to the classic (n, strlen)
-    ``S1`` shape so the WRF 'Times' branch handles both layouts."""
-    data = np.asarray(data)
-    if data.dtype.kind == "S" and data.dtype.itemsize > 1 and data.ndim == 1:
-        data = data.view("S1").reshape(data.shape[0], data.dtype.itemsize)
-    return _cf_time_axis(
-        {"variables": {"t": {"data": data, "attrs": attrs or {}}}}, "t"
-    )
-
-
-def _cf_time_axis(ds: dict, time_var: str) -> "np.ndarray":
-    """Decode a CF time coordinate variable (``units`` [+
-    ``calendar``] attributes) -> datetime64[ns] axis (functions/
-    cftime.py — the half of ``xr.open_dataset`` that isn't the array
-    read)."""
+    """Decode one time coordinate's values + attributes ->
+    datetime64[ns] (functions/cftime.py — the half of
+    ``xr.open_dataset`` that isn't the array read): a CF ``units`` [+
+    ``calendar``] numeric axis, or the WRF ``Times`` char array.
+    Fixed HDF5 strings (``S19`` 1-D) normalize to the classic
+    (n, strlen) ``S1`` shape so the ``Times`` branch handles both
+    layouts."""
     from wrf_to_geodataframe_spark.functions.cftime import (
         cf_times_to_datetime64,
     )
 
-    tv = ds["variables"][time_var]
-    data = np.asarray(tv["data"])
+    data = np.asarray(data)
+    if data.dtype.kind == "S" and data.dtype.itemsize > 1 and data.ndim == 1:
+        data = data.view("S1").reshape(data.shape[0], data.dtype.itemsize)
     if data.dtype.kind == "S" and data.ndim == 2:
         # the WRF 'Times' convention: a (Time, DateStrLen) char array
         # of 'YYYY-MM-DD_HH:MM:SS' strings, no CF units attribute —
@@ -404,19 +394,29 @@ def _cf_time_axis(ds: dict, time_var: str) -> "np.ndarray":
                 out[i] = np.datetime64(s.replace("_", "T"), "ns")
             except ValueError as exc:
                 raise ValueError(
-                    f"{time_var}[{i}]: unparseable WRF time {s!r}"
+                    f"row {i}: unparseable WRF time {s!r}"
                 ) from exc
         return out
-    attrs = tv.get("attrs", {})
+    attrs = attrs or {}
     units = attrs.get("units")
     if isinstance(units, np.ndarray):
         units = "".join(units.astype(str))
     if not isinstance(units, str):
-        raise ValueError(f"{time_var}: no CF units attribute")
+        raise ValueError("no CF units attribute")
     calendar = attrs.get("calendar", "standard")
     if isinstance(calendar, np.ndarray):
         calendar = "".join(calendar.astype(str))
     return cf_times_to_datetime64(data, units, calendar)
+
+
+def _cf_time_axis(ds: dict, time_var: str) -> "np.ndarray":
+    """``ds``'s ``time_var`` decoded by :func:`decode_cf_time_values`,
+    its errors named by the variable."""
+    tv = ds["variables"][time_var]
+    try:
+        return decode_cf_time_values(tv["data"], tv.get("attrs", {}))
+    except ValueError as exc:
+        raise ValueError(f"{time_var}: {exc}") from exc
 
 
 def _attr_scalar(attrs: dict, *names) -> float | None:
@@ -584,8 +584,7 @@ def decode_time_axis(ds: dict, fname: str, time_var: str) -> np.ndarray:
     rule."""
     if time_var not in ds["variables"]:
         raise ValueError(f"{fname}: no time variable {time_var!r}")
-    tv = ds["variables"][time_var]
-    return decode_cf_time_values(np.asarray(tv["data"]), tv.get("attrs", {}))
+    return _cf_time_axis(ds, time_var)
 
 
 def read_netcdf_dir_many(
@@ -617,6 +616,24 @@ def read_netcdf_dir_many(
         for pdf in it:
             for fname, buf in zip(pdf["path"], pdf["content"]):
                 ds = read_netcdf_any_bytes(bytes(buf), name=fname)
+                # (time slices, ny, nx) per variable, a 2-D plane being
+                # one slice: checked before unnesting, which would
+                # reshape the shared coordinates to the variable's plane
+                grids = [
+                    (1,) * (3 - len(shp)) + shp
+                    for shp in (
+                        np.shape(ds["variables"][v]["data"])
+                        for v in variables
+                    )
+                ]
+                for var, grid in zip(variables[1:], grids[1:]):
+                    if grid != grids[0]:
+                        raise ValueError(
+                            f"{var} does not share {variables[0]}'s grid "
+                            f"in {fname} ({grid} vs {grids[0]}) — read "
+                            "staggered variables with their own "
+                            "read_netcdf_dir call"
+                        )
                 frames = [
                     f.rename(columns={"value": variables[0].lower()})
                     for f in _unnest_grid(
@@ -624,18 +641,9 @@ def read_netcdf_dir_many(
                     )
                 ]
                 for var in variables[1:]:
-                    extra = list(
-                        _unnest_grid(ds, var, lat_var, lon_var, None)
-                    )
-                    if len(extra) != len(frames) or any(
-                        len(e) != len(f) for e, f in zip(extra, frames)
+                    for e, f in zip(
+                        _unnest_grid(ds, var, lat_var, lon_var, None), frames
                     ):
-                        raise ValueError(
-                            f"{var} does not share {variables[0]}'s grid "
-                            f"in {fname} — read staggered variables with "
-                            "their own read_netcdf_dir call"
-                        )
-                    for e, f in zip(extra, frames):
                         # identical (t, y, x) ravel order by construction
                         f[var.lower()] = e["value"].to_numpy()
                 for f in frames:
