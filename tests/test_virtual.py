@@ -917,3 +917,71 @@ def test_time_offsets_missing_var_or_nt_names_file(bad):
     files = ["a.nc", "b.nc"]
     with pytest.raises(ValueError, match="b.nc"):
         _time_offsets([("T2", 0, 2), bad], files)
+
+
+def test_grib2_lambert_azimuthal_manifest_matches_read_grib2(spark, tmp_path):
+    """A template-3.140 (Lambert azimuthal equal-area) message indexes
+    through the manifest walk exactly as ``read_grib2`` decodes it:
+    the walk and the whole-message reader share one metadata parser,
+    so every grid template the reader knows is indexable."""
+    from tests.test_grib2 import _laea_message
+    from wrf_to_geodataframe_spark.sources.grib2 import read_grib2
+
+    d, out = tmp_path / "src", str(tmp_path / "man")
+    d.mkdir()
+    path = d / "laea.grib2"
+    path.write_bytes(_laea_message())
+    build_virtual_manifest(
+        spark, str(d), "", None, None, out, pattern="*.grib2"
+    )
+    want = read_grib2(str(path))[0]
+    got = {
+        (r["y_idx"], r["x_idx"]): (r["value"], r["lat"], r["lon"])
+        for r in read_virtual(spark, out).collect()
+    }
+    assert got == {
+        (y, x): (want["values"][y, x], want["lat"][y, x],
+                 want["lon"][y, x])
+        for y in range(want["nj"])
+        for x in range(want["ni"])
+    }
+
+
+def _jobs_in_group(spark, fn) -> int:
+    """Spark jobs ``fn()`` launches, counted through a fresh job group
+    (cleared afterwards, so later ungrouped job counts are unaffected)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"virtual-build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_builders_job_counts(spark, archive, tmp_path):
+    """Both builders walk each file once (persisted), make one
+    metadata-sized collect and write through one chunk-table writer.
+    The bounds are the measured counts (6 for the 3-file archive, 5
+    for a 2x2 mosaic); a second walk, aggregate or join adds jobs."""
+    from wrf_to_geodataframe_spark.sources.virtual import (
+        build_virtual_mosaic,
+    )
+
+    src, _ = archive
+    n_manifest = _jobs_in_group(spark, lambda: build_virtual_manifest(
+        spark, src, "T2", "XLAT", "XLONG", str(tmp_path / "man")
+    ))
+    scenes = tmp_path / "scenes"
+    scenes.mkdir()
+    _write_mosaic(str(scenes))
+    n_mosaic = _jobs_in_group(spark, lambda: build_virtual_mosaic(
+        spark, str(scenes), str(tmp_path / "mosaic")
+    ))
+    assert n_manifest <= 6, n_manifest
+    assert n_mosaic <= 5, n_mosaic

@@ -139,6 +139,26 @@ def test_time_to_windows_prunes(spark, tmp_path):
         time_to_windows(spark, plain, ("2021-06-01", "2021-06-02"))
 
 
+def test_unitless_time_var_error_names_the_file(spark, tmp_path):
+    """A time coordinate without a CF ``units`` attribute fails the
+    build with a ``ValueError`` naming the shard and the variable, so
+    the bad file of a many-shard archive is identifiable."""
+    import re
+
+    path = str(tmp_path / "b_shard.nc")
+    _write_classic(str(tmp_path / "a_shard.nc"), 2, seed=1, hour0=0.0)
+    variables = dict(_grid_vars(2, seed=2))
+    variables["t"] = {"dims": ["t"], "data": np.arange(2.0)}
+    write_netcdf(path, {"t": 2, "y": NY, "x": NX}, variables)
+    with pytest.raises(Exception, match=re.escape(
+        f"ValueError: {path}: t: no CF units attribute"
+    )):
+        build_virtual_manifest(
+            spark, str(tmp_path), "T2", "XLAT", "XLONG",
+            str(tmp_path / "manifest"), time_var="t",
+        )
+
+
 def test_wrf_times_char_axis(spark, tmp_path):
     """The WRF 'Times' convention: a (Time, DateStrLen) NC_CHAR array
     of 'YYYY-MM-DD_HH:MM:SS' strings, no units attribute — decoded

@@ -1042,7 +1042,10 @@ def test_wrf_times_malformed_times_raise(spark, tmp_path):
             "T2": {"dims": ["j", "i"], "data": np.zeros((2, 2))},
         },
     )
-    with pytest.raises(Exception, match="unparseable WRF time"):
+    with pytest.raises(
+        Exception,
+        match=r"wrfout_d01_000\.nc: Times: row 0: unparseable WRF time",
+    ):
         wrf_times(spark, d).collect()
     # and a shard with no Times variable names the missing coordinate
     d2 = str(tmp_path / "missing")

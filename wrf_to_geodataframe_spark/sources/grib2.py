@@ -39,7 +39,11 @@ numpy implementation of the public spec:
   packed integers ride as raw PNG samples, decoded through the
   repo's own libpng-cross-validated decoder via ``decode_png_raw``).
   Bitmapped (section 6) sparse fields read as NaN at absent points.
-* Product template 4.0 (parameter category/number, forecast hour).
+* Product templates 4.0 (parameter category/number, forecast hour),
+  4.1 (ensemble member) and 4.8 (statistical interval).  Sections 1, 3
+  and 4 are parsed by ``message_meta`` only — the whole-message
+  decoder and the virtual layer's manifest walk (which seeks to those
+  sections with ``read_meta_sections``) share it.
 
 No GRIB implementation exists in this environment (no eccodes/
 wgrib2/pygrib), so correctness rests on hand-assembled spec-golden
@@ -452,6 +456,80 @@ def _parse_grid_template_3_0(body: bytes) -> dict:
     }
 
 
+_GRID_TEMPLATES = {
+    0: _parse_grid_template_3_0,
+    1: _parse_grid_template_3_1,
+    30: _parse_grid_template_3_30,
+    40: _parse_grid_template_3_40,
+    140: _parse_grid_template_3_140,
+}
+
+
+def message_meta(sections: dict[int, bytes], name: str) -> dict:
+    """Sections 1, 3 and 4 of one message (``{number: section bytes}``,
+    headers included) -> its metadata, the one parser behind
+    ``_parse_message`` and the virtual layer's manifest walk:
+    ``ref_time`` (section 1), ``grid`` (the section-3 template's dict,
+    checked against the declared ``npoints``), ``param_category`` /
+    ``param_number`` / ``forecast_hours`` and ``forecast_unit`` (code
+    table 4.4) — all None unless the product template is 4.0, 4.1 or
+    4.8, which share 4.0's octets 10-34 — and ``product``, the extras
+    of templates 4.1 (ensemble member) and 4.8 (statistical
+    interval)."""
+    for req in (1, 3, 4):
+        if req not in sections:
+            raise Grib2Error(f"{name}: missing section {req}")
+    s1 = sections[1]
+    year = struct.unpack_from(">H", s1, 12)[0]
+    s3 = sections[3]
+    (tmpl3,) = struct.unpack_from(">H", s3, 12)
+    (npoints,) = struct.unpack_from(">I", s3, 6)
+    if tmpl3 not in _GRID_TEMPLATES:
+        raise Grib2Error(f"{name}: grid template 3.{tmpl3} not supported")
+    grid = _GRID_TEMPLATES[tmpl3](s3[14:])
+    if grid["ni"] * grid["nj"] != npoints:
+        raise Grib2Error(f"{name}: grid {grid['nj']}x{grid['ni']} != {npoints} points")
+    meta = {
+        "ref_time": (year, s1[14], s1[15], s1[16], s1[17], s1[18]),
+        "grid": grid,
+        "npoints": npoints,
+        "param_category": None,
+        "param_number": None,
+        "forecast_hours": None,
+        "forecast_unit": None,
+        "product": {},
+    }
+    s4 = sections[4]
+    (tmpl4,) = struct.unpack_from(">H", s4, 7)
+    if tmpl4 not in (0, 1, 8):
+        return meta
+    meta.update(
+        param_category=s4[9],
+        param_number=s4[10],
+        forecast_unit=s4[17],
+        forecast_hours=struct.unpack_from(">i", s4, 18)[0],
+    )
+    if tmpl4 == 1:
+        meta["product"] = {
+            "ens_type": s4[34],
+            "ens_member": s4[35],
+            "ens_total": s4[36],
+        }
+    elif tmpl4 == 8:
+        if len(s4) < 53:
+            raise Grib2Error(
+                f"{name}: truncated product template 4.8 ({len(s4)} "
+                "octets, need 53)"
+            )
+        eyear = struct.unpack_from(">H", s4, 34)[0]
+        meta["product"] = {
+            "interval_end": (eyear, s4[36], s4[37], s4[38], s4[39], s4[40]),
+            "stat_type": s4[46],
+            "stat_hours": struct.unpack_from(">I", s4, 49)[0],
+        }
+    return meta
+
+
 def read_grib2_bytes(buf: bytes, name: str = "<bytes>") -> list[dict]:
     """Parse every GRIB2 message in ``buf`` -> list of dicts with keys
     discipline, param_category, param_number, ref_time (tuple),
@@ -493,58 +571,11 @@ def _parse_message(msg: bytes, discipline: int, name: str) -> dict:
         p += slen
     else:
         raise Grib2Error(f"{name}: missing 7777 end section")
-    for req in (1, 3, 4, 5, 7):
+    meta = message_meta(sections, name)
+    for req in (5, 7):
         if req not in sections:
             raise Grib2Error(f"{name}: missing section {req}")
-
-    s1 = sections[1]
-    year = struct.unpack_from(">H", s1, 12)[0]
-    ref_time = (year, s1[14], s1[15], s1[16], s1[17], s1[18])
-
-    s3 = sections[3]
-    (tmpl3,) = struct.unpack_from(">H", s3, 12)
-    (npoints,) = struct.unpack_from(">I", s3, 6)
-    if tmpl3 == 0:
-        grid = _parse_grid_template_3_0(s3[14:])
-    elif tmpl3 == 1:
-        grid = _parse_grid_template_3_1(s3[14:])
-    elif tmpl3 == 30:
-        grid = _parse_grid_template_3_30(s3[14:])
-    elif tmpl3 == 40:
-        grid = _parse_grid_template_3_40(s3[14:])
-    elif tmpl3 == 140:
-        grid = _parse_grid_template_3_140(s3[14:])
-    else:
-        raise Grib2Error(f"{name}: grid template 3.{tmpl3} not supported")
-    if grid["ni"] * grid["nj"] != npoints:
-        raise Grib2Error(f"{name}: grid {grid['nj']}x{grid['ni']} != {npoints} points")
-
-    s4 = sections[4]
-    (tmpl4,) = struct.unpack_from(">H", s4, 7)
-    product: dict = {}
-    if tmpl4 in (0, 1, 8):
-        # templates 4.1 (ensemble member) and 4.8 (statistical
-        # interval) share 4.0's octets 10-34
-        param_category = s4[9]
-        param_number = s4[10]
-        forecast_hours = struct.unpack_from(">i", s4, 18)[0]
-        if tmpl4 == 1:
-            product = {
-                "ens_type": s4[34],
-                "ens_member": s4[35],
-                "ens_total": s4[36],
-            }
-        elif tmpl4 == 8:
-            eyear = struct.unpack_from(">H", s4, 34)[0]
-            product = {
-                "interval_end": (
-                    eyear, s4[36], s4[37], s4[38], s4[39], s4[40]
-                ),
-                "stat_type": s4[46],
-                "stat_hours": struct.unpack_from(">I", s4, 49)[0],
-            }
-    else:
-        param_category = param_number = forecast_hours = None
+    grid, npoints = meta["grid"], meta["npoints"]
 
     s5 = sections[5]
     (ndata,) = struct.unpack_from(">I", s5, 5)
@@ -648,10 +679,10 @@ def _parse_message(msg: bytes, discipline: int, name: str) -> dict:
     values = data.reshape(grid["nj"], grid["ni"])
     out = {
         "discipline": discipline,
-        "param_category": param_category,
-        "param_number": param_number,
-        "ref_time": ref_time,
-        "forecast_hours": forecast_hours,
+        "param_category": meta["param_category"],
+        "param_number": meta["param_number"],
+        "ref_time": meta["ref_time"],
+        "forecast_hours": meta["forecast_hours"],
         "ni": grid["ni"],
         "nj": grid["nj"],
         "lat": grid["lat"],
@@ -660,8 +691,8 @@ def _parse_message(msg: bytes, discipline: int, name: str) -> dict:
     }
     if "projection" in grid:
         out["projection"] = grid["projection"]
-    if product:
-        out["product"] = product
+    if meta["product"]:
+        out["product"] = meta["product"]
     return out
 
 
@@ -1042,6 +1073,28 @@ def scan_grib2_offsets(path: str) -> list[tuple[int, int, int]]:
             idx += 1
     if not out:
         raise Grib2Error(f"{path}: empty GRIB2 file")
+    return out
+
+
+def read_meta_sections(fh, off: int, mlen: int) -> dict[int, bytes]:
+    """Sections 1, 3 and 4 (headers included, ``message_meta``'s
+    input) of the ``mlen``-octet message at ``off`` in the open binary
+    file ``fh``: a seek chain over the section headers that reads only
+    those bodies and stops at section 7, so the data payload (the bulk
+    of the file) is never read."""
+    out, p, end = {}, off + 16, off + mlen
+    while p < end:
+        fh.seek(p)
+        head = fh.read(5)
+        if head[:4] == b"7777" or head[4:5] == b"\x07":
+            break
+        slen = int.from_bytes(head[:4], "big")
+        if len(head) < 5 or slen < 5 or p + slen > end:
+            raise Grib2Error(f"{fh.name}: bad section length at {p}")
+        if head[4] in (1, 3, 4):
+            fh.seek(p)
+            out[head[4]] = fh.read(slen)
+        p += slen
     return out
 
 

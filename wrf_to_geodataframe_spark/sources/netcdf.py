@@ -409,14 +409,18 @@ def decode_cf_time_values(data: "np.ndarray", attrs: dict) -> "np.ndarray":
     return cf_times_to_datetime64(data, units, calendar)
 
 
-def _cf_time_axis(ds: dict, time_var: str) -> "np.ndarray":
+def _cf_time_axis(ds: dict, time_var: str,
+                  fname: str | None = None) -> "np.ndarray":
     """``ds``'s ``time_var`` decoded by :func:`decode_cf_time_values`,
-    its errors named by the variable."""
+    its errors prefixed ``"{fname}: {time_var}: "`` (the variable alone
+    when no file name is given) — the one place time-decode errors are
+    named."""
     tv = ds["variables"][time_var]
     try:
         return decode_cf_time_values(tv["data"], tv.get("attrs", {}))
     except ValueError as exc:
-        raise ValueError(f"{time_var}: {exc}") from exc
+        where = f"{fname}: {time_var}" if fname else time_var
+        raise ValueError(f"{where}: {exc}") from exc
 
 
 def _attr_scalar(attrs: dict, *names) -> float | None:
@@ -580,11 +584,11 @@ def read_netcdf_dir(
 def decode_time_axis(ds: dict, fname: str, time_var: str) -> np.ndarray:
     """A parsed shard's ``time_var`` (WRF ``Times`` chars or a CF
     numeric coordinate) decoded to int64 ns; a named error when the
-    shard has no such variable.  Callers apply their own step-count
-    rule."""
+    shard has no such variable; decode errors name ``fname`` and
+    ``time_var``.  Callers apply their own step-count rule."""
     if time_var not in ds["variables"]:
         raise ValueError(f"{fname}: no time variable {time_var!r}")
-    return _cf_time_axis(ds, time_var)
+    return _cf_time_axis(ds, time_var, fname)
 
 
 def read_netcdf_dir_many(

@@ -16,14 +16,17 @@ pure-numpy parsers:
 - ``build_virtual_manifest``: one executor task per file batch runs the
   metadata-only walk (``hdf5_chunk_manifest`` — mmap, no data pages —
   for NetCDF-4/HDF5; header arithmetic for classic NetCDF-3, both fixed
-  and record layouts; a section-header seek chain for GRIB2, where one
-  MESSAGE is one chunk and ``var`` selects by ``"category.number"`` —
-  ``lat_var``/``lon_var`` are ignored, the grid comes from section 3)
-  and emits one row per chunk-grid cell with its GLOBAL time interval
-  ``[t0, t1)`` (files are concatenated along time in sorted-name order,
-  the archive convention).  The chunk table is
-  range-partitioned and sorted on ``(t0, y0, x0)`` before the parquet
-  write so row-group min/max statistics align with the query axes.
+  and record layouts; for GRIB2, ``grib2.read_meta_sections`` +
+  ``grib2.message_meta``, where one MESSAGE is one chunk and ``var``
+  selects by ``"category.number"`` — ``lat_var``/``lon_var`` are
+  ignored, the grid comes from section 3) and emits one row per
+  chunk-grid cell with its GLOBAL time interval ``[t0, t1)`` (files
+  are concatenated along time in sorted-name order, the archive
+  convention).  ``build_virtual_mosaic`` does the same for GeoTIFF
+  scenes tiling space.  Both builders write the chunk table through
+  one writer (``_write_chunks``): range-partitioned and sorted on
+  ``(t0, y0, x0)`` so row-group min/max statistics align with the
+  query axes.
   Coordinate grids are deduplicated by content hash into a tiny sidecar
   (one row per DISTINCT grid, not per file — a 10k-file single-domain
   archive stores its lat/lon exactly once).
@@ -79,13 +82,14 @@ def _virtual_out_schema():
 
 
 _CHUNK_SCHEMA = (
-    "file string, var string, file_no long, nt long, lt0 long, lt1 long, "
+    "file string, var string, t0 long, t1 long, "
     "y0 long, y1 long, x0 long, x1 long, "
     "addr long, nbytes long, fmask long, "
     "ct long, cy long, cx long, "
     "dtype string, filters string, fill double, coord_hash string, "
     "fsize long, packing string"
 )
+_CHUNK_COLS = tuple(f.split()[0] for f in _CHUNK_SCHEMA.split(", "))
 
 _COORD_SCHEMA = (
     "coord_hash string, ny long, nx long, lat binary, lon binary, "
@@ -93,12 +97,15 @@ _COORD_SCHEMA = (
 )
 
 
-def _hash_grids(lat: np.ndarray, lon: np.ndarray) -> str:
+def _grid_row(lat: np.ndarray, lon: np.ndarray) -> tuple:
+    """One coords-sidecar row ``(coord_hash, ny, nx, lat, lon)`` of a
+    2-D float64 grid pair, keyed by a content hash."""
     h = hashlib.sha1()
     h.update(repr(lat.shape).encode())
     h.update(lat.tobytes())
     h.update(lon.tobytes())
-    return h.hexdigest()
+    return (h.hexdigest(), lat.shape[0], lat.shape[1],
+            lat.tobytes(), lon.tobytes())
 
 
 def _packing_json(attrs: dict | None) -> str:
@@ -124,12 +131,12 @@ def _packing_json(attrs: dict | None) -> str:
     return json.dumps(out, sort_keys=True) if out else "{}"
 
 
-def _file_chunk_rows(path: str, file_no: int, var: str,
-                     lat_var: str, lon_var: str, time_var: str | None = None):
-    """Metadata-only chunk enumeration of ONE file -> (chunk row list,
-    coords rows, time rows).  Chunk rows carry LOCAL time bounds
-    (lt0/lt1) plus the file's time length ``nt``; the builder converts
-    to global bounds declaratively.  Every chunk-grid cell is listed —
+def _file_chunk_rows(path: str, var: str, lat_var: str, lon_var: str,
+                     time_var: str | None = None):
+    """Metadata-only chunk enumeration of ONE file -> (chunk rows,
+    coords rows, time values).  Chunk rows are ``_CHUNK_COLS`` tuples
+    whose t0/t1 are LOCAL to the file; the builder shifts them onto the
+    global axis.  Every chunk-grid cell is listed —
     unwritten HDF5 chunks with ``addr = -1`` (the reader fills them),
     matching the whole-file reader's semantics
     (hdf5.py:read_hdf5).  GRIB2 files contribute one chunk
@@ -140,31 +147,29 @@ def _file_chunk_rows(path: str, file_no: int, var: str,
 
     ``time_var`` names the file's CF time coordinate: its values +
     attributes (or a WRF 'Times' char array) decode at INDEX time into
-    ``(var, file_no, lt, time_ns)`` rows — the manifest's time
-    sidecar, still metadata-sized (one row per timestep)."""
+    one int64-ns value per local timestep — the manifest's time
+    sidecar, still metadata-sized."""
     with open(path, "rb") as fh:
         magic = fh.read(8)
     if magic[:4] == b"\x89HDF":
         rows, coords, times = _hdf5_rows(
-            path, file_no, var, lat_var, lon_var, time_var
+            path, var, lat_var, lon_var, time_var
         )
     elif magic[:3] == b"CDF" and magic[3] in (1, 2):
         rows, coords, times = _classic_rows(
-            path, file_no, var, lat_var, lon_var, time_var
+            path, var, lat_var, lon_var, time_var
         )
     elif magic[:4] == b"GRIB":
         # any time_var opts GRIB2 members into message-time decoding
         # (section 1 reference + section 4 forecast offset) — GRIB2
         # has no named coordinate variable to point at
-        return _grib2_rows(
-            path, file_no, var, with_times=time_var is not None
-        )
+        return _grib2_rows(path, var, with_times=time_var is not None)
     else:
         raise ValueError(f"{path}: not HDF5 / NetCDF classic / GRIB2")
     return rows, [coords], times
 
 
-def _hdf5_rows(path, file_no, var, lat_var, lon_var, time_var=None):
+def _hdf5_rows(path, var, lat_var, lon_var, time_var=None):
     from wrf_to_geodataframe_spark.sources.chunkscan import (
         check_grid,
         grid_coords,
@@ -180,12 +185,11 @@ def _hdf5_rows(path, file_no, var, lat_var, lon_var, time_var=None):
     tdim = len(shape) == 3
     if not tdim:
         shape, chunk = (1,) + shape, (1,) + chunk
-    lat, lon = grid_coords(
+    coords = _grid_row(*grid_coords(
         man["aux"][lat_var], man["aux_attrs"][lat_var],
         man["aux"][lon_var], man["aux_attrs"][lon_var],
-    )
+    ))
     packing = _packing_json(man["attrs"])
-    chash = _hash_grids(lat, lon)
     stored = {}
     for offs, addr, nbytes, mask in man["entries"]:
         key = tuple(offs) if tdim else (0,) + tuple(offs)
@@ -201,44 +205,39 @@ def _hdf5_rows(path, file_no, var, lat_var, lon_var, time_var=None):
         o = tuple(int(i * c) for i, c in zip(idx, chunk))
         e = tuple(min(oo + c, s) for oo, c, s in zip(o, chunk, shape))
         rows.append((
-            path, var, file_no, shape[0],
-            o[0], e[0], o[1], e[1], o[2], e[2],
+            path, var, o[0], e[0], o[1], e[1], o[2], e[2],
             addr, nbytes, mask, chunk[0], chunk[1], chunk[2],
-            man["dtype"], filters, float(man["fill"]), chash, fsize,
+            man["dtype"], filters, float(man["fill"]), coords[0], fsize,
             packing,
         ))
-    coords = (chash, lat.shape[0], lat.shape[1],
-              lat.tobytes(), lon.tobytes())
     times = []
     if time_var is not None:
-        times = _time_rows(
-            var, file_no, man["aux"][time_var],
-            man["aux_attrs"][time_var], shape[0], path, time_var,
+        times = _time_values(
+            man["aux"][time_var], man["aux_attrs"][time_var], shape[0],
+            path, var, time_var,
         )
     return rows, coords, times
 
 
-def _time_rows(var, file_no, data, attrs, nt, path, time_var):
-    """Decode one file's time coordinate -> (var, file_no, lt,
-    time_ns) sidecar rows, length-checked against the variable's
-    time extent."""
-    from wrf_to_geodataframe_spark.sources.netcdf import (
-        decode_cf_time_values,
-    )
+def _time_values(data, attrs, nt, path, var, time_var):
+    """Decode one file's time coordinate -> its int64-ns values,
+    length-checked against the variable's time extent; decode errors
+    name the file and the time variable."""
+    from wrf_to_geodataframe_spark.sources.netcdf import decode_time_axis
 
-    tns = decode_cf_time_values(np.asarray(data), attrs).astype("int64")
+    ds = {"variables": {time_var: {"data": np.asarray(data),
+                                   "attrs": attrs}}}
+    tns = decode_time_axis(ds, path, time_var).astype("int64")
     if tns.ndim != 1 or tns.shape[0] != nt:
         raise ValueError(
             f"{path}: time coordinate {time_var!r} has "
             f"{tns.shape[0] if tns.ndim == 1 else tns.shape} steps, "
             f"variable {var!r} has {nt}"
         )
-    return [
-        (var, file_no, int(i), int(v)) for i, v in enumerate(tns)
-    ]
+    return [int(v) for v in tns]
 
 
-def _classic_rows(path, file_no, var, lat_var, lon_var, time_var=None):
+def _classic_rows(path, var, lat_var, lon_var, time_var=None):
     from wrf_to_geodataframe_spark.sources.chunkscan import (
         check_grid,
         grid_coords,
@@ -290,20 +289,16 @@ def _classic_rows(path, file_no, var, lat_var, lon_var, time_var=None):
     step = (
         recsize if (is_rec and hdr["n_recvars"] > 1) else plane
     )
-    lat, lon = grid_coords(*_fixed_var(hdr, lat_var),
-                           *_fixed_var(hdr, lon_var))
-    chash = _hash_grids(lat, lon)
+    coords = _grid_row(*grid_coords(*_fixed_var(hdr, lat_var),
+                                    *_fixed_var(hdr, lon_var)))
     fsize = os.path.getsize(path)
-    rows = []
     packing = _packing_json(vatts)
-    for t in range(nt):
-        rows.append((
-            path, var, file_no, nt, t, t + 1, 0, ny, 0, nx,
-            begin + t * step, plane, 0, 1, ny, nx,
-            dtype, "[]", 0.0, chash, fsize, packing,
-        ))
-    coords = (chash, lat.shape[0], lat.shape[1],
-              lat.tobytes(), lon.tobytes())
+    rows = [
+        (path, var, t, t + 1, 0, ny, 0, nx,
+         begin + t * step, plane, 0, 1, ny, nx,
+         dtype, "[]", 0.0, coords[0], fsize, packing)
+        for t in range(nt)
+    ]
     times = []
     if time_var is not None:
         te = next((e for e in hdr["entries"] if e[0] == time_var), None)
@@ -333,9 +328,7 @@ def _classic_rows(path, file_no, var, lat_var, lon_var, time_var=None):
             tarr = np.frombuffer(buf, _DTYPES[tt], count=n).reshape(
                 [dims[d][1] for d in tids]
             )
-        times = _time_rows(
-            var, file_no, tarr, tatts, nt, path, time_var
-        )
+        times = _time_values(tarr, tatts, nt, path, var, time_var)
     return rows, coords, times
 
 
@@ -350,147 +343,78 @@ _GRIB2_TIME_UNITS_NS = {
 }
 
 
-def _grib2_rows(path: str, file_no: int, var: str | None,
-                with_times: bool = False):
+def _valid_time_ns(meta: dict, path: str) -> int:
+    """A GRIB2 message's VALID time (int64 ns) from its
+    ``grib2.message_meta``: the END of a template-4.8 statistical
+    interval (what wgrib2/eccodes report; reference + forecast is the
+    interval START), else the section-1 reference time plus the
+    forecast offset in its code-table-4.4 unit; a product template
+    without forecast octets counts as the reference time."""
+    from wrf_to_geodataframe_spark.sources.grib2 import Grib2Error
+
+    def ns(t):
+        y, mo, d, h, mi, s = t
+        return int(np.datetime64(
+            f"{y:04d}-{mo:02d}-{d:02d}T{h:02d}:{mi:02d}:{s:02d}", "ns"
+        ).astype("int64"))
+
+    unit = meta["forecast_unit"]
+    if unit is not None and unit not in _GRIB2_TIME_UNITS_NS:
+        raise Grib2Error(
+            f"{path}: time-range unit {unit} (code table 4.4) "
+            "unsupported for the times sidecar"
+        )
+    if "interval_end" in meta["product"]:
+        return ns(meta["product"]["interval_end"])
+    fcst = 0 if unit is None else (
+        meta["forecast_hours"] * _GRIB2_TIME_UNITS_NS[unit]
+    )
+    return ns(meta["ref_time"]) + fcst
+
+
+def _grib2_rows(path: str, var: str | None, with_times: bool = False):
     """GRIB2 file -> one chunk per selected message.  ``var`` filters
     by ``"<param_category>.<param_number>"`` (empty/None = every
     message); selected messages become the file's LOCAL time axis in
-    stored order — the GFS/ERA5 cycle-file convention.  Only section
-    HEADERS plus sections 3/4 bodies are read (seek chain): the data
-    payload (section 7, the bulk of the file) is never touched.
-
-    ``with_times``: additionally decode each message's VALID time —
-    section 1 reference time plus the section-4 forecast offset in its
-    declared time-range unit (code table 4.4); for template 4.8
-    (statistical interval) the END of the overall interval (octets
-    35-41, what wgrib2/eccodes report) — into time-sidecar rows;
-    messages whose product template carries no forecast octets count
-    as the reference time."""
+    stored order — the GFS/ERA5 cycle-file convention.  Each message's
+    metadata is ``grib2.message_meta`` of the sections 1/3/4 that
+    ``read_meta_sections`` seeks to: the data payload (section 7, the
+    bulk of the file) is never touched.  ``with_times`` also returns
+    each selected message's ``_valid_time_ns``."""
     from wrf_to_geodataframe_spark.sources.chunkscan import grid_coords
     from wrf_to_geodataframe_spark.sources.grib2 import (
         Grib2Error,
-        _parse_grid_template_3_0,
-        _parse_grid_template_3_1,
-        _parse_grid_template_3_30,
-        _parse_grid_template_3_40,
+        message_meta,
+        read_meta_sections,
         scan_grib2_offsets,
     )
-    import struct
 
-    parsers = {
-        0: _parse_grid_template_3_0,
-        1: _parse_grid_template_3_1,
-        30: _parse_grid_template_3_30,
-        40: _parse_grid_template_3_40,
-    }
-    rows, coords, times, seen = [], [], [], set()
-    lt = 0
+    rows, coords, times = [], {}, []
+    fsize = os.path.getsize(path)
     with open(path, "rb") as fh:
         for _mi, off, mlen in scan_grib2_offsets(path):
-            p = off + 16
-            grid = param = None
-            ref_ns = fcst_ns = end_ns = None
-            while p < off + mlen:
-                fh.seek(p)
-                head = fh.read(5)
-                if head[:4] == b"7777":
-                    break
-                (slen,) = struct.unpack_from(">I", head, 0)
-                snum = head[4]
-                if snum == 1 and with_times:
-                    fh.seek(p)
-                    s1 = fh.read(min(slen, 21))
-                    y = struct.unpack_from(">H", s1, 12)[0]
-                    ref_ns = int(np.datetime64(
-                        f"{y:04d}-{s1[14]:02d}-{s1[15]:02d}"
-                        f"T{s1[16]:02d}:{s1[17]:02d}:{s1[18]:02d}",
-                        "ns",
-                    ).astype("int64"))
-                elif snum == 3:
-                    fh.seek(p)
-                    s3 = fh.read(slen)
-                    (tmpl3,) = struct.unpack_from(">H", s3, 12)
-                    if tmpl3 not in parsers:
-                        raise Grib2Error(
-                            f"{path}: grid template 3.{tmpl3} unsupported"
-                        )
-                    grid = parsers[tmpl3](s3[14:])
-                elif snum == 4:
-                    fh.seek(p)
-                    s4 = fh.read(min(slen, 64))
-                    (tmpl4,) = struct.unpack_from(">H", s4, 7)
-                    if tmpl4 in (0, 1, 8):
-                        param = f"{s4[9]}.{s4[10]}"
-                        if with_times:
-                            unit = s4[17]
-                            if unit not in _GRIB2_TIME_UNITS_NS:
-                                raise Grib2Error(
-                                    f"{path}: time-range unit {unit} "
-                                    "(code table 4.4) unsupported for "
-                                    "the times sidecar"
-                                )
-                            fcst = struct.unpack_from(">i", s4, 18)[0]
-                            fcst_ns = fcst * _GRIB2_TIME_UNITS_NS[unit]
-                            if tmpl4 == 8:
-                                # statistical/accumulation products:
-                                # valid time is the END of the overall
-                                # interval (octets 35-41), matching
-                                # wgrib2/eccodes — ref+forecast is the
-                                # interval START
-                                if len(s4) < 41:
-                                    raise Grib2Error(
-                                        f"{path}: truncated product "
-                                        "template 4.8 (need 41 octets "
-                                        f"for the interval end, got "
-                                        f"{len(s4)})"
-                                    )
-                                ey = struct.unpack_from(">H", s4, 34)[0]
-                                end_ns = int(np.datetime64(
-                                    f"{ey:04d}-{s4[36]:02d}-{s4[37]:02d}"
-                                    f"T{s4[38]:02d}:{s4[39]:02d}"
-                                    f":{s4[40]:02d}",
-                                    "ns",
-                                ).astype("int64"))
-                elif snum == 7:
-                    break  # data payload: stop the walk, never read
-                p += slen
-            if grid is None:
-                raise Grib2Error(f"{path}: message without section 3")
+            meta = message_meta(read_meta_sections(fh, off, mlen), path)
+            param = f"{meta['param_category']}.{meta['param_number']}"
             if var and param != var:
                 continue
             if with_times:
-                if ref_ns is None:
-                    raise Grib2Error(
-                        f"{path}: message without section 1 reference "
-                        "time"
-                    )
-                times.append((
-                    var or "", file_no, lt,
-                    end_ns if end_ns is not None
-                    else ref_ns + (fcst_ns or 0),
-                ))
-            lat, lon = grid_coords(grid["lat"], {}, grid["lon"], {})
-            chash = _hash_grids(lat, lon)
-            if chash not in seen:
-                seen.add(chash)
-                coords.append((chash, lat.shape[0], lat.shape[1],
-                               lat.tobytes(), lon.tobytes()))
-            nj, ni = lat.shape
+                times.append(_valid_time_ns(meta, path))
+            grid = meta["grid"]
+            c = _grid_row(*grid_coords(grid["lat"], {}, grid["lon"], {}))
+            coords.setdefault(c[0], c)
+            lt, nj, ni = len(rows), c[1], c[2]
             # the var column is the SELECTION key: rows carry the
             # requested selector (empty = every message, one shared
             # time axis in stored order), so an unfiltered index does
             # not split into per-param axes
             rows.append((
-                path, var or "", file_no, -1, lt, lt + 1, 0, nj, 0, ni,
+                path, var or "", lt, lt + 1, 0, nj, 0, ni,
                 off, mlen, 0, 1, nj, ni,
-                "grib2", "[]", 0.0, chash, os.path.getsize(path), "{}",
+                "grib2", "[]", 0.0, c[0], fsize, "{}",
             ))
-            lt += 1
     if not rows:
         raise Grib2Error(f"{path}: no message matches {var!r}")
-    # patch nt (index 3: file, var, file_no, nt) = #selected messages
-    rows = [r[:3] + (lt,) + r[4:] for r in rows]
-    return rows, coords, times
+    return rows, list(coords.values()), times
 
 
 def build_virtual_manifest(
@@ -516,15 +440,99 @@ def build_virtual_manifest(
     then emits a real ``time`` timestamp column next to ``t_idx`` (the
     archive-scale counterpart of ``read_netcdf_grid(..., time_var=...)``).
 
-    The metadata walk runs ON EXECUTORS (one task per file batch); the
-    driver only lists file names.  Global time bounds are assigned with
-    a cumulative-sum window over the O(#files) per-file lengths — a
-    single-partition window over a frame that is tiny by construction,
-    then broadcast-joined back onto the chunk rows."""
-    _index_files(
-        spark, _list_files(src, pattern), var, lat_var, lon_var, out_path,
-        time_var=time_var,
-    )
+    The metadata walk runs ON EXECUTORS, once per file, and is
+    persisted; the driver lists file names, collects one
+    ``(var, file_no, nt, times)`` row per file and variable, and turns
+    those into per-file time offsets (``_time_offsets``) that the chunk
+    placement applies on executors.  The times sidecar is written from
+    the same driver rows; the coordinate sidecar, which holds whole
+    grids, is deduplicated and written executor-side."""
+    import pickle
+
+    import pandas as pd
+    from pyspark.storagelevel import StorageLevel
+
+    files = _list_files(src, pattern)
+    vars_ = [var] if isinstance(var, str) or var is None else list(var)
+
+    def _walk(it):
+        for pdf in it:
+            out = []
+            for fno, path in zip(pdf["file_no"], pdf["path"]):
+                for v in vars_:
+                    rows, coords, times = _file_chunk_rows(
+                        path, v, lat_var, lon_var, time_var
+                    )
+                    out.append((
+                        int(fno), rows[0][1] if rows else v,
+                        max((r[3] for r in rows), default=0), times,
+                        pickle.dumps(rows), pickle.dumps(coords),
+                    ))
+            yield pd.DataFrame(out, columns=[
+                "file_no", "var", "nt", "times", "rows", "coords",
+            ])
+
+    walked = _file_frame(spark, files).mapInPandas(
+        _walk,
+        "file_no long, var string, nt long, times array<long>, "
+        "rows binary, coords binary",
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        meta = walked.select("var", "file_no", "nt", "times").collect()
+        offsets = {
+            (v, fno): off
+            for v, fno, off in _time_offsets(
+                [(r["var"], r["file_no"], r["nt"]) for r in meta], files
+            )
+        }
+
+        def _place(it):
+            for pdf in it:
+                for v, fno, blob in zip(
+                    pdf["var"], pdf["file_no"], pdf["rows"]
+                ):
+                    frame = pd.DataFrame(
+                        pickle.loads(bytes(blob)), columns=_CHUNK_COLS
+                    )
+                    frame[["t0", "t1"]] += offsets[(v, int(fno))]
+                    yield frame
+
+        _write_chunks(
+            walked.select("var", "file_no", "rows").mapInPandas(
+                _place, _CHUNK_SCHEMA
+            ),
+            len(files), out_path,
+        )
+
+        def _grids(it):
+            for pdf in it:
+                for blob in pdf["coords"]:
+                    frame = pd.DataFrame(
+                        pickle.loads(bytes(blob)),
+                        columns=["coord_hash", "ny", "nx", "lat", "lon"],
+                    )
+                    frame["affine"] = None
+                    yield frame
+
+        (
+            walked.select("coords").mapInPandas(_grids, _COORD_SCHEMA)
+            .dropDuplicates(["coord_hash"])
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(os.path.join(out_path, "coords"))
+        )
+        if time_var is not None:
+            _write_sidecar(
+                spark,
+                [
+                    (r["var"], offsets[(r["var"], r["file_no"])] + lt, t)
+                    for r in meta
+                    for lt, t in enumerate(r["times"])
+                ],
+                "var string, t long, time_ns long", out_path, "times",
+            )
+    finally:
+        walked.unpersist()
     return out_path
 
 
@@ -557,6 +565,31 @@ def _file_frame(spark, files):
     )
 
 
+def _write_chunks(chunks, n_files: int, out_path: str) -> None:
+    """The one chunk-table writer of both builders: ``chunks``
+    (``_CHUNK_SCHEMA`` rows on the global axes) range-partitioned and
+    sorted on ``(t0, y0, x0)``, so parquet row-group min/max
+    statistics align with ``read_virtual``'s window predicates."""
+    keys = ("t0", "y0", "x0")
+    n_out = max(1, min(n_files, chunks.sparkSession.sparkContext
+                       .defaultParallelism))
+    (
+        chunks.repartitionByRange(n_out, *keys)
+        .sortWithinPartitions(*keys)
+        .write.mode("overwrite")
+        .parquet(os.path.join(out_path, "chunks"))
+    )
+
+
+def _write_sidecar(spark, rows: list, schema: str, out_path: str,
+                   name: str) -> None:
+    """Driver-computed sidecar ``rows`` (metadata-sized) -> the
+    one-file parquet table ``out_path/name``."""
+    spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 1), schema
+    ).write.mode("overwrite").parquet(os.path.join(out_path, name))
+
+
 def _time_offsets(triples, files):
     """``(var, file_no, t_off)`` rows from distinct ``(var, file_no,
     nt)`` triples: within each var the files, in ``file_no`` order,
@@ -579,149 +612,6 @@ def _time_offsets(triples, files):
     return off_rows
 
 
-def _index_files(
-    spark, files, var, lat_var, lon_var, out_path, time_var=None
-):
-    import pickle
-
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.storagelevel import StorageLevel
-
-    sc = spark.sparkContext
-    fdf = _file_frame(spark, files)
-
-    vars_ = [var] if isinstance(var, str) or var is None else list(var)
-
-    def _scan_all(it):
-        """ONE metadata walk per file, serialized per-file — the
-        chunk/coords/times consumers below unpack from the persisted
-        blobs instead of re-walking (a remote archive's header reads
-        are the expensive part of indexing; without the persist, the
-        offsets broadcast subtree and the three sidecar writes would
-        each re-run the walk)."""
-        for pdf in it:
-            for row in pdf.itertuples(index=False):
-                rows, coords, times = [], [], []
-                for v in vars_:
-                    r, c, t = _file_chunk_rows(
-                        row.path, int(row.file_no), v, lat_var, lon_var,
-                        time_var,
-                    )
-                    rows.extend(r)
-                    coords.extend(c)
-                    times.extend(t)
-                yield pd.DataFrame(
-                    {"blob": [pickle.dumps((rows, coords, times))]}
-                )
-
-    scanned = fdf.mapInPandas(_scan_all, "blob binary").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-
-    def _part(idx, columns):
-        def _it(batches):
-            for pdf in batches:
-                for b in pdf["blob"]:
-                    recs = pickle.loads(bytes(b))[idx]
-                    if recs:
-                        yield pd.DataFrame(recs, columns=columns)
-        return _it
-
-    try:
-        chunks = scanned.mapInPandas(
-            _part(0, [
-                "file", "var", "file_no", "nt", "lt0", "lt1",
-                "y0", "y1", "x0", "x1",
-                "addr", "nbytes", "fmask", "ct", "cy", "cx",
-                "dtype", "filters", "fill", "coord_hash",
-                "fsize", "packing",
-            ]),
-            _CHUNK_SCHEMA,
-        )
-        # Per-(var, file) time offsets, computed DRIVER-SIDE from one
-        # tiny collect over the persisted walk output (r18): the old
-        # window-over-distinct subquery was re-planned and re-broadcast
-        # as a separate job for EACH of the two sidecar writes that
-        # join it.  The distinct (var, file_no, nt) set is
-        # metadata-sized by construction (one row per file per var —
-        # the same boundedness class as the times sidecar itself), and
-        # this builder is already an eager indexing call, so the
-        # collect does not change the laziness contract.
-        off_rows = _time_offsets(
-            [
-                (r["var"], r["file_no"], r["nt"])
-                for r in chunks.select("var", "file_no", "nt")
-                .distinct()
-                .collect()
-            ],
-            files,
-        )
-        offsets = spark.createDataFrame(
-            sc.parallelize(off_rows, 1),
-            "var string, file_no long, t_off long",
-        )
-        n_out = max(1, min(len(files), sc.defaultParallelism))
-        (
-            chunks.join(F.broadcast(offsets), ["var", "file_no"])
-            .withColumn("t0", F.col("lt0") + F.col("t_off"))
-            .withColumn("t1", F.col("lt1") + F.col("t_off"))
-            .drop("lt0", "lt1", "nt", "t_off", "file_no")
-            .repartitionByRange(n_out, "t0", "y0", "x0")
-            .sortWithinPartitions("t0", "y0", "x0")
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_path, "chunks"))
-        )
-
-        def _coords_it(batches):
-            for pdf in batches:
-                for b in pdf["blob"]:
-                    cs = pickle.loads(bytes(b))[1]
-                    if cs:
-                        frame = pd.DataFrame(
-                            cs,
-                            columns=["coord_hash", "ny", "nx",
-                                     "lat", "lon"],
-                        )
-                        frame["affine"] = None
-                        yield frame
-
-        # (r17 note: submitting the coords and times sidecar writes
-        # CONCURRENTLY from a two-thread pool — guide §2.6 — was tried
-        # and measured WORSE here (s1_virtual_time 5-sample median
-        # 4.2 s -> 7.5 s): both jobs are tiny mapInPandas passes over
-        # the same persisted walk output, and they contend for the
-        # python-worker pool and the cache instead of back-filling a
-        # tail that doesn't exist at this job size.  Sequential it
-        # stays; §2.6 pays off when the overlapped jobs have real
-        # task tails.)
-        (
-            scanned.mapInPandas(_coords_it, _COORD_SCHEMA)
-            .dropDuplicates(["coord_hash"])
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_path, "coords"))
-        )
-        if time_var is not None:
-            (
-                scanned.mapInPandas(
-                    _part(2, ["var", "file_no", "lt", "time_ns"]),
-                    "var string, file_no long, lt long, time_ns long",
-                )
-                .join(F.broadcast(offsets), ["var", "file_no"])
-                .select(
-                    "var",
-                    (F.col("lt") + F.col("t_off")).alias("t"),
-                    "time_ns",
-                )
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(out_path, "times"))
-            )
-    finally:
-        scanned.unpersist()
-
-
 def build_virtual_mosaic(
     spark,
     src: str | list[str],
@@ -739,12 +629,14 @@ def build_virtual_mosaic(
 
     Georeferencing is one AFFINE sidecar row (not per-pixel grids —
     a mosaic's lat/lon are closed-form), and the reader synthesizes
-    coordinates arithmetically.  The mosaic origin is a 1-row
-    bounded aggregate over per-file origins (the A1 bbox pattern);
-    rotated transforms or mixed pixel sizes fail loudly.  Metadata
-    parsing (IFD walk, KBs per COG of any size) runs ON EXECUTORS."""
+    coordinates arithmetically.  Metadata parsing (IFD walk, KBs per
+    COG of any size) runs ON EXECUTORS, once per file, and is
+    persisted; the driver collects each file's block at local
+    ``(0, 0)`` — one row per file — and derives the mosaic origin from
+    them.  Rotated transforms or mixed pixel sizes fail loudly."""
     import pandas as pd
     from pyspark.sql import functions as F
+    from pyspark.storagelevel import StorageLevel
 
     from wrf_to_geodataframe_spark.sources.geotiff import (
         GeoTiffError,
@@ -752,8 +644,6 @@ def build_virtual_mosaic(
     )
 
     files = _list_files(src, pattern)
-    sc = spark.sparkContext
-    fdf = _file_frame(spark, files)
 
     def _scan_blocks(it):
         import mmap
@@ -811,79 +701,60 @@ def build_virtual_mosaic(
                     ],
                 )
 
-    blocks = fdf.mapInPandas(
+    blocks = _file_frame(spark, files).mapInPandas(
         _scan_blocks,
         "file string, ly0 long, ly1 long, lx0 long, lx1 long, "
         "addr long, nbytes long, cy long, cx long, "
         "filters string, px_w double, px_h double, "
         "wx double, wy double, fsize long",
-    )
-    # mosaic origin + pixel-size consistency: 1-row bounded aggregate
-    org = blocks.agg(
-        F.min("wx").alias("ox"),
-        F.max("wy").alias("oy"),
-        F.count_distinct("px_w", "px_h").alias("n_px"),
-        F.first("px_w").alias("pw"),
-        F.first("px_h").alias("ph"),
-    ).collect()[0]
-    if org["n_px"] != 1:
-        raise ValueError("mosaic files disagree on pixel size")
-    ox, oy, pw, ph = org["ox"], org["oy"], org["pw"], org["ph"]
-    chash = "affine:" + hashlib.sha1(
-        repr((pw, ph, ox, oy)).encode()
-    ).hexdigest()
-
-    n_out = max(1, min(len(files), sc.defaultParallelism))
-    (
-        blocks.withColumn(
-            "gx", F.round((F.col("wx") - F.lit(ox)) / F.lit(pw))
-            .cast("bigint")
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        firsts = (
+            blocks.filter((F.col("ly0") == 0) & (F.col("lx0") == 0))
+            .select("wx", "wy", "px_w", "px_h")
+            .collect()
         )
-        .withColumn(
-            "gy", F.round((F.col("wy") - F.lit(oy)) / F.lit(ph))
-            .cast("bigint")
+        if len({(r["px_w"], r["px_h"]) for r in firsts}) != 1:
+            raise ValueError("mosaic files disagree on pixel size")
+        ox = min(r["wx"] for r in firsts)
+        oy = max(r["wy"] for r in firsts)
+        pw, ph = firsts[0]["px_w"], firsts[0]["px_h"]
+        chash = "affine:" + hashlib.sha1(
+            repr((pw, ph, ox, oy)).encode()
+        ).hexdigest()
+        gx = F.round((F.col("wx") - F.lit(ox)) / F.lit(pw)).cast("bigint")
+        gy = F.round((F.col("wy") - F.lit(oy)) / F.lit(ph)).cast("bigint")
+        _write_chunks(
+            blocks.select(
+                "file",
+                F.lit(f"band{band}").alias("var"),
+                F.lit(0).cast("bigint").alias("t0"),
+                F.lit(1).cast("bigint").alias("t1"),
+                (F.col("ly0") + gy).alias("y0"),
+                (F.col("ly1") + gy).alias("y1"),
+                (F.col("lx0") + gx).alias("x0"),
+                (F.col("lx1") + gx).alias("x1"),
+                "addr", "nbytes",
+                F.lit(0).cast("bigint").alias("fmask"),
+                F.lit(1).cast("bigint").alias("ct"),
+                "cy", "cx",
+                F.lit("geotiff").alias("dtype"),
+                "filters",
+                F.lit(0.0).alias("fill"),
+                F.lit(chash).alias("coord_hash"),
+                "fsize",
+                F.lit("{}").alias("packing"),
+            ),
+            len(files), out_path,
         )
-        .select(
-            "file",
-            F.lit(f"band{band}").alias("var"),
-            F.lit(0).cast("bigint").alias("t0"),
-            F.lit(1).cast("bigint").alias("t1"),
-            (F.col("ly0") + F.col("gy")).alias("y0"),
-            (F.col("ly1") + F.col("gy")).alias("y1"),
-            (F.col("lx0") + F.col("gx")).alias("x0"),
-            (F.col("lx1") + F.col("gx")).alias("x1"),
-            "addr", "nbytes",
-            F.lit(0).cast("bigint").alias("fmask"),
-            F.lit(1).cast("bigint").alias("ct"),
-            "cy", "cx",
-            F.lit("geotiff").alias("dtype"),
-            "filters",
-            F.lit(0.0).alias("fill"),
-            F.lit(chash).alias("coord_hash"),
-            "fsize",
-            F.lit("{}").alias("packing"),
+        _write_sidecar(
+            spark,
+            [(chash, 0, 0, None, None,
+              [float(pw), float(ph), float(ox), float(oy)])],
+            _COORD_SCHEMA, out_path, "coords",
         )
-        .repartitionByRange(n_out, "y0", "x0")
-        .sortWithinPartitions("y0", "x0")
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_path, "chunks"))
-    )
-    spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "coord_hash": [chash],
-                "ny": [0],
-                "nx": [0],
-                "lat": [None],
-                "lon": [None],
-                "affine": [[float(pw), float(ph), float(ox),
-                            float(oy)]],
-            }
-        ),
-        _COORD_SCHEMA,
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(out_path, "coords")
-    )
+    finally:
+        blocks.unpersist()
     return out_path
 
 
@@ -1063,15 +934,14 @@ def _with_time_column(out, times, var):
     """LEFT-join the (small, broadcast) times sidecar onto the decoded
     grid rows on ``(var, t_idx)`` — each variable maps to its own
     axis, so multi-variable manifests with diverging axes stay
-    unambiguous.  ``time`` is a microsecond timestamp; the sidecar
-    keeps exact int64 ns."""
+    unambiguous; the builder writes one sidecar row per ``(var, t)``,
+    so the join cannot fan out.  ``time`` is a microsecond timestamp;
+    the sidecar keeps exact int64 ns."""
     from pyspark.sql import functions as F
 
     if var is not None:
         times = times.filter(F.col("var") == var)
-    tm = times.select(
-        "var", F.col("t").alias("t_idx"), "time_ns"
-    ).distinct()
+    tm = times.select("var", F.col("t").alias("t_idx"), "time_ns")
     time_col = F.timestamp_micros(F.expr("time_ns div 1000"))
     return (
         out.join(F.broadcast(tm), ["var", "t_idx"], "left")
@@ -1140,24 +1010,17 @@ def _broadcast_sidecar(spark, manifest_path: str, max_sidecar_bytes: int):
     (lat, lon).  Size guard first: the
     sidecar is normally KBs (shared-grid archives dedupe to a handful
     of rows), but an archive of many DISTINCT large curvilinear grids
-    would make it O(#grids x ny x nx x 16 B) — measured executor-side
-    and rejected with a NAMED error before materializing anything
-    driver-sized."""
-    from pyspark.sql import functions as F
-
+    would make it O(#grids x ny x nx x 16 B) — sized from the
+    column-pruned ``(ny, nx)`` of each row (a grid row holds two
+    float64 ny x nx arrays, an affine row has ny = nx = 0) and rejected
+    with a NAMED error before any grid bytes reach the driver."""
     coords_df = spark.read.parquet(os.path.join(manifest_path, "coords"))
-    stats = coords_df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.coalesce(F.length("lat"), F.lit(0))
-            + F.coalesce(F.length("lon"), F.lit(0))
-        ).alias("nbytes"),
-    ).collect()[0]
-    sidecar_bytes = int(stats["nbytes"] or 0)
+    shapes = coords_df.select("ny", "nx").collect()
+    sidecar_bytes = sum(16 * r["ny"] * r["nx"] for r in shapes)
     if sidecar_bytes > max_sidecar_bytes:
         raise ValueError(
             f"{manifest_path}: coordinate sidecar is "
-            f"{sidecar_bytes / 2**20:.0f} MiB across {stats['n']} "
+            f"{sidecar_bytes / 2**20:.0f} MiB across {len(shapes)} "
             "distinct grids — too large to broadcast (cap "
             f"{max_sidecar_bytes / 2**20:.0f} MiB).  Select one "
             "variable (var=...), split the archive into per-grid "
