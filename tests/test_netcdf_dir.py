@@ -21,8 +21,8 @@ import pytest
 from tests.hdf5_fixture import FixtureWriter
 from wrf_to_geodataframe_spark.sources.netcdf import (
     read_netcdf_dir,
-    read_netcdf_dir_many,
     read_netcdf_grid,
+    read_netcdf_pencils,
     write_netcdf,
 )
 
@@ -125,10 +125,10 @@ def test_record_variable_unnests_every_time_slice(spark, tmp_path):
     assert len(sliced) == ny * nx
 
 
-def test_dir_many_names_a_staggered_variable(spark, tmp_path):
-    """A variable on another grid (WRF's U on west_east_stag) is a
-    named error of the one-scan reader, raised before its plane is
-    unnested against the shared mass-grid coordinates."""
+def test_pencils_name_a_staggered_variable(spark, tmp_path):
+    """A variable on another (y, x) plane (WRF's U on west_east_stag)
+    is a named error of the pencil reader, raised before any pencil is
+    built against the shared mass-grid coordinates."""
     ny, nx = 3, 5
     lat = np.linspace(50.0, 51.0, ny * nx).reshape(ny, nx)
     lon = np.linspace(-1.0, 0.0, ny * nx).reshape(ny, nx)
@@ -144,9 +144,120 @@ def test_dir_many_names_a_staggered_variable(spark, tmp_path):
             "XLONG": {"dims": ("y", "x"), "data": lon},
         },
     )
-    df = read_netcdf_dir_many(spark, p, ["T", "U"], "XLAT", "XLONG")
+    df = read_netcdf_pencils(spark, p, ["T", "U"], "XLAT", "XLONG")
     with pytest.raises(Exception, match="does not share"):
         df.collect()
+
+
+def test_pencils_read_staggered_mass_and_plane_in_one_scan(spark, tmp_path):
+    """PH/PHB (nk + 1 levels), T (nk) and HGT (2-D) share the (y, x)
+    plane, not the level count, so ONE scan reads them: each cell's
+    arrays are its column through the file, of lengths nk + 1, nk and
+    1."""
+    nk, ny, nx = 4, 3, 5
+    rng = np.random.default_rng(11)
+    t = rng.normal(280.0, 5.0, (nk, ny, nx))
+    ph = rng.normal(0.0, 50.0, (nk + 1, ny, nx))
+    phb = rng.normal(9000.0, 50.0, (nk + 1, ny, nx))
+    hgt = rng.normal(300.0, 20.0, (ny, nx))
+    lat = np.linspace(50.0, 51.0, ny * nx).reshape(ny, nx)
+    lon = np.linspace(-1.0, 0.0, ny * nx).reshape(ny, nx)
+    p = str(tmp_path / "wrfout_pencils.nc")
+    write_netcdf(
+        p,
+        dims={"k": nk, "ks": nk + 1, "y": ny, "x": nx},
+        variables={
+            "T": {"dims": ("k", "y", "x"), "data": t},
+            "PH": {"dims": ("ks", "y", "x"), "data": ph},
+            "PHB": {"dims": ("ks", "y", "x"), "data": phb},
+            "HGT": {"dims": ("y", "x"), "data": hgt},
+            "XLAT": {"dims": ("y", "x"), "data": lat},
+            "XLONG": {"dims": ("y", "x"), "data": lon},
+        },
+    )
+    df = read_netcdf_pencils(
+        spark, p, ["PH", "PHB", "T", "HGT"], "XLAT", "XLONG"
+    )
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1
+    rows = df.collect()
+    assert len(rows) == ny * nx
+    for r in rows:
+        j, i = r.y_idx, r.x_idx
+        assert (len(r.ph), len(r.phb), len(r.t), len(r.hgt)) == (
+            nk + 1, nk + 1, nk, 1
+        )
+        assert r.ph == list(ph[:, j, i])
+        assert r.phb == list(phb[:, j, i])
+        assert r.t == list(t[:, j, i])
+        assert r.hgt == [hgt[j, i]]
+        assert (r.lat, r.lon) == (lat[j, i], lon[j, i])
+
+
+def test_pencils_decode_cf_packing_like_read_netcdf_dir(spark, tmp_path):
+    """A CF-packed (int16 + scale_factor/add_offset/_FillValue)
+    variable decodes in the pencils exactly as read_netcdf_dir decodes
+    it, the fill cell NULL in both."""
+    nk, ny, nx = 3, 2, 3
+    raw = (np.arange(nk * ny * nx, dtype="int16") * 37 - 200).reshape(
+        nk, ny, nx
+    )
+    raw[1, 0, 2] = -32767
+    yy, xx = np.meshgrid(np.arange(ny), np.arange(nx), indexing="ij")
+    p = str(tmp_path / "packed.nc")
+    write_netcdf(
+        p,
+        {"k": nk, "y": ny, "x": nx},
+        {
+            "T": {"dims": ["k", "y", "x"], "data": raw,
+                  "attrs": {"scale_factor": 0.01, "add_offset": 270.0,
+                            "_FillValue": np.int16(-32767)}},
+            "XLAT": {"dims": ["y", "x"], "data": 50.0 + yy * 0.25},
+            "XLONG": {"dims": ["y", "x"], "data": -3.0 + xx * 0.125},
+        },
+    )
+    pen = {
+        (r.y_idx, r.x_idx): r.t
+        for r in read_netcdf_pencils(
+            spark, p, ["T"], "XLAT", "XLONG"
+        ).collect()
+    }
+    rows = read_netcdf_dir(spark, p, "T", "XLAT", "XLONG").collect()
+    assert len(rows) == nk * ny * nx
+    for r in rows:
+        assert pen[(r.y_idx, r.x_idx)][r.t_idx] == r.value
+    assert pen[(0, 2)][1] is None
+
+
+def test_time_decode_error_names_the_shard(spark, tmp_path):
+    """In a many-file read_netcdf_dir(time_var=...) the time-decode
+    error names the shard whose time coordinate is broken, not just
+    the variable."""
+    ny, nx = 2, 3
+    lat = np.linspace(50.0, 51.0, ny * nx).reshape(ny, nx)
+    lon = np.linspace(-1.0, 0.0, ny * nx).reshape(ny, nx)
+    paths = []
+    for i, attrs in enumerate([{"units": "hours since 2000-01-01"}, {}]):
+        p = str(tmp_path / f"shard_{i}.nc")
+        write_netcdf(
+            p,
+            dims={"t": 1, "y": ny, "x": nx},
+            variables={
+                "T2": {"dims": ("t", "y", "x"),
+                       "data": np.full((1, ny, nx), 280.0 + i)},
+                "t": {"dims": ("t",), "data": np.array([6.0 * i]),
+                      "attrs": attrs},
+                "XLAT": {"dims": ("y", "x"), "data": lat},
+                "XLONG": {"dims": ("y", "x"), "data": lon},
+            },
+        )
+        paths.append(p)
+    df = read_netcdf_dir(
+        spark, str(tmp_path), "T2", "XLAT", "XLONG", time_var="t"
+    )
+    with pytest.raises(Exception) as info:
+        df.collect()
+    assert f"{paths[1]}: t: no CF units attribute" in str(info.value)
 
 
 def test_one_task_per_file_and_executor_side_parse(spark, mixed_dir):

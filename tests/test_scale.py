@@ -1931,9 +1931,9 @@ def test_wrf_getvar_120_shard_archive(spark, tmp_path):
 @slow
 def test_wrf_getvar_many_shares_scans_at_archive_shape(spark, tmp_path):
     """wrf_getvar_many at archive shape: 60 wrfout shards, THREE
-    diagnostics (slp + tk + pw) off ONE persisted mass scan + one
-    layer-geometry scan — executing all three costs two archive
-    passes, not six, and every value matches the closed form."""
+    diagnostics (slp + tk + pw) off ONE persisted pencil scan —
+    executing all three costs one archive pass, not six, and every
+    value matches the closed form."""
     import math as _math
     import os as _os
 
@@ -1941,6 +1941,7 @@ def test_wrf_getvar_many_shares_scans_at_archive_shape(spark, tmp_path):
     from wrf_to_geodataframe_spark.session import release_persisted
     from wrf_to_geodataframe_spark.sources.netcdf import write_netcdf
 
+    release_persisted()
     nk, nj, ni, nf = 6, 6, 8, 60
     kk, jj, ii = np.meshgrid(
         np.arange(nk), np.arange(nj), np.arange(ni), indexing="ij"
@@ -1992,12 +1993,12 @@ def test_wrf_getvar_many_shares_scans_at_archive_shape(spark, tmp_path):
         if abs(r.slp - want) > 1e-7 * want:
             bad += 1
     assert bad == 0
-    # the three plans all read the SAME persisted base (slp adds the
-    # zdz cache); nothing re-parses the archive a third time
+    # the three plans all read the SAME persisted pencils; nothing
+    # re-parses the archive a second time
     for name in ("slp", "tk", "pw"):
         plan = many[name]._jdf.queryExecution().executedPlan().toString()
         assert "InMemoryTableScan" in plan, name
-    assert release_persisted() >= 2  # base + zdz
+    assert release_persisted() == 1  # the pencils
 
 
 @slow

@@ -193,12 +193,14 @@ def test_precipitable_water_matches_numpy_integral(spark):
         qv = rng.integers(1, 20, size=nk) / 1024.0  # dyadic
         dp = rng.integers(50, 120, size=nk) * 100.0
         want[c] = float((qv * dp).sum() / 9810.0)
-        rows += [(c, float(qv[k]), float(dp[k])) for k in range(nk)]
+        rows.append((c, qv.tolist(), dp.tolist()))
     from wrf_to_geodataframe_spark.operators.vertical import (
         precipitable_water,
     )
 
-    df = spark.createDataFrame(rows, "c long, qv double, dp double")
+    df = spark.createDataFrame(
+        rows, "c long, qv array<double>, dp array<double>"
+    )
     got = {
         r.c: r.pw_mm
         for r in precipitable_water(df, "qv", "dp", ["c"]).collect()
@@ -420,14 +422,17 @@ def test_sea_level_pressure_identities(spark):
     )
 
     def column(cid, zsfc, nk):
-        return [
-            (cid, 100000.0 - 9000.0 * k, 290.0 - 6.0 * k,
-             zsfc + 700.0 * k)
-            for k in range(nk)
-        ]
+        return (
+            cid,
+            [100000.0 - 9000.0 * k for k in range(nk)],
+            [290.0 - 6.0 * k for k in range(nk)],
+            [zsfc + 700.0 * k for k in range(nk)],
+        )
 
-    rows = column(0, 0.0, 8) + column(1, 500.0, 8) + column(2, 500.0, 2)
-    df = spark.createDataFrame(rows, "cid long, p double, t double, z double")
+    rows = [column(0, 0.0, 8), column(1, 500.0, 8), column(2, 500.0, 2)]
+    df = spark.createDataFrame(
+        rows, "cid long, p array<double>, t array<double>, z array<double>"
+    )
     got = {
         r.cid: r.slp
         for r in sea_level_pressure(df, "p", "t", "z", ["cid"]).collect()

@@ -743,11 +743,10 @@ def test_daily_tmin_rollup_over_hourly_shards(spark, tmp_path):
 
 
 def test_getvar_plan_shapes(spark, archive):
-    """The multi-variable scan makes point diagnostics JOIN-FREE (one
-    archive pass, however many raw variables the formula needs);
-    column diagnostics needing layer geometry join exactly once
-    against the staggered-geopotential table; nothing is ever a
-    cartesian."""
+    """The pencil scan makes point diagnostics JOIN-FREE (one archive
+    pass, however many raw variables the formula needs); slp reads its
+    layer geometry from the same pencil row, so it joins nothing
+    either; nothing is ever a cartesian."""
     def plan_of(df):
         return df._jdf.queryExecution().executedPlan().toString()
 
@@ -756,7 +755,7 @@ def test_getvar_plan_shapes(spark, archive):
         assert "Join" not in plan, name
     slp = plan_of(wrf_getvar(spark, archive, "slp"))
     assert slp.count("SortMergeJoin") + slp.count("BroadcastHashJoin") \
-        + slp.count("ShuffledHashJoin") == 1
+        + slp.count("ShuffledHashJoin") == 0
     assert "CartesianProduct" not in slp
 
 
@@ -948,12 +947,13 @@ def test_ua_va_wa_ter(spark, archive):
 
 def test_getvar_many_equals_single_front_door(spark, archive):
     """wrf_getvar_many returns exactly the single-name front door's
-    frames (schema + values) while sharing one persisted mass scan
-    per grid shape and one layer-geometry table; typo'd option
-    routing raises."""
+    frames (schema + values) while sharing one persisted pencil scan
+    (and one wind-joined level frame for uvmet); typo'd option routing
+    raises."""
     from wrf_to_geodataframe_spark.operators.wrf import wrf_getvar_many
     from wrf_to_geodataframe_spark.session import release_persisted
 
+    release_persisted()
     names = ["tk", "rh", "pw", "slp", "z", "T2", "rh2",
              "mdbz", "uvmet"]
     many = wrf_getvar_many(
@@ -970,7 +970,7 @@ def test_getvar_many_equals_single_front_door(spark, archive):
         a = sorted(map(tuple, many[name].collect()))
         b = sorted(map(tuple, single.collect()))
         assert a == b, name
-    # shared scans: the slp plan reads the persisted base + zdz
+    # shared scans: the slp plan reads the persisted pencils
     plan = many["slp"]._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryTableScan" in plan
     with pytest.raises(ValueError, match="not requested"):
@@ -979,7 +979,7 @@ def test_getvar_many_equals_single_front_door(spark, archive):
     with pytest.raises(TypeError):
         wrf_getvar_many(spark, archive, ["tk"],
                         options={"tk": {"bogus": 1}})
-    assert release_persisted() >= 3  # bases + zdz (+ coords)
+    assert release_persisted() == 2  # pencils + wind-joined levels
     # one name shares nothing, so it persists nothing
     slp = wrf_getvar_many(spark, archive, ["slp"])["slp"]
     plan = slp._jdf.queryExecution().executedPlan().toString()
@@ -1009,9 +1009,9 @@ def test_pressure_aliases_geopt_height_agl(spark, archive):
 
 
 def test_getvar_many_mixed_raw_shapes(spark, archive):
-    """height_agl reads 2-D HGT but outputs per-level: the many-scan
-    grouping follows the RAW shape (_SFC_RAW), so mixing it with 3-D
-    names cannot push 2-D planes into the per-level union scan."""
+    """height_agl reads 2-D HGT but outputs per-level: in the one
+    pencil scan HGT is a one-element pencil read as a per-column
+    scalar, so mixing it with 3-D names adds no level rows."""
     from wrf_to_geodataframe_spark.operators.wrf import wrf_getvar_many
     from wrf_to_geodataframe_spark.session import release_persisted
 
@@ -1022,6 +1022,117 @@ def test_getvar_many_mixed_raw_shapes(spark, archive):
     assert a == b and len(a) == NF * NK * NJ * NI
     assert many["ter"].count() == NF * NJ * NI
     release_persisted()
+
+
+def test_getvar_coords_read_without_shuffle(spark, archive):
+    """lat/lon come straight from the pencil rows (one per column):
+    no distinct, so no HashAggregate and no Exchange, and the values
+    are the XLAT plane."""
+    from wrf_to_geodataframe_spark.operators.wrf import wrf_getvar_many
+    from wrf_to_geodataframe_spark.session import release_persisted
+
+    lat = wrf_getvar_many(spark, archive, ["lat", "lon"])["lat"]
+    plan = lat._jdf.queryExecution().executedPlan().toString()
+    got = _collect(lat, "lat")
+    release_persisted()
+    assert "HashAggregate" not in plan
+    assert "Exchange" not in plan
+    assert len(got) == NF * NJ * NI
+    for (f, j, i), v in got.items():
+        assert v == 38.0 + j * 0.25, (f, j, i)
+
+
+def test_pencils_explode_to_read_netcdf_dir_rows(spark, archive):
+    """Exploding each pencil along its array reproduces read_netcdf_dir's
+    long rows bit for bit — mass-level, staggered and 2-D variables."""
+    from wrf_to_geodataframe_spark.sources.netcdf import (
+        read_netcdf_dir,
+        read_netcdf_pencils,
+    )
+
+    names = ["T", "QVAPOR", "PH", "W", "HGT"]
+    pen = read_netcdf_pencils(spark, archive, names, "XLAT", "XLONG")
+    for name in names:
+        exploded = pen.select(
+            "file", F.posexplode(name.lower()).alias("t_idx", "value"),
+            "y_idx", "x_idx", "lat", "lon",
+        ).select(
+            "file", F.col("t_idx").cast("long").alias("t_idx"),
+            "y_idx", "x_idx", "lat", "lon", "value",
+        )
+        long = read_netcdf_dir(spark, archive, name, "XLAT", "XLONG")
+        a = sorted(map(tuple, exploded.collect()))
+        b = sorted(map(tuple, long.collect()))
+        assert len(a) == len(b) > 0 and a == b, name
+
+
+def test_getvar_staggered_axis_length_is_a_named_error(spark, tmp_path):
+    """A PH axis that is not one level longer than the mass axis is an
+    error naming the file and both lengths — never levels silently
+    dropped or NULL-padded."""
+    from wrf_to_geodataframe_spark.sources.netcdf import write_netcdf
+
+    nk, nj, ni = 3, 2, 2
+    jj, ii = np.meshgrid(np.arange(nj), np.arange(ni), indexing="ij")
+    d = str(tmp_path / "badph")
+    os.makedirs(d)
+    write_netcdf(
+        os.path.join(d, "wrfout_d01_000.nc"),
+        {"k": nk, "ks": nk + 1, "kb": nk + 2, "j": nj, "i": ni},
+        {
+            "T": {"dims": ["k", "j", "i"], "data": np.zeros((nk, nj, ni))},
+            "P": {"dims": ["k", "j", "i"], "data": np.zeros((nk, nj, ni))},
+            "PB": {"dims": ["k", "j", "i"],
+                   "data": np.full((nk, nj, ni), 90000.0)},
+            "QVAPOR": {"dims": ["k", "j", "i"],
+                       "data": np.zeros((nk, nj, ni))},
+            "PH": {"dims": ["kb", "j", "i"],
+                   "data": np.zeros((nk + 2, nj, ni))},
+            "PHB": {"dims": ["ks", "j", "i"],
+                    "data": np.zeros((nk + 1, nj, ni))},
+            "XLAT": {"dims": ["j", "i"], "data": 38.0 + jj * 0.25},
+            "XLONG": {"dims": ["j", "i"], "data": -101.0 + ii * 0.25},
+        },
+    )
+    with pytest.raises(
+        Exception, match=r"wrfout_d01_000\.nc: PHB has 4 vertical "
+        r"levels against 5 in PH"
+    ):
+        wrf_getvar(spark, d, "z").collect()
+    with pytest.raises(
+        Exception, match=r"wrfout_d01_000\.nc: PH has 5 vertical "
+        r"levels against 3 in T: a vertically staggered axis is "
+        r"exactly one level longer than the mass axis"
+    ):
+        wrf_getvar(spark, d, "slp").collect()
+
+
+def test_s10_warm_job_and_exchange_budget(spark):
+    """ROADMAP item 4 (counters only go down): a warm
+    s10_wrf_getvar_many (tk + pw + slp over one persisted pencil scan)
+    runs at most 6 Spark jobs, and nothing is hash-shuffled — z/dz, pw
+    and slp are computed inside the pencil row and the three frames
+    meet in broadcast joins."""
+    from tests.test_virtual import _jobs_in_group
+    from wrf_to_geodataframe_spark.session import release_persisted
+    from wrf_to_geodataframe_spark.suite.dynamics import (
+        s10_wrf_getvar_many,
+    )
+
+    release_persisted()
+    s10_wrf_getvar_many(spark, "").collect()
+    got = {}
+
+    def run():
+        df = s10_wrf_getvar_many(spark, "")
+        got["rows"] = df.collect()
+        got["plan"] = df._jdf.queryExecution().executedPlan().toString()
+
+    n_jobs = _jobs_in_group(spark, run)
+    release_persisted()
+    assert len(got["rows"]) == 32
+    assert n_jobs <= 6, n_jobs
+    assert "Exchange hashpartitioning" not in got["plan"]
 
 
 def test_wrf_times_malformed_times_raise(spark, tmp_path):
@@ -1368,13 +1479,14 @@ def test_getvar_many_new_names_equal_single(spark):
     """The shared-scan property extended to the round-14 names:
     helicity + updraft_helicity share ONE destaggered U/V/W base in
     wrf_getvar_many and return exactly the single-name frames; the
-    coordinate names ride the shared coords table."""
+    coordinate names ride the shared pencil scan."""
     from wrf_to_geodataframe_spark.operators.wrf import wrf_getvar_many
     from wrf_to_geodataframe_spark.session import release_persisted
     from wrf_to_geodataframe_spark.suite.dynamics import (
         _write_getvar_fixture,
     )
 
+    release_persisted()
     d = _write_getvar_fixture()
     attrs = {"DX": 512.0, "DY": 512.0, "TRUELAT1": 30.0,
              "TRUELAT2": 60.0, "STAND_LON": -100.0}
@@ -1398,7 +1510,7 @@ def test_getvar_many_new_names_equal_single(spark):
     p2 = many["updraft_helicity"]._jdf.queryExecution().executedPlan(
     ).toString()
     assert "InMemoryTableScan" in p1 and "InMemoryTableScan" in p2
-    assert release_persisted() >= 2
+    assert release_persisted() == 2  # pencils + wind-joined levels
 
 
 def test_getvar_alias_spellings(spark, archive):

@@ -206,24 +206,23 @@ def precipitable_water(
     """Precipitable water [mm] per atmospheric column (wrf-python
     `pw`): the vertical integral sum(qv * dp) / (g * rho_w) — with dp
     in Pa and rho_w = 1000 kg m^-3 the result is millimetres of
-    liquid water.  One partial-aggregated groupBy on the column key.
+    liquid water.  ``qv_col`` and ``dp_col`` are COLUMN PENCILS (one
+    row per column, level k at array index k); the fold runs over
+    dp's layers in level order inside the row — no shuffle — so the
+    sum is deterministic on any input.  NULL for a column with no
+    layer or a missing value.
 
-    Exactness note: this is a multi-row float sum, which the suite
-    rule normally quantizes — but DYADIC-rational inputs (qv with a
-    power-of-two denominator, integer dp) make every product and
-    partial sum exactly representable, so the sum is order-independent
-    and hash-exact with no quantization; arbitrary float inputs should
-    quantize first."""
+    Exactness note: DYADIC-rational inputs (qv with a power-of-two
+    denominator, integer dp) make every product and partial sum
+    exactly representable, so the result equals the exact integral
+    and is hash-exact with no quantization."""
     g0, rho_w = 9.81, 1000.0
-    return (
-        df.groupBy(*col_keys)
-        .agg(
-            (
-                F.sum(F.col(qv_col) * F.col(dp_col))
-                / F.lit(g0 * rho_w)
-            ).alias(out_col)
-        )
-    )
+    qv, dp = f"`{qv_col}`", f"`{dp_col}`"
+    return df.select(*col_keys, F.expr(
+        f"CASE WHEN size({dp}) > 0 THEN aggregate(transform({dp}, "
+        f"(x, k) -> {qv}[k] * x), 0D, (acc, x) -> acc + x) "
+        f"/ {g0 * rho_w!r}D END"
+    ).alias(out_col))
 
 
 def sea_level_pressure(
@@ -259,8 +258,9 @@ def sea_level_pressure(
     columns over very hot terrain can differ from wrf-python by the
     clamp amount.
 
-    Two window aggregates on one column-key shuffle (surface by
-    ordered first, pivot by conditional max_by) + one groupBy; a
+    The p/t/z (and qv) columns are COLUMN PENCILS (one row per column,
+    level k at array index k), evaluated inside the row — no window,
+    groupBy or shuffle.  Ties on a pressure keep the lowest index.  A
     column too shallow to contain a pivot level yields NULL (the
     missing-value convention, like cin)."""
     from wrf_to_geodataframe_spark.functions.meteo import (
@@ -269,37 +269,32 @@ def sea_level_pressure(
         virtual_temperature,
     )
 
-    t_use = (
-        virtual_temperature(F.col(t_col), F.col(qv_col))
-        if qv_col is not None
-        else F.col(t_col)
+    p = f"`{p_col}`"
+    qv = [qv_col] if qv_col is not None else []
+    d = df.select(
+        *col_keys, p_col, t_col, z_col, *qv,
+        F.expr(f"array_max({p})").alias("_psfc"),
+        F.expr(
+            f"array_max(filter({p}, x -> x <= array_max({p}) "
+            f"- {float(pconst)!r}D))"
+        ).alias("_ppiv"),
     )
-    w = Window.partitionBy(*col_keys).orderBy(F.col(p_col).desc())
-    wk = Window.partitionBy(*col_keys)
-    d = (
-        df.withColumn("_psfc", F.first(p_col).over(w))
-        .withColumn("_zsfc", F.first(z_col).over(w))
+
+    def at(col: str, level: str):
+        return F.expr(f"`{col}`[array_position({p}, {level}) - 1]")
+
+    t_piv = (
+        virtual_temperature(at(t_col, "_ppiv"), at(qv_col, "_ppiv"))
+        if qv else at(t_col, "_ppiv")
     )
-    sel = F.max_by(
-        F.struct(t_use.alias("t"), F.col(p_col).alias("p")),
-        F.when(
-            F.col(p_col) <= F.col("_psfc") - F.lit(float(pconst)),
-            F.col(p_col),
-        ),
-    ).over(wk)
+    z_sfc = at(z_col, "_psfc")
     xterm = float(lapse) * RD / G0
-    t_sfc = sel["t"] * F.pow(F.col("_psfc") / sel["p"], F.lit(xterm))
-    t_sl = t_sfc + F.lit(float(lapse)) * F.col("_zsfc")
+    t_sfc = t_piv * F.pow(F.col("_psfc") / F.col("_ppiv"), F.lit(xterm))
+    t_sl = t_sfc + F.lit(float(lapse)) * z_sfc
     slp = F.col("_psfc") * F.exp(
-        F.lit(2.0 * G0)
-        * F.col("_zsfc")
-        / (F.lit(RD) * (t_sl + t_sfc))
+        F.lit(2.0 * G0) * z_sfc / (F.lit(RD) * (t_sl + t_sfc))
     )
-    return (
-        d.withColumn("_slp", slp)
-        .groupBy(*col_keys)
-        .agg(F.min("_slp").alias(out_col))  # column-constant
-    )
+    return d.select(*col_keys, slp.alias(out_col))
 
 
 def cloud_fraction(

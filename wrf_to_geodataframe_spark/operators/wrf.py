@@ -14,47 +14,52 @@ Raw-variable conventions are the standard WRF ones (ARW users'
 guide): perturbation + base splits (T+300 for theta, P+PB for
 pressure, PH+PHB for geopotential), Arakawa-C staggering (U on
 west_east_stag with XLAT_U/XLONG_U coords, V on south_north_stag with
-XLAT_V/XLONG_V, W and PH/PHB on bottom_top_stag) — destaggered here
-with the pencil-window operators, never positional reshape.  Each
-file is one timestep; the vertical level index rides the reader's
-``t_idx`` axis, and (file, k, y_idx, x_idx) is the explicit key
-everywhere (SURVEY.md §1.3 / J5).  Layer geometry for the column
-diagnostics comes from the STAGGERED geopotential read on its own
-(never inner-joined against mass levels, which would drop the top
-staggered entry): z at mass level k is the half-sum of adjacent
-staggered heights and dz their exact difference.
+XLAT_V/XLONG_V, W and PH/PHB on bottom_top_stag).  Each file is one
+timestep.  Every raw variable on the mass (y, x) plane — mass-level,
+vertically staggered (W, PH, PHB) or 2-D — rides ONE column-pencil
+scan per session (``read_netcdf_pencils``: one row per (file, y_idx,
+x_idx), one array per variable along its vertical axis), so layer
+geometry (z at mass level k is the half-sum of adjacent staggered
+heights, dz their exact difference), W's destagger, pw and slp are
+computed inside the row with no window or shuffle.  The per-level
+view keyed (file, k, y_idx, x_idx) (SURVEY.md §1.3 / J5) is one
+posexplode of the pencils; U and V live on horizontally staggered
+grids and keep their own scans and destagger windows.
 
 Derived quantities dispatch to functions/meteo.py (codegen column
-expressions) and operators/vertical.py / dynamics.py (pencil-window
-operators); projection-dependent names (``uvmet``, ``avo``, ``pvo``)
-take the wrfout global-attribute block via ``attrs=``.
+expressions) and operators/vertical.py / dynamics.py;
+projection-dependent names (``uvmet``, ``avo``, ``pvo``) take the
+wrfout global-attribute block via ``attrs=``.
 
 Parity notes: the reference (C-H-Simpson/wrf_to_geodataframe) reaches
 these fields through wrf-python/xarray before converting to
 GeoDataFrames (wrf_voronoi.py:115); this front door covers the getvar
 names its workflows consume.  CALDBZ defaults to rain-only; pass
 ``species=("QRAIN", "QSNOW", "QGRAUP")`` for the full-hydrometeor
-form (the snow/graupel terms ride the same single mass scan).
+form (the snow/graupel terms ride the same single pencil scan).
 ``times=True`` adds the decoded wrfout ``Times`` timestamp (and
 ``getvar('times')`` returns the axis itself).  :func:`wrf_getvar` is
 the one-name case of :func:`wrf_getvar_many`, the one getvar path:
-several names share one scan set, persisted only when two or more
-names share it.  wrf-python alias
+several names share one pencil scan, persisted only when two or
+more names share it.  wrf-python alias
 spellings (``temp``, ``th``, ``dp``, ``theta_e``, ...) resolve via
 ``ALIASES``; the storm diagnostics (``helicity``,
 ``updraft_helicity``) and ``cape_2d``'s lcl/lfc report heights above
-ground like wrf-python, with the terrain plane read on its own.
+ground like wrf-python, with the terrain plane read from the pencil.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import functools
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _KEY = ["file", "k", "y_idx", "x_idx"]
 _KEY3 = ["file", "y_idx", "x_idx"]
 
-#: getvar name -> MASS-grid raw variables joined into the base table
+#: getvar name -> the raw variables it reads.  U and V get their own
+#: scans; every other variable rides the session's pencil scan
 SUPPORTED: dict[str, tuple[str, ...]] = {
     "theta": ("T",),
     "pressure": ("P", "PB"),
@@ -67,20 +72,20 @@ SUPPORTED: dict[str, tuple[str, ...]] = {
     "td": ("P", "PB", "QVAPOR"),
     "eth": ("T", "P", "PB", "QVAPOR"),
     "twb": ("T", "P", "PB", "QVAPOR"),
-    "z": (),
-    "height": (),
-    "geopt": (),  # full geopotential [m2 s-2] = g z
-    "height_agl": ("HGT",),  # z above ground level
+    "z": ("PH", "PHB"),
+    "height": ("PH", "PHB"),
+    "geopt": ("PH", "PHB"),  # full geopotential [m2 s-2] = g z
+    "height_agl": ("PH", "PHB", "HGT"),  # z above ground level
     "dbz": ("T", "P", "PB", "QVAPOR", "QRAIN"),
     "mdbz": ("T", "P", "PB", "QVAPOR", "QRAIN"),
     "omega": ("T", "P", "PB", "QVAPOR", "W"),
     "pw": ("P", "PB", "QVAPOR"),
     "ctt": ("T", "P", "PB", "QCLOUD"),
     "cloudfrac": ("T", "P", "PB", "QVAPOR"),
-    "slp": ("T", "P", "PB", "QVAPOR"),
-    "cape_2d": ("T", "P", "PB", "QVAPOR"),
-    "mcape": ("T", "P", "PB", "QVAPOR"),
-    "cape_3d": ("T", "P", "PB", "QVAPOR"),
+    "slp": ("T", "P", "PB", "QVAPOR", "PH", "PHB"),
+    "cape_2d": ("T", "P", "PB", "QVAPOR", "PH", "PHB", "HGT"),
+    "mcape": ("T", "P", "PB", "QVAPOR", "PH", "PHB", "HGT"),
+    "cape_3d": ("T", "P", "PB", "QVAPOR", "PH", "PHB"),
     "wspd_wdir": ("U", "V"),
     "uvmet": ("U", "V"),
     "avo": ("U", "V"),
@@ -90,20 +95,20 @@ SUPPORTED: dict[str, tuple[str, ...]] = {
     "va": ("V",),
     "wa": ("W",),
     # storm diagnostics (operators/dynamics.py kernels): SRH and
-    # updraft helicity — z bands are HEIGHT ABOVE GROUND (HGT read
-    # inside the dispatch, like avo's MAPFAC_M).  `helicity` matches
-    # wrf-python's default semantics: with no c_u/c_v the storm
+    # updraft helicity — z bands are HEIGHT ABOVE GROUND (z - HGT).
+    # `helicity` matches wrf-python's default semantics: with no
+    # c_u/c_v the storm
     # motion is estimated per column from the 0-6 km mean wind
     # (Davies & Johns 1993, DCALRELHL's internal rule); explicit
     # c_u/c_v override the estimate
-    "helicity": ("U", "V"),
-    "updraft_helicity": ("U", "V", "W"),
+    "helicity": ("U", "V", "PH", "PHB", "HGT"),
+    "updraft_helicity": ("U", "V", "W", "PH", "PHB", "HGT"),
     # coordinate reads: raw XLAT/XLONG planes and the STAGGERED
     # geopotential height (no destagger — k is the staggered index)
     "lat": (),
     "lon": (),
-    "zstag": (),
-    "geopt_stag": (),  # g * zstag, on the staggered levels
+    "zstag": ("PH", "PHB"),
+    "geopt_stag": ("PH", "PHB"),  # g * zstag, on the staggered levels
     # earth-rotated speed/direction: uvmet composed with wspd_wdir
     "wspd_wdir_uvmet": ("U", "V"),
     "wspd_wdir_uvmet10": ("U10", "V10"),
@@ -157,12 +162,15 @@ _WIND_SINGLE: dict[str, tuple[str, str]] = {
 _SURFACE_2D = {"T2", "td2", "rh2", "uvmet10", "wspd_wdir10", "ter",
                "wspd_wdir_uvmet10", "PBLH"}
 
-#: names whose RAW variables are 2-D planes — the scan-grouping set
-#: for wrf_getvar_many (height_agl reads 2-D HGT but OUTPUTS
-#: per-level, so the two sets differ; mixing 2-D and 3-D raw
-#: variables in one read_netcdf_dir_many scan would fail its
-#: same-grid row check)
-_SFC_RAW = _SURFACE_2D | {"height_agl"}
+#: raw variables with no vertical axis: one-element pencils, read as
+#: per-column scalars
+_PLANE_VARS = ("HGT", "T2", "PSFC", "Q2", "U10", "V10", "PBLH", "MAPFAC_M")
+
+#: vertically staggered raw variables: one level more than the mass axis
+_STAG_K = ("PH", "PHB", "W")
+
+#: horizontally staggered winds: their own scans and destagger windows
+_STAG_XY = ("U", "V")
 
 #: names that accept extra keyword options (everything else must
 #: reject them — a silently-dropped typo'd option is a wrong answer)
@@ -189,124 +197,133 @@ def _raw(
     )
 
 
-def _base(
+def _winds(
     spark: SparkSession,
     path: str,
-    names: tuple[str, ...],
+    names: list[str],
+    lev: DataFrame | None,
     lat_var: str,
     lon_var: str,
 ) -> DataFrame | None:
-    """The requested variables on the mass grid.  All MASS-grid
-    variables come from ONE archive scan (``read_netcdf_dir_many`` —
-    each shard's bytes parsed once, one column per variable);
-    staggered winds live on their own grids, so each gets its own
-    scan, is destaggered onto mass points, and equi-joins the mass
-    table on the explicit key."""
+    """The per-level ``lev`` frame equi-joined (explicit key) with the
+    destaggered U and/or V: each wind lives on its own horizontally
+    staggered grid, so it gets its own scan and is moved onto mass
+    points by one ``destagger`` window."""
     from wrf_to_geodataframe_spark.operators.vertical import destagger
-    from wrf_to_geodataframe_spark.sources.netcdf import (
-        read_netcdf_dir_many,
-    )
 
-    stag = [n for n in names if n in ("U", "V", "W")]
-    mass = [n for n in names if n not in ("U", "V", "W")]
-    out = None
-    if mass:
-        out = read_netcdf_dir_many(
-            spark, path, mass, lat_var, lon_var
-        ).select(
-            "file", F.col("t_idx").alias("k"), "y_idx", "x_idx",
-            *[n.lower() for n in mass],
-        )
-    for name in stag:
+    out = lev
+    for name in names:
         if name == "U":
             d = destagger(
                 _raw(spark, path, name, f"{lat_var}_U", f"{lon_var}_U"),
                 "x_idx", "u", ["file", "k", "y_idx"], out_col="u",
             )
-        elif name == "V":
+        else:
             d = destagger(
                 _raw(spark, path, name, f"{lat_var}_V", f"{lon_var}_V"),
                 "y_idx", "v", ["file", "k", "x_idx"], out_col="v",
-            )
-        else:
-            d = destagger(
-                _raw(spark, path, name, lat_var, lon_var),
-                "k", "w", ["file", "y_idx", "x_idx"], out_col="w",
             )
         d = d.select(*_KEY, name.lower())
         out = d if out is None else out.join(d, _KEY)
     return out
 
 
-def _coords(
-    spark: SparkSession, path: str, lat_var: str, lon_var: str
-) -> DataFrame:
-    """Mass-grid (file, y_idx, x_idx, lat, lon) — the 2-D coordinate
-    variable read as its own field (t_idx collapses to the single
-    plane)."""
-    from wrf_to_geodataframe_spark.sources.netcdf import read_netcdf_dir
+@functools.lru_cache(maxsize=None)
+def _sql_of(fn, *args: str) -> str:
+    """SQL text of the Column formula ``fn`` over the columns (or SQL
+    lambda variables) ``args``: a functions/meteo formula stays written
+    once and serves inside a SQL higher-order function, where a Python
+    lambda would cost dozens of py4j round trips per build."""
+    jss = SparkSession.active()._jsparkSession
+    return jss.expression(fn(*map(F.col, args))._jc).sql()
 
-    return (
-        read_netcdf_dir(spark, path, lat_var, lat_var, lon_var)
-        .select("file", "y_idx", "x_idx", "lat", "lon")
-        .distinct()
+
+def _tk(t, p):
+    """Temperature [K] from WRF's perturbation potential temperature T."""
+    from wrf_to_geodataframe_spark.functions.meteo import temperature_k
+
+    return temperature_k(t + F.lit(300.0), p)
+
+
+def _checked_levels(var: str, ref: str, extra: int):
+    """Pencil column ``var`` when its vertical axis is ``extra`` levels
+    longer than pencil ``ref``'s, else a raised error naming the file
+    and both lengths (the arrays would otherwise zip with NULL
+    padding)."""
+    v, r = var.lower(), ref.lower()
+    rule = (
+        "a vertically staggered axis is exactly one level longer than "
+        "the mass axis" if extra else "they must share one vertical axis"
+    )
+    return F.expr(
+        f"CASE WHEN size({v}) = size({r}) + {extra} THEN {v} ELSE "
+        f"raise_error(concat(file, ': {var} has ', "
+        f"CAST(size({v}) AS STRING), ' vertical levels against ', "
+        f"CAST(size({r}) AS STRING), ' in {ref}: {rule}')) END"
     )
 
 
-def _zstag_tbl(
-    spark: SparkSession, path: str, lat_var: str, lon_var: str
-) -> DataFrame:
-    """(file, k, y_idx, x_idx, zstag): geopotential height on the
-    STAGGERED vertical levels (wrf-python ``zstag``) — one mass-grid
-    archive scan of PH + PHB with NO destagger; ``k`` here is the
-    staggered index (one more level than the mass fields)."""
+def _pairs(a: str, body: str):
+    """``body`` over each adjacent pair ``(x, y) = (a[k], a[k + 1])`` of
+    pencil ``a`` (one element shorter than ``a``)."""
+    n = f"size({a}) - 1"
+    return F.expr(
+        f"zip_with(slice({a}, 1, {n}), slice({a}, 2, {n}), (x, y) -> {body})"
+    )
+
+
+def _derive(pen: DataFrame, lvl: list[str], stag: list[str]) -> DataFrame:
+    """The session's pencil frame with its vertical axes checked (every
+    mass-level pencil as long as the first, every staggered one a
+    level longer — or, with no mass-level variable, as long as the
+    first staggered one) and the derived pencils added: ``_prs``
+    (full pressure P + PB), ``zstag`` (geopotential height on the
+    staggered levels), ``_z``/``_dz`` (the mass-level half-sums and
+    differences of zstag) and ``_w`` (W's half-sums onto mass
+    levels)."""
     from wrf_to_geodataframe_spark.functions.meteo import (
         geopotential_height,
     )
-    from wrf_to_geodataframe_spark.sources.netcdf import (
-        read_netcdf_dir_many,
-    )
 
-    return read_netcdf_dir_many(
-        spark, path, ["PH", "PHB"], lat_var, lon_var
-    ).select(
-        "file", F.col("t_idx").alias("k"), "y_idx", "x_idx",
-        geopotential_height(F.col("ph"), F.col("phb")).alias("zstag"),
-    )
-
-
-def _zdz(
-    spark: SparkSession, path: str, lat_var: str, lon_var: str
-) -> DataFrame:
-    """(file, k, y_idx, x_idx, z, dz) at MASS levels from the
-    staggered heights (:func:`_zstag_tbl`): z = half-sum of adjacent
-    staggered heights, dz = their exact difference — one lead window
-    per column pencil over the staggered-only table (joining staggered
-    against mass levels first would silently drop the top staggered
-    entry)."""
-    w = Window.partitionBy(*_KEY3).orderBy("k")
-    return (
-        _zstag_tbl(spark, path, lat_var, lon_var)
-        .withColumn("_zs2", F.lead("zstag").over(w))
-        .filter(F.col("_zs2").isNotNull())
-        .select(
-            *_KEY,
-            ((F.col("zstag") + F.col("_zs2")) / 2.0).alias("z"),
-            (F.col("_zs2") - F.col("zstag")).alias("dz"),
+    ref = lvl[0] if lvl else (stag[0] if stag else None)
+    checks = {
+        v.lower(): _checked_levels(v, ref, int(bool(lvl) and v in stag))
+        for v in (*lvl, *stag) if v != ref
+    }
+    if checks:
+        pen = pen.withColumns(checks)
+    derived = {}
+    if "P" in lvl and "PB" in lvl:
+        derived["_prs"] = F.expr("zip_with(p, pb, (x, y) -> x + y)")
+    if "PH" in stag:
+        pen = pen.withColumn("zstag", F.expr(
+            "zip_with(ph, phb, (a, b) -> "
+            f"{_sql_of(geopotential_height, 'a', 'b')})"
+        ))
+        derived.update(
+            _z=_pairs("zstag", "(x + y) / 2.0D"), _dz=_pairs("zstag", "y - x")
         )
-    )
+    if "W" in stag:
+        derived["_w"] = _pairs("w", "(x + y) / 2.0D")
+    return pen.withColumns(derived) if derived else pen
 
 
-def _ter_tbl(
-    spark: SparkSession, path: str, lat_var: str, lon_var: str
+def _levels(
+    pen: DataFrame, arrays: dict[str, str], scalars: list[str]
 ) -> DataFrame:
-    """(file, y_idx, x_idx, hgt): the terrain plane, read on its own
-    like avo's MAPFAC_M (its grid shape differs from the 3-D mass
-    scan, so it cannot ride the same read_netcdf_dir_many pass)."""
-    return (
-        _raw(spark, path, "HGT", lat_var, lon_var)
-        .select("file", "y_idx", "x_idx", "hgt")
-        .distinct()
+    """The long per-level view of pencil frame ``pen``: one row per
+    (file, k, y_idx, x_idx) — ONE posexplode of the zipped ``arrays``
+    ({output column: pencil column}), with ``lat``, ``lon`` and the
+    per-column ``scalars`` (one-element plane pencils) on every row.
+    A narrow step: no shuffle."""
+    zipped = ", ".join(f"`{c}`" for c in arrays.values())
+    return pen.selectExpr(
+        *_KEY3, "lat", "lon", *[f"`{c}`[0] AS `{c}`" for c in scalars],
+        f"posexplode(arrays_zip({zipped})) AS (k, _lvl)",
+    ).selectExpr(
+        "file", "CAST(k AS BIGINT) AS k", "y_idx", "x_idx", "lat", "lon",
+        *[f"`{c}`" for c in scalars],
+        *[f"_lvl.`{src}` AS `{out}`" for out, src in arrays.items()],
     )
 
 
@@ -646,48 +663,47 @@ def _validate(
 
 
 def _dispatch(
-    spark: SparkSession,
     path: str,
     varname: str,
     base: DataFrame | None,
+    pen,
+    cols,
     species: tuple,
     attrs: dict | None,
-    lat_var: str,
-    lon_var: str,
-    zdz,
-    coords,
     **kw,
 ) -> DataFrame:
-    """Compute one getvar quantity from a prebuilt raw-variable
-    ``base`` (the mass-grid scan + destaggers).  ``zdz``/``coords``
-    are zero-arg callables returning the layer-geometry / coordinate
-    tables so :func:`wrf_getvar_many` can share ONE of each across
-    every requested field."""
+    """Compute one getvar quantity.  ``base`` is the per-level frame
+    (the pencils' long view, joined with the destaggered winds when
+    the name reads U/V); ``pen`` and ``cols`` are zero-arg callables
+    returning the session's pencil frame and its per-column view
+    (``lat``, ``lon`` and the 2-D plane scalars), so
+    :func:`wrf_getvar_many` shares one pencil scan across every
+    requested field."""
     from wrf_to_geodataframe_spark.functions import meteo as M
 
-    if base is not None and "p" in base.columns and "pb" in base.columns:
-        base = base.withColumn("prs", F.col("p") + F.col("pb"))
     theta = F.col("t") + F.lit(300.0)
     prs = F.col("prs")
 
     if varname in ("lat", "lon"):
-        # raw coordinate planes: the mass-grid XLAT/XLONG read itself
-        return coords().select(*_KEY3, varname)
-    if varname == "zstag":
-        return _zstag_tbl(spark, path, lat_var, lon_var)
-    if varname == "geopt_stag":
-        return _zstag_tbl(spark, path, lat_var, lon_var).select(
+        # raw coordinate planes: the pencil rows' XLAT/XLONG
+        return cols().select(*_KEY3, varname)
+    if varname in ("zstag", "geopt_stag"):
+        d = _levels(pen(), {"zstag": "zstag"}, [])
+        if varname == "zstag":
+            return d.select(*_KEY, "zstag")
+        return d.select(
             *_KEY,
             (F.col("zstag") * F.lit(M.G0)).alias("geopt_stag"),
         )
     if varname in ("ua", "va", "wa"):
-        # destaggered components: _base already moved the staggered
-        # wind onto mass points (one pencil window per component)
+        # destaggered components: U/V by their destagger windows, W
+        # by the half-sums of its pencil
         src = {"ua": "u", "va": "v", "wa": "w"}[varname]
         return base.select(*_KEY, F.col(src).alias(varname))
     if varname in _SURFACE_2D:
-        # single-plane 2-D reads: t_idx is the constant 0 plane, so
-        # the key drops to (file, y_idx, x_idx)
+        # single-plane 2-D reads: one row per column, keyed (file,
+        # y_idx, x_idx)
+        base = cols()
         if varname == "T2":
             return base.select(*_KEY3, F.col("t2"))
         if varname == "PBLH":
@@ -719,7 +735,7 @@ def _dispatch(
         attrs = _attrs_or_file(attrs, path, varname, "TRUELAT1/2, STAND_LON")
         from wrf_to_geodataframe_spark.functions.crs import _attr_scalar
 
-        d = base.join(coords(), _KEY3)
+        d = base
         cone = M.lcc_cone(
             _attr_scalar(attrs, "TRUELAT1"),
             _attr_scalar(attrs, "TRUELAT2"),
@@ -772,14 +788,13 @@ def _dispatch(
             (M.wet_bulb_stull_c(tk, rh) + F.lit(273.15)).alias("twb"),
         )
     if varname in ("z", "height"):
-        return zdz().select(*_KEY, F.col("z").alias(varname))
+        return base.select(*_KEY, F.col("z").alias(varname))
     if varname == "geopt":
-        return zdz().select(
+        return base.select(
             *_KEY, (F.col("z") * F.lit(M.G0)).alias("geopt")
         )
     if varname == "height_agl":
-        ter = base.select(*_KEY3, F.col("hgt"))
-        return zdz().join(ter, _KEY3).select(
+        return base.select(
             *_KEY, (F.col("z") - F.col("hgt")).alias("height_agl")
         )
     if varname in ("dbz", "mdbz"):
@@ -804,19 +819,29 @@ def _dispatch(
                 "omega"
             ),
         )
-    if varname == "pw":
-        # layer dp from adjacent full-level pressure differences
-        w = Window.partitionBy(*_KEY3).orderBy("k")
-        d = (
-            base.withColumn("_p2", F.lead("prs").over(w))
-            .filter(F.col("_p2").isNotNull())
-            .withColumn("_dp", prs - F.col("_p2"))
-        )
+    if varname in ("pw", "slp"):
+        # per-row over the pencils: pw's layer dp (adjacent full-level
+        # pressure differences) or slp's temperatures
         from wrf_to_geodataframe_spark.operators.vertical import (
             precipitable_water,
+            sea_level_pressure,
         )
 
-        return precipitable_water(d, "qvapor", "_dp", _KEY3, out_col="pw")
+        d = pen()
+        if varname == "pw":
+            d = d.withColumn("_dp", _pairs("_prs", "x - y"))
+            return precipitable_water(
+                d, "qvapor", "_dp", _KEY3, out_col="pw"
+            )
+        d = d.withColumn("_tk", F.expr(
+            f"zip_with(t, _prs, (a, b) -> {_sql_of(_tk, 'a', 'b')})"
+        ))
+        # moist reduction (wrf-python parity): the pivot-level
+        # temperature is the exact-eps virtual temperature
+        return sea_level_pressure(
+            d, "_prs", "_tk", "_z", _KEY3, out_col="slp",
+            qv_col="qvapor",
+        )
     if varname == "ctt":
         from wrf_to_geodataframe_spark.operators.vertical import (
             cloud_top_temperature,
@@ -838,9 +863,8 @@ def _dispatch(
         return cloud_fraction(
             base.withColumn("_rh", rh), "prs", "_rh", _KEY3, **kw
         )
-    if varname in ("slp", "cape_2d", "mcape", "cape_3d"):
-        d = base.join(zdz(), _KEY)
-        d = d.withColumn("_tk", M.temperature_k(theta, prs))
+    if varname in ("cape_2d", "mcape", "cape_3d"):
+        d = base.withColumn("_tk", M.temperature_k(theta, prs))
         if varname == "cape_3d":
             from wrf_to_geodataframe_spark.operators.vertical import (
                 cape_3d,
@@ -849,31 +873,20 @@ def _dispatch(
             return cape_3d(
                 d, "prs", "_tk", "qvapor", "dz", "k", _KEY3, **kw
             ).select(*_KEY, "cape", "cin")
-        if varname == "slp":
-            from wrf_to_geodataframe_spark.operators.vertical import (
-                sea_level_pressure,
-            )
-
-            # moist reduction (wrf-python parity): the pivot-level
-            # temperature is the exact-eps virtual temperature
-            return sea_level_pressure(
-                d, "prs", "_tk", "z", _KEY3, out_col="slp",
-                qv_col="qvapor",
-            )
         from wrf_to_geodataframe_spark.operators.vertical import (
             surface_cape,
         )
 
+        # wrf-python cape_2d reports lcl/lfc ABOVE GROUND: the
+        # column's terrain height rides the column key, so the
+        # subtraction needs no join
         out = surface_cape(
-            d, "prs", "_tk", "qvapor", "dz", _KEY3,
+            d, "prs", "_tk", "qvapor", "dz", [*_KEY3, "hgt"],
             parcel="surface" if varname == "cape_2d" else "most_unstable",
             z_col="z",
             **kw,
         )
-        # wrf-python cape_2d reports lcl/lfc ABOVE GROUND: subtract
-        # the terrain plane (its own HGT read, the helicity pattern)
-        ter = _ter_tbl(spark, path, lat_var, lon_var)
-        return out.join(ter, _KEY3).select(
+        return out.select(
             *_KEY3, "cape", "cin",
             (F.col("lcl") - F.col("hgt")).alias("lcl"),
             (F.col("lfc") - F.col("hgt")).alias("lfc"),
@@ -888,7 +901,7 @@ def _dispatch(
         attrs = _attrs_or_file(attrs, path, varname, "TRUELAT1/2, STAND_LON")
         from wrf_to_geodataframe_spark.functions.crs import _attr_scalar
 
-        d = base.join(coords(), _KEY3)
+        d = _with_cols(base, cols)
         cone = M.lcc_cone(
             _attr_scalar(attrs, "TRUELAT1"),
             _attr_scalar(attrs, "TRUELAT2"),
@@ -905,14 +918,9 @@ def _dispatch(
             M.wind_dir_met(ue, ve).alias("wdir_uv"),
         )
     if varname in ("helicity", "updraft_helicity"):
-        # z bands are HEIGHT ABOVE GROUND: layer geometry from the
-        # staggered geopotential (zdz), terrain from its own HGT plane
-        # read (the MAPFAC_M pattern) — agl = z - ter per level
-        d = (
-            base.join(zdz(), _KEY)
-            .join(_ter_tbl(spark, path, lat_var, lon_var), _KEY3)
-            .withColumn("_agl", F.col("z") - F.col("hgt"))
-        )
+        # z bands are HEIGHT ABOVE GROUND: agl = z - ter per level,
+        # both from the pencil row
+        d = base.withColumn("_agl", F.col("z") - F.col("hgt"))
         if varname == "helicity":
             from wrf_to_geodataframe_spark.operators.dynamics import (
                 storm_relative_helicity,
@@ -949,17 +957,9 @@ def _dispatch(
         attrs = _attrs_or_file(attrs, path, "updraft_helicity", "DX, DY")
         from wrf_to_geodataframe_spark.functions.crs import _attr_scalar
 
-        msf_col = None
-        if map_factors:
-            # wrf-python's DCALCUH form: curvilinear zeta via the
-            # mass-point map-scale factor (the avo pattern)
-            m = (
-                _raw(spark, path, "MAPFAC_M", lat_var, lon_var)
-                .select("file", "y_idx", "x_idx", "mapfac_m")
-                .distinct()
-            )
-            d = d.join(m, _KEY3)
-            msf_col = "mapfac_m"
+        # map_factors: wrf-python's DCALCUH form — curvilinear zeta via
+        # the mass-point map-scale factor (the avo pattern)
+        msf_col = "mapfac_m" if map_factors else None
         return updraft_helicity(
             d, "w", "u", "v", "x_idx", "y_idx", "_agl", "k",
             _attr_scalar(attrs, "DX"), _attr_scalar(attrs, "DY"), "dz",
@@ -987,16 +987,8 @@ def _dispatch(
             potential_vorticity,
         )
 
-        d = base.join(coords(), _KEY3)
-        msf_col = None
-        if map_factors:
-            m = (
-                _raw(spark, path, "MAPFAC_M", lat_var, lon_var)
-                .select("file", "y_idx", "x_idx", "mapfac_m")
-                .distinct()
-            )
-            d = d.join(m, _KEY3)
-            msf_col = "mapfac_m"
+        d = _with_cols(base, cols)
+        msf_col = "mapfac_m" if map_factors else None
         dx, dy = _attr_scalar(attrs, "DX"), _attr_scalar(attrs, "DY")
         if varname == "avo":
             return absolute_vorticity(
@@ -1013,6 +1005,15 @@ def _dispatch(
     raise AssertionError(varname)  # pragma: no cover
 
 
+def _with_cols(base: DataFrame, cols) -> DataFrame:
+    """``base`` with the per-column view's lat/lon (and plane scalars):
+    already there when ``base`` comes from the pencils, else joined on
+    the column key (a winds-only base)."""
+    if "lat" in base.columns:
+        return base
+    return base.join(cols(), _KEY3)
+
+
 def wrf_getvar_many(
     spark: SparkSession,
     path: str,
@@ -1023,18 +1024,16 @@ def wrf_getvar_many(
     times: bool = False,
     options: dict[str, dict] | None = None,
 ) -> dict[str, DataFrame]:
-    """``getvar`` for one or more names over ONE shared set of
-    archive scans — the real wrf-python session shape (`getvar(f,
-    "slp")` then `getvar(f, "tk")` then ...), which called
-    one-at-a-time re-reads the archive per name; :func:`wrf_getvar`
-    is the one-name case.  The union of every requested name's raw
-    variables becomes a single mass-grid scan per grid shape
-    (per-level fields share one; 2-D surface staples share another —
-    their row axes differ, so they cannot share a frame), and the
-    layer-geometry (``_zdz``) and coordinate (``_coords``) tables are
-    built at most once however many names consume them.  At archive
-    scale this turns k names from ~k full passes into 2-4 bounded
-    passes total.
+    """``getvar`` for one or more names over ONE pencil scan — the
+    real wrf-python session shape (`getvar(f, "slp")` then `getvar(f,
+    "tk")` then ...), which called one-at-a-time re-reads the archive
+    per name; :func:`wrf_getvar` is the one-name case.  Every raw
+    variable the names need on the mass (y, x) plane — mass-level,
+    vertically staggered or 2-D, raw fallbacks included — comes from
+    one ``read_netcdf_pencils`` scan; only U and V, on their own
+    staggered grids, add a scan each.  Column diagnostics (z/dz, pw,
+    slp, W's destagger) are computed inside the pencil row, and the
+    per-level view is one narrow posexplode of it.
 
     ``options`` maps a name to its keyword options (e.g.
     ``{"mdbz": {"species": ("QRAIN", "QSNOW")}}``); options for names
@@ -1045,10 +1044,12 @@ def wrf_getvar_many(
     metadata-only probe of the first shard.  Returns {name:
     DataFrame}.
 
-    With two or more names the shared scans are persisted and
-    register with session.track_persist — call ``release_persisted()``
-    (or clear the cache) when the session moves on, like every other
-    multi-branch operator here; one name persists nothing."""
+    With two or more names the pencil frame (and the wind-joined
+    per-level frame, when a name reads U/V) is persisted and
+    registers with session.track_persist — call
+    ``release_persisted()`` (or clear the cache) when the session
+    moves on, like every other multi-branch operator here; one name
+    persists nothing."""
     from wrf_to_geodataframe_spark.session import track_persist
 
     if not varnames:
@@ -1070,11 +1071,9 @@ def wrf_getvar_many(
         if pair is None and ALIASES.get(nm, nm) not in SUPPORTED:
             # the raw file-variable fallback: only MASS-GRID variables
             # qualify (horizontally staggered grids would misalign
-            # against the XLAT/XLONG coordinates).  2-D raws ride the
-            # SURFACE union scan (their grid is validated identical);
-            # 3-D raws get their own scan — their level count is the
-            # file's own (possibly staggered, the zstag convention),
-            # not necessarily the mass k the per-level union assumes.
+            # against the XLAT/XLONG coordinates).  They ride the
+            # pencil scan; a 3-D raw keeps its own level count (possibly
+            # staggered, the zstag convention) as its own posexplode.
             if raw_shapes is None:
                 try:
                     raw_shapes = wrf_file_variables(path)
@@ -1083,34 +1082,67 @@ def wrf_getvar_many(
             if nm in raw_shapes:
                 shape = _check_raw_shape(nm, raw_shapes, lat_var, kw)
                 raw_kind[name] = len(shape)
-                needs[name] = (name,) if len(shape) == 2 else ()
+                needs[name] = (name,)
                 continue
         canon[name], (needs[name], specs[name]) = _validate(nm, kw)
+        if kw.get("map_factors"):  # avo / pvo / updraft_helicity
+            needs[name] += ("MAPFAC_M",)
         kws[name] = kw
 
-    def _is_sfc(n: str) -> bool:
-        if n in raw_kind:
-            return raw_kind[n] == 2
-        return canon[n] in _SFC_RAW
+    derived = [n for n in varnames if n not in raw_kind]
+    dneeds = [v for n in derived for v in needs[n]]
+    pen_vars = list(dict.fromkeys(
+        v for n in varnames for v in needs[n] if v not in _STAG_XY
+    ))
+    lvl = [v for v in pen_vars if v in dneeds and v not in (
+        *_STAG_XY, *_STAG_K, *_PLANE_VARS
+    )]
+    stag = [v for v in _STAG_K if v in dneeds]
+    plane = [v.lower() for v in pen_vars
+             if v in _PLANE_VARS or raw_kind.get(v) == 2]
+    arrays = {v.lower(): v.lower() for v in lvl}
+    if "P" in lvl and "PB" in lvl:
+        arrays["prs"] = "_prs"
+    if "PH" in stag:
+        arrays.update(z="_z", dz="_dz")
+    if "W" in stag:
+        arrays["w"] = "_w"
+    winds = [v for v in _STAG_XY if v in dneeds]
 
     share = len(varnames) > 1
-    bases: dict[bool, DataFrame | None] = {}
-    for is_sfc in (False, True):
-        group = [n for n in varnames if _is_sfc(n) == is_sfc]
-        union = tuple(
-            dict.fromkeys(v for n in group for v in needs[n])
-        )
-        b = _base(spark, path, union, lat_var, lon_var)
-        bases[is_sfc] = track_persist(b) if share and b is not None else b
-
     memo: dict = {}
 
-    def shared(build) -> DataFrame:
-        # one table per call, persisted only when names can share it
-        if build not in memo:
-            df = build(spark, path, lat_var, lon_var)
-            memo[build] = track_persist(df) if share else df
-        return memo[build]
+    def shared(key: str, build) -> DataFrame:
+        # one table per session, persisted only when names can share it
+        if key not in memo:
+            df = build()
+            memo[key] = track_persist(df) if share else df
+        return memo[key]
+
+    def pen() -> DataFrame:
+        from wrf_to_geodataframe_spark.sources.netcdf import (
+            read_netcdf_pencils,
+        )
+
+        if "derived" not in memo:
+            memo["derived"] = _derive(shared("pen", lambda: (
+                read_netcdf_pencils(spark, path, pen_vars, lat_var, lon_var)
+            )), lvl, stag)
+        return memo["derived"]
+
+    def cols() -> DataFrame:
+        return pen().select(
+            *_KEY3, "lat", "lon", *[F.col(c)[0].alias(c) for c in plane]
+        )
+
+    lev = _levels(pen(), arrays, plane) if arrays else None
+
+    def base(name: str) -> DataFrame | None:
+        if not any(v in winds for v in needs[name]):
+            return lev
+        return shared("winds", lambda: _winds(
+            spark, path, winds, lev, lat_var, lon_var
+        ))
 
     tdf = None
     if times:
@@ -1120,17 +1152,15 @@ def wrf_getvar_many(
     out: dict[str, DataFrame] = {}
     for name in varnames:
         if raw_kind.get(name) == 2:
-            df = bases[True].select(*_KEY3, name.lower()).distinct()
+            df = cols().select(*_KEY3, name.lower())
         elif name in raw_kind:
-            df = _raw(spark, path, name, lat_var, lon_var).select(
+            df = _levels(pen(), {name.lower(): name.lower()}, []).select(
                 *_KEY, name.lower()
             )
         else:
             df = _dispatch(
-                spark, path, canon[name], bases[_is_sfc(name)],
-                specs[name], attrs, lat_var, lon_var,
-                zdz=lambda: shared(_zdz), coords=lambda: shared(_coords),
-                **kws[name],
+                path, canon[name], base(name), pen, cols, specs[name],
+                attrs, **kws[name],
             )
             if proj[name]:
                 keys = [c for c in df.columns if c in _KEY]

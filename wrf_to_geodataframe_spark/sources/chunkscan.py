@@ -9,7 +9,7 @@ gridded reader hands it a decoded block and nothing else:
   ``scan_chunks`` below, supplying only ``locate`` and ``decode``;
 - the virtual-dataset scan (``read_virtual``: NetCDF-4/HDF5, classic
   NetCDF, GRIB2 and GeoTIFF-mosaic chunks) after its per-row decode;
-- the whole-variable readers (``read_netcdf_grid/dir/dir_many``,
+- the whole-variable readers (``read_netcdf_grid/dir``,
   ``read_zarr_grid``) with one chunk at origin 0, ``read_grib2_grid/
   dir`` with each message a ``(1, nj, ni)`` chunk at ``t0 = msg_idx``,
   and ``read_geotiff_grid`` with the raster as one chunk.

@@ -359,7 +359,7 @@ def read_netcdf_grid(
 
     ds = read_netcdf_any(path)
     frames = list(
-        _unnest_grid(ds, var, lat_var, lon_var, time_index, time_var)
+        _unnest_grid(ds, var, lat_var, lon_var, time_index, time_var, path)
     )
     pdf = pd.concat(frames, ignore_index=True)
     if time_var is None:
@@ -471,14 +471,16 @@ def cf_mask_and_scale(arr: "np.ndarray", attrs: dict) -> "np.ndarray":
 
 
 def _unnest_grid(ds: dict, var: str, lat_var: str, lon_var: str,
-                 time_index: int | None, time_var: str | None = None):
+                 time_index: int | None, time_var: str | None = None,
+                 fname: str | None = None):
     """Yield one pandas frame per time slice of ``var`` with columns
     (t_idx, y_idx, x_idx, lat, lon, value): the whole variable is one
     chunk at origin 0 of the shared kernel (``chunkscan.chunk_frames``).
     2-D variables yield one frame with t_idx 0; 3-D variables yield
     every record (or just ``time_index`` when given).  When
     ``time_var`` names a CF time coordinate, each frame additionally
-    carries the decoded ``time`` timestamp.  CF packing attributes
+    carries the decoded ``time`` timestamp (decode errors name
+    ``fname`` when given).  CF packing attributes
     (scale_factor/add_offset/_FillValue/missing_value) are applied per
     variable, matching xarray's default mask-and-scale.  Shared by the
     driver-side ``read_netcdf_grid`` and the executor-side
@@ -489,7 +491,7 @@ def _unnest_grid(ds: dict, var: str, lat_var: str, lon_var: str,
         grid_coords,
     )
 
-    times = _cf_time_axis(ds, time_var) if time_var else None
+    times = _cf_time_axis(ds, time_var, fname) if time_var else None
     spec = ds["variables"][var]
     v = np.asarray(cf_mask_and_scale(spec["data"], spec.get("attrs", {})))
     check_grid(var, v.shape, time_index)
@@ -571,7 +573,7 @@ def read_netcdf_dir(
             for fname, buf in zip(pdf["path"], pdf["content"]):
                 ds = read_netcdf_any_bytes(bytes(buf), name=fname)
                 for frame in _unnest_grid(
-                    ds, var, lat_var, lon_var, time_index, time_var
+                    ds, var, lat_var, lon_var, time_index, time_var, fname
                 ):
                     frame.insert(0, "file", fname)
                     yield frame
@@ -591,26 +593,29 @@ def decode_time_axis(ds: dict, fname: str, time_var: str) -> np.ndarray:
     return _cf_time_axis(ds, time_var, fname)
 
 
-def read_netcdf_dir_many(
+def read_netcdf_pencils(
     spark,
     path: str,
     variables: list[str],
     lat_var: str,
     lon_var: str,
 ):
-    """``read_netcdf_dir`` for SEVERAL same-grid variables in ONE
-    archive scan: each shard's bytes are fetched and parsed once, and
-    every requested variable becomes its own column —
-    (file, t_idx, y_idx, x_idx, lat, lon, <var1.lower()>, ...).
+    """SEVERAL variables of one (y, x) plane read as COLUMN PENCILS in
+    one archive scan: one row per (file, y_idx, x_idx) cell carrying
+    ``lat``, ``lon`` and one ``array<double>`` per variable (column
+    ``var.lower()``) along its leading axis — a 2-D plane is a
+    one-element array.  The in-memory layout ``xr.open_dataset`` gives
+    the reference (wrf_voronoi.py:115): a model column is contiguous in
+    one row, so column-local diagnostics need no window or shuffle.
 
-    The variables must share the first variable's grid shape (same
-    dims per time slice) — a mismatch raises a NAMED error inside the
-    task rather than mis-aligning raveled cells.  This is the reader
-    multi-variable derivations (wrf_getvar's T/P/PB/QVAPOR joins)
-    should use: N columns for one scan instead of N scans."""
+    Same ``binaryFile`` + ``mapInPandas`` scan and parse as
+    ``read_netcdf_dir`` (``read_netcdf_any_bytes``, CF mask-and-scale,
+    ``grid_coords``).  The variables must share the (ny, nx) plane of
+    the first, not its level count (a vertically staggered PH beside
+    mass-level T and a 2-D HGT read together); a plane mismatch raises
+    a NAMED error inside the task.  With no variables the rows carry
+    the coordinates alone."""
     variables = list(variables)
-    if not variables:
-        raise ValueError("read_netcdf_dir_many needs at least one variable")
 
     def _batches(it):
         from wrf_to_geodataframe_spark.sources.hdf5 import (
@@ -620,43 +625,80 @@ def read_netcdf_dir_many(
         for pdf in it:
             for fname, buf in zip(pdf["path"], pdf["content"]):
                 ds = read_netcdf_any_bytes(bytes(buf), name=fname)
-                # (time slices, ny, nx) per variable, a 2-D plane being
-                # one slice: checked before unnesting, which would
-                # reshape the shared coordinates to the variable's plane
-                grids = [
-                    (1,) * (3 - len(shp)) + shp
-                    for shp in (
-                        np.shape(ds["variables"][v]["data"])
-                        for v in variables
-                    )
-                ]
-                for var, grid in zip(variables[1:], grids[1:]):
-                    if grid != grids[0]:
-                        raise ValueError(
-                            f"{var} does not share {variables[0]}'s grid "
-                            f"in {fname} ({grid} vs {grids[0]}) — read "
-                            "staggered variables with their own "
-                            "read_netcdf_dir call"
-                        )
-                frames = [
-                    f.rename(columns={"value": variables[0].lower()})
-                    for f in _unnest_grid(
-                        ds, variables[0], lat_var, lon_var, None
-                    )
-                ]
-                for var in variables[1:]:
-                    for e, f in zip(
-                        _unnest_grid(ds, var, lat_var, lon_var, None), frames
-                    ):
-                        # identical (t, y, x) ravel order by construction
-                        f[var.lower()] = e["value"].to_numpy()
-                for f in frames:
-                    f.insert(0, "file", fname)
-                    yield f
+                yield _pencil_frame(ds, fname, variables, lat_var, lon_var)
 
-    schema = _grid_fields([v.lower() for v in variables])
+    from pyspark.sql.types import (
+        ArrayType,
+        DoubleType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    schema = StructType(
+        [StructField("file", StringType())]
+        + [StructField(c, LongType()) for c in ("y_idx", "x_idx")]
+        + [StructField(c, DoubleType()) for c in ("lat", "lon")]
+        + [StructField(v.lower(), ArrayType(DoubleType()))
+           for v in variables]
+    )
     files = spark.read.format("binaryFile").load(path)
     return files.select("path", "content").mapInPandas(_batches, schema)
+
+
+def _pencil_frame(ds: dict, fname: str, variables: list[str],
+                  lat_var: str, lon_var: str):
+    """One parsed shard as the pencil rows of ``read_netcdf_pencils``."""
+    import pandas as pd
+
+    from wrf_to_geodataframe_spark.sources.chunkscan import (
+        check_grid,
+        grid_coords,
+    )
+
+    cols, plane = {}, None
+    for var in variables:
+        spec = ds["variables"][var]
+        v = np.asarray(cf_mask_and_scale(spec["data"], spec.get("attrs", {})))
+        check_grid(var, v.shape)
+        v = v.reshape((-1, *v.shape[-2:])).astype("float64")
+        if plane is None:
+            plane = v.shape[1:]
+        elif v.shape[1:] != plane:
+            raise ValueError(
+                f"{var} does not share {variables[0]}'s (y, x) plane in "
+                f"{fname} ({v.shape[1:]} vs {plane}) — read staggered "
+                "variables with their own read_netcdf_dir call"
+            )
+        # (levels, ny, nx) -> one contiguous level vector per cell
+        cols[var.lower()] = list(
+            np.ascontiguousarray(v.reshape(v.shape[0], -1).T)
+        )
+
+    def _plane(name):
+        """A coordinate stored with leading unit axes (WRF's (Time, y,
+        x) XLAT) is one (y, x) plane."""
+        c = ds["variables"][name]
+        d = np.asarray(c["data"])
+        return (d if d.ndim < 3 else d.reshape(d.shape[-2:])), c.get("attrs")
+
+    lat, lon = grid_coords(*_plane(lat_var), *_plane(lon_var))
+    if plane is not None and lat.shape != plane:
+        raise ValueError(
+            f"{lat_var}/{lon_var} plane {lat.shape} does not match "
+            f"{variables[0]}'s {plane} in {fname}"
+        )
+    yy, xx = np.meshgrid(np.arange(lat.shape[0]), np.arange(lat.shape[1]),
+                         indexing="ij")
+    return pd.DataFrame({
+        "file": fname,
+        "y_idx": yy.ravel().astype("int64"),
+        "x_idx": xx.ravel().astype("int64"),
+        "lat": lat.ravel(),
+        "lon": lon.ravel(),
+        **cols,
+    })
 
 
 def write_netcdf_dir(

@@ -1734,11 +1734,11 @@ _M2_SQL = _m2_sql()
 
 def v3_precipitable_water(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PRECIPITABLE WATER (wrf-python `pw`): the per-column vertical
-    integral sum(qv dp) / (g rho_w) in millimetres, one partial-agg
-    groupBy (operators/vertical.py).  The synthetic moisture profile
-    uses DYADIC-rational qv (denominator 1024) and integer dp, so
-    every product and partial sum is exactly representable — the
-    multi-row float sum is order-independent and hash-exact with no
+    integral sum(qv dp) / (g rho_w) in millimetres, folded per row
+    over column-pencil arrays (operators/vertical.py).  The synthetic
+    moisture profile uses DYADIC-rational qv (denominator 1024) and
+    integer dp, so every product and partial sum is exactly
+    representable — the level-order float sum is hash-exact with no
     quantization (the dyadic corollary of the suite's integer rule)."""
     from wrf_to_geodataframe_spark.operators.vertical import (
         precipitable_water,
@@ -1749,16 +1749,15 @@ def v3_precipitable_water(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("user_id") % GRID_W).alias("x"),
         F.floor(F.col("user_id") / GRID_W).alias("y"),
     ).distinct()
+    ks = F.sequence(F.lit(0), F.lit(_VL_K - 1))
     lev = cells.select(
-        "user_id", "x", "y",
-        F.explode(F.sequence(F.lit(0), F.lit(_VL_K - 1))).alias("k"),
-    ).select(
         "user_id",
-        (
-            (F.lit(4.0) + (F.col("x") + F.col("y") + F.col("k")) % 10)
-            / 1024.0
+        F.transform(
+            ks,
+            lambda k: (F.lit(4.0) + (F.col("x") + F.col("y") + k) % 10)
+            / 1024.0,
         ).alias("qv"),
-        (F.lit(9000.0) + F.col("k") * 100.0).alias("dp"),
+        F.transform(ks, lambda k: F.lit(9000.0) + k * 100.0).alias("dp"),
     )
     return precipitable_water(lev, "qv", "dp", ["user_id"])
 

@@ -950,26 +950,27 @@ def m11_slp_column(spark: SparkSession, sf_dir: str) -> DataFrame:
         "kmax",
         F.when((F.col("x") + F.col("y")) % 9 == 8, 1).otherwise(F.lit(9)),
     )
+    ks = F.sequence(F.lit(0), F.col("kmax"))
     lev = cols.select(
         "y", "x",
-        F.explode(F.sequence(F.lit(0), F.col("kmax"))).alias("k"),
-    ).select(
-        "y", "x",
-        (
-            F.lit(100000.0)
-            - (F.lit(6000.0) + (F.col("x") % 3) * 2000.0) * F.col("k")
+        F.transform(
+            ks,
+            lambda k: F.lit(100000.0)
+            - (F.lit(6000.0) + (F.col("x") % 3) * 2000.0) * k,
         ).alias("p"),
-        (
-            F.lit(288.0)
+        F.transform(
+            ks,
+            lambda k: F.lit(288.0)
             + (F.col("x") % 5) * 0.5
             + (F.col("y") % 7) * 0.25
-            - F.lit(6.0) * F.col("k")
+            - F.lit(6.0) * k,
         ).alias("t"),
-        (
-            F.lit(150.0)
+        F.transform(
+            ks,
+            lambda k: F.lit(150.0)
             + (F.col("y") % 6) * 60.0
             + (F.col("x") % 2) * 25.0
-            + F.lit(700.0) * F.col("k")
+            + F.lit(700.0) * k,
         ).alias("z"),
     )
     out = sea_level_pressure(lev, "p", "t", "z", ["y", "x"])
@@ -1510,7 +1511,7 @@ def m13_getvar_species(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-hydrometeor CALDBZ through the front door:
     ``getvar('mdbz', species=('QRAIN', 'QSNOW', 'QGRAUP'))`` — the
     snow/graupel terms with the ice dielectric factor join the SAME
-    single mass-grid archive scan (read_netcdf_dir_many), exercising
+    single column-pencil archive scan (read_netcdf_pencils), exercising
     the species option validation added at operators/wrf.py.  The
     fixture's three hydrometeor lattices have disjoint-period zero
     arms, so cells mix rain-only / ice-only / all-three columns and
